@@ -6,8 +6,9 @@ KG pipeline: pages -> mentions -> entity linking -> canonicalization ->
 (subj, pred, obj) triples.
 
 Design stance (SURVEY.md §7.0):
-  * DataFrame API + Arrow-vectorized pandas UDFs only; no per-row Python
-    UDFs, no RDD maps.
+  * DataFrame API + Arrow-batched Python UDFs only (stage 1 is one
+    ``mapInArrow`` row-to-records loop, kgkit.functions.records); no
+    per-row Python UDFs, no RDD maps.
   * All within-document sequence algebra (subtoken merges, char-offset
     restoration, entity merges) lives in the pure-Python ``kgkit.ner_core``
     package, used identically inside Spark UDFs and in plain pytest.

@@ -33,9 +33,3 @@ def repair_and_sort(classes: List[str]) -> Tuple[str, List[str]]:
             if partner not in out:
                 out.append(partner)
     return scheme, ["O"] + sorted(t for t in out if t != "O")
-
-
-def annotation_from_df(label_df) -> Tuple[str, List[str]]:
-    """Collect a (small) one-column label DataFrame and repair it."""
-    observed = [r[0] for r in label_df.collect()]
-    return repair_and_sort(observed)

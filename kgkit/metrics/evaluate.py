@@ -16,37 +16,32 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgkit.metrics.ner_metrics import evaluation_dict, ner_metrics
+from kgkit.functions.records import explode_records
+from kgkit.metrics.ner_metrics import evaluation_dict
 
 
 def _pred_word_tags(ds: DataFrame) -> DataFrame:
     """(seq_id, text) -> (seq_id, pos, pred) via the deterministic
     word-level predictor (is_pretokenized=True, api/model.py:833-835)."""
-    from typing import Iterator
 
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make():
         from kgkit.ner_core import predict
         from kgkit.ner_core.tagger import default_gazetteer
         from kgkit.ner_core.wordpiece import default_tokenizer
 
         tok, tag = default_tokenizer(), default_gazetteer()
-        for pdf in it:
-            out = {"seq_id": [], "pos": [], "pred": []}
+
+        def compute(texts):
             results = predict(
-                pdf["text"].tolist(), level="word", is_pretokenized=True,
+                texts, level="word", is_pretokenized=True,
                 tokenizer=tok, tagger=tag,
             )
-            for sid, records in zip(pdf["seq_id"].tolist(), results):
-                for pos, r in enumerate(records):
-                    out["seq_id"].append(sid)
-                    out["pos"].append(pos)
-                    out["pred"].append(r["tag"])
-            yield pd.DataFrame(out)
+            return [[(r["tag"],) for r in records] for records in results]
 
-    return ds.select("seq_id", "text").mapInPandas(
-        batches, schema="seq_id string, pos long, pred string"
+        return compute
+
+    return explode_records(
+        ds, ["seq_id"], "text", "seq_id string, pos long, pred string", make
     )
 
 

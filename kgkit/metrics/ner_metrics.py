@@ -630,16 +630,21 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     # aggregation jobs plus local evaluation (guide §1.2).  The two
     # statistic jobs are independent consumers of the populated cache,
     # so they run CONCURRENTLY (guide §2.6 — the smaller job back-fills
-    # the larger one's straggler tail instead of waiting for it).
+    # the larger one's straggler tail instead of waiting for it); each
+    # thread inherits the caller's local properties and tags, so both
+    # jobs run in the caller's job group (cancellable with it).
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from kgkit.sources.localrel import values_df
 
     spark = df.sparkSession
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        conf_fut = pool.submit(lambda: token_confusion(df).collect())
+        conf_fut = pool.submit(inherit(lambda: token_confusion(df).collect()))
         counts_fut = pool.submit(
-            lambda: entity_class_counts(df, scheme).collect())
+            inherit(lambda: entity_class_counts(df, scheme).collect()))
         conf_rows = conf_fut.result()
         counts_rows = counts_fut.result()
     conf = values_df(

@@ -11,7 +11,7 @@ standing in for the transformer:
   5. merge slices per document                        (api/model.py:506-515)
   6. post-processing per document                     (api/model.py:527-544, 546-615)
 
-The same function is called inside the Spark ``mapInPandas`` mention
+The same function is called inside the Spark ``mapInArrow`` mention
 detector (kgkit/operators/mentions.py) and directly in pytest, so the
 distributed path and the reference-path oracle share one implementation.
 Output records carry STRING char offsets, matching api/model.py:1507-1528.

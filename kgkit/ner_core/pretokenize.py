@@ -75,24 +75,3 @@ def pretokenize(text: str) -> List[WordTuple]:
     if start is not None:
         words.append((text[start:], (start, len(text))))
     return words
-
-
-def project_spans_to_word_tags(
-    word_tuples: List[WordTuple], entity_spans: List[dict]
-) -> List[str]:
-    """Project char-level entity spans onto per-word BIO tags
-    (data_preprocessor.py:356-374).
-
-    A word starting exactly at the entity start (and contained in it) gets
-    B-<tag>; any other word fully inside the span gets I-<tag>.  Spans are
-    assumed pre-resolved (see ``resolve_overlapping_tags``).
-    """
-    tags = ["O"] * len(word_tuples)
-    for span in entity_spans:
-        e_start, e_end, e_tag = span["char_start"], span["char_end"], span["tag"]
-        for wi, (_, (w_start, w_end)) in enumerate(word_tuples):
-            if w_start == e_start and w_end <= e_end:
-                tags[wi] = f"B-{e_tag}"
-            elif w_start >= e_start and w_end <= e_end:
-                tags[wi] = f"I-{e_tag}"
-    return tags

@@ -3,11 +3,11 @@ randomness is a fixed-seed Mersenne corpus sampler).
 
 Distant supervision: a synthetic word corpus drawn uniformly over the
 web-page word pool (``train_pages`` — full bigram coverage, variable
-lengths) is labeled by the gazetteer rule tagger, and a multinomial
-logistic-regression head is fit on the feature-hashed context
-embeddings (kgkit.ner_core.trained) by full-batch gradient descent:
-zero init + fixed step count + float64 math = bit-reproducible on a
-given BLAS.
+lengths) is labeled by the gazetteer rule tagger, and a two-layer
+(relu) softmax head is fit on the feature-hashed context embeddings
+(kgkit.ner_core.trained) by full-batch gradient descent: md5-derived
+init + fixed step count + float64 math = bit-reproducible on a given
+BLAS.
 
 The point is NOT to clone the gazetteer: EMB_DIM=32 with N_HASH=4
 hashed dims per key cannot linearly separate every (prev, word, next)
@@ -151,32 +151,6 @@ def training_set(
         xs.append(featurize_page(words, cache))
         ys.append(np.array([cls_id[t] for t in tags], dtype=np.int64))
     return np.concatenate(xs), np.concatenate(ys), classes
-
-
-def fit_softmax_head(
-    X: np.ndarray,
-    y: np.ndarray,
-    n_classes: int,
-    iters: int = 400,
-    lr: float = 0.5,
-    l2: float = 1e-4,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Full-batch multinomial logistic regression, zero init — fully
-    deterministic.  Returns (W [d, L], b [L]) in float64."""
-    n, d = X.shape
-    W = np.zeros((d, n_classes), dtype=np.float64)
-    b = np.zeros(n_classes, dtype=np.float64)
-    Y = np.zeros((n, n_classes), dtype=np.float64)
-    Y[np.arange(n), y] = 1.0
-    for _ in range(iters):
-        z = X @ W + b
-        z -= z.max(axis=1, keepdims=True)
-        p = np.exp(z)
-        p /= p.sum(axis=1, keepdims=True)
-        g = (p - Y) / n
-        W -= lr * (X.T @ g + l2 * W)
-        b -= lr * g.sum(axis=0)
-    return W, b
 
 
 def quantize_head(W: np.ndarray, b: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:

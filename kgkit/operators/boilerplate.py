@@ -7,8 +7,8 @@ Two passes, each in its scale-right shape:
 
 * **Pass 1 (line stats)** explodes the corpus to (host, line) grain —
   the honest cost of line-level dedup — and counts distinct documents
-  per (host, line-hash) with the two-level groupBy discipline from
-  ``host_stats``'s COUNT DISTINCT rewrite: first (host, lh, doc_id)
+  per (host, line-hash) with the two-level groupBy discipline of a
+  COUNT DISTINCT rewrite: first (host, lh, doc_id)
   (map-side combine on 16-byte digests, never the line text), then
   (host, lh).  The Zipf mega-host's rows split across reducers by the
   line digest, so the head never funnels through one task.
@@ -86,8 +86,8 @@ def remove_boilerplate_lines(
 
 def with_template_lines(docs: DataFrame) -> DataFrame:
     """Deterministic multi-line fixture over the synthetic corpus (the
-    driver texts carry no newlines): Zipf hosts (text_quality
-    .with_synth_hosts arithmetic), a per-host banner line, the
+    driver texts carry no newlines): Zipf hosts (half the pages on one
+    mega-site, the rest over 19 tail hosts), a per-host banner line, the
     document's own words re-flowed into 6-word body lines, and a
     footer on every third document.  The DuckDB oracle rebuilds the
     identical strings — change both or neither."""

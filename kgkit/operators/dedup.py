@@ -491,10 +491,10 @@ def winnow_fingerprints(docs: DataFrame, k: int = 16, window: int = 8) -> DataFr
     7-hex-prefix int, the shingle fingerprint used by minhash), the
     window minimum keeps (hash, pos) structs, and array_distinct
     collapses the run-length repetition winnowing produces.  Each
-    survivor carries its k-gram BYTES (`gram` = text[pos:pos+k], the
-    exact value the 28-bit fp hashes), so pair verification compares
+    survivor carries its k-gram CHARACTERS (`gram` = text[pos:pos+k],
+    the exact value the 28-bit fp hashes), so pair verification compares
     grams on the candidate row instead of re-joining full document
-    text — k bytes of proxy per fingerprint rather than whole
+    text — k characters of proxy per fingerprint rather than whole
     payloads through the verify joins (guide §8)."""
     hs = F.expr(
         f"transform(sequence(0, greatest(length(text) - {k}, -1)), "
@@ -535,10 +535,10 @@ def substring_dup_pairs(
     degenerate fingerprints (a boilerplate k-gram present in every page
     would square the join), and verification is FUSED INTO THE JOIN
     KEY: candidates equi-join on (fp, gram) where ``gram`` is the
-    actual k-gram bytes carried on the fingerprint row, so a 28-bit
+    actual k-gram characters carried on the fingerprint row, so a 28-bit
     hash collision never even materializes a join-output row and no
     join back to document text is needed (guide §8: every shuffle but
-    the last moves a lightweight proxy — k bytes/row here, vs whole
+    the last moves a lightweight proxy — k characters/row here, vs whole
     documents through the former two verify joins).  The cap still
     keys on fp alone (its observed bucket sizes keep their exact
     values; gram equality implies fp equality, so (fp, gram) matches

@@ -357,7 +357,7 @@ def host_authority(pages: DataFrame, url_col: str = "url",
     # fan-out: edges feeds pagerank + out_w + in_w.  Materialize the
     # host-sized frame once so the corpus-wide extraction lineage (WARC
     # parse UDF) is not replayed per branch (no ReusedExchange above
-    # mapInPandas — the repo-wide persist-at-fanout rule).
+    # mapInArrow — the repo-wide persist-at-fanout rule).
     edges = host_edges(page_links(pages, url_col, html_col)).localCheckpoint()
     ranks = pagerank(edges, iters=iters, damping=damping, q_grid=q_grid)
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))

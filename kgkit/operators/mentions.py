@@ -1,15 +1,17 @@
 """Stage 1 — mention detection: pages -> mentions via Arrow-vectorized UDF.
 
 Distributed form of the reference's Model.predict span pipeline
-(nerblackbox/api/model.py:309-544, SURVEY §3.1): one ``mapInPandas``
-over the narrow (url, text) projection; each Arrow batch runs the full
-tokenize -> tag -> merge -> restore -> entity-merge lifecycle from
-kgkit.ner_core and explodes to one output row per mention.
+(nerblackbox/api/model.py:309-544, SURVEY §3.1): one ``mapInArrow``
+over the narrow (url, text) projection, through the shared
+row-to-records loop (kgkit.functions.records.explode_records); each
+Arrow batch runs the full tokenize -> tag -> merge -> restore ->
+entity-merge lifecycle from kgkit.ner_core and explodes to one output
+row per mention.  The word-level UDFs below share the same loop.
 
 Scale properties:
   * embarrassingly parallel — NO shuffle: the plan is scan -> project ->
-    MapInPandas -> (sink).  A document never spans rows, so all sequence
-    logic stays inside the batch.
+    filter -> MapInArrow -> (sink).  A document never spans rows, so all
+    sequence logic stays inside the batch.
   * tokenizer/tagger are process-wide singletons (executor-local model
     cache, SURVEY §4.3.4) — loaded once per python worker, not per batch.
   * char offsets are INTEGER columns here; the string-typed form only
@@ -18,12 +20,10 @@ Scale properties:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kgkit.functions.records import explode_records
 
 MENTIONS_SCHEMA = (
     "url string, mention_id int, char_start int, char_end int, "
@@ -75,43 +75,46 @@ def _resolve_tokenizer(name: str):
     raise ValueError(f"unknown tokenizer {name!r}")
 
 
-def _detect_batches_for(model: str, tokenizer_name: str = "wordpiece"):
-    def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _span_tuples(results):
+    """``predict`` output -> one (char_start, char_end, token, tag) tuple
+    per record, offsets as ints (the string form is the reference-parity
+    boundary's, not the table's)."""
+    return [
+        [(int(r["char_start"]), int(r["char_end"]), r["token"], r["tag"])
+         for r in records]
+        for records in results
+    ]
+
+
+def mention_records(model: str = "gazetteer", tokenizer: str = "wordpiece"):
+    """Worker-side factory for ``explode_records``: builds the tokenizer
+    and tagger singletons, and returns the per-batch compute — the full
+    entity-level ``predict`` lifecycle, one (char_start, char_end,
+    surface, tag) tuple per mention.  Shared by the batch and streaming
+    detectors."""
+
+    def make():
         # import inside the worker so the UDF pickles by reference only
         from kgkit.ner_core import predict
         from kgkit.ner_core.trained import TrainedTagger, assert_oracle_bounds
 
-        tokenizer = _resolve_tokenizer(tokenizer_name)  # worker singletons
+        tok = _resolve_tokenizer(tokenizer)
         tagger = _resolve_tagger(model)
 
-        for pdf in batches:
+        def compute(texts):
             if isinstance(tagger, TrainedTagger):
                 # fail loudly if the corpus leaves the bounds the
                 # trained-head SQL oracle assumes (single-slice docs,
                 # no ASCII word at the [UNK] piece cap)
-                assert_oracle_bounds(pdf["text"].tolist())
-            out = {
-                "url": [], "mention_id": [], "char_start": [],
-                "char_end": [], "surface": [], "tag": [],
-            }
-            results = predict(
-                pdf["text"].tolist(),
-                level="entity",
-                autocorrect=True,
-                tokenizer=tokenizer,
-                tagger=tagger,
-            )
-            for url, records in zip(pdf["url"].tolist(), results):
-                for mid, r in enumerate(records):
-                    out["url"].append(url)
-                    out["mention_id"].append(mid)
-                    out["char_start"].append(int(r["char_start"]))
-                    out["char_end"].append(int(r["char_end"]))
-                    out["surface"].append(r["token"])
-                    out["tag"].append(r["tag"])
-            yield pd.DataFrame(out)
+                assert_oracle_bounds(texts)
+            return _span_tuples(predict(
+                texts, level="entity", autocorrect=True,
+                tokenizer=tok, tagger=tagger,
+            ))
 
-    return _detect_batches
+        return compute
+
+    return make
 
 
 def detect_mentions(
@@ -127,9 +130,9 @@ def detect_mentions(
     the WordPiece run for any text BOTH tokenizers can spell to the
     same [UNK] boundaries (true by construction for the default vocab
     pair), which is what the kg_mentions_sp oracle checks."""
-    narrow = pages.select("url", "text")
-    return narrow.mapInPandas(
-        _detect_batches_for(model, tokenizer), schema=MENTIONS_SCHEMA
+    return explode_records(
+        pages, ["url"], "text", MENTIONS_SCHEMA,
+        mention_records(model, tokenizer),
     )
 
 
@@ -138,7 +141,7 @@ def _word_proba_rows(pages: DataFrame, model: str, classes) -> DataFrame:
     array<double> in ``classes`` order (the class fan-out/packing is
     JVM-side in the public shapes below)."""
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make():
         from kgkit.ner_core.pipeline import predict_proba
         from kgkit.ner_core.trained import TrainedTagger, assert_oracle_bounds
         from kgkit.ner_core.wordpiece import default_tokenizer
@@ -150,27 +153,26 @@ def _word_proba_rows(pages: DataFrame, model: str, classes) -> DataFrame:
                 f"worker model classes {tagger.annotation_classes} != "
                 f"driver-resolved classes {classes} for model={model!r}"
             )
-        for pdf in batches:
+
+        def dist(tag):
+            # re-anchored [UNK] spans carry a plain tag string
+            d = tag if isinstance(tag, dict) else {tag: 1.0}
+            return ([d.get(c, 0.0) for c in classes],)
+
+        def compute(texts):
             if isinstance(tagger, TrainedTagger):
-                assert_oracle_bounds(pdf["text"].tolist())
-            out = {"url": [], "pos": [], "probas": []}
+                assert_oracle_bounds(texts)
             results = predict_proba(
-                pdf["text"].tolist(), tokenizer=tokenizer, tagger=tagger,
+                texts, tokenizer=tokenizer, tagger=tagger,
                 stringify_tags=False,
             )
-            for url, records in zip(pdf["url"].tolist(), results):
-                for pos, r in enumerate(records):
-                    dist = r["tag"]
-                    # re-anchored [UNK] spans carry a plain tag string
-                    if not isinstance(dist, dict):
-                        dist = {dist: 1.0}
-                    out["url"].append(url)
-                    out["pos"].append(pos)
-                    out["probas"].append([dist.get(c, 0.0) for c in classes])
-            yield pd.DataFrame(out)
+            return [[dist(r["tag"]) for r in records] for records in results]
 
-    return pages.select("url", "text").mapInPandas(
-        _batches, schema="url string, pos int, probas array<double>"
+        return compute
+
+    return explode_records(
+        pages, ["url"], "text", "url string, pos int, probas array<double>",
+        make,
     )
 
 
@@ -223,32 +225,22 @@ def word_probas(pages: DataFrame, model: str = "numpy") -> DataFrame:
 def word_tags(pages: DataFrame) -> DataFrame:
     """Word-level variant (level='word', Model.predict level parity):
     one row per word with its BIO tag — feeds the metrics engine."""
-    import pandas as _pd
 
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make():
         from kgkit.ner_core import predict
         from kgkit.ner_core.tagger import default_gazetteer
         from kgkit.ner_core.wordpiece import default_tokenizer
 
         tokenizer = default_tokenizer()
         tagger = default_gazetteer()
-        for pdf in batches:
-            out = {"url": [], "pos": [], "char_start": [], "char_end": [],
-                   "word": [], "tag": []}
-            results = predict(
-                pdf["text"].tolist(), level="word",
-                tokenizer=tokenizer, tagger=tagger,
-            )
-            for url, records in zip(pdf["url"].tolist(), results):
-                for pos, r in enumerate(records):
-                    out["url"].append(url)
-                    out["pos"].append(pos)
-                    out["char_start"].append(int(r["char_start"]))
-                    out["char_end"].append(int(r["char_end"]))
-                    out["word"].append(r["token"])
-                    out["tag"].append(r["tag"])
-            yield _pd.DataFrame(out)
+
+        def compute(texts):
+            return _span_tuples(predict(
+                texts, level="word", tokenizer=tokenizer, tagger=tagger,
+            ))
+
+        return compute
 
     schema = ("url string, pos int, char_start int, char_end int, "
               "word string, tag string")
-    return pages.select("url", "text").mapInPandas(_batches, schema=schema)
+    return explode_records(pages, ["url"], "text", schema, make)

@@ -23,7 +23,7 @@ the input_hint table's ``text`` column is already extracted text).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # a real (if small) English stopword list — Gopher's rule is
@@ -289,54 +289,3 @@ def unicode_nfc(docs: DataFrame) -> DataFrame:
             })
 
     return docs.select("doc_id", "text").mapInPandas(batches, schema)
-
-
-# ---------------------------------------------------------------------------
-# host-level corpus statistics (crawl hygiene)
-# ---------------------------------------------------------------------------
-
-HOST_RE = "^https?://([^/]+)/"
-
-
-def with_synth_hosts(docs: DataFrame) -> DataFrame:
-    """Deterministic https URLs over a Zipf-ish host distribution:
-    half of all pages land on one mega-site (the realistic crawl
-    shape), the rest spread over 19 tail hosts.  The DuckDB oracle
-    reproduces the same arithmetic."""
-    host = (
-        F.when(F.col("doc_id") % 2 == 0, F.lit("mega.example.org"))
-        .otherwise(F.concat(F.lit("h"), (F.col("doc_id") % 19).cast("string"),
-                            F.lit(".example.net")))
-    )
-    return docs.select(
-        F.concat(F.lit("https://"), host, F.lit("/page/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        "doc_id", "text",
-    )
-
-
-def host_stats(pages: DataFrame) -> DataFrame:
-    """(host, n_pages, total_chars, n_distinct_texts, dup_ratio) —
-    per-host crawl hygiene: a host whose pages are mostly one template
-    (dup_ratio -> 1) is a boilerplate candidate for the LSH cap /
-    host-level filtering.
-
-    Skew shape: groupBy(host) with COUNT DISTINCT md5(text) plans as a
-    two-phase aggregate keyed (host, digest) — the mega-site's rows
-    split across reducers by the digest in phase 1, so the Zipf head
-    never funnels through one task (the same property as explicit
-    salting, provided free by the distinct rewrite)."""
-    host = F.regexp_extract("url", HOST_RE, 1)
-    return (
-        pages.select(host.alias("host"), "text")
-        .groupBy("host")
-        .agg(
-            F.count("*").cast("long").alias("n_pages"),
-            F.sum(F.length("text")).cast("long").alias("total_chars"),
-            F.count_distinct(F.md5("text")).cast("long").alias("n_distinct_texts"),
-        )
-        .withColumn(
-            "dup_ratio",
-            F.round(1 - F.col("n_distinct_texts") / F.col("n_pages").cast("double"), 6),
-        )
-    )

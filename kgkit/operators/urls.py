@@ -256,7 +256,7 @@ def robots_apply(urls_df, rules_df, url_col: str = "url",
     # underscore-rename the rule columns BEFORE the join: the cleanup
     # drop below must never eat caller-owned columns that happen to be
     # named host/allow/plen/rx (host is a natural column in this
-    # codebase — host_stats and the link-graph family key on it)
+    # codebase — the boilerplate and link-graph families key on it)
     rules = rules_df.select(
         F.col("host").alias("_rhost"),
         F.col("allow").alias("_allow"),
@@ -292,8 +292,7 @@ def robots_apply(urls_df, rules_df, url_col: str = "url",
 
 
 # ---------------------------------------------------------------------------
-# deterministic fixtures (oracle-replayable arithmetic, the
-# with_synth_hosts convention from kgkit.operators.text_quality)
+# deterministic fixtures (oracle-replayable arithmetic)
 # ---------------------------------------------------------------------------
 
 def with_messy_urls(docs):

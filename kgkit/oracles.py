@@ -1683,8 +1683,6 @@ ORACLES = {
                    '\\b\\d{3}-\\d{4}\\b', '<PHONE>', 'g')) AS scrubbed_hash
         FROM planted
     """,
-    # per-host crawl hygiene over the deterministic Zipf-host fixture
-    # (text_quality.with_synth_hosts arithmetic replayed in SQL)
     # per-host boilerplate line removal (operators/boilerplate.py):
     # rebuild the identical template fixture (banner + 6-word re-flow
     # + every-3rd-doc footer over the Zipf hosts), count distinct docs

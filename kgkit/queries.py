@@ -394,18 +394,6 @@ def _pii_scrub_q(spark, sf_dir):
     return pii_scrub(plant_pii(_documents_wide(spark, sf_dir)))
 
 
-def _host_stats_q(spark, sf_dir):
-    """Per-host crawl-hygiene stats over a deterministic Zipf-host URL
-    fixture (kgkit.operators.text_quality.with_synth_hosts/host_stats):
-    page counts, bytes, distinct-text counts and the per-host
-    duplication ratio that drives host-level filtering."""
-    from kgkit.operators.text_quality import host_stats, with_synth_hosts
-
-    return host_stats(
-        with_synth_hosts(_documents(spark, sf_dir).select("doc_id", "text"))
-    )
-
-
 def _boilerplate_q(spark, sf_dir):
     """Per-host boilerplate line removal (operators/boilerplate.py —
     the RefinedWeb/CCNet line-dedup stage) over the deterministic
@@ -992,8 +980,7 @@ def _q1_q(spark, sf_dir):
 #                              crawl-hygiene family and the same COUNT
 #                              DISTINCT split discipline, but the
 #                              survivor also performs the removal
-#                              transform; host_stats op + tests remain
-#                              in text_quality.py)
+#                              transform; the op is deleted)
 #   label_set               -> word_tags_bio (r5; it was literally a
 #                              DISTINCT projection of that query's
 #                              checked stream — zero extra information;

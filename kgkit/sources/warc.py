@@ -9,7 +9,7 @@ HTTP response (status line + headers + body).
 Spark mapping: one WARC file is one unsplittable unit (records have no
 sync markers and production crawls gzip per-record members, so any
 reader consumes a whole member stream) — exactly the shape
-``binaryFile`` + ``mapInPandas`` handles.  Parallelism at 100 TB comes
+``binaryFile`` + ``mapInArrow`` handles.  Parallelism at 100 TB comes
 from the CORPUS shape, not intra-file splits: a crawl is tens of
 thousands of ~1 GB segment files, so the scan parallelizes file-per-task
 with zero shuffle; ``spark.sql.files.maxPartitionBytes`` never has to
@@ -29,10 +29,12 @@ record framing, including multi-record files and malformed members.
 from __future__ import annotations
 
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kgkit.functions.records import explode_records
 
 WARC_SCHEMA = (
     "path string, record_idx int, warc_type string, url string, "
@@ -217,31 +219,28 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     binaryFile scan (file-per-task — see module docstring for why WARC
     is unsplittable and why that is the right parallelism for a crawl
     corpus) -> Arrow-batched python parse."""
-    return (
-        spark.read.format("binaryFile").load(path)
-        .select("path", "content")
-        .mapInPandas(_record_batches, schema=WARC_SCHEMA)
+    return _records(spark.read.format("binaryFile").load(path))
+
+
+_RECORD_FIELDS = ("warc_type", "url", "warc_date", "http_status", "mime",
+                  "payload")
+
+
+def _parse_members():
+    """``explode_records`` factory (no worker singletons): the compute
+    parses each file's bytes into record tuples in WARC_SCHEMA order."""
+    return lambda contents: [
+        [tuple(r[k] for k in _RECORD_FIELDS) for r in parse_warc_bytes(c)]
+        for c in contents
+    ]
+
+
+def _records(files: DataFrame) -> DataFrame:
+    """binaryFile rows -> WARC records, shared by the batch scan and the
+    streaming source (mapInArrow runs identically on both)."""
+    return explode_records(
+        files, ["path"], "content", WARC_SCHEMA, _parse_members
     )
-
-
-def _record_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Arrow-batched WARC member parse, shared by the batch scan and
-    the streaming source (mapInPandas runs identically on both)."""
-    import pandas as pd
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "path", "record_idx", "warc_type", "url", "warc_date",
-            "http_status", "mime", "payload",
-        )}
-        for path_, content in zip(pdf["path"], pdf["content"]):
-            for i, rec in enumerate(parse_warc_bytes(bytes(content))):
-                out["path"].append(path_)
-                out["record_idx"].append(i)
-                for k in ("warc_type", "url", "warc_date",
-                          "http_status", "mime", "payload"):
-                    out[k].append(rec[k])
-        yield pd.DataFrame(out)
 
 
 # binaryFile's fixed source schema — streaming file sources need it
@@ -258,13 +257,11 @@ def read_warc_stream(
     as the crawler lands them (file source over the segment directory).
     Each segment file appears in exactly one micro-batch — the
     precondition the downstream incremental KG stream relies on."""
-    return (
+    return _records(
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(path)
-        .select("path", "content")
-        .mapInPandas(_record_batches, schema=WARC_SCHEMA)
     )
 
 

@@ -10,7 +10,7 @@ engine also exposes the mention detector as a streaming transform:
       -> windowed_tag_counts           (event-time window on warc_ts,
                                         watermark bounds state)
 
-mapInPandas and time-window aggregations are fully supported on
+mapInArrow and time-window aggregations are fully supported on
 streaming DataFrames; the watermark makes the windowed aggregation's
 state finite under unbounded input (late pages beyond the watermark are
 dropped, the standard trade).  Sinks: writeStream to parquet/Iceberg
@@ -20,13 +20,11 @@ the same stage layout the batch path uses.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgkit.functions.records import explode_records
+from kgkit.operators.mentions import mention_records
 from kgkit.sources.pages import PAGE_SCHEMA
 
 STREAM_MENTIONS_SCHEMA = (
@@ -47,39 +45,11 @@ def read_pages_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 def detect_mentions_stream(pages: DataFrame) -> DataFrame:
     """Streaming variant of kgkit.operators.mentions.detect_mentions —
-    identical ner_core lifecycle, with the event-time column carried
-    through for downstream windowing."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kgkit.ner_core import predict
-        from kgkit.ner_core.tagger import default_gazetteer
-        from kgkit.ner_core.wordpiece import default_tokenizer
-
-        tokenizer = default_tokenizer()
-        tagger = default_gazetteer()
-        for pdf in it:
-            out = {k: [] for k in (
-                "url", "warc_ts", "mention_id", "char_start", "char_end",
-                "surface", "tag",
-            )}
-            results = predict(
-                pdf["text"].tolist(), level="entity", autocorrect=True,
-                tokenizer=tokenizer, tagger=tagger,
-            )
-            for url, ts, records in zip(
-                pdf["url"].tolist(), pdf["warc_ts"].tolist(), results
-            ):
-                for mid, r in enumerate(records):
-                    out["url"].append(url)
-                    out["warc_ts"].append(ts)
-                    out["mention_id"].append(mid)
-                    out["char_start"].append(int(r["char_start"]))
-                    out["char_end"].append(int(r["char_end"]))
-                    out["surface"].append(r["token"])
-                    out["tag"].append(r["tag"])
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "warc_ts", "text").mapInPandas(
-        batches, schema=STREAM_MENTIONS_SCHEMA
+    the same row-to-records loop and ner_core lifecycle, with the
+    event-time column carried through for downstream windowing."""
+    return explode_records(
+        pages, ["url", "warc_ts"], "text", STREAM_MENTIONS_SCHEMA,
+        mention_records(),
     )
 
 

@@ -5,7 +5,8 @@ nerblackbox/tests/test_data/test_ner_metrics_{token,entity}.csv (harness:
 nerblackbox/tests/test_ner_metrics.py:14-47, tolerance ±0.01).  We run the
 SAME fixtures through kgkit.metrics.ner_metrics — on Spark — and assert
 the same values, including the −1 failure codes and the well-defined-class
-macro counts.
+macro counts.  Only those two truth-table classes need the reference
+checkout; the rest of the module runs without it.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from kgkit.metrics.ner_metrics import ner_metrics
 
 REF = "/root/reference/nerblackbox/tests/test_data"
 
-pytestmark = pytest.mark.skipif(
+needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference fixtures unavailable"
 )
 
@@ -48,6 +49,7 @@ def _assert_close(got, want, label):
     assert got == pytest.approx(want, abs=0.011), f"{label}: {got} != {want}"
 
 
+@needs_ref
 class TestTokenTruthTable:
     @pytest.fixture(scope="class")
     def rows(self):
@@ -91,6 +93,7 @@ class TestTokenTruthTable:
                               f"{row['name']} all-{m}_macro")
 
 
+@needs_ref
 class TestEntityTruthTable:
     @pytest.fixture(scope="class")
     def rows(self):
@@ -284,6 +287,25 @@ class TestAverageRuns:
 
 
 class TestMetricsFanoutDf:
+    def test_jobs_inherit_the_callers_job_group(self, spark):
+        """The two statistic jobs run on pool threads: every job the
+        call starts must still carry the caller's job group."""
+        from kgkit.metrics.ner_metrics import metrics_fanout_df
+
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+        df = _stream_df(spark, ["B-A", "I-A", "O"], ["B-A", "O", "O"])
+        ungrouped = set(st.getJobIdsForGroup())
+        sc.setJobGroup("fanout-df", "metrics_fanout_df under a job group")
+        try:
+            metrics_fanout_df(df, "bio").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert st.getJobIdsForGroup("fanout-df")
+        assert set(st.getJobIdsForGroup()) == ungrouped
+
     def test_matches_dict_api_micro_values(self, spark):
         """metrics_fanout_df (distributed, oracle-backed) must agree
         with metrics_fanout (the reference-shaped dict API) on every

@@ -14,6 +14,24 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+# Python nodes a JVM-only plan must not contain
+PYTHON_NODES = ("BatchEvalPython", "MapInPandas", "MapInArrow")
+
+
+def _ancestors(lines, i):
+    """The tree-string lines above ``lines[i]`` that are its ancestors:
+    each one starts its node name left of the previous one's."""
+    def col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, c = [], col(lines[i])
+    for line in reversed(lines[:i]):
+        if col(line) < c:
+            out.append(line)
+            c = col(line)
+    return out
+
+
 class TestPlanShape:
     SF = "/root/testdata/sf0.001"
 
@@ -48,7 +66,7 @@ class TestPlanShape:
         pages = pages_for_mentions(load_pages(spark, self.SF))
         plan = _executed_plan(link_mentions(detect_mentions(pages), emb))
         lines = plan.splitlines()
-        udf_depth = [i for i, l in enumerate(lines) if "MapInPandas" in l]
+        udf_depth = [i for i, l in enumerate(lines) if "MapInArrow" in l]
         assert udf_depth, plan
         # every Exchange above the UDF line must be a BroadcastExchange
         for line in lines[: udf_depth[0]]:
@@ -76,10 +94,11 @@ class TestPlanShape:
         # but execution materializes it once — tests/test_stages and the
         # scaling bench pin the wall-clock consequence)
         assert plan.count("InMemoryTableScan") >= 2, plan
-        for line in plan.splitlines():
-            if "MapInPandas" in line:
-                assert "InMemoryRelation" in plan, plan
-                break
+        lines = plan.splitlines()
+        udfs = [i for i, l in enumerate(lines) if "MapInArrow" in l]
+        assert udfs, plan
+        for i in udfs:
+            assert any("InMemoryRelation" in a for a in _ancestors(lines, i)), plan
 
 
 class TestRound4PlanShapes:
@@ -133,7 +152,7 @@ class TestRound4PlanShapes:
         plan = _executed_plan(df)
         assert "Exchange" not in plan, plan
         assert plan.lstrip().startswith("Project"), plan
-        assert "BatchEvalPython" not in plan and "MapInPandas" not in plan, plan
+        assert not [n for n in PYTHON_NODES if n in plan], plan
 
     def test_lm_score_joins_are_broadcast_only(self, spark):
         """The probability tables are vocab-sized: both joins must
@@ -177,7 +196,7 @@ class TestRound5PlanShapes:
             F.lit('<a href="https://x.org/a"></a><a href="/b"></a>').alias("html"),
         )
         plan = _executed_plan(page_links(df))
-        assert "BatchEvalPython" not in plan and "MapInPandas" not in plan, plan
+        assert not [n for n in PYTHON_NODES if n in plan], plan
         assert "Exchange" not in plan, plan
         assert "Generate" in plan, plan
 

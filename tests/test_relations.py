@@ -287,8 +287,8 @@ class TestRelationsPlan:
     def test_stage1_udf_runs_once_and_persist_is_aggregated(self, spark):
         """The 4-branch marginal fan-out must read the persisted
         AGGREGATED relation, never re-run the stage-1 Arrow UDF: the
-        executed plan carries exactly one MapInPandas and the cached
-        relation appears as InMemoryTableScan on every branch."""
+        stage-1 MapInArrow is absent from the fan-out's executed plan and
+        the checkpointed relation is scanned on every branch."""
         from kgkit.operators.canonicalize import canonical_map
         from kgkit.operators.linking import link_mentions
         from kgkit.operators.mentions import detect_mentions
@@ -296,9 +296,11 @@ class TestRelationsPlan:
 
         pages = pages_for_mentions(load_pages(spark, SF))
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+        mentions = detect_mentions(pages)
+        # the node name the absence check below looks for
+        assert "MapInArrow" in mentions._jdf.queryExecution().executedPlan().toString()
         rel = extract_relations(
-            pages, link_mentions(detect_mentions(pages), emb),
-            canonical_map(spark),
+            pages, link_mentions(mentions, emb), canonical_map(spark),
         )
         plan = rel._jdf.queryExecution().executedPlan().toString()
         # the aggregated relation is eagerly materialized with its
@@ -309,7 +311,7 @@ class TestRelationsPlan:
         # (a stronger runs-once pin than the old cached-lineage shape,
         # and the deep UDF plan no longer bloats per-branch AQE work)
         assert plan.count("Scan ExistingRDD") >= 5, plan
-        assert "MapInPandas" not in plan, plan
+        assert "MapInArrow" not in plan, plan
 
     def test_query_registry_row(self, spark):
         from kgkit.queries import QUERIES
