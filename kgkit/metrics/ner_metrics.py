@@ -580,12 +580,11 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     with −1 propagated), and entity per-class ('ind') rows carry NULL
     macro because the reference's per-class dict has no macro keys.
 
-    The input stream is persisted for the duration of the fan-out
-    (five union branches whose lineages all reach the word-level UDF
-    source; the upstream lambda plans defeat ReusedExchange
-    canonicalization — CLAUDE.md), the tiny result is materialized
-    eagerly (localCheckpoint), and the input cache is RELEASED before
-    returning — round 3 leaked one MEMORY_AND_DISK frame per call."""
+    The input stream is cached for the two statistic jobs (both
+    lineages reach the word-level UDF source; the upstream lambda plans
+    defeat ReusedExchange canonicalization) and released
+    in a ``finally`` once they are collected; the tiny result is
+    materialized eagerly (localCheckpoint)."""
     from pyspark import StorageLevel
 
     def _raw_prf(tp, np_, nt, und):
@@ -613,11 +612,6 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
             F.round(fm, 6).alias("f1_macro"),
         ]
 
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    df.count()  # materialize BEFORE the fan-out: the five branches run
-    # inside one job, and concurrent tasks racing an unpopulated cache
-    # would each recompute the UDF partitions they beat the cache to
-
     # The fan-out arithmetic below operates on the two SUFFICIENT
     # STATISTICS — the token confusion (<= |labels|^2 rows) and the
     # chunk-class counts (<= |classes| rows).  Distributed, the union's
@@ -641,12 +635,20 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
 
     spark = df.sparkSession
     inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        conf_fut = pool.submit(inherit(lambda: token_confusion(df).collect()))
-        counts_fut = pool.submit(
-            inherit(lambda: entity_class_counts(df, scheme).collect()))
-        conf_rows = conf_fut.result()
-        counts_rows = counts_fut.result()
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        df.count()  # materialize BEFORE the two statistic jobs: tasks
+        # racing an unpopulated cache would each recompute the UDF
+        # partitions they beat the cache to
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            conf_fut = pool.submit(
+                inherit(lambda: token_confusion(df).collect()))
+            counts_fut = pool.submit(
+                inherit(lambda: entity_class_counts(df, scheme).collect()))
+            conf_rows = conf_fut.result()
+            counts_rows = counts_fut.result()
+    finally:
+        df.unpersist()
     conf = values_df(
         spark,
         [(r["true"], r["pred"], r["n"]) for r in conf_rows],
@@ -769,11 +771,8 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     out = tok_all.unionByName(tok_fil).unionByName(tok_cls) \
         .unionByName(ent_fil).unionByName(ent_cls)
     # the result is ≤ 3 + |labels| + |classes| rows: materialize it
-    # eagerly so the big persisted input can be released NOW instead of
-    # leaking one cached frame per call for the session's lifetime
-    out = out.localCheckpoint()
-    df.unpersist()
-    return out
+    # eagerly, so downstream actions do not re-plan the union
+    return out.localCheckpoint()
 
 
 def classification_report(

@@ -13,7 +13,7 @@ with ``localCheckpoint()`` per iteration to cut the lineage chain
 (otherwise the plan doubles every round), and convergence detected by a
 changed-row count.
 
-Two variants:
+Three variants:
 
   * ``variant='doubling'``: each round ALSO pointer-jumps
     ``label(v) <- label(label(v))`` — the shortcutting step of
@@ -130,13 +130,10 @@ def connected_components(
     (required because key_fn operates on Columns); without a twin the
     local path stays off — correctness never depends on it.
 
-    The distributed loop's shuffle width is sized to the GRAPH, not the
-    session default: the entity graph is orders of magnitude smaller
-    than the page corpus, and running log(n) tiny iterations at the
-    corpus's shuffle width is pure scheduler overhead (measured: the
-    loop at 32 shuffle partitions dominated the whole pipeline's wall
-    clock).  ~100k edges per partition keeps each iteration a handful
-    of tasks.
+    The distributed loop sizes its symmetric edge table to the GRAPH
+    (``repartition`` at ~100k edges per partition); the per-round joins
+    and aggregates run at the session's shuffle width, whose tiny
+    partitions AQE coalesces.  The session conf is never changed.
     """
     if variant not in ("doubling", "propagation", "adaptive"):
         raise ValueError(f"unknown CC variant {variant!r}")
@@ -159,88 +156,80 @@ def connected_components(
             )
     n_edges = edges.count()
     n_parts = max(1, min(64, n_edges // 100_000))
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # everything that runs eager jobs at the loop's shuffle width —
-    # including the sym/labels localCheckpoints — sits inside the try so
-    # a failure can never leave the session-wide conf overridden
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        sym = (
-            edges.select("src", "dst").union(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .repartition(n_parts, "src")
-            .localCheckpoint()
+    sym = (
+        edges.select("src", "dst").union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
+        .distinct()
+        .repartition(n_parts, "src")
+        .localCheckpoint()
+    )
 
-        labels = (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .localCheckpoint()
+    labels = (
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint()
+    )
+
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        # min label among each node's neighbours
+        neighbour_min = (
+            sym.join(labels, sym.dst == labels.node, "inner")
+            .groupBy(sym.src.alias("node2"))
+            .agg(F.min_by("label", key(F.col("label"))).alias("nmin"))
         )
-
-        rounds = 0
-        for _ in range(max_iter):
-            rounds += 1
-            # min label among each node's neighbours
-            neighbour_min = (
-                sym.join(labels, sym.dst == labels.node, "inner")
-                .groupBy(sym.src.alias("node2"))
-                .agg(F.min_by("label", key(F.col("label"))).alias("nmin"))
+        prop = (
+            labels.join(neighbour_min, labels.node == F.col("node2"), "left")
+            .select(
+                "node",
+                F.when(
+                    F.col("nmin").isNotNull()
+                    & (key(F.col("nmin")) < key(F.col("label"))),
+                    F.col("nmin"),
+                ).otherwise(F.col("label")).alias("label"),
+                (F.col("nmin").isNotNull()
+                 & (key(F.col("nmin")) < key(F.col("label")))
+                 ).alias("changed"),
             )
-            prop = (
-                labels.join(neighbour_min, labels.node == F.col("node2"), "left")
+        )
+        jump = variant == "doubling" or (
+            variant == "adaptive" and rounds > jump_after
+        )
+        if jump:
+            # pointer jump: label(v) <- label(label(v)).  Labels are
+            # monotone non-increasing and every label value IS a
+            # node, so the inner self-join matches exactly once and
+            # b's label can only be <= a's (take it unconditionally;
+            # 'changed' tracks propagation OR shortcutting)
+            j = prop.select("node", "label", "changed")
+            jumped = (
+                j.alias("a")
+                .join(
+                    j.select(
+                        F.col("node").alias("jn"),
+                        F.col("label").alias("jl"),
+                    ),
+                    F.col("a.label") == F.col("jn"),
+                    "inner",
+                )
                 .select(
-                    "node",
-                    F.when(
-                        F.col("nmin").isNotNull()
-                        & (key(F.col("nmin")) < key(F.col("label"))),
-                        F.col("nmin"),
-                    ).otherwise(F.col("label")).alias("label"),
-                    (F.col("nmin").isNotNull()
-                     & (key(F.col("nmin")) < key(F.col("label")))
-                     ).alias("changed"),
+                    F.col("a.node").alias("node"),
+                    F.col("jl").alias("label"),
+                    (F.col("a.changed")
+                     | (key(F.col("jl"))
+                        < key(F.col("a.label")))).alias("changed"),
                 )
             )
-            jump = variant == "doubling" or (
-                variant == "adaptive" and rounds > jump_after
-            )
-            if jump:
-                # pointer jump: label(v) <- label(label(v)).  Labels are
-                # monotone non-increasing and every label value IS a
-                # node, so the inner self-join matches exactly once and
-                # b's label can only be <= a's (take it unconditionally;
-                # 'changed' tracks propagation OR shortcutting)
-                j = prop.select("node", "label", "changed")
-                jumped = (
-                    j.alias("a")
-                    .join(
-                        j.select(
-                            F.col("node").alias("jn"),
-                            F.col("label").alias("jl"),
-                        ),
-                        F.col("a.label") == F.col("jn"),
-                        "inner",
-                    )
-                    .select(
-                        F.col("a.node").alias("node"),
-                        F.col("jl").alias("label"),
-                        (F.col("a.changed")
-                         | (key(F.col("jl"))
-                            < key(F.col("a.label")))).alias("changed"),
-                    )
-                )
-                updated = jumped.localCheckpoint()
-            else:
-                updated = prop.localCheckpoint()
-            n_changed = updated.filter("changed").count()
-            labels = updated.select("node", "label")
-            if n_changed == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+            updated = jumped.localCheckpoint()
+        else:
+            updated = prop.localCheckpoint()
+        n_changed = updated.filter("changed").count()
+        labels = updated.select("node", "label")
+        if n_changed == 0:
+            break
     if stats is not None:
         stats["rounds"] = rounds
 

@@ -18,12 +18,21 @@ standard cost gradient (cheapest, highest-yield first):
 Accounting: ``clean_corpus`` returns (cleaned_df, stats) where stats
 carries the per-stage kept/dropped counts.  Counting is one eager
 count per stage boundary — four small jobs on frames the next stage
-consumes anyway (each boundary is materialized by ``_boundary``, so
+consumes anyway (each boundary is an eager ``localCheckpoint``, so
 the count reads the checkpointed blocks the next stage also reads:
 the accounting is almost free, and silently-lazy accounting that
-nobody forces is worse than none).  Boundaries are also LINEAGE CUTS
-(see ``_boundary``) so the composed plan stays O(stages), not
-exponential."""
+nobody forces is worse than none).
+
+Boundaries are also LINEAGE CUTS.  persist() alone leaves the full
+logical plan in place, and every hygiene stage references its input
+TWICE (the keep-set aggregate + the join-back), so the composed plan
+TREE would double per stage — five stages over a deep upstream
+lineage (WARC extraction + boilerplate strip) made AQE's plan-string
+rendering alone OOM a driver.  A checkpoint replaces the plan with a
+LogicalRDD leaf, so plan size stays O(stage).  Its blocks are
+executor-local (a lost executor re-fails the job rather than
+recomputing — acceptable for one composed batch job) and are freed by
+GC once the frame is dropped; ``unpersist()`` does not release them."""
 
 from __future__ import annotations
 
@@ -31,28 +40,6 @@ from typing import Dict, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _boundary(df: DataFrame) -> DataFrame:
-    """Materialize a stage boundary AND cut the logical lineage.
-
-    persist() alone leaves the full logical plan in place, and every
-    hygiene stage references its input TWICE (the keep-set aggregate +
-    the join-back), so the composed plan TREE doubles per stage — five
-    stages over a deep upstream lineage (WARC extraction + boilerplate
-    strip) made AQE's plan-string rendering alone OOM a driver
-    (QueryExecution.explainString, seen under test heap pressure), and
-    at 100 TB the same growth bloats driver-side analysis/optimization
-    time.  localCheckpoint is EAGER: it materializes to the block
-    manager exactly like the persist it replaces (the accounting count
-    that follows reads the checkpointed blocks) and replaces the plan
-    with a LogicalRDD leaf, so plan size stays O(stage).  Caveat
-    (documented, same as the streaming indexes): localCheckpoint
-    blocks are executor-local — a lost executor re-fails the job
-    rather than recomputing, acceptable for a single composed batch
-    job; block cleanup is GC-driven (the unpersist() calls below are
-    advisory for the plain-persist case and harmless here)."""
-    return df.localCheckpoint()
 
 
 def keep_min_id(df: DataFrame, key) -> DataFrame:
@@ -114,7 +101,7 @@ def clean_corpus(
     # differently-pruned sides) — measured 3.2 s of stage-1 boundary at
     # sf0.1, ~1 s once the input reads blocks.  Same byte class as the
     # stage-1 boundary that was already materialized.
-    docs = _boundary(docs)
+    docs = docs.localCheckpoint()
     stats: Dict[str, object] = {"input": docs.count()}
 
     cur = docs
@@ -134,14 +121,12 @@ def clean_corpus(
             F.concat(F.lit("doc://"), F.col("doc_id")),
         )
         cur = keep_min_id(cur, key)
-    cur = _boundary(cur)
+    cur = cur.localCheckpoint()
     stats["after_url_dedup"] = cur.count()
 
     # -- 2. exact dedup ---------------------------------------------------
-    prev = cur
-    cur = _boundary(keep_min_id(cur, F.md5("text")))
+    cur = keep_min_id(cur, F.md5("text")).localCheckpoint()
     stats["after_exact_dedup"] = cur.count()
-    prev.unpersist()
 
     # -- 3. near-dup removal ----------------------------------------------
     if near_dup_strategy not in ("greedy", "clusters"):
@@ -161,24 +146,21 @@ def clean_corpus(
         drop = pairs.select(
             F.greatest("doc_a", "doc_b").alias("doc_id")
         ).distinct()
-    prev = cur
     # no broadcast hint: the drop list is usually tiny but is NOT
     # bounded (a heavily-mirrored crawl can shed millions of ids) —
     # AQE picks broadcast when the built side is actually small
-    cur = _boundary(cur.join(drop, "doc_id", "left_anti"))
+    cur = cur.join(drop, "doc_id", "left_anti").localCheckpoint()
     stats["after_near_dedup"] = cur.count()
-    prev.unpersist()
 
     # -- 4. quality filter -------------------------------------------------
     q = gopher_quality(
         cur.select("doc_id", "text"), **(quality_kwargs or {})
     ).select("doc_id", "keep")
-    prev = cur
-    cur = _boundary(
+    cur = (
         cur.join(q, "doc_id").filter(F.col("keep") == 1).drop("keep")
+        .localCheckpoint()
     )
     stats["after_quality"] = cur.count()
-    prev.unpersist()
 
     boundaries = [
         ("input", "after_url_dedup", "dropped_url_dedup"),
@@ -196,10 +178,8 @@ def clean_corpus(
             .filter(F.col("keep") == 1)
             .select("doc_id")
         )
-        prev = cur
-        cur = _boundary(cur.join(keep, "doc_id", "left_semi"))
+        cur = cur.join(keep, "doc_id", "left_semi").localCheckpoint()
         stats["after_clf"] = cur.count()
-        prev.unpersist()
         boundaries.append(("after_quality", "after_clf", "dropped_clf"))
 
     # -- 6. benchmark decontamination (optional, LAST: eval overlap
@@ -207,7 +187,6 @@ def clean_corpus(
     if benchmarks is not None:
         from kgkit.operators.dedup import decontaminate
 
-        prev = cur
         _, report = decontaminate(
             cur.select("doc_id", "text"), benchmarks, n=decontaminate_n
         )
@@ -216,9 +195,9 @@ def clean_corpus(
         # clean frame would cost a redundant second join), and surface
         # the auditability the report exists for: a sample of dropped
         # docs with their offending n-grams rides along in stats
-        cur = _boundary(
-            cur.join(report.select("doc_id"), "doc_id", "left_anti")
-        )
+        cur = cur.join(
+            report.select("doc_id"), "doc_id", "left_anti"
+        ).localCheckpoint()
         last = boundaries[-1][1]
         stats["after_decontamination"] = cur.count()
         stats["contamination_examples"] = [
@@ -226,7 +205,6 @@ def clean_corpus(
             for r in report.orderBy(F.desc("n_hits"), "doc_id")
             .limit(5).collect()
         ]
-        prev.unpersist()
         boundaries.append(
             (last, "after_decontamination", "dropped_contaminated")
         )

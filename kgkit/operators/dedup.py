@@ -37,8 +37,7 @@ from __future__ import annotations
 
 from typing import Tuple
 
-
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -179,7 +178,7 @@ def _cap_buckets(band_table: DataFrame, max_bucket: int,
 
 
 def candidate_pairs(band_table: DataFrame, max_bucket: int = 1000,
-                    observation=None, persist: bool = True) -> DataFrame:
+                    observation=None) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one band bucket.
     The self-join is keyed on (band_idx, band_hash) — colliding docs
     only; buckets larger than ``max_bucket`` are dropped entirely (see
@@ -191,27 +190,29 @@ def candidate_pairs(band_table: DataFrame, max_bucket: int = 1000,
     cap's sizes aggregate and both join sides would recompute the
     signatures — and the cached key-partitioning is exactly what the
     sizes groupBy and the self-join require, so neither adds an
-    exchange (one shuffle of the band table total)."""
-    if persist:
-        from pyspark import StorageLevel
-
-        band_table = band_table.repartition("band_idx", "band_hash").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    exchange (one shuffle of the band table total).  The pairs come
+    back as an eager localCheckpoint and the cache is released."""
+    band_table = band_table.repartition("band_idx", "band_hash").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
         band_table.count()  # populate eagerly (the fan-out discipline)
-    capped = _cap_buckets(band_table, max_bucket, observation)
-    a = capped.select(
-        F.col("doc_id").alias("doc_a"), "band_idx", "band_hash"
-    )
-    b = capped.select(
-        F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
-    )
-    return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+        capped = _cap_buckets(band_table, max_bucket, observation)
+        a = capped.select(
+            F.col("doc_id").alias("doc_a"), "band_idx", "band_hash"
+        )
+        b = capped.select(
+            F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
+        )
+        return (
+            a.join(b, ["band_idx", "band_hash"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
+            .localCheckpoint()
+        )
+    finally:
+        band_table.unpersist()
 
 
 def verify_jaccard(pairs: DataFrame, shingled: DataFrame, threshold: float,
@@ -241,29 +242,27 @@ def minhash_near_dups(
     bands: int = 4,
     rows: int = 2,
     threshold: float = 0.5,
-    persist: bool = True,
     max_bucket: int = 1000,
     observation=None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: (doc_a, doc_b, jaccard) near-dup pairs.
 
     ``shingled`` feeds both the signature path and the exact-Jaccard
-    verify (twice, as both join sides); persist avoids re-running the
-    shingling HOFs 3x (no ReusedExchange for lambda plans).
+    verify (twice, as both join sides); caching it avoids re-running
+    the shingling HOFs 3x (no ReusedExchange for lambda plans).
     ``max_bucket``/``observation`` are the boilerplate-bucket skew cap
     and its dropped-mass reporting (see ``candidate_pairs``)."""
-    shingled = with_shingles(docs)
-    if persist:
-        from pyspark import StorageLevel
-
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
+    shingled = with_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
         shingled.count()  # eager: three consumers (signature + both
         # verify sides) otherwise race the unpopulated cache and re-run
         # the shingling HOFs (the assemble_triples discipline)
-    bandt = lsh_band_table(minhash_signature(shingled, k), bands, rows)
-    pairs = candidate_pairs(bandt, max_bucket=max_bucket,
-                            observation=observation)
-    return verify_jaccard(pairs, shingled, threshold)
+        bandt = lsh_band_table(minhash_signature(shingled, k), bands, rows)
+        pairs = candidate_pairs(bandt, max_bucket=max_bucket,
+                                observation=observation)
+        return verify_jaccard(pairs, shingled, threshold).localCheckpoint()
+    finally:
+        shingled.unpersist()
 
 
 def dup_clusters(pairs: DataFrame, id_a: str = "doc_a",
@@ -349,7 +348,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
     max_df: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold via an inverted-index
     self-join on shingles.  ``max_df`` drops shingles occurring in more
@@ -359,47 +357,53 @@ def ngram_jaccard_pairs(
 
     The exploded (doc_id, shingle) index fans out four ways (df counts,
     both join sides, per-doc sizes); HOF-lambda plans don't canonicalize
-    into a ReusedExchange (CLAUDE.md), so without ``persist`` the
+    into a ReusedExchange, so it is cached; uncached, the
     split+md5 shingling recomputes 4x.  MEMORY_AND_DISK keeps the scale
     path spill-safe."""
-    shingled = with_shingles(docs, n)
-    ex = shingled.select("doc_id", F.explode("sh").alias("s"))
-    if persist:
-        from pyspark import StorageLevel
-
-        ex = ex.persist(StorageLevel.MEMORY_AND_DISK)
+    ex = (
+        with_shingles(docs, n)
+        .select("doc_id", F.explode("sh").alias("s"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
         ex.count()  # eager: four consumers (df counts, both join
         # sides, per-doc sizes) otherwise race the unpopulated cache
         # and re-run the shingling (the assemble_triples discipline)
-    df_counts = ex.groupBy("s").agg(F.count("*").alias("df_"))
-    kept = ex.join(df_counts.filter(F.col("df_") <= max_df), "s").select("doc_id", "s")
+        df_counts = ex.groupBy("s").agg(F.count("*").alias("df_"))
+        kept = ex.join(
+            df_counts.filter(F.col("df_") <= max_df), "s"
+        ).select("doc_id", "s")
 
-    a = kept.select(F.col("doc_id").alias("doc_a"), "s")
-    b = kept.select(F.col("doc_id").alias("doc_b"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    # per-doc shingle counts derived from the SAME persisted index (sh
-    # is already distinct per doc), not a second shingling pass
-    sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                6,
-            ).alias("jaccard"),
+        a = kept.select(F.col("doc_id").alias("doc_a"), "s")
+        b = kept.select(F.col("doc_id").alias("doc_b"), "s")
+        inter = (
+            a.join(b, "s")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("n_inter"))
         )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        # per-doc shingle counts derived from the SAME cached index (sh
+        # is already distinct per doc), not a second shingling pass
+        sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+        return (
+            inter.join(sizes.withColumnRenamed("doc_id", "doc_a")
+                       .withColumnRenamed("n_sh", "n_a"), "doc_a")
+            .join(sizes.withColumnRenamed("doc_id", "doc_b")
+                  .withColumnRenamed("n_sh", "n_b"), "doc_b")
+            .select(
+                "doc_a", "doc_b",
+                F.round(
+                    F.col("n_inter")
+                    / (F.col("n_a") + F.col("n_b")
+                       - F.col("n_inter")).cast("double"),
+                    6,
+                ).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= threshold)
+            .localCheckpoint()
+        )
+    finally:
+        ex.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -414,7 +418,6 @@ def incremental_near_dups(
     bands: int = 4,
     rows: int = 2,
     threshold: float = 0.5,
-    persist: bool = True,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """(corpus_doc_id, new_doc_id, jaccard) — near-dups of a NEW batch
@@ -432,44 +435,43 @@ def incremental_near_dups(
     (the side that can be boilerplate-degenerate at 10^12 docs); each
     kept corpus bucket then contributes at most max_bucket pairs per
     colliding batch row, so no bucket goes quadratic."""
-    sh_c = with_shingles(corpus)
-    sh_b = with_shingles(batch)
-    if persist:
-        from pyspark import StorageLevel
-
-        sh_c = sh_c.persist(StorageLevel.MEMORY_AND_DISK)
-        sh_c.count()  # eager: signature path + verify side (the
-        # fan-out discipline)
-        sh_b = sh_b.persist(StorageLevel.MEMORY_AND_DISK)
-        sh_b.count()
-    bands_c = lsh_band_table(minhash_signature(sh_c, k), bands, rows)
-    if persist:
-        # the cap scans its input twice (sizes + probe): persist the
-        # corpus band table, key-partitioned so the sizes aggregate
-        # needs no exchange
-        bands_c = bands_c.repartition("band_idx", "band_hash").persist(
-            StorageLevel.MEMORY_AND_DISK
+    # both shingle frames feed the signature path and a verify side
+    # (the fan-out discipline); the cap scans the corpus band table
+    # twice (sizes + probe), so it is cached key-partitioned and the
+    # sizes aggregate needs no exchange
+    sh_c = with_shingles(corpus).persist(StorageLevel.MEMORY_AND_DISK)
+    sh_b = with_shingles(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    bands_c = (
+        lsh_band_table(minhash_signature(sh_c, k), bands, rows)
+        .repartition("band_idx", "band_hash")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        for df in (sh_c, sh_b, bands_c):
+            df.count()  # populate eagerly, shingles first
+        bt_c = _cap_buckets(bands_c, max_bucket).select(
+            F.col("doc_id").alias("corpus_doc_id"), "band_idx", "band_hash"
         )
-        bands_c.count()
-    bt_c = _cap_buckets(bands_c, max_bucket).select(
-        F.col("doc_id").alias("corpus_doc_id"), "band_idx", "band_hash"
-    )
-    bt_b = lsh_band_table(minhash_signature(sh_b, k), bands, rows).select(
-        F.col("doc_id").alias("new_doc_id"), "band_idx", "band_hash"
-    )
-    cand = (
-        bt_c.join(bt_b, ["band_idx", "band_hash"])
-        .select("corpus_doc_id", "new_doc_id")
-        .distinct()
-    )
-    pairs = cand.select(
-        F.col("corpus_doc_id").alias("doc_a"), F.col("new_doc_id").alias("doc_b")
-    )
-    return verify_jaccard(pairs, sh_c, threshold, shingled_b=sh_b).select(
-        F.col("doc_a").alias("corpus_doc_id"),
-        F.col("doc_b").alias("new_doc_id"),
-        "jaccard",
-    )
+        bt_b = lsh_band_table(minhash_signature(sh_b, k), bands, rows).select(
+            F.col("doc_id").alias("new_doc_id"), "band_idx", "band_hash"
+        )
+        cand = (
+            bt_c.join(bt_b, ["band_idx", "band_hash"])
+            .select("corpus_doc_id", "new_doc_id")
+            .distinct()
+        )
+        pairs = cand.select(
+            F.col("corpus_doc_id").alias("doc_a"),
+            F.col("new_doc_id").alias("doc_b"),
+        )
+        return verify_jaccard(pairs, sh_c, threshold, shingled_b=sh_b).select(
+            F.col("doc_a").alias("corpus_doc_id"),
+            F.col("doc_b").alias("new_doc_id"),
+            "jaccard",
+        ).localCheckpoint()
+    finally:
+        for df in (sh_c, sh_b, bands_c):
+            df.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -543,8 +545,6 @@ def substring_dup_pairs(
     keys on fp alone (its observed bucket sizes keep their exact
     values; gram equality implies fp equality, so (fp, gram) matches
     == byte-verified fp matches)."""
-    from pyspark import StorageLevel
-
     # repartition by (fp, gram) + persist BEFORE capping: the winnow
     # HOFs are the hottest primitive of this operator, and the cached
     # key-partitioning is exactly the self-join's key — both join
@@ -558,20 +558,24 @@ def substring_dup_pairs(
         .repartition("fp", "gram")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    fps.count()  # populate eagerly (the fan-out discipline)
-    capped = _cap_buckets(fps, max_bucket, keys=("fp",), id_col="doc_id")
-    a = capped.select(F.col("doc_id").alias("doc_a"), "fp", "gram")
-    b = capped.select(F.col("doc_id").alias("doc_b"), "fp", "gram")
-    verified = (
-        a.join(b, ["fp", "gram"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    return (
-        verified.select("doc_a", "doc_b", "fp").distinct()
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    try:
+        fps.count()  # populate eagerly (the fan-out discipline)
+        capped = _cap_buckets(fps, max_bucket, keys=("fp",), id_col="doc_id")
+        a = capped.select(F.col("doc_id").alias("doc_a"), "fp", "gram")
+        b = capped.select(F.col("doc_id").alias("doc_b"), "fp", "gram")
+        verified = (
+            a.join(b, ["fp", "gram"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+        )
+        return (
+            verified.select("doc_a", "doc_b", "fp").distinct()
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared)
+            .localCheckpoint()
+        )
+    finally:
+        fps.unpersist()
 
 
 # ---------------------------------------------------------------------------

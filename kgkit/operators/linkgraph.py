@@ -35,7 +35,7 @@ a probability simplex); both engines implement the identical variant.
 
 from __future__ import annotations
 
-from typing import Optional, Tuple
+from typing import Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -278,10 +278,11 @@ def pagerank(edges: DataFrame, iters: int = 5,
     deterministic; 5 rounds ranks a host web to well under the grid's
     resolution of interest (contribs contract by 0.85 per round).
 
-    The graph frame is tiny relative to the corpus: shuffle width is
-    sized to the edge count (~100k edges/partition, the
-    connected_components discipline) and each iteration is
-    localCheckpointed so lineage stays O(1).
+    The graph frame is tiny relative to the corpus: the edge table is
+    repartitioned to the edge count (~100k edges/partition, the
+    connected_components discipline), the per-round aggregates run at
+    the session's shuffle width (AQE coalesces them), and each
+    iteration is localCheckpointed so lineage stays O(1).
     """
     num, den = damping
     spark = edges.sparkSession
@@ -299,50 +300,45 @@ def pagerank(edges: DataFrame, iters: int = 5,
             )
     n_edges = edges.count()
     n_parts = max(1, min(64, n_edges // 100_000))
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        e = (
-            edges.join(out_w, "src")
-            .select("src", "dst", "weight", "out_w")
-            .repartition(n_parts, "src")
+    out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
+    e = (
+        edges.join(out_w, "src")
+        .select("src", "dst", "weight", "out_w")
+        .repartition(n_parts, "src")
+        .localCheckpoint()
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("rank_q", F.lit(0).cast("long"))
+    r0 = q_grid // n
+    base = ((den - num) * r0) // den
+    ranks = nodes.withColumn("rank_q", F.lit(r0).cast("long"))
+    for _ in range(iters):
+        contrib = (
+            e.join(ranks, e.src == ranks.node)
+            .select(
+                F.col("dst"),
+                F.expr("rank_q * weight div out_w").alias("c"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        ranks = (
+            nodes.join(contrib, nodes.node == contrib.dst, "left")
+            .select(
+                "node",
+                F.expr(
+                    f"{base}L + ({num}L * coalesce(contrib, 0L)) div {den}L"
+                ).cast("long").alias("rank_q"),
+            )
             .localCheckpoint()
         )
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint()
-        )
-        n = nodes.count()
-        if n == 0:
-            return nodes.withColumn("rank_q", F.lit(0).cast("long"))
-        r0 = q_grid // n
-        base = ((den - num) * r0) // den
-        ranks = nodes.withColumn("rank_q", F.lit(r0).cast("long"))
-        for _ in range(iters):
-            contrib = (
-                e.join(ranks, e.src == ranks.node)
-                .select(
-                    F.col("dst"),
-                    F.expr("rank_q * weight div out_w").alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-            )
-            ranks = (
-                nodes.join(contrib, nodes.node == contrib.dst, "left")
-                .select(
-                    "node",
-                    F.expr(
-                        f"{base}L + ({num}L * coalesce(contrib, 0L)) div {den}L"
-                    ).cast("long").alias("rank_q"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
     return ranks
 
 

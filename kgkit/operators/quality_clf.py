@@ -234,47 +234,49 @@ def train_quality_clf(
         .repartition(partitions, "doc_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = docs.select("doc_id", F.col("label").cast("long").alias("label"))
-    n_docs = labels.count()
-    # per-doc feature totals never overflow: |w_q| <= Q * few, cnt bounded
-    w_q = np.zeros(D, dtype=np.int64)
-    b_q = 0
-    for _ in range(epochs):
-        model = QualityClassifier(w_q, b_q)
-        wdf = model.weights_df(spark)
-        margins = (
-            X.join(F.broadcast(wdf), "bucket", "left")
-            .groupBy("doc_id")
-            .agg(
-                (
-                    F.coalesce(
-                        F.sum(F.col("cnt") * F.col("w_q")), F.lit(0)
-                    )
-                    + F.lit(b_q)
-                ).alias("margin_q")
+    try:
+        labels = docs.select("doc_id", F.col("label").cast("long").alias("label"))
+        n_docs = labels.count()
+        # per-doc feature totals never overflow: |w_q| <= Q * few, cnt bounded
+        w_q = np.zeros(D, dtype=np.int64)
+        b_q = 0
+        for _ in range(epochs):
+            model = QualityClassifier(w_q, b_q)
+            wdf = model.weights_df(spark)
+            margins = (
+                X.join(F.broadcast(wdf), "bucket", "left")
+                .groupBy("doc_id")
+                .agg(
+                    (
+                        F.coalesce(
+                            F.sum(F.col("cnt") * F.col("w_q")), F.lit(0)
+                        )
+                        + F.lit(b_q)
+                    ).alias("margin_q")
+                )
+                .join(labels, "doc_id")
+                .select(
+                    "doc_id",
+                    _err_q_expr(F.col("margin_q"), F.col("label")).alias("err_q"),
+                )
             )
-            .join(labels, "doc_id")
-            .select(
-                "doc_id",
-                _err_q_expr(F.col("margin_q"), F.col("label")).alias("err_q"),
+            grad_rows = (
+                X.join(margins, "doc_id")
+                .filter(F.col("bucket").isNotNull())
+                .groupBy("bucket")
+                .agg(F.sum(F.col("err_q") * F.col("cnt")).alias("g"))
+                .collect()
             )
-        )
-        grad_rows = (
-            X.join(margins, "doc_id")
-            .filter(F.col("bucket").isNotNull())
-            .groupBy("bucket")
-            .agg(F.sum(F.col("err_q") * F.col("cnt")).alias("g"))
-            .collect()
-        )
-        grad_b = margins.agg(F.sum("err_q")).collect()[0][0] or 0
-        g = np.zeros(D, dtype=np.int64)
-        for r in grad_rows:
-            g[int(r["bucket"])] = int(r["g"])
-        # exact-int inputs -> deterministic float update -> back to grid
-        w_q = w_q - np.rint(lr * g / n_docs).astype(np.int64)
-        b_q = int(b_q - np.rint(lr * float(grad_b) / n_docs))
-    X.unpersist()
-    return QualityClassifier(w_q, b_q)
+            grad_b = margins.agg(F.sum("err_q")).collect()[0][0] or 0
+            g = np.zeros(D, dtype=np.int64)
+            for r in grad_rows:
+                g[int(r["bucket"])] = int(r["g"])
+            # exact-int inputs -> deterministic float update -> back to grid
+            w_q = w_q - np.rint(lr * g / n_docs).astype(np.int64)
+            b_q = int(b_q - np.rint(lr * float(grad_b) / n_docs))
+        return QualityClassifier(w_q, b_q)
+    finally:
+        X.unpersist()
 
 
 def train_quality_clf_py(

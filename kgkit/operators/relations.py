@@ -310,7 +310,7 @@ def relations_from_counts(rel: DataFrame) -> DataFrame:
     # discipline) — and because that lineage is the deepest plan in the
     # repo, a persist would still carry it into every branch's
     # plan/AQE work; localCheckpoint truncates it to a LogicalRDD leaf
-    # (the corpus_clean._boundary rationale; measured ~0.4 s faster
+    # (the corpus_clean boundary rationale; measured ~0.4 s faster
     # than persist+count at sf0.1).  rel is the AGGREGATED relation —
     # bounded by distinct (pair x surface), orders of magnitude below
     # the corpus.

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from typing import List
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -164,7 +165,6 @@ def embedding_near_dups(
     dim: int = 64,
     max_bucket: int = 1000,
     observation=None,
-    persist: bool = True,
 ) -> DataFrame:
     """(vec_a, vec_b, cos) pairs above threshold, candidate-generated by
     sign-LSH buckets (identical vectors always share a bucket, so
@@ -185,41 +185,47 @@ def embedding_near_dups(
         per unit of collision probability — more planes is the banding
         lever for sign-LSH, traded against recall for *near* (not
         exact) duplicates).
-      * the bucketed frame is persisted before the self-join: the
+      * the bucketed frame is cached before the self-join: the
         hyperplane HOF lambdas do not canonicalize into a
         ReusedExchange, so without it both join sides recompute every
-        dot product."""
+        dot product.  The pairs come back as an eager localCheckpoint
+        and the cache is released."""
     from kgkit.operators.dedup import _cap_buckets
 
-    b = bucketed(embeddings.select("vec_id", "embedding"), planes, dim)
-    if persist:
-        from pyspark import StorageLevel
-
-        # persist the bucketed table key-partitioned BEFORE capping:
-        # the cap scans it twice (sizes + probe) and the hyperplane
-        # HOFs must not recompute; the cached partitioning serves the
-        # sizes aggregate and both self-join sides with no further
-        # exchange
-        b = b.repartition("bucket").persist(StorageLevel.MEMORY_AND_DISK)
+    # cache the bucketed table key-partitioned BEFORE capping: the cap
+    # scans it twice (sizes + probe) and the hyperplane HOFs must not
+    # recompute; the cached partitioning serves the sizes aggregate and
+    # both self-join sides with no further exchange
+    b = (
+        bucketed(embeddings.select("vec_id", "embedding"), planes, dim)
+        .repartition("bucket")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
         b.count()
-    capped = _cap_buckets(
-        b, max_bucket, observation, keys=("bucket",), id_col="vec_id"
-    )
-    a = capped.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"), "bucket"
-    )
-    c = capped.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"), "bucket"
-    )
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a", "vec_b",
-            F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("cos"),
+        capped = _cap_buckets(
+            b, max_bucket, observation, keys=("bucket",), id_col="vec_id"
         )
-        .filter(F.col("cos") >= threshold)
-    )
+        a = capped.select(
+            F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"),
+            "bucket",
+        )
+        c = capped.select(
+            F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"),
+            "bucket",
+        )
+        return (
+            a.join(c, "bucket")
+            .filter(F.col("vec_a") < F.col("vec_b"))
+            .select(
+                "vec_a", "vec_b",
+                F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("cos"),
+            )
+            .filter(F.col("cos") >= threshold)
+            .localCheckpoint()
+        )
+    finally:
+        b.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -256,26 +262,16 @@ def kmeans_centroids(
     Scale shape per iteration: one broadcast of the (n_cells x dim) tiny
     centroid table + one shuffle keyed (cell, pos) with map-side partial
     sums; nothing is collected to the driver.  Empty cells drop out
-    (standard Lloyd degeneracy) — deterministic on both engines."""
-    from pyspark import StorageLevel
-
-    spark = corpus.sparkSession
+    (standard Lloyd degeneracy) — deterministic on both engines.  The
+    loop runs at the session's shuffle width (AQE coalesces the tiny
+    partial-sum stages); the quantized corpus is cached for the loop
+    and released before the eagerly checkpointed centroids return."""
     qc = corpus.select(
         F.col(id_col).alias("_id"), quantize_vec(F.col(emb_col)).alias("qv")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_vecs = qc.count()  # eager populate (the fan-out discipline: the
-    # Lloyd loop consumes qc once per iteration) — and the count sizes
-    # the loop's shuffle width below
-
-    # the iteration shuffles CENTROID-UPDATE partials (n_cells x dim
-    # rows) and per-vector winners — graph-sized frames, so run the
-    # loop at graph-sized shuffle width (the connected_components
-    # discipline: log-round loops at corpus width are pure scheduler
-    # overhead); restored in the finally even on failure
-    n_parts = max(1, min(64, n_vecs // 100_000))
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        qc.count()  # eager populate (the fan-out discipline: the
+        # Lloyd loop consumes qc once per iteration)
         cents = qc.orderBy("_id").limit(n_cells).select(
             F.col("_id").alias("cell"), F.col("qv").alias("cv")
         )
@@ -298,16 +294,12 @@ def kmeans_centroids(
                     lambda x: x["s"],
                 ).alias("cv")
             )
-        # centroids are n_cells tiny rows: materialize them eagerly and
-        # RELEASE the quantized-corpus cache now — returning a lazy
-        # frame over qc would leak one MEMORY_AND_DISK corpus copy per
-        # call for the session's lifetime (the metrics_fanout_df leak
-        # class) and re-run the Lloyd lineage on every downstream action
-        cents = cents.localCheckpoint()
+        # centroids are n_cells tiny rows: materialize them eagerly so
+        # the returned frame neither reads the released cache nor
+        # re-runs the Lloyd lineage on every downstream action
+        return cents.localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    qc.unpersist()
-    return cents
+        qc.unpersist()
 
 
 def ivf_kmeans_topk(

@@ -13,9 +13,9 @@ canonicalized mentions:
 Scale design: the stage shuffles the linked-mention stream EXACTLY ONCE,
 on url.  Hash-partitioning by url satisfies both downstream
 distributions — the (url, entity) aggregation (url is a prefix of the
-grouping key) and the per-url window — so Catalyst plans a single
-exchange that both union branches reuse (ReusedExchange; this also
-means the upstream stage-1 Arrow UDF executes once with no persist).
+grouping key) and the per-url window — so the stage plans a single
+exchange, cached once and read by both union branches; the upstream
+stage-1 Arrow UDF executes once.
 url is a maximal-cardinality uniform key: no skew regardless of how
 hub-heavy the ENTITY distribution is — the hub-entity skew surfaces
 only in entity-keyed aggregations, handled by explicit salting in
@@ -30,6 +30,7 @@ rule requires (AQE alone is not accepted as the answer).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,72 +39,71 @@ def assemble_triples(
     linked: DataFrame,
     canon: DataFrame,
     n_buckets: int = 64,
-    persist: bool = True,
 ) -> DataFrame:
     """linked mentions + canonical map -> triples(subj, pred, obj, url,
     char_start, char_end, bucket).
 
-    ``persist=True`` caches the url-partitioned frame: the cached
-    partitioning satisfies BOTH branches' distribution requirements
-    (url is a prefix of the (url, entity) grouping key and is the
-    window key), so each branch reads the cache with no further
+    The url-partitioned frame is cached for the two-branch fan-out: the
+    cached partitioning satisfies BOTH branches' distribution
+    requirements (url is a prefix of the (url, entity) grouping key and
+    is the window key), so each branch reads the cache with no further
     exchange and the upstream stage-1 UDF executes exactly once.
     (Catalyst's ReusedExchange would serve the same purpose plan-side,
     but the linking stage's lambda expressions defeat plan
-    canonicalization, so the reuse is made explicit here.)
+    canonicalization, so the reuse is made explicit here.)  The result
+    is an eager localCheckpoint, so the cache is released before the
+    function returns.
     """
     m = (
         linked.join(F.broadcast(canon), "entity_id", "left")
         .withColumn("entity", F.coalesce("canonical_id", "entity_id"))
         .select("url", "mention_id", "entity", "char_start", "char_end")
         .repartition("url")  # the stage's ONE exchange over the mention stream
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        m = m.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the cache EAGERLY before the two-branch fan-out:
-        # with a lazy persist both union branches (and, downstream, the
-        # entity-counts orderBy's range-partition sampling pass) race
-        # the unpopulated cache inside one action, serializing on the
-        # block locks / re-running the stage-1 UDF lineage — measured
-        # at sf0.1: the assembled query dropped 4.0->2.5 s and
-        # kg_entity_counts 7.0->~3 s once the cache is populated first
-        # (the metrics_fanout_df discipline, guide §2.4/§5)
+    try:
+        # populate the cache EAGERLY before the two-branch fan-out:
+        # with a lazy persist both union branches race the unpopulated
+        # cache inside one action, serializing on the block locks /
+        # re-running the stage-1 UDF lineage (measured at sf0.1: the
+        # assembled query dropped 4.0->2.5 s once the cache is
+        # populated first)
         m.count()
 
-    page_triples = (
-        m.groupBy("url", "entity")
-        .agg(
-            F.min("char_start").alias("char_start"),
-            F.min("char_end").alias("char_end"),
+        page_triples = (
+            m.groupBy("url", "entity")
+            .agg(
+                F.min("char_start").alias("char_start"),
+                F.min("char_end").alias("char_end"),
+            )
+            .select(
+                F.col("url").alias("subj"),
+                F.lit("mentions").alias("pred"),
+                F.col("entity").alias("obj"),
+                "url", "char_start", "char_end",
+            )
         )
-        .select(
-            F.col("url").alias("subj"),
-            F.lit("mentions").alias("pred"),
-            F.col("entity").alias("obj"),
-            "url", "char_start", "char_end",
-        )
-    )
 
-    w = Window.partitionBy("url").orderBy("char_start", "mention_id")
-    cooccur = (
-        m.withColumn("next_entity", F.lead("entity").over(w))
-        .withColumn("next_start", F.lead("char_start").over(w))
-        .filter(F.col("next_entity").isNotNull())
-        .select(
-            F.col("entity").alias("subj"),
-            F.lit("cooccurs_with").alias("pred"),
-            F.col("next_entity").alias("obj"),
-            "url",
-            "char_start",
-            F.col("next_start").alias("char_end"),
+        w = Window.partitionBy("url").orderBy("char_start", "mention_id")
+        cooccur = (
+            m.withColumn("next_entity", F.lead("entity").over(w))
+            .withColumn("next_start", F.lead("char_start").over(w))
+            .filter(F.col("next_entity").isNotNull())
+            .select(
+                F.col("entity").alias("subj"),
+                F.lit("cooccurs_with").alias("pred"),
+                F.col("next_entity").alias("obj"),
+                "url",
+                "char_start",
+                F.col("next_start").alias("char_end"),
+            )
         )
-    )
 
-    return page_triples.unionByName(cooccur).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+        return page_triples.unionByName(cooccur).withColumn(
+            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+        ).localCheckpoint()
+    finally:
+        m.unpersist()
 
 
 def write_triples(triples: DataFrame, ref: str) -> None:

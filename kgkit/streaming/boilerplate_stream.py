@@ -170,7 +170,8 @@ class IncrementalBoilerplateStream:
 
     def _compact(self) -> None:
         """Fold the partial-count parts into one frame (eager
-        localCheckpoint: materialize before releasing the old parts)."""
+        localCheckpoint: materialize before dropping the old parts,
+        whose blocks GC frees)."""
         folded = (
             _union_all(self.line_parts)
             .groupBy("host", "lh")
@@ -186,8 +187,6 @@ class IncrementalBoilerplateStream:
             ]
             if self.id_parts else []
         )
-        for p in self.line_parts + self.id_parts:
-            p.unpersist()
         self.line_parts = [folded]
         self.id_parts = id_folded
         self._parts_since_compact = 0

@@ -292,13 +292,9 @@ class IncrementalKGStream:
         # the batch's first action and re-run the per-batch UDF (the
         # assemble_triples discipline); batch-sized, one extra job
         linked = link_mentions(mentions, self.embeddings)
-        # persist=False: the mention stream both branches share is the
-        # persisted frame above; per micro-batch the duplicated
-        # broadcast-join + url exchange is batch-sized and cheaper than
-        # leaking assemble_triples' internal cache across triggers
-        triples = assemble_triples(
-            linked, self._canon(spark), persist=False
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # an eager checkpoint: the sink write and the counts part below
+        # read it without re-running the batch's stages
+        triples = assemble_triples(linked, self._canon(spark))
 
         # relation partial counts: relation_stream is per-page (the
         # same property that makes the triples stateless), so each
@@ -367,14 +363,14 @@ class IncrementalKGStream:
             self._parts_since_compact += 1
             if self._parts_since_compact >= self.compact_every:
                 self._compact()
-        self._spill = [mentions, triples]
+        self._spill = [mentions]
         return triples
 
     def _compact(self) -> None:
         """Fold the partial-count parts into one frame each.
         localCheckpoint is eager: the folded frame is materialized
-        before any old part is released, and the union lineage is
-        truncated."""
+        before the old parts are dropped (their blocks are freed by GC),
+        and the union lineage is truncated."""
         folded = (
             _union_all(self.count_parts)
             .groupBy("obj")
@@ -401,8 +397,6 @@ class IncrementalKGStream:
             ]
             if self.url_parts else []
         )
-        for p in self.count_parts + self.rel_parts + self.url_parts:
-            p.unpersist()
         self.count_parts = [folded]
         self.rel_parts = rel_folded
         self.url_parts = url_folded

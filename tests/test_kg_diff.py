@@ -69,7 +69,7 @@ class TestTriplesDiff:
 
         def run(p):
             return assemble_triples(
-                link_mentions(detect_mentions(p), emb), canon, persist=False
+                link_mentions(detect_mentions(p), emb), canon
             ).select("subj", "pred", "obj").localCheckpoint()
 
         t1, t2 = run(pages), run(v2)

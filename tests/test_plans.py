@@ -18,6 +18,22 @@ def _executed_plan(df) -> str:
 PYTHON_NODES = ("BatchEvalPython", "MapInPandas", "MapInArrow")
 
 
+def _checkpointed_plans(spark, monkeypatch):
+    """From now on, record the executed plan of every frame that is
+    materialized through ``localCheckpoint`` — an operator that returns
+    an eager checkpoint hides its own plan behind the checkpoint scan."""
+    cls = type(spark.range(0))  # the session's concrete DataFrame class
+    plans = []
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(_executed_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return plans
+
+
 def _ancestors(lines, i):
     """The tree-string lines above ``lines[i]`` that are its ancestors:
     each one starts its node name left of the previous one's."""
@@ -73,10 +89,11 @@ class TestPlanShape:
             if "Exchange" in line:
                 assert "BroadcastExchange" in line, line
 
-    def test_triples_runs_stage1_udf_once(self, spark):
+    def test_triples_runs_stage1_udf_once(self, spark, monkeypatch):
         """The fused chain caches the url-partitioned frame: both union
         branches read the cache (InMemoryTableScan), and the stage-1 UDF
-        appears in exactly one cached subtree."""
+        appears in exactly one cached subtree.  The result is an eager
+        checkpoint, so the pin reads the plan that materialized it."""
         from kgkit.operators.canonicalize import canonical_map
         from kgkit.operators.linking import link_mentions
         from kgkit.operators.mentions import detect_mentions
@@ -85,10 +102,12 @@ class TestPlanShape:
 
         emb = spark.read.parquet(f"{self.SF}/embeddings.parquet")
         pages = pages_for_mentions(load_pages(spark, self.SF))
-        triples = assemble_triples(
-            link_mentions(detect_mentions(pages), emb), canonical_map(spark)
-        )
-        plan = _executed_plan(triples)
+        linked = link_mentions(detect_mentions(pages), emb)
+        canon = canonical_map(spark)
+        plans = _checkpointed_plans(spark, monkeypatch)
+        triples = assemble_triples(linked, canon)
+        assert len(plans) == 1, plans
+        plan = plans[0]
         # both branches read the cache; the UDF lives inside the cached
         # relation (the plan STRING repeats the cached child per scan,
         # but execution materializes it once — tests/test_stages and the
@@ -99,6 +118,10 @@ class TestPlanShape:
         assert udfs, plan
         for i in udfs:
             assert any("InMemoryRelation" in a for a in _ancestors(lines, i)), plan
+        # the returned frame scans the checkpoint: the UDF already ran
+        returned = _executed_plan(triples)
+        assert "Scan ExistingRDD" in returned, returned
+        assert "MapInArrow" not in returned, returned
 
 
 class TestRound4PlanShapes:
@@ -120,18 +143,20 @@ class TestRound4PlanShapes:
         scan = [l for l in plan.splitlines() if "FileScan" in l]
         assert scan and "n_chars" not in scan[0] and "source" not in scan[0]
 
-    def test_embedding_near_dups_joins_cached_buckets(self, spark):
+    def test_embedding_near_dups_joins_cached_buckets(self, spark, monkeypatch):
         """Both sides of the bucket self-join must read the persisted
         capped table (InMemoryTableScan), not recompute the hyperplane
-        HOF lambdas — and the join must be keyed (no cartesian)."""
+        HOF lambdas — and the join must be keyed (no cartesian).  The
+        pin reads the plan that materialized the returned checkpoint."""
         from kgkit.operators.similarity import embedding_near_dups
 
         emb = spark.read.parquet(f"{self.SF}/embeddings.parquet").selectExpr(
             "vec_id", "embedding"
         )
-        df = embedding_near_dups(emb, dim=64)
-        df.count()  # populate the cache so the executed plan shows scans
-        plan = _executed_plan(df)
+        plans = _checkpointed_plans(spark, monkeypatch)
+        embedding_near_dups(emb, dim=64)
+        assert len(plans) == 1, plans
+        plan = plans[0]
         assert plan.count("InMemoryTableScan") >= 2, plan
         assert "CartesianProduct" not in plan, plan
 

@@ -101,7 +101,7 @@ class TestBoilerplateBucketCap:
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         obs = Observation("lsh_cap")
         got = minhash_near_dups(
-            docs, max_bucket=10, observation=obs, persist=False
+            docs, max_bucket=10, observation=obs
         ).collect()
         # the boilerplate class contributes NO pairs; the true pair stays
         assert {(r["doc_a"], r["doc_b"]) for r in got} == {(100, 101)}
@@ -118,7 +118,7 @@ class TestBoilerplateBucketCap:
         boiler = "site template nav footer copyright " * 4
         rows = [(i, boiler) for i in range(10)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        got = minhash_near_dups(docs, persist=False).collect()
+        got = minhash_near_dups(docs).collect()
         assert len(got) == 10 * 9 // 2
         assert all(r["jaccard"] == 1.0 for r in got)
 
