@@ -138,8 +138,8 @@ def relation_stream(
     entirely per-page (window within the page, gap substring from the
     page's own text, static canonical map), which is what lets the
     incremental KG stream contribute per-batch partial counts whose
-    sum equals the batch aggregation exactly (and, in recrawl mode,
-    retract a superseded page's occurrences by url)."""
+    sum equals the batch aggregation exactly (and retract a superseded
+    page's occurrences by url)."""
     pairs = relation_pairs(linked, canon, max_gap_chars)
     pred = F.trim(
         F.substring(

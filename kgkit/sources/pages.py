@@ -61,7 +61,7 @@ def latest_pages(pages: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
     """One row per url — the LATEST crawl version by ``ts_col``.
 
     A crawl corpus carries recrawls; the batch pipeline wants each
-    url's newest version (the streaming twin is kg_stream's recrawl
+    url's newest version (the streaming twin is kg_stream's
     supersession, where "latest" is batch order).  One
     map-side-combined ``max_by`` aggregation over a (ts, row) struct —
     never a window over full rows by url (the hot-host version of the

@@ -64,7 +64,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Callable, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -77,18 +77,7 @@ from kgkit.operators.dedup import (
     verify_jaccard,
     with_shingles,
 )
-
-
-def _union_all(parts: List[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _complete(path: str) -> bool:
-    """Parquet dir fully written (Spark's _SUCCESS marker present)."""
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+from kgkit.streaming import store
 
 
 def _scan_index_dir(index_dir: str) -> Tuple[Optional[str], List[str], set]:
@@ -105,8 +94,8 @@ def _scan_index_dir(index_dir: str) -> Tuple[Optional[str], List[str], set]:
         if d.startswith("gen="):
             man = os.path.join(index_dir, f"manifest-{d.split('=')[1]}.json")
             if (
-                _complete(os.path.join(sh_base, d))
-                and _complete(os.path.join(index_dir, "bands", d))
+                store.complete(os.path.join(sh_base, d))
+                and store.complete(os.path.join(index_dir, "bands", d))
                 and os.path.exists(man)
             ):
                 gens.append((int(d.split("=")[1]), d, man))
@@ -121,14 +110,16 @@ def _scan_index_dir(index_dir: str) -> Tuple[Optional[str], List[str], set]:
         for d in names
         if d.startswith("batch=")
         and d not in folded
-        and _complete(os.path.join(sh_base, d))
-        and _complete(os.path.join(index_dir, "bands", d))
+        and store.complete(os.path.join(sh_base, d))
+        and store.complete(os.path.join(index_dir, "bands", d))
     ]
     return gen_name, batch_parts, folded
 
 
 class IncrementalDedupStream:
     """Recrawl dedup state + per-micro-batch processing."""
+
+    attach = store.attach
 
     def __init__(
         self,
@@ -247,7 +238,7 @@ class IncrementalDedupStream:
         # count bucket sizes within the slice (equi-key prune keeps
         # whole buckets, so the counts equal a full-table cap's)
         probe_keys = bt_b.select("band_idx", "band_hash").distinct()
-        relevant = _union_all(self.bt_parts).join(
+        relevant = store.union_all(self.bt_parts).join(
             F.broadcast(probe_keys), ["band_idx", "band_hash"]
         )
         capped = _cap_buckets(relevant, self.max_bucket)
@@ -266,7 +257,7 @@ class IncrementalDedupStream:
             .distinct()
         )
         pairs = verify_jaccard(
-            cand, _union_all(self.sh_parts), self.threshold, shingled_b=sh_b
+            cand, store.union_all(self.sh_parts), self.threshold, shingled_b=sh_b
         ).select(
             F.col("doc_a").alias("corpus_doc_id"),
             F.col("doc_b").alias("new_doc_id"),
@@ -339,8 +330,8 @@ class IncrementalDedupStream:
         manifests.  Any crash inside this sequence leaves either the
         old gen + parts (manifest not yet renamed) or the new gen with
         folded dirs excluded by its manifest — never a double-load."""
-        new_sh = _union_all(self.sh_parts).localCheckpoint()
-        new_bt = _union_all(self.bt_parts).localCheckpoint()
+        new_sh = store.union_all(self.sh_parts).localCheckpoint()
+        new_bt = store.union_all(self.bt_parts).localCheckpoint()
         if self.index_dir:
             gen_name = f"gen={self._gen}"
             self._durable_write(new_sh, new_bt, gen_name)
@@ -371,23 +362,3 @@ class IncrementalDedupStream:
         self.sh_parts = [new_sh]
         self.bt_parts = [new_bt]
         self._batches_since_compact = 0
-
-    def attach(
-        self,
-        pages_stream: DataFrame,
-        sink: Callable[[DataFrame, int], None],
-        checkpoint_dir: Optional[str] = None,
-        trigger_once: bool = False,
-    ):
-        """Wire to a streaming (doc_id, text) DataFrame via foreachBatch;
-        ``sink(pairs_df, batch_id)`` receives each batch's pairs."""
-
-        def _process(batch_df: DataFrame, batch_id: int) -> None:
-            sink(self.process_batch(batch_df, batch_id=batch_id), batch_id)
-
-        writer = pages_stream.writeStream.foreachBatch(_process)
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -63,7 +63,7 @@ class TestStreamEqualsBatch:
             trigger_once=True,
         )
         q.awaitTermination(900)
-        assert len(stm._counted_ids) >= 2  # genuinely multi-batch
+        assert len(stm.store.counted) >= 2  # genuinely multi-batch
 
         batch_docs = spark.read.parquet(landing_dir)
         # the merged per-batch partials equal the one-shot statistics
@@ -86,9 +86,9 @@ class TestStreamEqualsBatch:
             IncrementalBoilerplateStream,
         )
 
-        stm = IncrementalBoilerplateStream()
+        stm = IncrementalBoilerplateStream(pages_dir=str(tmp_path / "store"))
         docs = spark.read.parquet(landing_dir)
-        stm.process_batch(docs)
+        stm.process_batch(docs, batch_id=0)
         tpl = stm.template_lines(min_docs=5).collect()
         hosts = {r["host"] for r in tpl}
         # the mega-host's banner is template chrome; lh is host-scoped
@@ -160,7 +160,7 @@ class TestResume:
         stm2 = IncrementalBoilerplateStream.resume(
             spark, str(tmp_path / "store")
         )
-        assert stm2._counted_ids == {0, 1}
+        assert stm2.store.counted == {0, 1}
         assert _rows(stm2.line_counts()) == want
         # a replayed batch after resume is still guarded
         stm2.process_batch(half_b, batch_id=1)
@@ -202,9 +202,7 @@ class TestRecrawl:
         )
 
         v1, v2 = self._v1(spark), self._v2(spark)
-        stm = IncrementalBoilerplateStream(
-            pages_dir=str(tmp_path / "store"), recrawl=True
-        )
+        stm = IncrementalBoilerplateStream(pages_dir=str(tmp_path / "store"))
         stm.process_batch(v1, batch_id=0)
         tpl0 = {(r["host"], r["lh"])
                 for r in stm.template_lines(min_docs=5).collect()}
@@ -230,15 +228,15 @@ class TestRecrawl:
 
         v1, v2 = self._v1(spark), self._v2(spark)
         store = str(tmp_path / "store")
-        stm = IncrementalBoilerplateStream(pages_dir=store, recrawl=True)
+        stm = IncrementalBoilerplateStream(pages_dir=store)
         stm.process_batch(v1, batch_id=0)
         stm.process_batch(v2, batch_id=1)
         want = _rows(stm.line_counts())
         stm.process_batch(v2, batch_id=1)  # replay: no double retraction
         assert _rows(stm.line_counts()) == want
 
-        stm2 = IncrementalBoilerplateStream.resume(spark, store, recrawl=True)
-        assert stm2._counted_ids == {0, 1}
+        stm2 = IncrementalBoilerplateStream.resume(spark, store)
+        assert stm2.store.counted == {0, 1}
         assert _rows(stm2.line_counts()) == want
         latest = v1.filter("doc_id > 3").unionByName(v2)
         assert _rows(stm2.pages(spark)) == _rows(latest)
@@ -255,25 +253,29 @@ class TestRecrawl:
             IncrementalBoilerplateStream,
         )
 
-        with pytest.raises(ValueError):
-            IncrementalBoilerplateStream(recrawl=True)
+        with pytest.raises(TypeError):
+            IncrementalBoilerplateStream()
 
 
 class TestCompaction:
-    def test_parts_fold_and_counts_survive(self, spark, landing_dir):
+    def test_parts_fold_and_counts_survive(
+        self, spark, landing_dir, tmp_path, monkeypatch
+    ):
         from kgkit.operators.boilerplate import host_line_counts
+        from kgkit.streaming import store
         from kgkit.streaming.boilerplate_stream import (
             IncrementalBoilerplateStream,
         )
 
+        monkeypatch.setattr(store, "COMPACT_EVERY", 2)
         docs = spark.read.parquet(landing_dir)
         parts = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-        stm = IncrementalBoilerplateStream(compact_every=2)
+        stm = IncrementalBoilerplateStream(pages_dir=str(tmp_path / "store"))
         for i, p in enumerate(parts):
             stm.process_batch(p, batch_id=i)
-        # 3 batches, compact_every=2: one fold happened -> 2 live parts
-        assert len(stm.line_parts) == 2
+        # 3 batches, COMPACT_EVERY=2: one fold happened -> 2 live parts
+        assert len(stm.store.partials["lines"]) == 2
         assert _rows(stm.line_counts()) == _rows(host_line_counts(docs))
-        stm._compact()
-        assert len(stm.line_parts) == 1
+        stm.store.fold()
+        assert len(stm.store.partials["lines"]) == 1
         assert _rows(stm.line_counts()) == _rows(host_line_counts(docs))

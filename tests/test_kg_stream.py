@@ -83,7 +83,7 @@ class TestStreamEqualsBatch:
             trigger_once=True,
         )
         q.awaitTermination(900)
-        assert len(stm._counted_ids) >= 2  # genuinely multi-batch
+        assert len(stm.store.counted) >= 2  # genuinely multi-batch
 
         batch = _batch_triples(
             spark, spark.read.parquet(landing_dir), embeddings
@@ -128,7 +128,7 @@ class TestReplayIdempotence:
         # foreachBatch replay: same batch_id, same rows
         replay = _rows(stm.process_batch(pages, batch_id=0))
         assert replay == first
-        assert len(stm.count_parts) == 1  # guarded: no second part
+        assert len(stm.store.partials["entity_counts"]) == 1  # guarded: no second part
         assert _rows(stm.triples(spark)) == first  # dir overwritten, not doubled
         want = {}
         for row in first:
@@ -221,7 +221,7 @@ class TestRecrawl:
         stm2 = IncrementalKGStream.resume(
             spark, embeddings, store, recrawl=True
         )
-        assert stm2._counted_ids == {0, 1}
+        assert stm2.store.counted == {0, 1}
         assert _rows(stm2.entity_counts()) == want_counts
         latest = self._latest(a, a2)
         assert _rows(stm2.triples(spark)) == _rows(
@@ -245,8 +245,51 @@ class TestRecrawl:
     def test_recrawl_requires_durable_store(self, embeddings):
         from kgkit.streaming.kg_stream import IncrementalKGStream
 
-        with pytest.raises(ValueError):
+        with pytest.raises(TypeError):
             IncrementalKGStream(embeddings, recrawl=True)
+
+    def test_recrawl_false_raises(self, embeddings, tmp_path):
+        from kgkit.streaming.kg_stream import IncrementalKGStream
+
+        with pytest.raises(ValueError):
+            IncrementalKGStream(
+                embeddings, triples_dir=str(tmp_path / "store"), recrawl=False
+            )
+
+    def test_torn_batch_is_replayed_in_full(self, spark, embeddings, tmp_path):
+        """A process that dies between a batch's two part writes leaves
+        the batch uncommitted: resume and the reads ignore it, and its
+        replay writes and counts it in full."""
+        import os
+
+        from kgkit.streaming.kg_stream import IncrementalKGStream
+
+        a, b, _, a2, _ = self._slices(spark)
+        store = str(tmp_path / "store")
+        stm = IncrementalKGStream(embeddings, triples_dir=store, recrawl=True)
+        stm.process_batch(a, batch_id=0)
+        stm.process_batch(b.unionByName(a2), batch_id=1)  # recrawl half of a
+        # the crash: batch 1's triples part is complete, its relation
+        # part is not
+        os.remove(os.path.join(store, "relbatch=1", "_SUCCESS"))
+
+        stm2 = IncrementalKGStream.resume(
+            spark, embeddings, store, recrawl=True
+        )
+        assert _rows(stm2.triples(spark)) == _rows(
+            _batch_triples(spark, a, embeddings)
+        )
+        stm2.process_batch(b.unionByName(a2), batch_id=1)  # the replay
+        latest = self._latest(a, b.unionByName(a2))
+        want_rel = _rows(_batch_relations(spark, latest, embeddings))
+        assert len(want_rel) > 0 and _rows(stm2.relations()) == want_rel
+        batch = _batch_triples(spark, latest, embeddings)
+        assert _rows(stm2.triples(spark)) == _rows(batch)
+        got = {r["obj"]: r["n_triples"]
+               for r in stm2.entity_counts().collect()}
+        want = {r["obj"]: r["count"]
+                for r in batch.groupBy("obj").count().collect()}
+        assert got == want
 
     def test_foreachbatch_recrawl_e2e(self, spark, embeddings, tmp_path):
         """The wiring end to end: two availableNow passes over a
@@ -278,10 +321,10 @@ class TestRecrawl:
             q.awaitTermination(900)
 
         _drain()
-        n_first = len(stm._counted_ids)
+        n_first = len(stm.store.counted)
         a2.write.mode("append").parquet(landing)  # the recrawl lands
         _drain()
-        assert len(stm._counted_ids) > n_first
+        assert len(stm.store.counted) > n_first
 
         latest = self._latest(a.unionByName(b), a2)
         assert _rows(stm.triples(spark)) == _rows(
@@ -336,7 +379,7 @@ class TestDurableResume:
 
         # crash: a fresh object resumes from the store alone
         stm2 = IncrementalKGStream.resume(spark, embeddings, store)
-        assert stm2._counted_ids == {0, 1}
+        assert stm2.store.counted == {0, 1}
         stm2.process_batch(slices[2], batch_id=2)
 
         batch = _batch_triples(spark, pages, embeddings)
@@ -397,7 +440,7 @@ class TestCrawlToKG:
             trigger_once=True,
         )
         q.awaitTermination(900)
-        assert len(stm._counted_ids) == 3  # one micro-batch per segment
+        assert len(stm.store.counted) == 3  # one micro-batch per segment
 
         batch = _batch_triples(spark, warc_pages(spark, segs), emb)
         assert _rows(stm.triples(spark)) == _rows(batch)
@@ -410,10 +453,13 @@ class TestCrawlToKG:
 
 class TestCountsCompaction:
     def test_compaction_preserves_counts_and_folds_parts(
-        self, spark, embeddings
+        self, spark, embeddings, tmp_path, monkeypatch
     ):
         from kgkit.sources.pages import load_pages, pages_for_mentions
+        from kgkit.streaming import store
         from kgkit.streaming.kg_stream import IncrementalKGStream
+
+        monkeypatch.setattr(store, "COMPACT_EVERY", 2)
 
         pages = pages_for_mentions(load_pages(spark, SF_DIR)).filter(
             "pmod(xxhash64(url), 4) = 1"
@@ -421,11 +467,13 @@ class TestCountsCompaction:
         slices = [
             pages.filter(f"pmod(xxhash64(url), 3) = {i}") for i in range(3)
         ]
-        stm = IncrementalKGStream(embeddings, compact_every=2)
+        stm = IncrementalKGStream(
+            embeddings, triples_dir=str(tmp_path / "store")
+        )
         for i, s in enumerate(slices):
             stm.process_batch(s, batch_id=i)
         # parts: b0, b1 -> folded to 1, then b2 appended
-        assert len(stm.count_parts) == 2
+        assert len(stm.store.partials["entity_counts"]) == 2
         batch = _batch_triples(spark, pages, embeddings)
         got = {r["obj"]: r["n_triples"] for r in stm.entity_counts().collect()}
         want = {r["obj"]: r["count"] for r in batch.groupBy("obj").count().collect()}

@@ -5,7 +5,8 @@ The lifetime rule: a cache an operator makes for its own fan-out is a
 returns is an eager ``localCheckpoint``, whose blocks the context
 cleaner frees once the frame is dropped.  So after a query's frames are
 dropped and both garbage collectors run, the session's persistent-RDD
-count is back where it was — also when the operator raises midway."""
+count is back where it was — also when the operator raises midway.  The
+incremental KG stream follows the same rule per micro-batch."""
 
 from __future__ import annotations
 
@@ -133,4 +134,23 @@ def test_cache_released_when_operator_raises(spark, monkeypatch, fail):
     before = _baseline(spark)
     with pytest.raises(RuntimeError, match="injected"):
         fail(spark, monkeypatch)
+    assert _settled(spark, before) <= before
+
+
+def test_kg_stream_releases_its_caches(spark, tmp_path):
+    from kgkit.sources.pages import load_pages, pages_for_mentions
+    from kgkit.streaming.kg_stream import IncrementalKGStream
+
+    pages = pages_for_mentions(load_pages(spark, SF)).filter(
+        "pmod(xxhash64(url), 5) = 0"
+    )
+    embeddings = spark.read.parquet(f"{SF}/embeddings.parquet")
+    before = _baseline(spark)
+    stm = IncrementalKGStream(embeddings, triples_dir=str(tmp_path / "store"))
+    for i in range(2):
+        stm.process_batch(
+            pages.filter(f"pmod(xxhash64(url), 2) = {i}"), batch_id=i
+        )
+    assert stm.entity_counts().collect()
+    del stm
     assert _settled(spark, before) <= before
