@@ -1,7 +1,6 @@
 """The row-to-records Python boundary: ONE Arrow batch loop for every
 UDF that turns one input row into a list of output records (stage-1
-mention detection, word tags / probabilities, the evaluation
-predictor, the WARC member parse).
+mention detection, word tags / probabilities, the WARC member parse).
 
 Following *Accelerating Python UDFs in Vectorized Query Execution*
 (CIDR 2022), the boundary marshalling lives here, apart from the UDF

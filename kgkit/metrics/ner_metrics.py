@@ -793,21 +793,3 @@ def classification_report(
         lines.append("")
     return "\n".join(lines)
 
-
-def evaluation_dict(
-    df: DataFrame, scheme: str = "bio", classes: Optional[List[str]] = None
-) -> Dict[str, Dict[str, Dict[str, Optional[float]]]]:
-    """EVALUATION_DICT parity (api/model.py:925-953):
-    [micro|macro][entity|token][precision|recall|f1] — token level over
-    plain classes, entity level over chunk classes, one Spark pass each."""
-    token = ner_metrics(df, "token", scheme, classes=classes)
-    entity = ner_metrics(df, "entity", scheme)
-    out: Dict[str, Dict[str, Dict[str, Optional[float]]]] = {
-        label: {lvl: {} for lvl in ("entity", "token")}
-        for label in ("micro", "macro")
-    }
-    for metric in ("precision", "recall", "f1"):
-        for label in ("micro", "macro"):
-            out[label]["entity"][metric] = entity[f"{metric}_{label}"]
-            out[label]["token"][metric] = token[f"{metric}_{label}"]
-    return out

@@ -332,8 +332,10 @@ def default_trained_tagger() -> TrainedTagger:
 # twin recomputes the forward pass with DOCUMENT-level lag/lead
 # contexts and assumes every printable-ASCII word WordPiece-tokenizes
 # to real pieces.  Both assumptions have bounds the current corpora sit
-# far inside; assert them in the query path so a corpus change fails
-# loudly instead of silently drifting from the oracle.
+# far inside; tests/test_trained.py asserts them over every test corpus
+# so a corpus change fails loudly instead of silently drifting from the
+# oracle.  Production text outside the bounds takes the multi-slice
+# path, which the oracle does not model.
 _MAX_ASCII_WORD = 99    # >= 100 pieces -> [UNK] (wordpiece cap), but the
                         # oracle keys lower(word) for any '^[!-~]+$' match
 _MAX_DOC_CHARS = 1022   # pieces-per-doc <= chars-per-doc; one slice holds

@@ -50,20 +50,13 @@ def host_line_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def remove_boilerplate_lines(
-    docs: DataFrame, min_docs: int = 5, counts: DataFrame = None
-) -> DataFrame:
+def remove_boilerplate_lines(docs: DataFrame, min_docs: int = 5) -> DataFrame:
     """docs(doc_id, host, text) -> (doc_id, host, n_kept, n_removed,
     clean_text) with every >= min_docs-document line of the host
     removed.  Line order is preserved; a fully-templated page keeps
-    doc identity with clean_text = ''.
-
-    ``counts`` overrides the (host, lh, n_docs) statistics — the
-    streaming path (streaming/boilerplate_stream.py) passes its merged
-    per-batch partials, which equal ``host_line_counts(docs)`` exactly
-    because each document lands in one micro-batch."""
+    doc identity with clean_text = ''."""
     host_boiler = (
-        (counts if counts is not None else host_line_counts(docs))
+        host_line_counts(docs)
         .filter(F.col("n_docs") >= min_docs)
         .groupBy("host")
         .agg(F.collect_list("lh").alias("boiler_lhs"))

@@ -96,17 +96,11 @@ def mention_records(model: str = "gazetteer", tokenizer: str = "wordpiece"):
     def make():
         # import inside the worker so the UDF pickles by reference only
         from kgkit.ner_core import predict
-        from kgkit.ner_core.trained import TrainedTagger, assert_oracle_bounds
 
         tok = _resolve_tokenizer(tokenizer)
         tagger = _resolve_tagger(model)
 
         def compute(texts):
-            if isinstance(tagger, TrainedTagger):
-                # fail loudly if the corpus leaves the bounds the
-                # trained-head SQL oracle assumes (single-slice docs,
-                # no ASCII word at the [UNK] piece cap)
-                assert_oracle_bounds(texts)
             return _span_tuples(predict(
                 texts, level="entity", autocorrect=True,
                 tokenizer=tok, tagger=tagger,
@@ -143,7 +137,6 @@ def _word_proba_rows(pages: DataFrame, model: str, classes) -> DataFrame:
 
     def make():
         from kgkit.ner_core.pipeline import predict_proba
-        from kgkit.ner_core.trained import TrainedTagger, assert_oracle_bounds
         from kgkit.ner_core.wordpiece import default_tokenizer
 
         tokenizer = default_tokenizer()
@@ -160,8 +153,6 @@ def _word_proba_rows(pages: DataFrame, model: str, classes) -> DataFrame:
             return ([d.get(c, 0.0) for c in classes],)
 
         def compute(texts):
-            if isinstance(tagger, TrainedTagger):
-                assert_oracle_bounds(texts)
             results = predict_proba(
                 texts, tokenizer=tokenizer, tagger=tagger,
                 stringify_tags=False,

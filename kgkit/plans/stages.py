@@ -24,10 +24,9 @@ from pyspark.sql import functions as F
 class StageRunner:
     """Run named stages with materialize / skip-if-done / lineage."""
 
-    def __init__(self, spark: SparkSession, run_dir: str, collect_lineage: bool = True):
+    def __init__(self, spark: SparkSession, run_dir: str):
         self.spark = spark
         self.run_dir = run_dir
-        self.collect_lineage = collect_lineage
         self.executed: List[str] = []
         self.skipped: List[str] = []
 
@@ -58,8 +57,7 @@ class StageRunner:
         df.write.mode("overwrite").parquet(out)
         wall_ms = (time.monotonic() - t0) * 1000
         result = self.spark.read.parquet(out)
-        if self.collect_lineage:
-            self._write_lineage(stage, result, wall_ms)
+        self._write_lineage(stage, result, wall_ms)
         self.executed.append(stage)
         return result
 

@@ -844,8 +844,7 @@ def _anchor_aliases_q(spark, sf_dir):
 
 def _user_sessions_q(spark, sf_dir):
     """Sessionization of the events table with a 30-minute inactivity
-    gap — batch twin of the stateful streaming operator
-    (kgkit/streaming/sessions.py): window cumsum over gap flags."""
+    gap: window cumsum over gap flags."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts")
     # integer-second gap on both engines (unix_timestamp == floor(epoch))

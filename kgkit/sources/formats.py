@@ -1,23 +1,19 @@
-"""Annotated-corpus formats: pretokenized CSV, standard JSONL, and the
-annotation-tool reshapes (Doccano / LabelStudio).
+"""Annotated-corpus formats: pretokenized CSV and standard JSONL, plus
+the prediction-file sink.
 
-Reference parity (SURVEY §2.1 S1/S2, §2.2 K1/K2, §2.3 P8):
+Reference parity (SURVEY §2.1 S1/S2, §2.2 K1/K2):
   * pretokenized CSV  — headerless ``tags \\t text``
     (nerblackbox csv_reader.py:105-122, base_formatter.py:215-236)
   * standard JSONL    — {"text", "tags": [{char_start, char_end, token,
     tag}]} (data_preprocessor.py:318-345)
-  * doccano / labelstudio — pure nested-struct reshapes
-    (annotation/file_conversion.py:7-267)
 
-All converters are column expressions over nested arrays — ``transform``
-/ ``struct`` / window cumsum — no UDFs, so they run at any scale as
-narrow projections (one window for LabelStudio's running annotation id,
-which is the only cross-row state in any of these formats).
+The converters are column expressions over nested arrays — ``struct``
+/ ``collect_list`` — no UDFs, so they run at any scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,101 +109,3 @@ def predict_on_file(
     )
     write_predictions_jsonl(pages, detect_mentions(pages, model=model),
                             output_file)
-
-
-# ---------------------------------------------------------------------------
-# P8 — doccano
-# ---------------------------------------------------------------------------
-
-def to_doccano(df: DataFrame) -> DataFrame:
-    """(text, tags) -> (text, label ARRAY<STRUCT<start,end,label>>) —
-    the struct form of doccano's [start, end, label] triplets
-    (file_conversion.py:175-220)."""
-    return df.select(
-        "text",
-        F.transform(
-            "tags",
-            lambda t: F.struct(
-                t["char_start"].cast("int").alias("start"),
-                t["char_end"].cast("int").alias("end"),
-                t["tag"].alias("label"),
-            ),
-        ).alias("label"),
-    )
-
-
-def from_doccano(df: DataFrame) -> DataFrame:
-    """(text, label) -> (text, tags); token re-sliced from the text
-    (file_conversion.py:223-267 does input_line['text'][start:end])."""
-    return df.select(
-        "text",
-        F.transform(
-            "label",
-            lambda l: F.struct(
-                l["start"].cast("int").alias("char_start"),
-                l["end"].cast("int").alias("char_end"),
-                F.col("text").substr(
-                    l["start"].cast("int") + 1,
-                    (l["end"] - l["start"]).cast("int"),
-                ).alias("token"),
-                l["label"].alias("tag"),
-            ),
-        ).alias("tags"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# P8 — labelstudio
-# ---------------------------------------------------------------------------
-
-def to_labelstudio(df: DataFrame, order_col: str = "line_id") -> DataFrame:
-    """(line_id, text, tags) -> labelstudio task rows.
-
-    The reference assigns annotation ids running ACROSS lines
-    (file_conversion.py:66-88: idx accumulates) — the one cross-row
-    dependency; expressed as a window cumsum of size(tags)."""
-    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, -1)
-    base = F.coalesce(F.sum(F.size("tags")).over(w), F.lit(0))
-    result = F.transform(
-        "tags",
-        lambda t, j: F.struct(
-            (F.col("_base") + j).cast("string").alias("id"),
-            F.lit("label").alias("from_name"),
-            F.lit("text").alias("to_name"),
-            F.lit("labels").alias("type"),
-            F.struct(
-                t["char_start"].cast("int").alias("start"),
-                t["char_end"].cast("int").alias("end"),
-                t["token"].alias("text"),
-                F.array(t["tag"]).alias("labels"),
-            ).alias("value"),
-        ),
-    )
-    return (
-        df.withColumn("_base", base)
-        .select(
-            order_col,
-            F.struct(F.col("text").alias("text")).alias("data"),
-            F.array(F.struct(result.alias("result"))).alias("annotations"),
-        )
-    )
-
-
-def from_labelstudio(df: DataFrame) -> DataFrame:
-    """labelstudio task rows -> (text, tags); only result entries with
-    type == 'labels' are kept (file_conversion.py:152-166)."""
-    results = F.filter(
-        F.col("annotations")[0]["result"], lambda r: r["type"] == "labels"
-    )
-    return df.select(
-        F.col("data")["text"].alias("text"),
-        F.transform(
-            results,
-            lambda r: F.struct(
-                r["value"]["start"].cast("int").alias("char_start"),
-                r["value"]["end"].cast("int").alias("char_end"),
-                r["value"]["text"].alias("token"),
-                r["value"]["labels"][0].alias("tag"),
-            ),
-        ).alias("tags"),
-    )

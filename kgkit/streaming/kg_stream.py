@@ -25,22 +25,25 @@ one bounded row per part instead of a skewed re-shuffle of raw triples.
 
 A live crawl REVISITS urls: a url re-delivered by a later batch
 supersedes its earlier version, whose contribution is retracted from
-every live aggregate.  The durable ``batch=<id>`` (triples) and
-``relbatch=<id>`` (per-url relation counts) parts, the committed-batch
-rule, the url index, the retractions, the replay guard, compaction and
-``resume`` are the part-store protocol of ``kgkit.streaming.store``.
-After any prefix of the stream, every read accessor equals the one-shot
-batch pipeline over each url's LATEST version, where "latest" is the
-highest batch id (tests/test_kg_stream.py).
+every live aggregate.  The durable ``keys=<id>`` (delivered urls),
+``batch=<id>`` (triples) and ``relbatch=<id>`` (per-url relation
+counts) parts, the committed-batch rule, the url index, the
+retractions, the replay guard, compaction and ``resume`` are the
+part-store protocol of ``kgkit.streaming.store``.  After any prefix of
+the stream, every read accessor equals the one-shot batch pipeline over
+each url's LATEST version, where "latest" is the highest batch id
+(tests/test_kg_stream.py).
 
-Like dedup_stream, foreachBatch (not a stateful operator) is the right
-tool: the per-batch work is a composition of whole DataFrame stages
-against broadcast dimension tables, not per-key state that fits the
+foreachBatch (not a stateful operator) is the right tool: the
+per-batch work is a composition of whole DataFrame stages against
+broadcast dimension tables, not per-key state that fits the
 ``applyInPandasWithState`` model, and checkpointLocation gives
 exactly-once offset tracking on top.
 """
 
 from __future__ import annotations
+
+from typing import Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -69,8 +72,6 @@ class IncrementalKGStream:
     counts over each url's latest version.  ``recrawl`` is accepted for
     compatibility; supersession is the only mode, so it must be True."""
 
-    attach = store.attach
-
     def __init__(
         self, embeddings: DataFrame, triples_dir: str, recrawl: bool = True
     ):
@@ -81,9 +82,9 @@ class IncrementalKGStream:
             )
         self.embeddings = embeddings
         self.triples_dir = triples_dir
-        self.store = store.PartStore(triples_dir, "url", {
-            "entity_counts": store.Aggregate("batch=", _entity_counts, "n"),
-            "relations": store.Aggregate("relbatch=", _relation_counts, "n"),
+        self.store = store.PartStore(triples_dir, {
+            "entity_counts": store.Aggregate("batch=", _entity_counts),
+            "relations": store.Aggregate("relbatch=", _relation_counts),
         })
 
     @classmethod
@@ -96,6 +97,21 @@ class IncrementalKGStream:
         stm = cls(embeddings, triples_dir=triples_dir, **kw)
         stm.store.resume(spark)
         return stm
+
+    def attach(
+        self,
+        source: DataFrame,
+        checkpoint_dir: Optional[str] = None,
+        trigger_once: bool = False,
+    ):
+        """Wire ``process_batch`` to a streaming DataFrame via
+        foreachBatch; returns the started query."""
+        writer = source.writeStream.foreachBatch(self.process_batch)
+        if checkpoint_dir:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        if trigger_once:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
 
     def process_batch(self, pages: DataFrame, batch_id: int) -> DataFrame:
         """One micro-batch of pages(url, text, ...) -> that batch's

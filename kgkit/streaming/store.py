@@ -1,13 +1,14 @@
-"""Durable micro-batch parts with recrawl supersession — the one
-protocol behind ``IncrementalKGStream`` and
-``IncrementalBoilerplateStream``.
+"""Durable micro-batch parts with recrawl supersession — the part-store
+protocol behind ``IncrementalKGStream``.
 
 Layout.  Each micro-batch is written as one parquet part per part
 family, ``<base_dir>/<prefix><id>``, in overwrite mode, with the batch
-id as a ``_batch`` column.  foreachBatch is at-least-once, and a
-replayed batch rewrites the same dirs with the same rows (the streamed
-pipelines are deterministic), so the store is idempotent under replay.
-Spark's ``_SUCCESS`` marker says a part is complete.
+id as a ``_batch`` column.  The ``keys=<id>`` family holds the urls the
+batch delivered; the other families hold its rows.  foreachBatch is
+at-least-once, and a replayed batch rewrites the same dirs with the
+same rows (the streamed pipelines are deterministic), so the store is
+idempotent under replay.  Spark's ``_SUCCESS`` marker says a part is
+complete.
 
 Committed batches.  A batch counts only once EVERY one of its parts is
 complete.  Reads, the retraction probe, the replay guard and ``resume``
@@ -15,18 +16,21 @@ see committed batches only, so a process that dies between two part
 writes leaves a batch that is simply absent: its replay writes and
 counts it in full.
 
-Supersession.  Each batch delivers a set of keys (url, doc_id).  A key
-that a later batch re-delivers supersedes its stored version: a tiny
-``(key, _batch)`` index, merged by max, names each key's latest batch,
-and the reads join it (broadcast), so superseded rows never surface.
-A batch whose keys are all new retracts nothing.
+Supersession.  A url that a later batch re-delivers supersedes its
+stored version.  The latest-version index, ``(url, _batch)`` with each
+url's highest committed batch, is read from the key parts, and the
+reads join it (broadcast), so superseded rows never surface.  Because
+the index comes from what each batch delivered, not from what it
+produced, a url whose latest version yields no rows still supersedes
+its older one, after ``resume`` as well as live.  A batch whose urls
+are all new retracts nothing.
 
 Live aggregates.  Each is declared once, as ``summarize(rows)``: a
-map-side-combined groupBy with one additive value column.  The store
-applies it in three places — to the batch's rows (+), to the
+map-side-combined groupBy with one additive value column ``n``.  The
+store applies it in three places — to the batch's rows (+), to the
 superseded versions' stored rows (−), and, in ``resume``, to all
 latest committed rows — and reads merge the partials by summing.  Each
-(key, previous-latest-batch) pair retracts exactly once, so k recrawls
+(url, previous-latest-batch) pair retracts exactly once, so k recrawls
 retract k−1 versions; sums with mixed signs still commute, and a group
 whose sum cancels to zero is dropped.  Partials are eager
 ``localCheckpoint``s (bounded by the batch, never a re-aggregation of
@@ -34,7 +38,7 @@ the store) and fold into one frame each every ``COMPACT_EVERY``
 batches, which bounds the union plan depth.
 
 The retraction probe joins the store against a broadcast of the
-replaced set; at production scale the store is key-bucketed, so the
+replaced set; at production scale the store is url-bucketed, so the
 probe prunes to the touched buckets rather than scanning.
 """
 
@@ -47,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 COMPACT_EVERY = 8  # batches between folds of the live partials
+KEYS = "keys="  # the part family of each batch's delivered urls
+KEYS_SCHEMA = "url string, _batch long"
 
 
 def union_all(parts: List[DataFrame]) -> DataFrame:
@@ -61,54 +67,24 @@ def complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def attach(
-    stream,
-    source: DataFrame,
-    sink: Optional[Callable[[DataFrame, int], None]] = None,
-    checkpoint_dir: Optional[str] = None,
-    trigger_once: bool = False,
-):
-    """Wire ``stream.process_batch`` to a streaming DataFrame via
-    foreachBatch; ``sink(out, batch_id)``, when given, receives each
-    batch's output.  The streams bind this as their ``attach`` method."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        out = stream.process_batch(batch_df, batch_id=batch_id)
-        if sink is not None:
-            sink(out, batch_id)
-
-    writer = source.writeStream.foreachBatch(_process)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 class Aggregate(NamedTuple):
     """A live aggregate over one part family: ``summarize`` maps the
-    family's rows to (*group columns, ``value``), ``value`` additive."""
+    family's rows to (*group columns, ``n``), ``n`` additive."""
 
     family: str
     summarize: Callable[[DataFrame], DataFrame]
-    value: str
 
 
 class PartStore:
-    """Committed parts under ``base_dir``, the latest-version index of
-    ``key`` and the live partials of each named aggregate.  Every part
-    family must carry ``key``; the first family's keys rebuild the
-    index on ``resume``."""
+    """Committed parts under ``base_dir``, the latest-version url index
+    and the live partials of each named aggregate, one aggregate per
+    row family.  Every row family must carry ``url``."""
 
-    def __init__(
-        self, base_dir: str, key: str, aggregates: Dict[str, Aggregate]
-    ):
+    def __init__(self, base_dir: str, aggregates: Dict[str, Aggregate]):
         self.base_dir = base_dir
-        self.key = key
         self.aggregates = aggregates
-        self.families = list(dict.fromkeys(a.family for a in aggregates.values()))
+        self.families = [KEYS] + [a.family for a in aggregates.values()]
         self.partials: Dict[str, List[DataFrame]] = {n: [] for n in aggregates}
-        self.index_parts: List[DataFrame] = []  # (key, _batch) partials
         self.counted: set = set()  # replay guard: committed, counted ids
         self._since_fold = 0
 
@@ -119,11 +95,10 @@ class PartStore:
         """Ids of the batches whose every part is complete, ascending."""
         if not os.path.isdir(self.base_dir):
             return []
-        first = self.families[0]
         ids = {
-            int(d[len(first):])
+            int(d[len(KEYS):])
             for d in os.listdir(self.base_dir)
-            if d.startswith(first)
+            if d.startswith(KEYS)
         }
         return sorted(
             i for i in ids
@@ -136,82 +111,82 @@ class PartStore:
         ids = self.committed()
         if not ids:
             return None
-        return spark.read.parquet(*[self._path(family, i) for i in ids])
+        reader = spark.read.schema(KEYS_SCHEMA) if family == KEYS else spark.read
+        return reader.parquet(*[self._path(family, i) for i in ids])
 
-    def index(self) -> DataFrame:
-        """(key, _batch): the latest batch that delivered each key."""
-        return (
-            union_all(self.index_parts)
-            .groupBy(self.key)
-            .agg(F.max("_batch").alias("_batch"))
-        )
+    @staticmethod
+    def _latest_batch(keys: DataFrame) -> DataFrame:
+        return keys.groupBy("url").agg(F.max("_batch").alias("_batch"))
 
     def latest(self, spark: SparkSession, family: str) -> Optional[DataFrame]:
-        """The family's committed rows of each key's latest version;
+        """The family's committed rows of each url's latest version;
         None before the first batch."""
         rows = self.read(spark, family)
-        if rows is None or not self.index_parts:
+        if rows is None:
             return None
-        return rows.join(
-            F.broadcast(self.index()), [self.key, "_batch"]
-        ).drop("_batch")
+        index = self._latest_batch(self.read(spark, KEYS))
+        return rows.join(F.broadcast(index), ["url", "_batch"]).drop("_batch")
 
     def live(self, name: str) -> Optional[DataFrame]:
         """The merged partials of aggregate ``name``, groups that cancel
         to zero dropped; None before the first batch."""
         if not self.partials[name]:
             return None
-        value = self.aggregates[name].value
         merged = union_all(self.partials[name])
-        groups = [c for c in merged.columns if c != value]
+        groups = [c for c in merged.columns if c != "n"]
         return (
             merged.groupBy(*groups)
-            .agg(F.sum(value).cast("long").alias(value))
-            .filter(F.col(value) > 0)
+            .agg(F.sum("n").cast("long").alias("n"))
+            .filter(F.col("n") > 0)
         )
 
     def commit(
         self, batch_id: int, keys: DataFrame, rows: Dict[str, DataFrame]
-    ) -> Dict[str, DataFrame]:
-        """Write the batch's part of every family (``rows``), then fold
-        it into the live state: first the retraction of the versions
-        its ``keys`` supersede, then its own partials.  A replay of a
-        counted batch rewrites the same parts and folds nothing.
-        Returns the batch's own (materialized) partials by name."""
+    ) -> None:
+        """Write the batch's part of every family (its delivered ``keys``
+        and ``rows``), then fold it into the live state: first the
+        retraction of the versions its urls supersede, then its own
+        partials.  A replay of a counted batch rewrites the same parts
+        and folds nothing."""
         bcol = F.lit(batch_id).cast("long")
+        rows = {KEYS: keys.select("url").distinct(), **rows}
         for family in self.families:
             rows[family].withColumn("_batch", bcol).write.mode(
                 "overwrite"
             ).parquet(self._path(family, batch_id))
-        plus = {
-            name: agg.summarize(rows[agg.family]).localCheckpoint()
-            for name, agg in self.aggregates.items()
-        }
         if batch_id in self.counted:
-            return plus
-        spark = keys.sparkSession
-        keys = keys.select(self.key).distinct()
-        if self.index_parts:
-            # resolved against the index BEFORE this batch's keys join it
-            replaced = self.index().join(keys, self.key).localCheckpoint()
-            if not replaced.isEmpty():
-                for name, agg in self.aggregates.items():
-                    stale = self.read(spark, agg.family).join(
-                        F.broadcast(replaced), [self.key, "_batch"]
-                    )
-                    self.partials[name].append(
-                        agg.summarize(stale)
-                        .withColumn(agg.value, -F.col(agg.value))
-                        .localCheckpoint()
-                    )
-        self.index_parts.append(keys.withColumn("_batch", bcol).localCheckpoint())
-        for name, part in plus.items():
-            self.partials[name].append(part)
+            return
+        if min(self.committed()) < batch_id:  # else nothing to supersede
+            self._retract(keys.sparkSession, batch_id)
+        for name, agg in self.aggregates.items():
+            self.partials[name].append(
+                agg.summarize(rows[agg.family]).localCheckpoint()
+            )
         self.counted.add(batch_id)
         self._since_fold += 1
         if self._since_fold >= COMPACT_EVERY:
             self.fold()
-        return plus
+
+    def _retract(self, spark: SparkSession, batch_id: int) -> None:
+        """Append the negated partials of the stored versions that the
+        batch's urls supersede: each url at its latest EARLIER committed
+        batch."""
+        stored = self.read(spark, KEYS)
+        replaced = (
+            self._latest_batch(stored.filter(F.col("_batch") < batch_id))
+            .join(stored.filter(F.col("_batch") == batch_id).select("url"), "url")
+            .localCheckpoint()
+        )
+        if replaced.isEmpty():
+            return
+        for name, agg in self.aggregates.items():
+            stale = self.read(spark, agg.family).join(
+                F.broadcast(replaced), ["url", "_batch"]
+            )
+            self.partials[name].append(
+                agg.summarize(stale).withColumn("n", -F.col("n"))
+                .localCheckpoint()
+            )
 
     def fold(self) -> None:
         """Fold each partial list into one frame.  localCheckpoint is
@@ -220,23 +195,15 @@ class PartStore:
         truncated."""
         for name in self.aggregates:
             self.partials[name] = [self.live(name).localCheckpoint()]
-        self.index_parts = [self.index().localCheckpoint()]
         self._since_fold = 0
 
     def resume(self, spark: SparkSession) -> None:
         """Rebuild the live state from the committed parts without
-        replaying the source: the index from the first family's keys,
-        each aggregate from the latest rows, the replay guard from the
-        committed ids."""
+        replaying the source: each aggregate from the latest rows, the
+        replay guard from the committed ids."""
         ids = self.committed()
         if not ids:
             raise FileNotFoundError(f"no committed batches in {self.base_dir}")
-        self.index_parts = [
-            self.read(spark, self.families[0])
-            .groupBy(self.key)
-            .agg(F.max("_batch").alias("_batch"))
-            .localCheckpoint()
-        ]
         for name, agg in self.aggregates.items():
             self.partials[name] = [
                 agg.summarize(self.latest(spark, agg.family)).localCheckpoint()

@@ -1,31 +1,9 @@
-"""Sources/sinks + annotation-format converters (S1-S3, K1/K2, P8).
-
-The doccano/labelstudio reshapes are differential-tested against the
-reference's own file_conversion.py (pure python, loaded standalone)."""
+"""Sources/sinks: pretokenized CSV, standard JSONL and the prediction
+file (S1-S2, K1-K3), plus the column-level tag helpers (P4, P10, X1)."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-import sys
 import tempfile
-
-import pytest
-
-REF_FC = "/root/reference/nerblackbox/modules/annotation/file_conversion.py"
-REF_CONLL = "/root/reference/nerblackbox/tests/test_data/original_data/eng.testa"
-
-
-@pytest.fixture(scope="module")
-def ref_fc():
-    if not os.path.isfile(REF_FC):
-        pytest.skip("reference unavailable")
-    spec = importlib.util.spec_from_file_location("ref_fc", REF_FC)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["ref_fc"] = mod
-    spec.loader.exec_module(mod)
-    return mod
-
 
 SAMPLE = [
     {
@@ -81,107 +59,6 @@ class TestCsvJsonl:
             write_pretokenized_csv(df, f"{d}/out")
             back = read_pretokenized_csv(spark, f"{d}/out")
             assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-class TestDoccano:
-    def test_to_doccano_matches_reference(self, spark, ref_fc):
-        from kgkit.sources.formats import to_doccano
-
-        want = ref_fc.nerblackbox2doccano([dict(r) for r in SAMPLE])
-        got = [
-            {
-                "text": r["text"],
-                "label": [[x["start"], x["end"], x["label"]] for x in r["label"]],
-            }
-            for r in to_doccano(_sample_df(spark)).collect()
-        ]
-        assert sorted(got, key=str) == sorted(want, key=str)
-
-    def test_doccano_roundtrip_matches_reference(self, spark, ref_fc):
-        from kgkit.sources.formats import from_doccano, to_doccano
-
-        back = from_doccano(to_doccano(_sample_df(spark)))
-        got = [
-            {"text": r["text"],
-             "tags": [t.asDict() for t in r["tags"]]}
-            for r in back.collect()
-        ]
-        want = ref_fc.doccano2nerblackbox(
-            ref_fc.nerblackbox2doccano([dict(r) for r in SAMPLE])
-        )
-        assert sorted(got, key=str) == sorted(want, key=str)
-
-
-class TestLabelStudio:
-    def test_to_labelstudio_matches_reference(self, spark, ref_fc):
-        from kgkit.sources.formats import to_labelstudio
-
-        rows = [(i, r["text"], [tuple(t.values()) for t in r["tags"]])
-                for i, r in enumerate(SAMPLE)]
-        df = spark.createDataFrame(
-            rows, "line_id long, text string, tags array<struct<char_start:int,char_end:int,token:string,tag:string>>"
-        )
-        got_rows = to_labelstudio(df).orderBy("line_id").collect()
-        got = []
-        for r in got_rows:
-            got.append({
-                "data": {"text": r["data"]["text"]},
-                "annotations": [{
-                    "result": [
-                        {
-                            "id": x["id"], "from_name": x["from_name"],
-                            "to_name": x["to_name"], "type": x["type"],
-                            "value": {
-                                "start": x["value"]["start"],
-                                "end": x["value"]["end"],
-                                "text": x["value"]["text"],
-                                "labels": list(x["value"]["labels"]),
-                            },
-                        }
-                        for x in r["annotations"][0]["result"]
-                    ],
-                }],
-            })
-        want = ref_fc.nerblackbox2labelstudio([dict(r) for r in SAMPLE])
-        assert got == want
-
-    def test_labelstudio_roundtrip_matches_reference(self, spark, ref_fc):
-        from kgkit.sources.formats import from_labelstudio, to_labelstudio
-
-        rows = [(i, r["text"], [tuple(t.values()) for t in r["tags"]])
-                for i, r in enumerate(SAMPLE)]
-        df = spark.createDataFrame(
-            rows, "line_id long, text string, tags array<struct<char_start:int,char_end:int,token:string,tag:string>>"
-        )
-        back = from_labelstudio(to_labelstudio(df))
-        got = [
-            {"text": r["text"], "tags": [t.asDict() for t in r["tags"]]}
-            for r in back.collect()
-        ]
-        want = ref_fc.labelstudio2nerblackbox(
-            ref_fc.nerblackbox2labelstudio([dict(r) for r in SAMPLE])
-        )
-        assert sorted(got, key=str) == sorted(want, key=str)
-
-
-class TestConll:
-    @pytest.mark.skipif(not os.path.isfile(REF_CONLL), reason="fixture unavailable")
-    def test_parse_eng_testa(self, spark):
-        from kgkit.sources.conll import read_conll
-
-        df = read_conll(spark, REF_CONLL).orderBy("sentence_id", "pos")
-        rows = df.collect()
-        assert all(r["word"] != "-DOCSTART-" for r in rows)
-        first = [(r["word"], r["tag"]) for r in rows if r["sentence_id"] == rows[0]["sentence_id"]]
-        # IOB1 'I-PER' at sentence start becomes 'B-PER' in IOB2
-        assert first[0] == ("Det", "B-PER")
-        raw = read_conll(spark, REF_CONLL, iob2=False).orderBy(
-            "sentence_id", "pos"
-        ).collect()
-        assert (raw[0]["word"], raw[0]["tag"]) == ("Det", "I-PER")
-        # sentence count = blank-line separated groups with content
-        n_sent = df.select("sentence_id").distinct().count()
-        assert n_sent >= 2
 
 
 class TestFunctionsTags:
@@ -244,8 +121,6 @@ class TestFunctionsTags:
         assert sum(counts.values()) == 1000
 
     def test_write_predictions_jsonl(self, spark):
-        import tempfile
-
         from kgkit.operators.mentions import detect_mentions
         from kgkit.sources.formats import read_standard_jsonl, write_predictions_jsonl
         from kgkit.sources.pages import load_pages, pages_for_mentions
@@ -259,84 +134,6 @@ class TestFunctionsTags:
             assert back.count() == 50
             n_tags = back.selectExpr("sum(size(tags)) s").collect()[0]["s"]
             assert n_tags == mentions.count()
-
-
-class TestSwedishFormatters:
-    """The two Swedish corpus formatters' parse semantics
-    (swedish_ner_corpus_formatter.py / suc_formatter.py) — download
-    steps are env-blocked, the format logic is what's testable."""
-
-    def test_swedish_ner_corpus(self, spark, tmp_path):
-        from kgkit.sources.conll import read_swedish_ner_corpus
-
-        p = tmp_path / "snc.txt"
-        p.write_text(
-            "Kalle PER\nbor 0\ni 0\nGöteborg LOC\n\n"
-            "Volvo ORG*\nkör PRG\n"
-        )
-        rows = {
-            (r["sentence_id"], r["pos"]): (r["word"], r["tag"])
-            for r in read_swedish_ner_corpus(spark, str(p)).collect()
-        }
-        assert rows == {
-            (0, 0): ("Kalle", "PER"), (0, 1): ("bor", "O"),
-            (0, 2): ("i", "O"), (0, 3): ("Göteborg", "LOC"),
-            (1, 0): ("Volvo", "ORG"), (1, 1): ("kör", "O"),
-        }
-
-    def test_suc(self, spark, tmp_path):
-        from kgkit.sources.conll import read_suc
-
-        def row(word, kind, cls):
-            cols = ["x"] * 13
-            cols[1] = word
-            cols[-3] = kind
-            cols[-2] = cls
-            return "\t".join(cols)
-
-        p = tmp_path / "suc.tsv"
-        p.write_text(
-            row("Det", "O", "_") + "\n"
-            + row("Anna", "B", "person") + "\n"
-            + row("Lindh", "I", "person") + "\n"
-            + "short\trow\n"            # malformed -> skipped
-            + "\n"
-            + row("Stockholm", "B", "place") + "\n"
-        )
-        rows = {
-            (r["sentence_id"], r["pos"]): (r["word"], r["tag"])
-            for r in read_suc(spark, str(p)).collect()
-        }
-        assert rows == {
-            (0, 0): ("Det", "O"),
-            (0, 1): ("Anna", "B-person"),
-            (0, 2): ("Lindh", "I-person"),
-            (1, 0): ("Stockholm", "B-place"),
-        }
-
-    def test_swe_nerc(self, spark, tmp_path):
-        from kgkit.sources.conll import read_swe_nerc
-
-        p = tmp_path / "swenerc.txt"
-        p.write_text(
-            "Det O xyz\n"
-            "Anna PER xyz B\n"
-            "Lindh PER xyz\n"          # 3 fields, non-O -> I-PER
-            "SKIP-THIS-TOKEN PER x B\n"
-            "bad PER xyz C\n"          # 4 fields without B -> skipped
-            "\n"
-            "G bg LOC xyz B\n"    # nbsp inside word removed
-        )
-        rows = {
-            (r["sentence_id"], r["pos"]): (r["word"], r["tag"])
-            for r in read_swe_nerc(spark, str(p)).collect()
-        }
-        assert rows == {
-            (0, 0): ("Det", "O"),
-            (0, 1): ("Anna", "B-PER"),
-            (0, 2): ("Lindh", "I-PER"),
-            (1, 0): ("Gbg", "B-LOC"),
-        }
 
 
 class TestPredictOnFile:

@@ -242,6 +242,39 @@ class TestRecrawl:
             _batch_triples(spark, latest3, embeddings)
         )
 
+    def test_resume_supersedes_a_version_with_no_triples(
+        self, spark, embeddings, tmp_path
+    ):
+        """A url recrawled with mention-free text yields no triples in
+        its latest version; after resume its older version must stay
+        superseded, as it is in the live stream."""
+        from kgkit.streaming.kg_stream import IncrementalKGStream
+
+        schema = "url string, text string"
+        v1 = spark.createDataFrame(
+            [("u1", "the spark hash join runs")], schema
+        )
+        v2 = spark.createDataFrame([("u1", "nothing to see here")], schema)
+        other = spark.createDataFrame(
+            [("u2", "a broadcast join over the orders table")], schema
+        )
+        assert _batch_triples(spark, v1, embeddings).count() == 3
+        store = str(tmp_path / "store")
+        stm = IncrementalKGStream(embeddings, triples_dir=store, recrawl=True)
+        stm.process_batch(v1.unionByName(other), batch_id=0)
+        stm.process_batch(v2, batch_id=1)
+
+        batch = _batch_triples(spark, self._latest(v1.unionByName(other), v2),
+                               embeddings)
+        want = _rows(batch)
+        want_counts = {r["obj"]: r["count"]
+                       for r in batch.groupBy("obj").count().collect()}
+        stm2 = IncrementalKGStream.resume(spark, embeddings, store, recrawl=True)
+        for s in (stm, stm2):
+            assert _rows(s.triples(spark)) == want
+            assert {r["obj"]: r["n_triples"]
+                    for r in s.entity_counts().collect()} == want_counts
+
     def test_recrawl_requires_durable_store(self, embeddings):
         from kgkit.streaming.kg_stream import IncrementalKGStream
 

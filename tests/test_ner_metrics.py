@@ -179,17 +179,16 @@ class TestChunksAndAsr:
             assert got == expected, f"{tags}: {got} != {expected}"
 
     def test_evaluation_dict_shape(self, spark):
-        from kgkit.metrics.ner_metrics import evaluation_dict
-
+        """The EVALUATION_DICT values (api/model.py:925-953): token level
+        over the plain classes, entity level over the chunks."""
         df = _stream_df(spark, ["A", "A", "O"], ["A", "O", "O"])
-        d = evaluation_dict(df, scheme="plain", classes=["A"])
-        assert set(d) == {"micro", "macro"}
-        assert set(d["micro"]) == {"entity", "token"}
+        token = ner_metrics(df, "token", "plain", classes=["A"])
+        entity = ner_metrics(df, "entity", "plain")
         # pred chunk A@(0,0) != true chunk A@(0,1) -> strict mismatch
-        assert d["micro"]["entity"]["precision"] == 0.0
-        assert d["micro"]["entity"]["recall"] == 0.0
-        assert d["micro"]["token"]["precision"] == 1.0
-        assert d["micro"]["token"]["recall"] == pytest.approx(0.5)
+        assert entity["precision_micro"] == 0.0
+        assert entity["recall_micro"] == 0.0
+        assert token["precision_micro"] == 1.0
+        assert token["recall_micro"] == pytest.approx(0.5)
 
 
 class TestFanoutAndReports:
@@ -219,61 +218,6 @@ class TestFanoutAndReports:
         df = _stream_df(spark, ["A", "O"], ["A", "O"])
         rep = classification_report(df, "plain")
         assert "token level" in rep and "entity level" in rep and "fil" in rep
-
-
-class TestAnnotationRepair:
-    def test_bio_completeness(self):
-        from kgkit.metrics.annotation import repair_and_sort
-
-        scheme, classes = repair_and_sort(["B-PER", "O", "B-ORG", "I-PER"])
-        assert scheme == "bio"
-        assert classes == ["O", "B-ORG", "B-PER", "I-ORG", "I-PER"]
-
-    def test_bilou_completeness(self):
-        from kgkit.metrics.annotation import repair_and_sort
-
-        scheme, classes = repair_and_sort(["B-X", "U-Y"])
-        assert scheme == "bilou"
-        assert classes == ["O", "B-X", "I-X", "L-X", "U-X", "U-Y"]
-
-    def test_plain_passthrough(self):
-        from kgkit.metrics.annotation import repair_and_sort
-
-        assert repair_and_sort(["PER", "O"]) == ("plain", ["O", "PER"])
-
-
-class TestEvaluateOnDataset:
-    def test_perfect_and_imperfect(self, spark):
-        from kgkit.metrics.evaluate import evaluate_on_dataset
-
-        # gazetteer predicts B-TECH for 'spark', B-OP for 'join';
-        # row 1 ground truth agrees, row 2 disagrees on one token
-        ds = spark.createDataFrame(
-            [
-                ("B-TECH O B-OP", "spark likes join"),
-                ("B-TECH O O", "spark eats join"),
-            ],
-            "tags string, text string",
-        )
-        d = evaluate_on_dataset(ds, scheme="bio")
-        # 6 tokens, 1 wrong ('join' true=O pred=B-OP in row 2)
-        assert d["micro"]["token"]["precision"] == pytest.approx(5 / 6)
-        assert d["micro"]["token"]["recall"] == pytest.approx(5 / 6)
-        # entities: true {TECH, OP, TECH}, pred {TECH, OP, TECH, OP}
-        assert d["micro"]["entity"]["recall"] == pytest.approx(1.0)
-        assert d["micro"]["entity"]["precision"] == pytest.approx(3 / 4)
-
-    def test_perfect_dataset(self, spark):
-        from kgkit.metrics.evaluate import evaluate_on_dataset
-
-        ds = spark.createDataFrame(
-            [("B-TECH O B-OP O", "spark likes join fast")],
-            "tags string, text string",
-        )
-        d = evaluate_on_dataset(ds, scheme="bio")
-        assert d["micro"]["entity"]["precision"] == 1.0
-        assert d["micro"]["entity"]["recall"] == 1.0
-        assert d["micro"]["token"]["f1"] == 1.0
 
 
 class TestAverageRuns:

@@ -223,3 +223,43 @@ class TestOracleBounds:
         from kgkit.ner_core.trained import assert_oracle_bounds
 
         assert_oracle_bounds(["日" * 150])
+
+    @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+    def test_test_corpora_sit_inside_the_bounds(self, spark, sf):
+        """The bound is the oracle's precondition, so it is pinned over
+        the NER input of every query corpus, not checked in the UDF."""
+        from kgkit.ner_core.trained import assert_oracle_bounds
+        from kgkit.queries import _pages
+
+        texts = [r["text"] for r in
+                 _pages(spark, f"/root/testdata/{sf}").select("text").collect()]
+        assert texts
+        assert_oracle_bounds(texts)
+
+
+class TestTrainedOnLongPages:
+    def test_detect_mentions_matches_driver_predict_past_one_slice(self, spark):
+        """A web page longer than one WordPiece slice runs through the
+        trained head in the UDF exactly as it does on the driver."""
+        from kgkit.ner_core import predict
+        from kgkit.ner_core.wordpiece import default_tokenizer
+        from kgkit.operators.mentions import detect_mentions
+
+        text = ""
+        for t in _driver_texts():  # about three slices' worth
+            if len(text) > 3 * 1022:
+                break
+            text += t + " "
+        recs = predict([text], level="entity", autocorrect=True,
+                       tagger=default_trained_tagger(),
+                       tokenizer=default_tokenizer())[0]
+        want = sorted((int(r["char_start"]), int(r["char_end"]), r["token"],
+                       r["tag"]) for r in recs)
+        assert want
+        pages = spark.createDataFrame([("u", text)], "url string, text string")
+        got = sorted(
+            (r["char_start"], r["char_end"], r["surface"], r["tag"])
+            for r in detect_mentions(pages, model="trained").collect()
+        )
+        assert got == want
+        assert all(text[s:e] == surface for s, e, surface, _ in got)
