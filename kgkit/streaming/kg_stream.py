@@ -15,20 +15,22 @@ What DOES need cross-batch state is the downstream aggregates a live
 KG keeps hot: entity mention counts (the batch ``kg_entity_counts``
 query) and relation-edge counts (the batch ``kg_relations`` query —
 its (subj, pred, obj) occurrence stream is per-page too, so per-batch
-partial counts merge exactly, and the NPMI annotation is deferred to
-read time as a pure function of the merged integers).  Re-aggregating
-the whole triples store per trigger is O(store); instead each batch
-contributes bounded, map-side-combined partials (``groupBy(obj)`` over
-its triples, ``groupBy(subj, pred, obj)`` over its relation
-occurrences), and the reads merge them by summing — hub entities cost
-one bounded row per part instead of a skewed re-shuffle of raw triples.
+counts merge exactly).  Re-aggregating the whole triples store per
+trigger is O(store); instead each batch's bounded, map-side-combined
+counts (by ``obj`` over its triples, by (subj, pred, obj) over its
+relation occurrences) are merged into one materialized view per
+aggregate when the batch commits — hub entities cost one bounded row
+per view instead of a skewed re-shuffle of raw triples.  The NPMI
+annotation is a pure function of the merged integers, so the batch
+annotator (relations_from_counts) runs on the relation-count view once
+per commit, and every read serves a materialized frame.
 
 A live crawl REVISITS urls: a url re-delivered by a later batch
 supersedes its earlier version, whose contribution is retracted from
 every live aggregate.  The durable ``keys=<id>`` (delivered urls),
 ``batch=<id>`` (triples) and ``relbatch=<id>`` (per-url relation
-counts) parts, the committed-batch rule, the url index, the
-retractions, the replay guard, compaction and ``resume`` are the
+counts) parts, the committed-batch rule, supersession, the
+retractions, the replay guard, the views and ``resume`` are the
 part-store protocol of ``kgkit.streaming.store``.  After any prefix of
 the stream, every read accessor equals the one-shot batch pipeline over
 each url's LATEST version, where "latest" is the highest batch id
@@ -45,7 +47,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,15 +57,12 @@ from kgkit.operators.relations import relation_stream, relations_from_counts
 from kgkit.operators.triples import assemble_triples
 from kgkit.streaming import store
 
-
-def _entity_counts(triples: DataFrame) -> DataFrame:
-    return triples.groupBy("obj").agg(F.count("*").alias("n"))
-
-
-def _relation_counts(rel: DataFrame) -> DataFrame:
-    return rel.groupBy("subj", "pred", "obj").agg(
-        F.sum("n").cast("long").alias("n")
-    )
+# the part families' row schemas, declared once
+TRIPLES = (
+    "subj string, pred string, obj string, url string, "
+    "char_start int, char_end int, bucket int"
+)
+RELATION_COUNTS = "url string, subj string, pred string, obj string, n long"
 
 
 class IncrementalKGStream:
@@ -82,10 +80,17 @@ class IncrementalKGStream:
             )
         self.embeddings = embeddings
         self.triples_dir = triples_dir
-        self.store = store.PartStore(triples_dir, {
-            "entity_counts": store.Aggregate("batch=", _entity_counts),
-            "relations": store.Aggregate("relbatch=", _relation_counts),
-        })
+        self.store = store.PartStore(
+            triples_dir,
+            {"batch=": TRIPLES, "relbatch=": RELATION_COUNTS},
+            {
+                "entity_counts": store.Aggregate("batch=", ("obj",)),
+                "relations": store.Aggregate(
+                    "relbatch=", ("subj", "pred", "obj"), "n"
+                ),
+            },
+        )
+        self._relations: Optional[DataFrame] = None  # the annotated view
 
     @classmethod
     def resume(
@@ -96,6 +101,7 @@ class IncrementalKGStream:
         restarted query continues from the recorded source offsets."""
         stm = cls(embeddings, triples_dir=triples_dir, **kw)
         stm.store.resume(spark)
+        stm._annotate()
         return stm
 
     def attach(
@@ -113,38 +119,40 @@ class IncrementalKGStream:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
+    def _annotate(self) -> None:
+        self._relations = relations_from_counts(
+            self.store.live("relations")
+        ).localCheckpoint()
+
     def process_batch(self, pages: DataFrame, batch_id: int) -> DataFrame:
         """One micro-batch of pages(url, text, ...) -> that batch's
         triples (same schema as the batch pipeline's), durably written
-        and folded into the live counts; the earlier versions of its
+        and merged into the live views; the earlier versions of its
         urls are superseded."""
         canon = canonical_map(pages.sparkSession)
-        mentions = detect_mentions(pages).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            # populate eagerly: the triples fan-out and the relation
-            # stream otherwise race the unpopulated cache on the batch's
-            # first action and re-run the per-batch UDF
-            mentions.count()
-            linked = link_mentions(mentions, self.embeddings)
-            # an eager checkpoint: the part write and the counts partial
-            # read it without re-running the batch's stages, and nothing
-            # reads ``mentions`` after this method returns
-            triples = assemble_triples(linked, canon)
-            # url stays in the durable part: retraction filters by it
-            relations = (
-                relation_stream(pages, linked, canon)
-                .groupBy("url", "subj", "pred", "obj")
-                .agg(F.count("*").alias("n"))
-            )
-            self.store.commit(
-                batch_id, pages, {"batch=": triples, "relbatch=": relations}
-            )
-        finally:
-            mentions.unpersist()
+        # eager checkpoints: the triples and the relation stream read
+        # the linked mentions, and the part write and the view merge
+        # read the relation counts, without re-running the batch's
+        # stages
+        linked = link_mentions(
+            detect_mentions(pages), self.embeddings
+        ).localCheckpoint()
+        triples = assemble_triples(linked, canon)
+        # url stays in the durable part: retraction filters by it
+        relations = (
+            relation_stream(pages, linked, canon)
+            .groupBy("url", "subj", "pred", "obj")
+            .agg(F.count("*").alias("n"))
+            .localCheckpoint()
+        )
+        if self.store.commit(
+            batch_id, pages, {"batch=": triples, "relbatch=": relations}
+        ):
+            self._annotate()
         return triples
 
     def entity_counts(self) -> DataFrame:
-        """Live (obj, n_triples) — a merge of the partials, never a
+        """Live (obj, n_triples) — the materialized view, never a
         re-aggregation of raw triples."""
         counts = self.store.live("entity_counts")
         if counts is None:
@@ -154,26 +162,21 @@ class IncrementalKGStream:
         return counts.withColumnRenamed("n", "n_triples")
 
     def relations(self) -> DataFrame:
-        """Live NPMI-annotated relation edges — the merged (subj, pred,
-        obj) partial counts fed to the batch annotator
-        (relations_from_counts); integer sums commute, so this equals
+        """Live NPMI-annotated relation edges — the batch annotator
+        (relations_from_counts) over the merged (subj, pred, obj) counts,
+        materialized at commit; integer sums commute, so this equals
         extract_relations over the latest versions row-for-row."""
-        counts = self.store.live("relations")
-        if counts is None:
+        if self._relations is None:
             return self.embeddings.sparkSession.createDataFrame(
                 [],
                 "subj string, pred string, obj string, rel_type string, "
                 "n long, pair_n long, npmi double",
             )
-        return relations_from_counts(counts)
+        return self._relations
 
     def triples(self, spark: SparkSession) -> DataFrame:
         """The committed triples of each url's latest version."""
         triples = self.store.latest(spark, "batch=")
         if triples is None:
-            return spark.createDataFrame(
-                [],
-                "subj string, pred string, obj string, url string, "
-                "char_start int, char_end int, bucket int",
-            )
+            return spark.createDataFrame([], TRIPLES)
         return triples

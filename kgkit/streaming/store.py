@@ -4,38 +4,40 @@ protocol behind ``IncrementalKGStream``.
 Layout.  Each micro-batch is written as one parquet part per part
 family, ``<base_dir>/<prefix><id>``, in overwrite mode, with the batch
 id as a ``_batch`` column.  The ``keys=<id>`` family holds the urls the
-batch delivered; the other families hold its rows.  foreachBatch is
-at-least-once, and a replayed batch rewrites the same dirs with the
-same rows (the streamed pipelines are deterministic), so the store is
-idempotent under replay.  Spark's ``_SUCCESS`` marker says a part is
-complete.
+batch delivered; the other families hold its rows.  Every family's
+schema is declared once, and parts are written and read with it: a
+batch whose rows do not fit the declaration fails before its write, a
+stored part whose column types differ fails its read, and no read runs
+a schema-inference job.  foreachBatch is at-least-once, and a replayed
+batch rewrites the same dirs with the same rows (the streamed pipelines
+are deterministic), so the store is idempotent under replay.  Spark's
+``_SUCCESS`` marker says a part is complete.
 
 Committed batches.  A batch counts only once EVERY one of its parts is
-complete.  Reads, the retraction probe, the replay guard and ``resume``
-see committed batches only, so a process that dies between two part
-writes leaves a batch that is simply absent: its replay writes and
-counts it in full.
+complete.  Reads, the retraction, the replay guard and ``resume`` see
+committed batches only, so a process that dies between two part writes
+leaves a batch that is simply absent: its replay writes and counts it
+in full.
 
 Supersession.  A url that a later batch re-delivers supersedes its
-stored version.  The latest-version index, ``(url, _batch)`` with each
-url's highest committed batch, is read from the key parts, and the
-reads join it (broadcast), so superseded rows never surface.  Because
-the index comes from what each batch delivered, not from what it
-produced, a url whose latest version yields no rows still supersedes
-its older one, after ``resume`` as well as live.  A batch whose urls
-are all new retracts nothing.
+stored version.  The reads anti-join the key parts (broadcast): a
+stored row survives unless a later committed batch delivered its url,
+so superseded rows never surface.  Because the key parts record what
+each batch delivered, not what it produced, a url whose latest version
+yields no rows still supersedes its older one, after ``resume`` as well
+as live.
 
-Live aggregates.  Each is declared once, as ``summarize(rows)``: a
-map-side-combined groupBy with one additive value column ``n``.  The
-store applies it in three places — to the batch's rows (+), to the
-superseded versions' stored rows (−), and, in ``resume``, to all
-latest committed rows — and reads merge the partials by summing.  Each
-(url, previous-latest-batch) pair retracts exactly once, so k recrawls
-retract k−1 versions; sums with mixed signs still commute, and a group
-whose sum cancels to zero is dropped.  Partials are eager
-``localCheckpoint``s (bounded by the batch, never a re-aggregation of
-the store) and fold into one frame each every ``COMPACT_EVERY``
-batches, which bounds the union plan depth.
+Live aggregates.  Each is declared once, as a sum of one additive
+column ``n`` (or of 1 per row) by its group columns, and is kept as ONE
+materialized view.  ``commit`` replaces the view by a single groupBy
+over three frames — the current view, the batch's rows (+) and the
+stored rows of the versions its urls supersede (−) — filtered to
+``n > 0`` and eagerly ``localCheckpoint``ed, so a read scans a frame
+sized by the aggregate's groups (entities, relation edges), never by
+the store or by the number of batches.  Each (url, previous-latest-
+batch) pair retracts exactly once, so k recrawls retract k−1 versions;
+a group whose sum cancels to zero is dropped.  ``resume`` builds each
+view from the latest committed rows.
 
 The retraction probe joins the store against a broadcast of the
 replaced set; at production scale the store is url-bucketed, so the
@@ -45,14 +47,13 @@ probe prunes to the touched buckets rather than scanning.
 from __future__ import annotations
 
 import os
-from typing import Callable, Dict, List, NamedTuple, Optional
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-COMPACT_EVERY = 8  # batches between folds of the live partials
 KEYS = "keys="  # the part family of each batch's delivered urls
-KEYS_SCHEMA = "url string, _batch long"
 
 
 def union_all(parts: List[DataFrame]) -> DataFrame:
@@ -68,25 +69,39 @@ def complete(path: str) -> bool:
 
 
 class Aggregate(NamedTuple):
-    """A live aggregate over one part family: ``summarize`` maps the
-    family's rows to (*group columns, ``n``), ``n`` additive."""
+    """A live aggregate over one part family: the sum of the family's
+    ``weight`` column (1 per row when None) by its ``groups``, kept as
+    (*groups, ``n``)."""
 
     family: str
-    summarize: Callable[[DataFrame], DataFrame]
+    groups: Tuple[str, ...]
+    weight: Optional[str] = None
+
+    def terms(self, rows: DataFrame, sign: int = 1) -> DataFrame:
+        n = F.col(self.weight) if self.weight else F.lit(1)
+        return rows.select(*self.groups, (n * sign).cast("long").alias("n"))
 
 
 class PartStore:
-    """Committed parts under ``base_dir``, the latest-version url index
-    and the live partials of each named aggregate, one aggregate per
-    row family.  Every row family must carry ``url``."""
+    """Committed parts under ``base_dir``, read at each url's latest
+    version, and one materialized view per named aggregate.
+    ``families`` maps each row family to the DDL of its rows; every row
+    family must carry ``url``."""
 
-    def __init__(self, base_dir: str, aggregates: Dict[str, Aggregate]):
+    def __init__(
+        self,
+        base_dir: str,
+        families: Dict[str, str],
+        aggregates: Dict[str, Aggregate],
+    ):
         self.base_dir = base_dir
+        self.schemas = {
+            f: f"{ddl}, _batch long"
+            for f, ddl in {KEYS: "url string", **families}.items()
+        }
         self.aggregates = aggregates
-        self.families = [KEYS] + [a.family for a in aggregates.values()]
-        self.partials: Dict[str, List[DataFrame]] = {n: [] for n in aggregates}
+        self.views: Dict[str, Optional[DataFrame]] = {n: None for n in aggregates}
         self.counted: set = set()  # replay guard: committed, counted ids
-        self._since_fold = 0
 
     def _path(self, family: str, batch_id: int) -> str:
         return os.path.join(self.base_dir, f"{family}{batch_id}")
@@ -102,110 +117,108 @@ class PartStore:
         }
         return sorted(
             i for i in ids
-            if all(complete(self._path(f, i)) for f in self.families)
+            if all(complete(self._path(f, i)) for f in self.schemas)
         )
 
     def read(self, spark: SparkSession, family: str) -> Optional[DataFrame]:
-        """The family's rows of every committed batch, with ``_batch``;
-        None when nothing is committed."""
+        """The family's rows of every committed batch, with ``_batch``,
+        in the declared schema; None when nothing is committed."""
         ids = self.committed()
         if not ids:
             return None
-        reader = spark.read.schema(KEYS_SCHEMA) if family == KEYS else spark.read
-        return reader.parquet(*[self._path(family, i) for i in ids])
-
-    @staticmethod
-    def _latest_batch(keys: DataFrame) -> DataFrame:
-        return keys.groupBy("url").agg(F.max("_batch").alias("_batch"))
+        return spark.read.schema(self.schemas[family]).parquet(
+            *[self._path(family, i) for i in ids]
+        )
 
     def latest(self, spark: SparkSession, family: str) -> Optional[DataFrame]:
-        """The family's committed rows of each url's latest version;
-        None before the first batch."""
+        """The family's committed rows of each url's latest version —
+        those no later committed batch re-delivered; None before the
+        first batch."""
         rows = self.read(spark, family)
         if rows is None:
             return None
-        index = self._latest_batch(self.read(spark, KEYS))
-        return rows.join(F.broadcast(index), ["url", "_batch"]).drop("_batch")
+        later = self.read(spark, KEYS).select(
+            F.col("url").alias("_url"), F.col("_batch").alias("_later")
+        )
+        superseded = (F.col("url") == F.col("_url")) & (
+            F.col("_later") > F.col("_batch")
+        )
+        return rows.join(F.broadcast(later), superseded, "left_anti").drop(
+            "_batch"
+        )
 
     def live(self, name: str) -> Optional[DataFrame]:
-        """The merged partials of aggregate ``name``, groups that cancel
-        to zero dropped; None before the first batch."""
-        if not self.partials[name]:
-            return None
-        merged = union_all(self.partials[name])
-        groups = [c for c in merged.columns if c != "n"]
-        return (
-            merged.groupBy(*groups)
+        """The materialized view of aggregate ``name``; None before the
+        first batch."""
+        return self.views[name]
+
+    def _merge(self, name: str, frames: List[DataFrame]) -> None:
+        groups = self.aggregates[name].groups
+        self.views[name] = (
+            union_all(frames)
+            .groupBy(*groups)
             .agg(F.sum("n").cast("long").alias("n"))
             .filter(F.col("n") > 0)
+            .localCheckpoint()
         )
 
     def commit(
         self, batch_id: int, keys: DataFrame, rows: Dict[str, DataFrame]
-    ) -> None:
+    ) -> bool:
         """Write the batch's part of every family (its delivered ``keys``
-        and ``rows``), then fold it into the live state: first the
-        retraction of the versions its urls supersede, then its own
-        partials.  A replay of a counted batch rewrites the same parts
-        and folds nothing."""
+        and ``rows``), then merge it into every view, net of the
+        versions its urls supersede.  A replay of a counted batch
+        rewrites the same parts and merges nothing.  True when the
+        views changed."""
+        spark = keys.sparkSession
         bcol = F.lit(batch_id).cast("long")
-        rows = {KEYS: keys.select("url").distinct(), **rows}
-        for family in self.families:
-            rows[family].withColumn("_batch", bcol).write.mode(
-                "overwrite"
-            ).parquet(self._path(family, batch_id))
-        if batch_id in self.counted:
-            return
-        if min(self.committed()) < batch_id:  # else nothing to supersede
-            self._retract(keys.sparkSession, batch_id)
-        for name, agg in self.aggregates.items():
-            self.partials[name].append(
-                agg.summarize(rows[agg.family]).localCheckpoint()
+        rows = {KEYS: keys.select("url"), **rows}
+        parts = {  # every part fits its declaration before any is written
+            family: rows[family].withColumn("_batch", bcol).to(
+                StructType.fromDDL(ddl)
             )
+            for family, ddl in self.schemas.items()
+        }
+        for family, part in parts.items():
+            part.write.mode("overwrite").parquet(self._path(family, batch_id))
+        if batch_id in self.counted:
+            return False
+        replaced = None
+        if min(self.committed()) < batch_id:  # else nothing to supersede
+            replaced = self._replaced(spark, batch_id)
+        for name, agg in self.aggregates.items():
+            frames = [agg.terms(rows[agg.family])]
+            if self.views[name] is not None:
+                frames.insert(0, self.views[name])
+            if replaced is not None:
+                stale = self.read(spark, agg.family).join(
+                    F.broadcast(replaced), ["url", "_batch"]
+                )
+                frames.append(agg.terms(stale, -1))
+            self._merge(name, frames)
         self.counted.add(batch_id)
-        self._since_fold += 1
-        if self._since_fold >= COMPACT_EVERY:
-            self.fold()
+        return True
 
-    def _retract(self, spark: SparkSession, batch_id: int) -> None:
-        """Append the negated partials of the stored versions that the
-        batch's urls supersede: each url at its latest EARLIER committed
-        batch."""
+    def _replaced(self, spark: SparkSession, batch_id: int) -> DataFrame:
+        """The stored versions that the batch's urls supersede: each url
+        at its latest EARLIER committed batch.  Materialized once, for
+        every view's merge."""
         stored = self.read(spark, KEYS)
-        replaced = (
-            self._latest_batch(stored.filter(F.col("_batch") < batch_id))
-            .join(stored.filter(F.col("_batch") == batch_id).select("url"), "url")
+        return (
+            stored.filter(F.col("_batch") < batch_id)
+            .groupBy("url")
+            .agg(F.max("_batch").alias("_batch"))
+            .join(stored.filter(F.col("_batch") == batch_id), "url", "left_semi")
             .localCheckpoint()
         )
-        if replaced.isEmpty():
-            return
-        for name, agg in self.aggregates.items():
-            stale = self.read(spark, agg.family).join(
-                F.broadcast(replaced), ["url", "_batch"]
-            )
-            self.partials[name].append(
-                agg.summarize(stale).withColumn("n", -F.col("n"))
-                .localCheckpoint()
-            )
-
-    def fold(self) -> None:
-        """Fold each partial list into one frame.  localCheckpoint is
-        eager: the folded frame is materialized before the old parts are
-        dropped (their blocks are freed by GC), and the union lineage is
-        truncated."""
-        for name in self.aggregates:
-            self.partials[name] = [self.live(name).localCheckpoint()]
-        self._since_fold = 0
 
     def resume(self, spark: SparkSession) -> None:
         """Rebuild the live state from the committed parts without
-        replaying the source: each aggregate from the latest rows, the
+        replaying the source: each view from the latest rows, the
         replay guard from the committed ids."""
         ids = self.committed()
         if not ids:
             raise FileNotFoundError(f"no committed batches in {self.base_dir}")
         for name, agg in self.aggregates.items():
-            self.partials[name] = [
-                agg.summarize(self.latest(spark, agg.family)).localCheckpoint()
-            ]
+            self._merge(name, [agg.terms(self.latest(spark, agg.family))])
         self.counted = set(ids)

@@ -1,0 +1,92 @@
+"""Spark job budget of the incremental KG stream.
+
+At this scale a call's wall follows the number of Spark jobs it
+launches, not its rows, so the job counts are pinned exactly: a 2-batch
+sf0.001 recrawl (batch 1 re-delivers a third of batch 0's urls with new
+text), each call counted under its own job group with
+``statusTracker``.  A change that adds a job to one of these calls must
+update its pin, and say why.
+
+Live reads serve the views that ``commit`` materialized: a count or
+relation read is one job (the scan of a checkpoint), a triples read two
+(the broadcast of the key parts, then the anti-joined scan).  The
+session's memoized dimension tables are warmed by a throwaway batch
+first, so the counts do not depend on which tests ran before.
+"""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+from test_kg_stream import SF_DIR  # the stream tests' sf0.001 data
+
+BUDGET = {  # exact job counts per call
+    "process_batch 0": 33,
+    "process_batch 1": 38,
+    "entity_counts": 1,
+    "relations": 1,
+    "triples": 2,
+    "resumed entity_counts": 1,
+    "resumed relations": 1,
+    "resumed triples": 2,
+}
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Jobs that ``fn()`` launched, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_groups)}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def counted(spark, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from kgkit.sources.pages import load_pages, pages_for_mentions
+    from kgkit.streaming.kg_stream import IncrementalKGStream
+
+    embeddings = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    pages = pages_for_mentions(load_pages(spark, SF_DIR))
+    a = pages.filter("pmod(xxhash64(url), 2) = 0")
+    b = pages.filter("pmod(xxhash64(url), 2) = 1")
+    a2 = a.filter("pmod(xxhash64(url), 3) = 0").withColumn(
+        "text", F.concat(F.lit("fresh spark stream content "), F.col("text"))
+    )
+    base = tmp_path_factory.mktemp("job_budget")
+    IncrementalKGStream(embeddings, triples_dir=str(base / "warm")).process_batch(
+        a.filter("pmod(xxhash64(url), 16) = 0"), batch_id=0
+    )
+
+    store = str(base / "store")
+    stm = IncrementalKGStream(embeddings, triples_dir=store)
+    got = {
+        "process_batch 0": _jobs(spark, lambda: stm.process_batch(a, 0)),
+        "process_batch 1": _jobs(
+            spark, lambda: stm.process_batch(b.unionByName(a2), 1)
+        ),
+    }
+    resumed = IncrementalKGStream.resume(spark, embeddings, store)
+    for prefix, s in (("", stm), ("resumed ", resumed)):
+        got[prefix + "entity_counts"] = _jobs(
+            spark, lambda: s.entity_counts().collect()
+        )
+        got[prefix + "relations"] = _jobs(spark, lambda: s.relations().collect())
+        got[prefix + "triples"] = _jobs(
+            spark, lambda: s.triples(spark).collect()
+        )
+    return got
+
+
+@pytest.mark.parametrize("call", list(BUDGET))
+def test_jobs_per_call(counted, call):
+    assert counted[call] == BUDGET[call]

@@ -1,5 +1,6 @@
 """Incremental KG construction stream: stream == batch, replay
-idempotence, durable resume, counts compaction."""
+idempotence, durable resume, materialized views, declared part
+schemas."""
 
 from __future__ import annotations
 
@@ -125,10 +126,15 @@ class TestReplayIdempotence:
             embeddings, triples_dir=str(tmp_path / "store")
         )
         first = _rows(stm.process_batch(pages, batch_id=0))
+        views = dict(stm.store.views)
+        annotated = stm.relations()
         # foreachBatch replay: same batch_id, same rows
         replay = _rows(stm.process_batch(pages, batch_id=0))
         assert replay == first
-        assert len(stm.store.partials["entity_counts"]) == 1  # guarded: no second part
+        # guarded: counted once, and the replay materializes no view
+        assert stm.store.counted == {0}
+        assert all(stm.store.views[n] is v for n, v in views.items())
+        assert stm.relations() is annotated
         assert _rows(stm.triples(spark)) == first  # dir overwritten, not doubled
         want = {}
         for row in first:
@@ -212,9 +218,13 @@ class TestRecrawl:
         stm.process_batch(a, batch_id=0)
         stm.process_batch(a2, batch_id=1)
         want_counts = _rows(stm.entity_counts())
+        want_rel = _rows(stm.relations())
         # replay of the recrawl batch: retraction must NOT run twice
         stm.process_batch(a2, batch_id=1)
         assert _rows(stm.entity_counts()) == want_counts
+        assert _rows(stm.relations()) == want_rel
+        latest = self._latest(a, a2)
+        assert want_rel == _rows(_batch_relations(spark, latest, embeddings))
 
         # crash: resume rebuilds counts + url index from the store,
         # serving only latest versions
@@ -223,7 +233,6 @@ class TestRecrawl:
         )
         assert stm2.store.counted == {0, 1}
         assert _rows(stm2.entity_counts()) == want_counts
-        latest = self._latest(a, a2)
         assert _rows(stm2.triples(spark)) == _rows(
             _batch_triples(spark, latest, embeddings)
         )
@@ -309,8 +318,16 @@ class TestRecrawl:
         stm2 = IncrementalKGStream.resume(
             spark, embeddings, store, recrawl=True
         )
-        assert _rows(stm2.triples(spark)) == _rows(
-            _batch_triples(spark, a, embeddings)
+        # no view is built from the torn batch's rows
+        before = _batch_triples(spark, a, embeddings)
+        assert _rows(stm2.triples(spark)) == _rows(before)
+        assert {r["obj"]: r["n_triples"]
+                for r in stm2.entity_counts().collect()} == {
+            r["obj"]: r["count"]
+            for r in before.groupBy("obj").count().collect()
+        }
+        assert _rows(stm2.relations()) == _rows(
+            _batch_relations(spark, a, embeddings)
         )
         stm2.process_batch(b.unionByName(a2), batch_id=1)  # the replay
         latest = self._latest(a, b.unionByName(a2))
@@ -484,15 +501,21 @@ class TestCrawlToKG:
         assert got == want and len(want) > 0
 
 
-class TestCountsCompaction:
-    def test_compaction_preserves_counts_and_folds_parts(
-        self, spark, embeddings, tmp_path, monkeypatch
-    ):
-        from kgkit.sources.pages import load_pages, pages_for_mentions
-        from kgkit.streaming import store
-        from kgkit.streaming.kg_stream import IncrementalKGStream
+def _is_checkpoint(df) -> bool:
+    """The frame's plan is one materialized leaf (a localCheckpoint)."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.nodeName() == "LogicalRDD" and plan.children().isEmpty()
 
-        monkeypatch.setattr(store, "COMPACT_EVERY", 2)
+
+class TestViews:
+    def test_each_aggregate_is_one_checkpointed_frame(
+        self, spark, embeddings, tmp_path
+    ):
+        """Every commit replaces each view by one eager checkpoint, so
+        after any number of batches a read scans one materialized
+        frame per aggregate, equal to the batch pipeline."""
+        from kgkit.sources.pages import load_pages, pages_for_mentions
+        from kgkit.streaming.kg_stream import IncrementalKGStream
 
         pages = pages_for_mentions(load_pages(spark, SF_DIR)).filter(
             "pmod(xxhash64(url), 4) = 1"
@@ -505,9 +528,58 @@ class TestCountsCompaction:
         )
         for i, s in enumerate(slices):
             stm.process_batch(s, batch_id=i)
-        # parts: b0, b1 -> folded to 1, then b2 appended
-        assert len(stm.store.partials["entity_counts"]) == 2
+        assert set(stm.store.views) == {"entity_counts", "relations"}
+        assert all(_is_checkpoint(v) for v in stm.store.views.values())
+        assert _is_checkpoint(stm.relations())
         batch = _batch_triples(spark, pages, embeddings)
         got = {r["obj"]: r["n_triples"] for r in stm.entity_counts().collect()}
         want = {r["obj"]: r["count"] for r in batch.groupBy("obj").count().collect()}
         assert got == want
+        assert _rows(stm.relations()) == _rows(
+            _batch_relations(spark, pages, embeddings)
+        )
+
+
+class TestDeclaredSchemas:
+    def test_stored_part_of_another_type_fails_loudly(
+        self, spark, embeddings, tmp_path
+    ):
+        """A stored part whose column type differs from its family's
+        declaration fails the read; it never reads as nulls."""
+        from pyspark.sql import functions as F
+
+        from kgkit.sources.pages import load_pages, pages_for_mentions
+        from kgkit.streaming.kg_stream import IncrementalKGStream
+
+        pages = pages_for_mentions(load_pages(spark, SF_DIR)).filter(
+            "pmod(xxhash64(url), 8) = 3"
+        )
+        store = str(tmp_path / "store")
+        stm = IncrementalKGStream(embeddings, triples_dir=store)
+        stm.process_batch(pages, batch_id=0)
+        part = str(tmp_path / "store" / "relbatch=0")
+        bad = spark.read.parquet(part).withColumn("n", F.col("n").cast("string"))
+        bad.localCheckpoint().write.mode("overwrite").parquet(part)
+        with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            IncrementalKGStream.resume(spark, embeddings, store)
+
+    def test_rows_of_another_type_are_not_written(self, spark, tmp_path):
+        """A batch whose rows do not fit a declaration fails before any
+        of its parts is written."""
+        import os
+
+        from pyspark.errors import AnalysisException
+
+        from kgkit.streaming.store import Aggregate, PartStore
+
+        store = PartStore(
+            str(tmp_path / "store"),
+            {"rows=": "url string, n long"},
+            {"n": Aggregate("rows=", ("url",), "n")},
+        )
+        keys = spark.createDataFrame([("u1",)], "url string")
+        rows = spark.createDataFrame([("u1", "two")], "url string, n string")
+        with pytest.raises(AnalysisException):
+            store.commit(0, keys, {"rows=": rows})
+        assert not os.path.exists(tmp_path / "store")
+        assert store.counted == set() and store.live("n") is None
