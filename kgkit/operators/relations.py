@@ -38,13 +38,19 @@ Scale design (the plan IS the product at 100 TB):
 * The relation stream collapses via ``groupBy(subj, pred, obj)`` FIRST
   (map-side combine on short strings), and only the aggregated table —
   bounded by distinct (pair x surface), orders of magnitude below the
-  corpus — is persisted and fanned out into the marginal aggregations.
-  Hub entities are safe: marginals are groupBy partial aggregations
-  (never windows over a hub's full row set), and the entity-sized
-  subj/obj marginal tables broadcast back onto the relation table.
-* The persist sits on an aggregated relation only (repo invariant);
-  like ``assemble_triples`` it is released to Spark's LRU once the
-  query's action completes.
+  corpus — is checkpointed (lineage cut) and annotated.
+* The annotation reads that checkpoint in ONE branch of windows: the
+  ``obj_n`` window takes an obj exchange, ``subj_n`` a subj exchange,
+  and ``pair_n`` rides on the subj partitioning (HashPartitioning(subj)
+  satisfies the (subj, obj) window) — two exchanges for three
+  marginals, no join-back.  Hub entities are safe: a window partition
+  is one entity's DISTINCT edges in the aggregated table (its graph
+  degree), never its raw occurrences.
+* The total ``N`` is the only second read: a global sum whose partial
+  aggregation runs per partition and whose final step is ONE task over
+  one partial per partition (never over the graph-sized table), then
+  broadcast onto every row.  Nothing is cached, so nothing is left to
+  release.
 """
 
 from __future__ import annotations
@@ -102,28 +108,21 @@ def relation_pairs(
     One url exchange (the window); the canonical map is a broadcast.
     Output: (subj, obj, url, char_end, next_start).
     """
-    m = (
-        linked.join(F.broadcast(canon), "entity_id", "left")
-        .withColumn("entity", F.coalesce("canonical_id", "entity_id"))
-        .select("url", "mention_id", "entity", "char_start", "char_end")
-    )
-    w = Window.partitionBy("url").orderBy("char_start", "mention_id")
-    gap = F.col("next_start") - F.col("char_end")
+    # SQL text: one Py4J call per expression, where each Column-API
+    # node costs several round trips (this runs once per stream batch)
+    by_url = "OVER (PARTITION BY url ORDER BY char_start, mention_id)"
+    gap = "next_start - char_end"
     return (
-        m.withColumn("obj", F.lead("entity").over(w))
-        .withColumn("next_start", F.lead("char_start").over(w))
+        linked.join(F.broadcast(canon), "entity_id", "left")
+        .selectExpr(
+            "url", "coalesce(canonical_id, entity_id) AS subj", "char_end",
+            f"lead(coalesce(canonical_id, entity_id)) {by_url} AS obj",
+            f"lead(char_start) {by_url} AS next_start",
+        )
         .filter(
-            F.col("obj").isNotNull()
-            & (gap >= 2)
-            & (gap <= max_gap_chars)
+            f"obj IS NOT NULL AND {gap} >= 2 AND {gap} <= {int(max_gap_chars)}"
         )
-        .select(
-            F.col("entity").alias("subj"),
-            "obj",
-            "url",
-            "char_end",
-            "next_start",
-        )
+        .select("subj", "obj", "url", "char_end", "next_start")
     )
 
 
@@ -141,21 +140,17 @@ def relation_stream(
     sum equals the batch aggregation exactly (and retract a superseded
     page's occurrences by url)."""
     pairs = relation_pairs(linked, canon, max_gap_chars)
-    pred = F.trim(
-        F.substring(
-            F.col("text"),
-            F.col("char_end") + F.lit(1),
-            F.col("next_start") - F.col("char_end"),
-        )
-    )
     # 1..max_pred_words lowercase single-spaced words — anything else
     # (punctuation, digits, non-ASCII, runs of space) is not a surface
-    pat = r"^[a-z]+( [a-z]+){0,%d}$" % (max_pred_words - 1)
+    pat = r"^[a-z]+( [a-z]+){0,%d}$" % (int(max_pred_words) - 1)
     return (
         pairs.join(pages.select("url", "text"), "url")
-        .withColumn("pred", pred)
-        .filter(F.col("pred").rlike(pat))
-        .select("url", "subj", "pred", "obj")
+        .selectExpr(
+            "url", "subj",
+            "trim(substring(text, char_end + 1, next_start - char_end)) AS pred",
+            "obj",
+        )
+        .filter(f"pred RLIKE '{pat}'")
     )
 
 
@@ -182,7 +177,11 @@ def extract_relations(
         pages, linked, canon, max_gap_chars, max_pred_words
     )
     rel = stream.groupBy("subj", "pred", "obj").agg(F.count("*").alias("n"))
-    return relations_from_counts(rel)
+    # eager and lineage-cut: the annotation reads the aggregated
+    # relation twice (its windows and the total), and its lineage — the
+    # mention UDF, the url window and the pages join — is the deepest
+    # plan in the repo
+    return relations_from_counts(rel.localCheckpoint())
 
 
 def entity_authority(rel: DataFrame, iters: int = 5) -> DataFrame:
@@ -296,50 +295,42 @@ def canonical_predicates(rel: DataFrame) -> DataFrame:
     )
 
 
+# double-first products: exact for counts < 2^53 and identical IEEE ops
+# on both engines; BIGINT products could overflow at scale
+_NPMI = (
+    "CASE WHEN pair_n = total_n THEN 1.0D ELSE round("
+    "ln((CAST(pair_n AS DOUBLE) * CAST(total_n AS DOUBLE))"
+    " / (CAST(subj_n AS DOUBLE) * CAST(obj_n AS DOUBLE)))"
+    " / ln(CAST(total_n AS DOUBLE) / CAST(pair_n AS DOUBLE)), 6) END"
+)
+
+
 def relations_from_counts(rel: DataFrame) -> DataFrame:
     """(subj, pred, obj, n) counts -> NPMI-annotated relation edges.
 
     Pure integer-marginal arithmetic, so it serves both the batch path
     and the streaming path's merged partial counts (sums commute —
     merge-then-annotate equals aggregate-then-annotate row-for-row).
+
+    ``rel`` must be lineage-cut (an eager checkpoint: extract_relations
+    passes ``rel.localCheckpoint()``, the KG stream its relation view):
+    the annotation reads it in one branch of windows plus the total's
+    aggregation, and a lazy input would re-run its lineage per branch.
     """
-    # materialize the aggregated relation EAGERLY and cut its lineage:
-    # the four marginal branches below otherwise race an unpopulated
-    # lazy cache inside one action and each re-runs the full
-    # mention-UDF + window + pages-join lineage (the metrics_fanout_df
-    # discipline) — and because that lineage is the deepest plan in the
-    # repo, a persist would still carry it into every branch's
-    # plan/AQE work; localCheckpoint truncates it to a LogicalRDD leaf
-    # (the corpus_clean boundary rationale; measured ~0.4 s faster
-    # than persist+count at sf0.1).  rel is the AGGREGATED relation —
-    # bounded by distinct (pair x surface), orders of magnitude below
-    # the corpus.
-    rel = rel.localCheckpoint()
-    subj_n = rel.groupBy("subj").agg(F.sum("n").alias("subj_n"))
-    obj_n = rel.groupBy("obj").agg(F.sum("n").alias("obj_n"))
-    pair_n = rel.groupBy("subj", "obj").agg(F.sum("n").alias("pair_n"))
+    # in this order, pair_n shares the subj exchange (HashPartitioning
+    # (subj) satisfies the (subj, obj) window); obj_n takes its own.
+    # SQL text: one Py4J call per expression, not one per Column node
+    marginals = (
+        rel.withColumn("obj_n", F.expr("sum(n) OVER (PARTITION BY obj)"))
+        .withColumn("subj_n", F.expr("sum(n) OVER (PARTITION BY subj)"))
+        .withColumn("pair_n", F.expr("sum(n) OVER (PARTITION BY subj, obj)"))
+    )
     # 'total_n', not 'N': Spark's case-insensitive resolution would
     # collide an 'N' alias with the per-edge count column 'n'
     total = rel.agg(F.sum("n").alias("total_n"))
-
-    # double-first products: exact for counts < 2^53 and identical
-    # IEEE ops on both engines; BIGINT products could overflow at scale
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    npmi = F.when(F.col("pair_n") == F.col("total_n"), F.lit(1.0)).otherwise(
-        F.round(
-            F.log((d("pair_n") * d("total_n")) / (d("subj_n") * d("obj_n")))
-            / F.log(d("total_n") / d("pair_n")),
-            6,
-        )
-    )
-    return (
-        rel.join(pair_n, ["subj", "obj"])
-        .join(F.broadcast(subj_n), "subj")
-        .join(F.broadcast(obj_n), "obj")
-        .crossJoin(F.broadcast(total))
-        .withColumn("npmi", npmi)
-        .withColumn("rel_type", rel_type_col(F.col("pred")))
-        .select("subj", "pred", "obj", "rel_type", "n", "pair_n", "npmi")
+    return marginals.crossJoin(F.broadcast(total)).select(
+        "subj", "pred", "obj", rel_type_col(F.col("pred")).alias("rel_type"),
+        "n", "pair_n", F.expr(_NPMI).alias("npmi"),
     )
 
 

@@ -11,11 +11,12 @@ canonicalized mentions:
                                            self-join)
 
 Scale design: the stage shuffles the linked-mention stream EXACTLY ONCE,
-on url.  Hash-partitioning by url satisfies both downstream
-distributions — the (url, entity) aggregation (url is a prefix of the
-grouping key) and the per-url window — so the stage plans a single
-exchange, cached once and read by both union branches; the upstream
-stage-1 Arrow UDF executes once.
+on url, and reads it in ONE branch.  Hash-partitioning by url satisfies
+every window the stage plans — the per-url ``lead`` and the per-(url,
+entity) first-span windows (url is a prefix of that key) — so the plan
+has a single exchange, no union and no cache, and the upstream stage-1
+Arrow UDF executes once.  A window partition is one page's mentions
+(or one entity's mentions on one page), never a hub's corpus-wide rows.
 url is a maximal-cardinality uniform key: no skew regardless of how
 hub-heavy the ENTITY distribution is — the hub-entity skew surfaces
 only in entity-keyed aggregations, handled by explicit salting in
@@ -30,8 +31,7 @@ rule requires (AQE alone is not accepted as the answer).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,67 +43,62 @@ def assemble_triples(
     """linked mentions + canonical map -> triples(subj, pred, obj, url,
     char_start, char_end, bucket).
 
-    The url-partitioned frame is cached for the two-branch fan-out: the
-    cached partitioning satisfies BOTH branches' distribution
-    requirements (url is a prefix of the (url, entity) grouping key and
-    is the window key), so each branch reads the cache with no further
-    exchange and the upstream stage-1 UDF executes exactly once.
-    (Catalyst's ReusedExchange would serve the same purpose plan-side,
-    but the linking stage's lambda expressions defeat plan
-    canonicalization, so the reuse is made explicit here.)  The result
-    is an eager localCheckpoint, so the cache is released before the
-    function returns.
+    One branch: the url-partitioned mention stream is read once, by
+    windows only.  A window over ``url`` (``lead``) gives each mention
+    its successor, windows over ``(url, entity)`` give each (page,
+    entity) its first span and a ``row_number() = 1`` marker, and one
+    ``inline`` of a two-element struct array — the ``mentions`` triple
+    (kept on the marker row) and the ``cooccurs_with`` triple (kept when
+    a successor exists) — emits both predicates.  HashPartitioning(url)
+    satisfies both window distributions, so the plan has ONE exchange
+    over the mention stream and no union: the upstream stage-1 UDF
+    runs once with no cache and no fan-out.  The result is an eager
+    localCheckpoint.
     """
     m = (
         linked.join(F.broadcast(canon), "entity_id", "left")
-        .withColumn("entity", F.coalesce("canonical_id", "entity_id"))
-        .select("url", "mention_id", "entity", "char_start", "char_end")
+        .selectExpr(
+            "url", "mention_id", "coalesce(canonical_id, entity_id) AS entity",
+            "char_start", "char_end",
+        )
         .repartition("url")  # the stage's ONE exchange over the mention stream
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    try:
-        # populate the cache EAGERLY before the two-branch fan-out:
-        # with a lazy persist both union branches race the unpopulated
-        # cache inside one action, serializing on the block locks /
-        # re-running the stage-1 UDF lineage (measured at sf0.1: the
-        # assembled query dropped 4.0->2.5 s once the cache is
-        # populated first)
-        m.count()
-
-        page_triples = (
-            m.groupBy("url", "entity")
-            .agg(
-                F.min("char_start").alias("char_start"),
-                F.min("char_end").alias("char_end"),
-            )
-            .select(
-                F.col("url").alias("subj"),
-                F.lit("mentions").alias("pred"),
-                F.col("entity").alias("obj"),
-                "url", "char_start", "char_end",
-            )
+    return (
+        m.selectExpr(*_WINDOWS)
+        .selectExpr(_EMIT)
+        .selectExpr(
+            "subj", "pred", "obj", "url", "char_start", "char_end",
+            f"CAST(pmod(xxhash64(url), {int(n_buckets)}) AS INT) AS bucket",
         )
+        .localCheckpoint()
+    )
 
-        w = Window.partitionBy("url").orderBy("char_start", "mention_id")
-        cooccur = (
-            m.withColumn("next_entity", F.lead("entity").over(w))
-            .withColumn("next_start", F.lead("char_start").over(w))
-            .filter(F.col("next_entity").isNotNull())
-            .select(
-                F.col("entity").alias("subj"),
-                F.lit("cooccurs_with").alias("pred"),
-                F.col("next_entity").alias("obj"),
-                "url",
-                "char_start",
-                F.col("next_start").alias("char_end"),
-            )
-        )
 
-        return page_triples.unionByName(cooccur).withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-        ).localCheckpoint()
-    finally:
-        m.unpersist()
+# SQL text: one Py4J call per expression, where each Column-API node
+# costs several round trips
+_BY_URL = "PARTITION BY url ORDER BY char_start, mention_id"
+_WINDOWS = (
+    "url", "entity", "char_start",
+    f"lead(entity) OVER ({_BY_URL}) AS next_entity",
+    f"lead(char_start) OVER ({_BY_URL}) AS next_start",
+    "min(char_start) OVER (PARTITION BY url, entity) AS first_start",
+    "min(char_end) OVER (PARTITION BY url, entity) AS first_end",
+    "row_number() OVER (PARTITION BY url, entity "
+    "ORDER BY char_start, mention_id) AS nth",
+)
+# each mention row emits its page's `mentions` triple (kept on the
+# (url, entity) marker row) and its `cooccurs_with` triple (kept when
+# it has a successor)
+_EMIT = (
+    "inline(filter(array("
+    "named_struct('subj', url, 'pred', 'mentions', 'obj', entity, "
+    "'url', url, 'char_start', first_start, 'char_end', first_end, "
+    "'keep', nth = 1), "
+    "named_struct('subj', entity, 'pred', 'cooccurs_with', "
+    "'obj', next_entity, 'url', url, 'char_start', char_start, "
+    "'char_end', next_start, 'keep', next_entity IS NOT NULL)"
+    "), t -> t.keep))"
+)
 
 
 def write_triples(triples: DataFrame, ref: str) -> None:

@@ -18,12 +18,13 @@ its (subj, pred, obj) occurrence stream is per-page too, so per-batch
 counts merge exactly).  Re-aggregating the whole triples store per
 trigger is O(store); instead each batch's bounded, map-side-combined
 counts (by ``obj`` over its triples, by (subj, pred, obj) over its
-relation occurrences) are merged into one materialized view per
-aggregate when the batch commits — hub entities cost one bounded row
-per view instead of a skewed re-shuffle of raw triples.  The NPMI
-annotation is a pure function of the merged integers, so the batch
-annotator (relations_from_counts) runs on the relation-count view once
-per commit, and every read serves a materialized frame.
+relation occurrences) are merged into the views when the batch
+commits, every aggregate in one groupBy and one checkpoint — hub
+entities cost one bounded row per view instead of a skewed re-shuffle
+of raw triples.  The NPMI annotation is a pure function of the merged
+integers, so the batch annotator (relations_from_counts) runs on the
+relation-count view (already lineage-cut) once per commit, and every
+read serves a materialized frame.
 
 A live crawl REVISITS urls: a url re-delivered by a later batch
 supersedes its earlier version, whose contribution is retracted from

@@ -28,16 +28,20 @@ yields no rows still supersedes its older one, after ``resume`` as well
 as live.
 
 Live aggregates.  Each is declared once, as a sum of one additive
-column ``n`` (or of 1 per row) by its group columns, and is kept as ONE
-materialized view.  ``commit`` replaces the view by a single groupBy
-over three frames — the current view, the batch's rows (+) and the
-stored rows of the versions its urls supersede (−) — filtered to
-``n > 0`` and eagerly ``localCheckpoint``ed, so a read scans a frame
-sized by the aggregate's groups (entities, relation edges), never by
-the store or by the number of batches.  Each (url, previous-latest-
-batch) pair retracts exactly once, so k recrawls retract k−1 versions;
-a group whose sum cancels to zero is dropped.  ``resume`` builds each
-view from the latest committed rows.
+column ``n`` (or of 1 per row) by its group columns, and is kept as a
+view of ONE materialized frame that every aggregate shares.  ``commit``
+replaces that frame by a single groupBy over one union tagged by
+aggregate name (each aggregate's group columns padded by null to the
+union of all of them): the current frame, each aggregate's batch rows
+(+) and the stored rows of the versions the batch's urls supersede (−),
+filtered to ``n > 0`` and eagerly ``localCheckpoint``ed once.  Each
+view is that checkpoint filtered to its tag, so a read scans a frame
+sized by the aggregates' groups (entities, relation edges), never by
+the store or by the number of batches, and a commit merges every
+aggregate in one shuffle.  Each (url, previous-latest-batch) pair
+retracts exactly once, so k recrawls retract k−1 versions; a group
+whose sum cancels to zero is dropped.  ``resume`` builds the frame from
+the latest committed rows.
 
 The retraction probe joins the store against a broadcast of the
 replaced set; at production scale the store is url-bucketed, so the
@@ -54,13 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 KEYS = "keys="  # the part family of each batch's delivered urls
-
-
-def union_all(parts: List[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+TAG = "_aggregate"  # the merged frame's aggregate-name column
 
 
 def complete(path: str) -> bool:
@@ -84,7 +82,8 @@ class Aggregate(NamedTuple):
 
 class PartStore:
     """Committed parts under ``base_dir``, read at each url's latest
-    version, and one materialized view per named aggregate.
+    version, and one view per named aggregate, each a slice of one
+    materialized frame.
     ``families`` maps each row family to the DDL of its rows; every row
     family must carry ``url``."""
 
@@ -95,11 +94,12 @@ class PartStore:
         aggregates: Dict[str, Aggregate],
     ):
         self.base_dir = base_dir
-        self.schemas = {
-            f: f"{ddl}, _batch long"
+        self.schemas = {  # parsed once: each commit writes every family
+            f: StructType.fromDDL(f"{ddl}, _batch long")
             for f, ddl in {KEYS: "url string", **families}.items()
         }
         self.aggregates = aggregates
+        self.merged: Optional[DataFrame] = None  # every view's checkpoint
         self.views: Dict[str, Optional[DataFrame]] = {n: None for n in aggregates}
         self.counted: set = set()  # replay guard: committed, counted ids
 
@@ -152,32 +152,44 @@ class PartStore:
         first batch."""
         return self.views[name]
 
-    def _merge(self, name: str, frames: List[DataFrame]) -> None:
-        groups = self.aggregates[name].groups
-        self.views[name] = (
-            union_all(frames)
-            .groupBy(*groups)
+    def _merge(self, terms: Dict[str, List[DataFrame]]) -> None:
+        """Replace the merged frame by one groupBy over the current frame
+        and every aggregate's ``terms``, and each view by its slice."""
+        tagged = [self.merged] if self.merged is not None else []
+        for name, frames in terms.items():
+            groups = self.aggregates[name].groups
+            tagged += [
+                f.select(F.lit(name).alias(TAG), *groups, "n") for f in frames
+            ]
+        out = tagged[0]
+        for t in tagged[1:]:  # pads each aggregate's missing groups by null
+            out = out.unionByName(t, allowMissingColumns=True)
+        columns = [c for c in out.columns if c not in (TAG, "n")]
+        self.merged = (
+            out.groupBy(TAG, *columns)
             .agg(F.sum("n").cast("long").alias("n"))
             .filter(F.col("n") > 0)
             .localCheckpoint()
         )
+        self.views = {
+            name: self.merged.filter(F.col(TAG) == name).select(*agg.groups, "n")
+            for name, agg in self.aggregates.items()
+        }
 
     def commit(
         self, batch_id: int, keys: DataFrame, rows: Dict[str, DataFrame]
     ) -> bool:
         """Write the batch's part of every family (its delivered ``keys``
-        and ``rows``), then merge it into every view, net of the
-        versions its urls supersede.  A replay of a counted batch
+        and ``rows``), then merge it into every view in one groupBy, net
+        of the versions its urls supersede.  A replay of a counted batch
         rewrites the same parts and merges nothing.  True when the
         views changed."""
         spark = keys.sparkSession
         bcol = F.lit(batch_id).cast("long")
         rows = {KEYS: keys.select("url"), **rows}
         parts = {  # every part fits its declaration before any is written
-            family: rows[family].withColumn("_batch", bcol).to(
-                StructType.fromDDL(ddl)
-            )
-            for family, ddl in self.schemas.items()
+            family: rows[family].withColumn("_batch", bcol).to(schema)
+            for family, schema in self.schemas.items()
         }
         for family, part in parts.items():
             part.write.mode("overwrite").parquet(self._path(family, batch_id))
@@ -186,30 +198,29 @@ class PartStore:
         replaced = None
         if min(self.committed()) < batch_id:  # else nothing to supersede
             replaced = self._replaced(spark, batch_id)
+        terms = {}
         for name, agg in self.aggregates.items():
-            frames = [agg.terms(rows[agg.family])]
-            if self.views[name] is not None:
-                frames.insert(0, self.views[name])
+            terms[name] = [agg.terms(rows[agg.family])]
             if replaced is not None:
                 stale = self.read(spark, agg.family).join(
                     F.broadcast(replaced), ["url", "_batch"]
                 )
-                frames.append(agg.terms(stale, -1))
-            self._merge(name, frames)
+                terms[name].append(agg.terms(stale, -1))
+        self._merge(terms)
         self.counted.add(batch_id)
         return True
 
     def _replaced(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """The stored versions that the batch's urls supersede: each url
-        at its latest EARLIER committed batch.  Materialized once, for
-        every view's merge."""
+        at its latest EARLIER committed batch.  Not materialized: the one
+        merge broadcasts it into every aggregate's retraction, and the
+        identical broadcasts run once (a reused exchange)."""
         stored = self.read(spark, KEYS)
         return (
             stored.filter(F.col("_batch") < batch_id)
             .groupBy("url")
             .agg(F.max("_batch").alias("_batch"))
             .join(stored.filter(F.col("_batch") == batch_id), "url", "left_semi")
-            .localCheckpoint()
         )
 
     def resume(self, spark: SparkSession) -> None:
@@ -219,6 +230,9 @@ class PartStore:
         ids = self.committed()
         if not ids:
             raise FileNotFoundError(f"no committed batches in {self.base_dir}")
-        for name, agg in self.aggregates.items():
-            self._merge(name, [agg.terms(self.latest(spark, agg.family))])
+        self.merged = None
+        self._merge({
+            name: [agg.terms(self.latest(spark, agg.family))]
+            for name, agg in self.aggregates.items()
+        })
         self.counted = set(ids)

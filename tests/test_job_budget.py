@@ -1,17 +1,26 @@
-"""Spark job budget of the incremental KG stream.
+"""Spark job budget of the incremental KG stream and the batch build.
 
 At this scale a call's wall follows the number of Spark jobs it
-launches, not its rows, so the job counts are pinned exactly: a 2-batch
-sf0.001 recrawl (batch 1 re-delivers a third of batch 0's urls with new
-text), each call counted under its own job group with
-``statusTracker``.  A change that adds a job to one of these calls must
-update its pin, and say why.
+launches, not its rows, so the job counts are pinned exactly, each call
+counted under its own job group with ``statusTracker``:
+
+* the stream on a 2-batch sf0.001 recrawl (batch 1 re-delivers a third
+  of batch 0's urls with new text);
+* each of ``run_kg_pipeline``'s five ``StageRunner`` stages on sf0.001
+  (build, parquet write, and the lineage pass);
+* ``link_mentions`` on a fresh embeddings table, cold and warm: the
+  cold call fetches the ambiguous-entity vectors and probes the scores
+  broadcast gate, a warm call on the same table reuses both.
+
+A change that adds a job to one of these calls must update its pin,
+and say why.
 
 Live reads serve the views that ``commit`` materialized: a count or
 relation read is one job (the scan of a checkpoint), a triples read two
 (the broadcast of the key parts, then the anti-joined scan).  The
-session's memoized dimension tables are warmed by a throwaway batch
-first, so the counts do not depend on which tests ran before.
+session's memoized dimension tables are warmed by a throwaway batch and
+a throwaway build first, so the counts do not depend on which tests ran
+before.
 """
 
 from __future__ import annotations
@@ -22,14 +31,30 @@ import pytest
 from test_kg_stream import SF_DIR  # the stream tests' sf0.001 data
 
 BUDGET = {  # exact job counts per call
-    "process_batch 0": 33,
-    "process_batch 1": 38,
+    "process_batch 0": 21,
+    "process_batch 1": 24,
     "entity_counts": 1,
     "relations": 1,
     "triples": 2,
     "resumed entity_counts": 1,
     "resumed relations": 1,
     "resumed triples": 2,
+}
+
+STAGE_BUDGET = {  # run_kg_pipeline on sf0.001, exact jobs per stage
+    "stage1_mentions": 4,
+    "stage2_linked": 7,
+    "stage3_canonical": 4,
+    "stage4_triples": 7,
+    "stage4b_relations": 13,
+}
+
+LINK_BUDGET = {  # link_mentions(...).localCheckpoint() on a fresh table
+    "cold": 7,
+    # the cold call's jobs minus the vector fetch (1) and the broadcast
+    # gate's probe (2: the limit's exchange, then the count)
+    "warm": 4,
+    "warm build": 0,  # link_mentions alone: the plan comes from the memo
 }
 
 _groups = itertools.count()
@@ -90,3 +115,58 @@ def counted(spark, tmp_path_factory):
 @pytest.mark.parametrize("call", list(BUDGET))
 def test_jobs_per_call(counted, call):
     assert counted[call] == BUDGET[call]
+
+
+@pytest.fixture(scope="module")
+def stage_jobs(spark, tmp_path_factory):
+    from kgkit.plans import stages
+
+    base = tmp_path_factory.mktemp("stage_budget")
+    stages.run_kg_pipeline(spark, SF_DIR, str(base / "warm"))
+    got = {}
+    real = stages.StageRunner.run
+
+    def counted_run(self, stage, build):
+        out = []
+        got[stage] = _jobs(spark, lambda: out.append(real(self, stage, build)))
+        return out[0]
+
+    stages.StageRunner.run = counted_run
+    try:
+        stages.run_kg_pipeline(spark, SF_DIR, str(base / "run"))
+    finally:
+        stages.StageRunner.run = real
+    return got
+
+
+@pytest.mark.parametrize("stage", list(STAGE_BUDGET))
+def test_jobs_per_stage(stage_jobs, stage):
+    assert stage_jobs[stage] == STAGE_BUDGET[stage]
+
+
+@pytest.fixture(scope="module")
+def link_jobs(spark, tmp_path_factory):
+    from kgkit.operators.linking import link_mentions
+    from kgkit.operators.mentions import detect_mentions
+    from kgkit.sources.pages import load_pages, pages_for_mentions
+
+    table = str(tmp_path_factory.mktemp("link_budget") / "embeddings")
+    spark.read.parquet(f"{SF_DIR}/embeddings.parquet").write.parquet(table)
+    embeddings = spark.read.parquet(table)  # a table no call has seen
+    mentions = detect_mentions(
+        pages_for_mentions(load_pages(spark, SF_DIR))
+    ).localCheckpoint()
+
+    def link():
+        return link_mentions(mentions, embeddings)
+
+    return {
+        "cold": _jobs(spark, lambda: link().localCheckpoint()),
+        "warm": _jobs(spark, lambda: link().localCheckpoint()),
+        "warm build": _jobs(spark, link),
+    }
+
+
+@pytest.mark.parametrize("call", list(LINK_BUDGET))
+def test_link_jobs(link_jobs, call):
+    assert link_jobs[call] == LINK_BUDGET[call]

@@ -511,9 +511,10 @@ class TestViews:
     def test_each_aggregate_is_one_checkpointed_frame(
         self, spark, embeddings, tmp_path
     ):
-        """Every commit replaces each view by one eager checkpoint, so
-        after any number of batches a read scans one materialized
-        frame per aggregate, equal to the batch pipeline."""
+        """Every commit replaces the views by ONE eager checkpoint that
+        each view filters to its aggregate, so after any number of
+        batches a read scans one materialized frame, equal to the batch
+        pipeline."""
         from kgkit.sources.pages import load_pages, pages_for_mentions
         from kgkit.streaming.kg_stream import IncrementalKGStream
 
@@ -529,7 +530,13 @@ class TestViews:
         for i, s in enumerate(slices):
             stm.process_batch(s, batch_id=i)
         assert set(stm.store.views) == {"entity_counts", "relations"}
-        assert all(_is_checkpoint(v) for v in stm.store.views.values())
+        assert _is_checkpoint(stm.store.merged)
+        merged = stm.store.merged._jdf.queryExecution().analyzed().rdd().id()
+        for v in stm.store.views.values():
+            leaves = v._jdf.queryExecution().analyzed().collectLeaves()
+            assert leaves.size() == 1
+            assert leaves.head().nodeName() == "LogicalRDD"
+            assert leaves.head().rdd().id() == merged
         assert _is_checkpoint(stm.relations())
         batch = _batch_triples(spark, pages, embeddings)
         got = {r["obj"]: r["n_triples"] for r in stm.entity_counts().collect()}

@@ -131,3 +131,47 @@ class TestLiteralPlanBudget:
         b = {tuple(r[k] for k in key): (r["entity_id"], r["link_score"])
              for r in uncapped.collect()}
         assert a == b
+
+
+class TestRerankMemo:
+    def test_overwritten_table_is_gated_again(self, spark, tmp_path):
+        """The literal path memoizes its score frame and broadcast gate
+        per embeddings table.  A table overwritten at the same path is
+        another table: two reads of the path hash equal (semanticHash),
+        but their input files differ, so the gate probes again and the
+        vectors are fetched again."""
+        mentions, _, aliases = _synthetic_kb(spark, n_amb_entities=2, n_pages=8)
+
+        def write(vids, salt, path):
+            rows = [(v, [float((v * (j + salt)) % 17) - 8.0 for j in range(4)])
+                    for v in vids]
+            spark.createDataFrame(
+                rows, "vec_id int, embedding array<double>"
+            ).write.mode("overwrite").parquet(path)
+
+        def link(path):
+            return link_mentions(mentions, spark.read.parquet(path), aliases,
+                                 scores_broadcast_rows=5)
+
+        def broadcasts(df):
+            return df._jdf.queryExecution().executedPlan().toString().count(
+                "BroadcastExchange"
+            )
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        path, fresh = str(tmp_path / "emb"), str(tmp_path / "fresh")
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")  # only hints broadcast: the gate shows
+        try:
+            write([0, 1, 100, 101], 3, path)  # 4 rows <= 5: broadcast
+            assert broadcasts(link(path)) == 2  # dictionary + scores
+            write(list(range(8)) + [100, 101], 5, path)  # 10 rows, new vectors
+            again = link(path)
+            assert broadcasts(again) == 1  # dictionary only
+            write(list(range(8)) + [100, 101], 5, fresh)
+            assert rows(again) == rows(link(fresh))
+        finally:
+            spark.conf.set(key, old)

@@ -3,7 +3,8 @@
 Pins the properties that make the pipeline scale: column pruning at the
 scan (never read unused columns in stage 1), filter pushdown into
 parquet, zero exchanges in the linking stage, and single execution of
-the stage-1 Arrow UDF in the fused triples chain."""
+the stage-1 Arrow UDF under one url exchange in the fused triples
+chain."""
 
 from __future__ import annotations
 
@@ -90,10 +91,12 @@ class TestPlanShape:
                 assert "BroadcastExchange" in line, line
 
     def test_triples_runs_stage1_udf_once(self, spark, monkeypatch):
-        """The fused chain caches the url-partitioned frame: both union
-        branches read the cache (InMemoryTableScan), and the stage-1 UDF
-        appears in exactly one cached subtree.  The result is an eager
-        checkpoint, so the pin reads the plan that materialized it."""
+        """The fused chain reads the url-partitioned mention stream in
+        ONE branch: the plan that materializes the triples holds exactly
+        one stage-1 UDF (MapInArrow) under exactly one url Exchange, so
+        the UDF runs once with no cache and no union.  The result is an
+        eager checkpoint, so the pin reads the plan that materialized
+        it."""
         from kgkit.operators.canonicalize import canonical_map
         from kgkit.operators.linking import link_mentions
         from kgkit.operators.mentions import detect_mentions
@@ -108,16 +111,15 @@ class TestPlanShape:
         triples = assemble_triples(linked, canon)
         assert len(plans) == 1, plans
         plan = plans[0]
-        # both branches read the cache; the UDF lives inside the cached
-        # relation (the plan STRING repeats the cached child per scan,
-        # but execution materializes it once — tests/test_stages and the
-        # scaling bench pin the wall-clock consequence)
-        assert plan.count("InMemoryTableScan") >= 2, plan
         lines = plan.splitlines()
         udfs = [i for i, l in enumerate(lines) if "MapInArrow" in l]
-        assert udfs, plan
-        for i in udfs:
-            assert any("InMemoryRelation" in a for a in _ancestors(lines, i)), plan
+        assert len(udfs) == 1, plan
+        url_exchanges = [
+            l for l in lines if "Exchange hashpartitioning(url#" in l
+        ]
+        assert len(url_exchanges) == 1, plan
+        assert url_exchanges[0] in _ancestors(lines, udfs[0]), plan
+        assert "InMemoryTableScan" not in plan and "Union" not in plan, plan
         # the returned frame scans the checkpoint: the UDF already ran
         returned = _executed_plan(triples)
         assert "Scan ExistingRDD" in returned, returned

@@ -285,10 +285,11 @@ class TestCanonicalPredicates:
 
 class TestRelationsPlan:
     def test_stage1_udf_runs_once_and_persist_is_aggregated(self, spark):
-        """The 4-branch marginal fan-out must read the persisted
-        AGGREGATED relation, never re-run the stage-1 Arrow UDF: the
-        stage-1 MapInArrow is absent from the fan-out's executed plan and
-        the checkpointed relation is scanned on every branch."""
+        """The NPMI annotation reads the checkpointed AGGREGATED
+        relation, never the stage-1 Arrow UDF: the MapInArrow is absent
+        from the annotation's executed plan, and every marginal (the
+        subj / obj / pair windows and the total) reads the one
+        checkpoint."""
         from kgkit.operators.canonicalize import canonical_map
         from kgkit.operators.linking import link_mentions
         from kgkit.operators.mentions import detect_mentions
@@ -302,16 +303,18 @@ class TestRelationsPlan:
         rel = extract_relations(
             pages, link_mentions(mentions, emb), canonical_map(spark),
         )
-        plan = rel._jdf.queryExecution().executedPlan().toString()
-        # the aggregated relation is eagerly materialized with its
-        # lineage CUT (localCheckpoint) before the 4-branch marginal
-        # fan-out: every branch scans the checkpointed RDD, and the
-        # stage-1 Arrow UDF is ABSENT from the fan-out plan entirely —
-        # it already executed exactly once while materializing rel
-        # (a stronger runs-once pin than the old cached-lineage shape,
-        # and the deep UDF plan no longer bloats per-branch AQE work)
-        assert plan.count("Scan ExistingRDD") >= 5, plan
-        assert "MapInArrow" not in plan, plan
+        qe = rel._jdf.queryExecution()
+        assert "MapInArrow" not in qe.executedPlan().toString()
+        # the windows' branch and the total's aggregation are the only
+        # reads, and both scan the same checkpoint RDD
+        leaves = qe.optimizedPlan().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        assert len(leaves) == 2, qe.optimizedPlan().toString()
+        assert {leaf.nodeName() for leaf in leaves} == {"LogicalRDD"}
+        assert len({leaf.rdd().id() for leaf in leaves}) == 1
+        plan = qe.executedPlan().toString()
+        for marginal in ("subj_n", "obj_n", "pair_n", "total_n"):
+            assert f"AS {marginal}#" in plan or f"output=[{marginal}#" in plan, plan
 
     def test_query_registry_row(self, spark):
         from kgkit.queries import QUERIES
