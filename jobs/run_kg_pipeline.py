@@ -12,8 +12,10 @@ Usage (north rule: multi-executor via --py-files; local example):
 On a cluster the same invocation runs with --master yarn/k8s; the job
 itself is master-agnostic.  Resume is implicit (no flag): re-running
 with the same --out skips stages whose _SUCCESS marker exists
-(kgkit/plans/stages.py), and per-partition lineage rows accumulate in
-<out>/_lineage.  Exit prints a one-line JSON summary.
+(kgkit/plans/stages.py).  Each executed stage appends its lineage rows
+(stage, partition_id, rows, wall_ms; one per write task, read from the
+part files' parquet footers, no Spark job) to <out>/_lineage; a skipped
+stage appends none.  Exit prints a one-line JSON summary.
 """
 
 from __future__ import annotations

@@ -223,7 +223,7 @@ def cmd_lineage(args) -> int:
     (the kgkit stand-in for the reference's mlflow UI launcher)."""
     spark = _spark(8)
     path = f"{args.run_dir}/_lineage"
-    for r in spark.read.parquet(path).orderBy("ts").collect():
+    for r in spark.read.parquet(path).orderBy("stage", "partition_id").collect():
         print(json.dumps(r.asDict(), ensure_ascii=False, default=str))
     return 0
 

@@ -4,9 +4,11 @@ SURVEY §2.9 J1/J2 (no analog in the reference — the reference stops at
 span extraction; these stages are the KG extension required by the
 north rule).
 
-J1: mentions ⋈ alias_dict on lower(surface) — the dictionary is tiny
-    (broadcastable by construction), so this is an explicit
-    ``F.broadcast`` hash join: no shuffle of the mention stream.
+J1: mentions ⋈ alias_dict on lower(surface) — the default dictionary
+    is a static fixture, looked up in a map literal (no join, no job);
+    a caller-supplied dictionary is tiny (broadcastable by
+    construction), so it is an explicit ``F.broadcast`` hash join.
+    Neither shuffles the mention stream.
 J2: ambiguous aliases (>1 candidate entity) are reranked by cosine
     similarity between the page embedding (embeddings.vec_id == doc_id)
     and the candidate entity embedding (vec_id == entity_num), with
@@ -50,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kgkit.sources.alias_dict import alias_df
+from kgkit.sources.alias_dict import ALIAS_ROWS
 
 
 def cosine(a, b):
@@ -267,12 +269,36 @@ def _join_rerank(cands: DataFrame, embeddings: DataFrame) -> DataFrame:
     return una.unionByName(best)
 
 
-_STRATEGY_CACHE: dict = {}  # (applicationId, max_literal_amb) -> (use_literal, amb_nums)
-# memo for the DEFAULT (static, per-job) alias dictionary only: the
-# strategy probe and the bounded amb-entity list cannot change within a
-# job, so repeated pipeline invocations must not re-pay the probe job.
-# max_literal_amb is part of the key — a later call with a different
-# threshold must re-decide, not reuse the old strategy.
+def _default_groups() -> dict:
+    """The default dictionary (alias_dict.ALIAS_ROWS, a static code
+    fixture) grouped by alias: {alias: candidates in sort_array's
+    (entity_id, entity_num, prior) struct order}."""
+    groups: dict = {}
+    for alias, entity_id, num, prior in ALIAS_ROWS:
+        groups.setdefault(alias, []).append((entity_id, int(num), float(prior)))
+    return {alias: sorted(cs) for alias, cs in sorted(groups.items())}
+
+
+_DEFAULT_GROUPS = _default_groups()
+# The default dictionary's candidates as a SQL map literal, and its
+# ambiguous entities — constant in the program, so derived here rather
+# than grouped and probed on the cluster by every call (guide §1.2).
+# A map lookup, not a broadcast join against a VALUES relation: the
+# lookup launches no broadcast job, and a join with a relation whose
+# alias keys the planner cannot see as unique is estimated as the
+# product of both sides (~600x the mention stream here), which a
+# checkpoint of the linked stream carries into every plan that reads it.
+_DEFAULT_CANDS = "map(" + ", ".join(
+    f"'{alias}', array(" + ", ".join(
+        f"named_struct('entity_id', '{e}', 'entity_num', {n}, "
+        f"'prior', CAST({p!r} AS DOUBLE))"
+        for e, n, p in cs
+    ) + ")"
+    for alias, cs in _DEFAULT_GROUPS.items()
+) + ")"
+_DEFAULT_AMB_NUMS = sorted(
+    {n for cs in _DEFAULT_GROUPS.values() if len(cs) > 1 for _, n, _ in cs}
+)
 
 
 def link_mentions(
@@ -286,96 +312,66 @@ def link_mentions(
 
     Unlinkable mentions (surface not in the dictionary) are dropped —
     they carry no KG signal downstream.  The rerank strategy is chosen
-    by the number of distinct ambiguous candidate entities: ONE bounded
-    job runs ``limit(max_literal_amb + 1).collect()`` over the
+    by the number of distinct ambiguous candidate entities.  For the
+    default dictionary both the grouped candidates and that set come
+    from its static rows on the driver.  A caller-supplied ``aliases``
+    frame is grouped on the cluster, and ONE bounded job runs
+    ``limit(max_literal_amb + 1).collect()`` over the
     (dictionary-cardinality) distinct amb-entity relation — it both
     decides the gate (more than max_literal_amb rows came back) and
     delivers the bounded literal list, so the driver never receives
-    more than max_literal_amb + 1 ints and the gate + collect of the
-    previous design collapse into a single job.
+    more than max_literal_amb + 1 ints.
     """
-    spark = mentions.sparkSession
-    default_dict = aliases is None
-    if default_dict:
-        aliases = alias_df(spark)
-
-    # one row per alias with its candidate array (tiny -> broadcast)
-    grouped = aliases.groupBy("alias").agg(
-        F.sort_array(
-            F.collect_list(F.struct("entity_id", "entity_num", "prior"))
-        ).alias("cands"),
-        F.count("*").alias("n_cands"),
-    )
-
-    cache_key = (
-        (spark.sparkContext.applicationId, max_literal_amb)
-        if default_dict else None
-    )
-    cached = _STRATEGY_CACHE.get(cache_key) if default_dict else None
-    if cached is not None:
-        use_literal, amb_nums = cached
-        if use_literal:
-            return _literal_rerank(cands_of(mentions, grouped), embeddings,
-                                   amb_nums, scores_broadcast_rows)
-        return _join_rerank(cands_of(mentions, grouped), embeddings)
-
-    if default_dict:
-        # the default dictionary is a static code fixture
-        # (alias_dict.ALIAS_ROWS): the ambiguous-entity set is a pure
-        # function of those rows, so derive it driver-side instead of
-        # launching the probe job (measured ~2.5 s as the session's
-        # first aggregation; guide §1.2 — don't compute on the cluster
-        # what is constant in the program).  A caller-supplied
-        # dictionary still runs the bounded probe below.
-        from collections import Counter
-
-        from kgkit.sources.alias_dict import ALIAS_ROWS
-
-        n_cands = Counter(a for a, _, _, _ in ALIAS_ROWS)
-        amb_nums = sorted(
-            {num for a, _, num, _ in ALIAS_ROWS if n_cands[a] > 1}
+    if aliases is None:
+        cands = cands_of(mentions)
+        amb_nums = _DEFAULT_AMB_NUMS
+    else:
+        # one row per alias with its candidate array (tiny -> broadcast)
+        grouped = aliases.groupBy("alias").agg(
+            F.sort_array(
+                F.collect_list(F.struct("entity_id", "entity_num", "prior"))
+            ).alias("cands"),
+            F.count("*").alias("n_cands"),
         )
-        use_literal = len(amb_nums) <= max_literal_amb
-        _STRATEGY_CACHE.clear()
-        _STRATEGY_CACHE[cache_key] = (
-            (True, amb_nums) if use_literal else (False, None)
+        amb_num_df = (
+            grouped.filter("n_cands > 1")
+            .select(F.explode(F.col("cands")["entity_num"]).alias("n"))
+            .distinct()
         )
-        cands = cands_of(mentions, grouped)
-        if use_literal:
-            return _literal_rerank(cands, embeddings, amb_nums,
-                                   scores_broadcast_rows)
-        return _join_rerank(cands, embeddings)
-
-    amb_num_df = (
-        grouped.filter("n_cands > 1")
-        .select(F.explode(F.col("cands")["entity_num"]).alias("n"))
-        .distinct()
-    )
-    # single probe job: <= max_literal_amb + 1 ints ever reach the driver
-    amb_rows = amb_num_df.limit(max_literal_amb + 1).collect()
-    use_literal = len(amb_rows) <= max_literal_amb
-
-    cands = cands_of(mentions, grouped)
-    if use_literal:
+        # single probe job: <= max_literal_amb + 1 ints reach the driver
+        amb_rows = amb_num_df.limit(max_literal_amb + 1).collect()
         amb_nums = sorted(int(r["n"]) for r in amb_rows)
-        return _literal_rerank(cands, embeddings, amb_nums, scores_broadcast_rows)
+        cands = cands_of(mentions, grouped)
+
+    if len(amb_nums) <= max_literal_amb:
+        return _literal_rerank(cands, embeddings, amb_nums,
+                               scores_broadcast_rows)
     return _join_rerank(cands, embeddings)
 
 
-def cands_of(mentions: DataFrame, grouped: DataFrame) -> DataFrame:
-    """Broadcast alias join: one output row per linkable mention with
-    its candidate array — the shared head of both rerank strategies.
+# doc_id keys the page-embedding lookup (embeddings.vec_id): numeric
+# for the doc://<n> corpus, NULL (try_cast — ANSI cast would abort the
+# job) for real crawl urls, where both rerank paths fall back to
+# prior-ordered linking (left joins, score coalesced to 0).
+_DOC_ID = "try_cast(substring_index(url, '//', -1) AS BIGINT) AS doc_id"
 
-    doc_id keys the page-embedding lookup (embeddings.vec_id): numeric
-    for the doc://<n> corpus, NULL (try_cast — ANSI cast would abort
-    the job) for real crawl urls, where both rerank paths fall back to
-    prior-ordered linking (left joins, score coalesced to 0)."""
-    doc_id = F.substring_index(F.col("url"), "//", -1).try_cast("long")
-    return (
-        mentions.join(
-            F.broadcast(grouped),
-            F.lower(mentions.surface) == grouped["alias"],
-            "inner",
+
+def cands_of(mentions: DataFrame, grouped: DataFrame = None) -> DataFrame:
+    """One output row per linkable mention with its candidate array and
+    doc_id — the shared head of both rerank strategies.  ``grouped``
+    (alias, cands, n_cands) is a caller-supplied dictionary, joined as
+    a broadcast; None looks the default dictionary up in its map
+    literal, with no join."""
+    if grouped is None:
+        return (
+            mentions.selectExpr(
+                "*", f"{_DEFAULT_CANDS}[lower(surface)] AS cands"
+            )
+            .filter("cands IS NOT NULL")
+            .selectExpr("*", "CAST(size(cands) AS BIGINT) AS n_cands", _DOC_ID)
         )
-        .withColumn("doc_id", doc_id)
-    )
+    return mentions.join(
+        F.broadcast(grouped),
+        F.lower(mentions.surface) == grouped["alias"],
+        "inner",
+    ).selectExpr("*", _DOC_ID)

@@ -57,7 +57,7 @@ from __future__ import annotations
 
 from typing import List
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Verb-pattern relation typing — a deterministic classification of the
@@ -82,20 +82,22 @@ POSSESSION_WORDS = ("has", "have", "had")
 ACTION_PATTERN = r"^[a-z]{3,}(s|ed|ing)$"
 
 
-def rel_type_col(pred: Column) -> Column:
-    """Edge type of a predicate surface (typing rule above)."""
-    first = F.split_part(pred, F.lit(" "), F.lit(1))
-    second = F.split_part(pred, F.lit(" "), F.lit(2))  # '' for 1-word
-    return (
-        F.when(
-            first.isin(*COPULA_WORDS),
-            F.when(second.isin(*DETERMINERS), F.lit("isa"))
-            .otherwise(F.lit("attr")),
-        )
-        .when(first.isin(*POSSESSION_WORDS), F.lit("has_part"))
-        .when(first.rlike(ACTION_PATTERN), F.lit("action"))
-        .otherwise(F.lit("assoc"))
-    )
+def _quoted(words) -> str:
+    return ", ".join(f"'{w}'" for w in words)
+
+
+# Edge type of the ``pred`` column (typing rule above), as SQL text:
+# one Py4J call per use, where a Column-API twin costs one per node.
+# split_part's 2nd word is '' for a 1-word surface.
+REL_TYPE = (
+    f"CASE WHEN split_part(pred, ' ', 1) IN ({_quoted(COPULA_WORDS)}) "
+    f"THEN CASE WHEN split_part(pred, ' ', 2) IN ({_quoted(DETERMINERS)}) "
+    "THEN 'isa' ELSE 'attr' END "
+    f"WHEN split_part(pred, ' ', 1) IN ({_quoted(POSSESSION_WORDS)}) "
+    "THEN 'has_part' "
+    f"WHEN split_part(pred, ' ', 1) RLIKE '{ACTION_PATTERN}' THEN 'action' "
+    "ELSE 'assoc' END"
+)
 
 
 def relation_pairs(
@@ -165,7 +167,7 @@ def extract_relations(
     """Relation edges with NPMI association strength.
 
     Returns one row per distinct (subj, pred, obj):
-      rel_type STRING  verb-pattern edge type (rel_type_col rule)
+      rel_type STRING  verb-pattern edge type (REL_TYPE rule)
       n        BIGINT  occurrences of this exact edge
       pair_n   BIGINT  occurrences of the (subj, obj) pair under ANY
                        predicate surface
@@ -328,9 +330,9 @@ def relations_from_counts(rel: DataFrame) -> DataFrame:
     # 'total_n', not 'N': Spark's case-insensitive resolution would
     # collide an 'N' alias with the per-edge count column 'n'
     total = rel.agg(F.sum("n").alias("total_n"))
-    return marginals.crossJoin(F.broadcast(total)).select(
-        "subj", "pred", "obj", rel_type_col(F.col("pred")).alias("rel_type"),
-        "n", "pair_n", F.expr(_NPMI).alias("npmi"),
+    return marginals.crossJoin(F.broadcast(total)).selectExpr(
+        "subj", "pred", "obj", f"{REL_TYPE} AS rel_type",
+        "n", "pair_n", f"{_NPMI} AS npmi",
     )
 
 

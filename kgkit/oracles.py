@@ -527,7 +527,7 @@ def _relations_sql(max_gap_chars: int = 64, max_pred_words: int = 4) -> str:
     on both engines, the integer-count products go double-first on both
     (exact < 2^53), and round(6) absorbs ln()'s last-ulp libm
     differences — the SAME grid discipline as _COS_SQL.  The typing
-    CASE mirrors relations.rel_type_col verbatim.  Change operator and
+    CASE mirrors relations.REL_TYPE verbatim.  Change operator and
     oracle together or neither."""
     from kgkit.operators.relations import (
         ACTION_PATTERN, COPULA_WORDS, DETERMINERS, POSSESSION_WORDS,

@@ -3,22 +3,33 @@
 North-rule requirements (SURVEY §4.3.2-3): stages materialize to parquet
 at a stage boundary; a re-run SKIPS stages whose output already exists
 (idempotent resume — the batch analog of streaming checkpoints, the
-reference has no streaming state, SURVEY §2.13); every stage appends
-per-partition lineage rows (stage, partition_id, rows, wall_ms, ts) to a
-``_lineage`` table next to the run.
+reference has no streaming state, SURVEY §2.13); every executed stage
+appends per-partition lineage rows (stage, partition_id, rows, wall_ms)
+to a ``_lineage`` table next to the run.
 
-Lineage capture is one extra narrow pass: groupBy(spark_partition_id())
-— a count-shuffle of negligible width — so it is safe at any scale.
+A stage boundary costs the stage's own jobs and its one parquet write,
+nothing more.  The output is read back with the schema of the frame
+just written (no schema-inference job), and the lineage rows come from
+the written files on the driver: the partition id is a part file's
+``part-NNNNN`` task number, its row count the parquet footer's
+``num_rows`` (summed when one task wrote several files).  They are
+appended as one parquet file per stage, in the column types a Spark
+write gives them (string, int, bigint, double).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
+import uuid
 from typing import Callable, Dict, List
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+_PART = re.compile(r"part-(\d+)")
 
 
 class StageRunner:
@@ -36,15 +47,32 @@ class StageRunner:
     def _done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self._out_path(stage), "_SUCCESS"))
 
-    def _write_lineage(self, stage: str, df: DataFrame, wall_ms: float) -> None:
-        lineage = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(float(wall_ms)))
-            .select("stage", "partition_id", "rows", "wall_ms")
-        )
-        lineage.write.mode("append").parquet(os.path.join(self.run_dir, "_lineage"))
+    def _write_lineage(self, stage: str, out: str, wall_ms: float) -> None:
+        """Append one row per write task of the parquet dir ``out``: its
+        ``part-NNNNN`` number and the rows of its files, from their
+        footers (a 0-row stage still has its one schema-only part file,
+        so it still gets a row).  One parquet file, written under a
+        hidden name and renamed, so a reader never sees it torn."""
+        rows: Dict[int, int] = {}
+        for name in os.listdir(out):
+            m = _PART.match(name)
+            if m:
+                part = int(m.group(1))
+                n = pq.read_metadata(os.path.join(out, name)).num_rows
+                rows[part] = rows.get(part, 0) + n
+        ids = sorted(rows)
+        table = pa.table({
+            "stage": pa.array([stage] * len(ids), pa.string()),
+            "partition_id": pa.array(ids, pa.int32()),
+            "rows": pa.array([rows[i] for i in ids], pa.int64()),
+            "wall_ms": pa.array([float(wall_ms)] * len(ids), pa.float64()),
+        })
+        path = os.path.join(self.run_dir, "_lineage")
+        os.makedirs(path, exist_ok=True)
+        name = f"{stage}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, name))
 
     def run(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Materialize ``build()`` to <run_dir>/<stage> unless already done."""
@@ -56,10 +84,9 @@ class StageRunner:
         df = build()
         df.write.mode("overwrite").parquet(out)
         wall_ms = (time.monotonic() - t0) * 1000
-        result = self.spark.read.parquet(out)
-        self._write_lineage(stage, result, wall_ms)
+        self._write_lineage(stage, out, wall_ms)
         self.executed.append(stage)
-        return result
+        return self.spark.read.schema(df.schema).parquet(out)
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.run_dir, "_lineage"))

@@ -195,7 +195,7 @@ def _entity_counts_q(spark, sf_dir):
 def _kg_relations_q(spark, sf_dir):
     """Stage 4b: entity-entity relation edges (operators/relations.py)
     — the gap text between adjacent canonical mentions becomes the
-    predicate surface, typed by the verb-pattern rule (rel_type_col)
+    predicate surface, typed by the verb-pattern rule (relations.REL_TYPE)
     and weighted with NPMI association strength from exact BIGINT
     marginals of the pair stream.  The corpus is widened with the
     relation-planted verb pages (planted.RELATION_TEXTS — the driver

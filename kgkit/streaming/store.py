@@ -76,8 +76,10 @@ class Aggregate(NamedTuple):
     weight: Optional[str] = None
 
     def terms(self, rows: DataFrame, sign: int = 1) -> DataFrame:
-        n = F.col(self.weight) if self.weight else F.lit(1)
-        return rows.select(*self.groups, (n * sign).cast("long").alias("n"))
+        n = self.weight or "1"
+        return rows.selectExpr(
+            *self.groups, f"CAST({n} * {int(sign)} AS BIGINT) AS n"
+        )
 
 
 class PartStore:
@@ -159,7 +161,7 @@ class PartStore:
         for name, frames in terms.items():
             groups = self.aggregates[name].groups
             tagged += [
-                f.select(F.lit(name).alias(TAG), *groups, "n") for f in frames
+                f.selectExpr(f"'{name}' AS {TAG}", *groups, "n") for f in frames
             ]
         out = tagged[0]
         for t in tagged[1:]:  # pads each aggregate's missing groups by null
@@ -167,12 +169,12 @@ class PartStore:
         columns = [c for c in out.columns if c not in (TAG, "n")]
         self.merged = (
             out.groupBy(TAG, *columns)
-            .agg(F.sum("n").cast("long").alias("n"))
-            .filter(F.col("n") > 0)
+            .agg(F.expr("CAST(sum(n) AS BIGINT) AS n"))
+            .filter("n > 0")
             .localCheckpoint()
         )
         self.views = {
-            name: self.merged.filter(F.col(TAG) == name).select(*agg.groups, "n")
+            name: self.merged.filter(f"{TAG} = '{name}'").select(*agg.groups, "n")
             for name, agg in self.aggregates.items()
         }
 
@@ -185,10 +187,11 @@ class PartStore:
         rewrites the same parts and merges nothing.  True when the
         views changed."""
         spark = keys.sparkSession
-        bcol = F.lit(batch_id).cast("long")
         rows = {KEYS: keys.select("url"), **rows}
         parts = {  # every part fits its declaration before any is written
-            family: rows[family].withColumn("_batch", bcol).to(schema)
+            family: rows[family]
+            .selectExpr("*", f"CAST({int(batch_id)} AS BIGINT) AS _batch")
+            .to(schema)
             for family, schema in self.schemas.items()
         }
         for family, part in parts.items():

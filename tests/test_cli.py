@@ -88,6 +88,33 @@ class TestCleanCommand:
         assert stats["after_clf"] == spark.read.parquet(dst).count()
 
 
+class TestLineageCommand:
+    def test_prints_a_pipeline_runs_lineage(self, spark, tmp_path, capsys):
+        from test_kg_stream import SF_DIR  # the stream tests' sf0.001 data
+
+        from kgkit.cli import main
+        from kgkit.plans.stages import run_kg_pipeline
+
+        run_dir = str(tmp_path / "run")
+        run_kg_pipeline(spark, SF_DIR, run_dir)
+        capsys.readouterr()
+        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            assert main(["lineage", run_dir]) == 0
+        finally:
+            # cmd_lineage's getOrCreate() applies its conf to this session
+            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        out = [json.loads(l) for l in capsys.readouterr().out.splitlines()]
+        keys = [(r["stage"], r["partition_id"]) for r in out]
+        assert keys == sorted(keys)
+        assert {r["stage"] for r in out} == {
+            "stage1_mentions", "stage2_linked", "stage3_canonical",
+            "stage4_triples", "stage4b_relations",
+        }
+        assert sum(r["rows"] for r in out if r["stage"] == "stage4_triples") \
+            == spark.read.parquet(f"{run_dir}/stage4_triples").count()
+
+
 class TestQueryCommand:
     def _run_dir(self, spark, tmp_path):
         rel = spark.createDataFrame(

@@ -93,14 +93,15 @@ class TestScoresBroadcastGate:
 
     def test_small_scores_table_is_broadcast(self, spark):
         plan = self._analyzed(spark)
-        assert plan.count("strategy=broadcast") >= 2  # dict + scores
+        # scores only: the default dictionary is a map lookup, no join
+        assert plan.count("strategy=broadcast") == 1
 
     def test_page_cardinality_scores_not_pinned(self, spark):
         """When the probe says the page table is big, the broadcast hint
         must NOT be applied — the join degrades to an ordinary hash join
         instead of a driver OOM (VERDICT r1 'What's wrong' #2)."""
         plan = self._analyzed(spark, scores_broadcast_rows=0)
-        assert plan.count("strategy=broadcast") == 1  # dict only
+        assert plan.count("strategy=broadcast") == 0
 
 
 class TestLiteralPlanBudget:

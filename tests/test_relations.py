@@ -340,7 +340,7 @@ class TestRelationsPlan:
 
 
 def _python_rel_type(pred: str) -> str:
-    """Independent replay of relations.rel_type_col."""
+    """Independent replay of relations.REL_TYPE."""
     import re
 
     words = pred.split(" ")
@@ -371,11 +371,11 @@ class TestRelTyping:
     ]
 
     def test_rule_matches_python_twin(self, spark):
-        from kgkit.operators.relations import rel_type_col
+        from kgkit.operators.relations import REL_TYPE
 
         df = spark.createDataFrame(
             [(p,) for p, _ in self.CASES], "pred string"
-        ).withColumn("rel_type", rel_type_col(F.col("pred")))
+        ).selectExpr("pred", f"{REL_TYPE} AS rel_type")
         got = {r["pred"]: r["rel_type"] for r in df.collect()}
         for pred, want in self.CASES:
             assert got[pred] == want == _python_rel_type(pred), pred

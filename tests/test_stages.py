@@ -29,6 +29,30 @@ class TestStageRunner:
         assert result["runner"].skipped == []
         assert result["triples"].count() > 0
 
+    def test_lineage_rows_sum_to_stage_outputs(self, spark, run_dir):
+        from pyspark.sql import functions as F
+
+        lineage = spark.read.parquet(f"{run_dir}/_lineage")
+        per_stage = {
+            r["stage"]: r["rows"]
+            for r in lineage.groupBy("stage")
+            .agg(F.sum("rows").alias("rows")).collect()
+        }
+        assert per_stage == {
+            stage: spark.read.parquet(f"{run_dir}/{stage}").count()
+            for stage in (
+                "stage1_mentions", "stage2_linked", "stage3_canonical",
+                "stage4_triples", "stage4b_relations",
+            )
+        }
+
+    def test_skipped_rerun_appends_no_lineage(self, spark, run_dir):
+        from kgkit.plans.stages import run_kg_pipeline
+
+        n = spark.read.parquet(f"{run_dir}/_lineage").count()
+        assert run_kg_pipeline(spark, self.SF, run_dir)["runner"].executed == []
+        assert spark.read.parquet(f"{run_dir}/_lineage").count() == n
+
     def test_resume_skips_all_and_is_identical(self, spark, run_dir):
         from kgkit.plans.stages import run_kg_pipeline
 
@@ -66,6 +90,39 @@ class TestStageRunner:
             F.sum("rows").alias("rows"), F.min("wall_ms").alias("w")
         ).collect()[0]
         assert row["rows"] > 0 and row["w"] >= 0
-        assert {f.name for f in lineage.schema.fields} == {
-            "stage", "partition_id", "rows", "wall_ms"
+        assert dict(lineage.dtypes) == {
+            "stage": "string", "partition_id": "int", "rows": "bigint",
+            "wall_ms": "double",
         }
+
+
+class TestLineage:
+    def test_zero_row_stage_gets_a_lineage_row(self, spark, tmp_path):
+        from kgkit.plans.stages import StageRunner
+
+        runner = StageRunner(spark, str(tmp_path))
+        out = runner.run("empty", lambda: spark.range(5).filter("id > 9"))
+        assert out.count() == 0 and out.columns == ["id"]
+        rows = runner.lineage().collect()
+        assert [(r["stage"], r["rows"]) for r in rows] == [("empty", 0)]
+
+    def test_appends_to_a_spark_written_table(self, spark, tmp_path):
+        """A run dir whose ``_lineage`` a Spark write started still reads
+        as one table after the runner appends to it."""
+        from kgkit.plans.stages import StageRunner
+
+        spark.createDataFrame(
+            [("old", 0, 3, 1.5)],
+            "stage string, partition_id int, rows bigint, wall_ms double",
+        ).write.parquet(str(tmp_path / "_lineage"))
+        runner = StageRunner(spark, str(tmp_path))
+        runner.run("new", lambda: spark.range(4).repartition(2))
+        lineage = runner.lineage()
+        assert dict(lineage.dtypes) == {
+            "stage": "string", "partition_id": "int", "rows": "bigint",
+            "wall_ms": "double",
+        }
+        got = {}
+        for r in lineage.collect():
+            got[r["stage"]] = got.get(r["stage"], 0) + r["rows"]
+        assert got == {"old": 3, "new": 4}
