@@ -75,52 +75,6 @@ def tags_as_bio(df: DataFrame, col: str, scheme: str) -> DataFrame:
     return df.withColumn(col, _bio_from_plain(F.col(col), F.lag(col).over(w)))
 
 
-def extract_chunks(df: DataFrame, col: str, scheme: str) -> DataFrame:
-    """Strict chunk extraction: (seq_id, pos, <col>) ->
-    (seq_id, cls, start_pos, end_pos).
-
-    Sessionization: a new run starts wherever the tag is not a valid
-    continuation of its predecessor; a run is a chunk iff it is
-    well-formed for the scheme.  Two windows + one aggregation — no
-    per-row Python."""
-    kind = F.when(F.col(col) == "O", F.lit("O")).otherwise(
-        F.substring(col, 1, 1)
-    )
-    cls = F.substring_index(col, "-", -1)
-    w = Window.partitionBy("seq_id").orderBy("pos")
-    t = (
-        df.withColumn("_kind", kind)
-        .withColumn("_cls", cls)
-        .withColumn("_pkind", F.lag("_kind").over(w))
-        .withColumn("_pcls", F.lag("_cls").over(w))
-    )
-    continuation = (
-        F.col("_kind").isin("I", "L")
-        & (F.col("_pcls") == F.col("_cls"))
-        & F.col("_pkind").isin("B", "I")
-    )
-    t = t.withColumn(
-        "_run",
-        F.sum(F.when(continuation, F.lit(0)).otherwise(F.lit(1))).over(w),
-    ).filter(F.col("_kind") != "O")
-
-    runs = t.groupBy("seq_id", "_run").agg(
-        F.first("_cls").alias("cls"),
-        F.min("pos").alias("start_pos"),
-        F.max("pos").alias("end_pos"),
-        F.min_by("_kind", "pos").alias("first_kind"),
-        F.max_by("_kind", "pos").alias("last_kind"),
-        F.count("*").alias("size"),
-    )
-    if scheme == "bilou":
-        valid = (
-            (F.col("first_kind") == "B") & (F.col("last_kind") == "L")
-        ) | ((F.col("first_kind") == "U") & (F.col("size") == 1))
-    else:  # bio (strict IOB2)
-        valid = F.col("first_kind") == "B"
-    return runs.filter(valid).select("seq_id", "cls", "start_pos", "end_pos")
-
-
 def entity_class_counts(
     df: DataFrame, scheme: str, pred_col: str = "pred"
 ) -> DataFrame:
@@ -493,36 +447,6 @@ def ner_metrics(
     return result
 
 
-def average_runs(values: Sequence[float]):
-    """A11 run averaging: mean ± dmean (= population std / sqrt(N)) with
-    the reference's sentinel behavior — (-1, None) for no runs, (v, None)
-    for a single run (util_functions.py:258-274)."""
-    n = len(values)
-    if n == 0:
-        return -1, None
-    if n == 1:
-        return values[0], None
-    mean = sum(values) / n
-    var = sum((v - mean) ** 2 for v in values) / n  # population, like np.std
-    return float(mean), float((var ** 0.5) / (n ** 0.5))
-
-
-def confusion_matrix(df: DataFrame) -> DataFrame:
-    """A7: square confusion pivot over plain tags
-    (ner_model_evaluation.py:512-559) — one groupBy + pivot."""
-    plain = df.select(
-        F.regexp_replace("true", "^[BILU]-", "").alias("true"),
-        F.regexp_replace("pred", "^[BILU]-", "").alias("pred"),
-    )
-    return (
-        plain.groupBy("true")
-        .pivot("pred")
-        .count()
-        .na.fill(0)
-        .orderBy("true")
-    )
-
-
 def metrics_fanout(
     df: DataFrame,
     scheme: str,
@@ -773,23 +697,3 @@ def metrics_fanout_df(df: DataFrame, scheme: str = "bio") -> DataFrame:
     # the result is ≤ 3 + |labels| + |classes| rows: materialize it
     # eagerly, so downstream actions do not re-plan the union
     return out.localCheckpoint()
-
-
-def classification_report(
-    df: DataFrame, scheme: str, classes: Optional[List[str]] = None
-) -> str:
-    """A8: text report (ner_model_evaluation.py:445-510) assembled from
-    the fan-out — per-class and micro/macro P/R/F1 at both levels."""
-    fan = metrics_fanout(df, scheme, classes)
-    lines = []
-    for level in ("token", "entity"):
-        lines.append(f"== {level} level ==")
-        lines.append(f"{'subset':>12} {'precision':>10} {'recall':>10} {'f1':>10}")
-        for subset, m in fan[level].items():
-            lines.append(
-                f"{subset:>12} {m['precision_micro']:>10.4f} "
-                f"{m['recall_micro']:>10.4f} {m['f1_micro']:>10.4f}"
-            )
-        lines.append("")
-    return "\n".join(lines)
-

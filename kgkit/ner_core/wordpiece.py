@@ -178,108 +178,6 @@ class WordPieceTokenizer:
         return slices
 
 
-# ---------------------------------------------------------------------------
-# WordPiece vocabulary training (deterministic, torch/HF-free)
-# ---------------------------------------------------------------------------
-
-def train_wordpiece_vocab(
-    texts: Sequence[str],
-    vocab_size: int = 2000,
-    lowercase: bool = True,
-    min_pair_freq: int = 3,
-) -> Dict[str, int]:
-    """Learn a WordPiece vocabulary from raw texts — the public
-    WordPiece training procedure (pair score = freq(pair) /
-    (freq(left) * freq(right)), merge best, repeat), fully
-    deterministic (lexicographic tie-break, no RNG).
-
-    Why it exists: the default closed vocabulary keeps corpus words
-    whole-piece, so '##'-continuation density and [UNK] behavior on
-    REALISTIC vocabularies (morphology-rich text, partial character
-    coverage) were untested beyond hand-planted cases.  A vocab learned
-    from real prose gives the pipeline genuine multi-piece words and
-    character-coverage-driven [UNK]s (tests/test_wordpiece_train.py).
-
-    Returns a token -> id dict accepted by WordPieceTokenizer(vocab=…);
-    specials come first, then single characters (alphabet closure over
-    the training text), then learned merges by creation order.
-    """
-    from collections import Counter
-
-    from kgkit.ner_core.pretokenize import pretokenize
-
-    word_freq: Counter = Counter()
-    for text in texts:
-        if lowercase:
-            text = text.lower()
-        for word, _ in pretokenize(text):
-            word_freq[word] += 1
-
-    # initial split of each word into char pieces ('##' after the first)
-    splits = {
-        w: [w[0]] + [f"##{c}" for c in w[1:]] for w in word_freq
-    }
-    vocab: Dict[str, int] = {}
-    for tok in SPECIAL_TOKENS + [UNK]:
-        vocab[tok] = len(vocab)
-    for w, f in sorted(word_freq.items()):
-        for piece in splits[w]:
-            if piece not in vocab:
-                vocab[piece] = len(vocab)
-
-    def merge_token(a: str, b: str) -> str:
-        return a + b[2:] if b.startswith("##") else a + b
-
-    while len(vocab) < vocab_size:
-        pair_freq: Counter = Counter()
-        piece_freq: Counter = Counter()
-        for w, f in word_freq.items():
-            pieces = splits[w]
-            for p in pieces:
-                piece_freq[p] += f
-            for a, b in zip(pieces, pieces[1:]):
-                pair_freq[(a, b)] += f
-        # the WordPiece score freq(pair)/(freq(a)*freq(b)) is maximal
-        # (1.0) for any pair of singletons, so without a frequency
-        # floor every merge is consumed by rare junk while common
-        # words stay char-split — real trainers prune the same way
-        pair_freq = Counter(
-            {p: f for p, f in pair_freq.items() if f >= min_pair_freq}
-        )
-        if not pair_freq:
-            break
-        best = max(
-            pair_freq,
-            key=lambda p: (
-                pair_freq[p] / (piece_freq[p[0]] * piece_freq[p[1]]),
-                # deterministic tie-break: prefer lexicographically
-                # smallest pair (max over negated strings is unwieldy;
-                # invert by sorting key order)
-                tuple(-ord(c) for c in p[0] + "\x00" + p[1]),
-            ),
-        )
-        new_tok = merge_token(*best)
-        if new_tok in vocab:
-            # already reachable (e.g. via a different merge path):
-            # still apply the merge to the splits, don't re-add
-            pass
-        else:
-            vocab[new_tok] = len(vocab)
-        for w, pieces in splits.items():
-            out: List[str] = []
-            i = 0
-            while i < len(pieces):
-                if (i + 1 < len(pieces)
-                        and (pieces[i], pieces[i + 1]) == best):
-                    out.append(new_tok)
-                    i += 2
-                else:
-                    out.append(pieces[i])
-                    i += 1
-            splits[w] = out
-    return vocab
-
-
 def _default_sp_vocab() -> Dict[str, int]:
     """SentencePiece-convention twin of _default_vocab: every printable
     ASCII character and corpus word exists both word-initially (with

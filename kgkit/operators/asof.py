@@ -18,18 +18,6 @@ regular join, with NO candidate explosion.  Ties among right rows at
 the same (key, ts) resolve deterministically to the max payload
 struct (both engines in the oracle dedupe or order identically).
 
-``asof_join_bucketed`` is the hot-key path: a single key carrying a
-large fraction of the stream serializes the plain window into one
-task (the same skew every window-based operator has).  Bucketing by
-``floor(epoch/bucket_s)`` splits the key's timeline across tasks:
-pass 1 runs the same window WITHIN (key, bucket); pass 2 computes a
-per-(key, bucket) summary (the last right row of each bucket — one
-aggregated row per bucket, map-side combined) and windows THAT tiny
-relation per key to produce each bucket's carry-in; the final answer
-coalesces the within-bucket match with the carry-in.  The serialized
-state per key drops from O(events) to O(buckets).  Equality with the
-plain variant is pinned by tests/test_asof.py.
-
 No reference analog (nerblackbox has no temporal joins); this is part
 of the training-data/analytics surface the engine adds on top, like
 kgkit/operators/sampling.py.  Oracle: DuckDB's native ASOF LEFT JOIN
@@ -46,7 +34,7 @@ from pyspark.sql import types as T
 
 
 def _epoch(col: F.Column, dtype: T.DataType) -> F.Column:
-    """Integer-second epoch for bucketing: unix_timestamp for
+    """Integer-second epoch for the tolerance gap: unix_timestamp for
     timestamps (== DuckDB floor(epoch()), the cross-engine gotcha),
     a plain long cast for numeric ts columns."""
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
@@ -109,9 +97,7 @@ def asof_join(
     columns come back ``prefix``-renamed; ``tolerance_s`` nulls out
     matches older than the given number of seconds.
 
-    One exchange by ``on`` + one sort — the plain-join budget.  A key
-    whose stream is too hot for one task belongs on
-    ``asof_join_bucketed``."""
+    One exchange by ``on`` + one sort — the plain-join budget."""
     u, rpay = _tagged_union(left, right, on, left_ts, right_ts)
     w = (
         Window.partitionBy("_k")
@@ -137,169 +123,3 @@ def _apply_tolerance(
     return matched.withColumn(
         "_m", F.when(gap <= F.lit(tolerance_s), F.col("_m"))
     )
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    prefix: str = "r_",
-    bucket_s: int = 86_400,
-    tolerance_s: Optional[int] = None,
-) -> DataFrame:
-    """``asof_join`` with hot keys split across time buckets —
-    row-for-row equal to the plain variant (tests/test_asof.py), with
-    per-key serialized work O(buckets) instead of O(events).
-
-    Pass 1 windows within (key, bucket); pass 2 aggregates each
-    bucket's last right row (max (epoch, payload) struct — map-side
-    combined, one row per (key, bucket)), windows that summary per key
-    for the carry-in, and joins it back on (key, bucket).  The summary
-    relation is #occupied-buckets sized, so its per-key window is
-    trivially small; everything heavy shuffles on the SPLIT key."""
-    u, rpay = _tagged_union(left, right, on, left_ts, right_ts)
-    ts_type = u.schema["_ts"].dataType
-    u = u.withColumn(
-        "_b", F.floor(_epoch(F.col("_ts"), ts_type) / F.lit(bucket_s))
-    )
-    wb = (
-        Window.partitionBy("_k", "_b")
-        .orderBy(F.col("_ts").asc(), F.col("_is_l").asc(), F.col("_rpay").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = u.withColumn("_mw", F.last("_rpay", ignorenulls=True).over(wb))
-
-    # per-(key, bucket) summary: the bucket's LAST right row, as a max
-    # over (FULL-precision ts, tie-break payload) — the integer epoch
-    # is only the bucket ASSIGNMENT; ordering by it would truncate
-    # sub-second timestamps and pick a different row than the plain
-    # window's full-precision order (a real divergence caught in
-    # review).  Lexicographic struct max is a plain aggregate, so the
-    # hot key combines map-side.
-    rsum = (
-        u.filter(F.col("_is_l") == 0)
-        .groupBy("_k", "_b")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("_ts").alias("t"),
-                    F.col("_rpay").alias("p"),
-                )
-            ).alias("_mx")
-        )
-    )
-    # every occupied (key, bucket) needs a carry-in row, including
-    # buckets holding only left rows
-    bkeys = u.select("_k", "_b").distinct()
-    wc = (
-        Window.partitionBy("_k")
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        bkeys.join(rsum, ["_k", "_b"], "left")
-        .withColumn("_ci", F.last("_mx", ignorenulls=True).over(wc))
-        .select("_k", "_b", F.col("_ci.p").alias("_carry"))
-    )
-    matched = (
-        within.join(carry, ["_k", "_b"])
-        .withColumn("_m", F.coalesce("_mw", "_carry"))
-    )
-    if tolerance_s is not None:
-        matched = _apply_tolerance(matched, right_ts, tolerance_s)
-    return _emit(matched, rpay, prefix)
-
-
-def interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_ts: str = "ts",
-    start_ts: str = "start",
-    end_ts: str = "end",
-    on: Optional[str] = None,
-    bucket_s: int = 3600,
-    how: str = "inner",
-    point_key: Optional[str] = None,
-) -> DataFrame:
-    """Range (interval-containment) join — the other temporal join
-    Spark SQL only plans as a per-key loop: match each point row to
-    every interval row with ``start <= point_ts <= end`` (optionally
-    also sharing ``on``).  A raw theta-join is O(|points| x
-    |intervals|) per key; this is the standard bucketed formulation:
-    each interval EXPLODES to the time buckets it covers (``sequence``
-    over floor(epoch/bucket_s) — bounded by span/bucket_s rows), each
-    point lives in exactly ONE bucket, and the candidate join is a
-    plain equi-join on (key?, bucket) followed by the exact range
-    filter.  No dedup is needed — a point's single bucket meets each
-    covering interval exactly once.  ``bucket_s`` trades interval
-    fan-out against candidate density; a production table of
-    day-scale sessions uses hour buckets.
-
-    ``how='left'`` keeps unmatched points with NULL interval columns
-    (the enrichment shape).  Interval columns come back as-is — rename
-    upstream on collision with point columns.
-
-    ``point_key`` (left joins only): name a column that uniquely
-    identifies a point row (an event/doc id) and the unmatched-points
-    anti-join runs on that ONE narrow column instead of a distinct +
-    null-safe conjunction over EVERY point column — at corpus scale
-    the full-row distinct is a wide shuffle (ADVICE r5).  Correctness
-    does not depend on it; without a unique key the full-row path
-    stands (its cost is the price of not having one)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"unsupported how={how!r}")
-    p_ts_t = points.schema[point_ts].dataType
-    i_ts_t = intervals.schema[start_ts].dataType
-    pb = F.floor(_epoch(F.col(point_ts), p_ts_t) / F.lit(bucket_s))
-    ib = F.explode(
-        F.sequence(
-            F.floor(_epoch(F.col(start_ts), i_ts_t) / F.lit(bucket_s)),
-            F.floor(_epoch(F.col(end_ts), i_ts_t) / F.lit(bucket_s)),
-        )
-    )
-    pt = points.withColumn("_b", pb)
-    iv = (
-        intervals.filter(F.col(start_ts) <= F.col(end_ts))
-        .withColumn("_b", ib)
-    )
-    keys = ["_b"] + ([on] if on else [])
-    cond = (F.col(point_ts) >= F.col(start_ts)) & (
-        F.col(point_ts) <= F.col(end_ts)
-    )
-    if how == "inner":
-        return pt.join(iv, keys).filter(cond).drop("_b")
-    # left: inner-match the candidates, then re-attach the unmatched
-    # points via anti-join on the point's own columns — both sides
-    # shuffle on the SAME (key, bucket), no second scan shape.  The
-    # anti-join must be NULL-SAFE: a matched point with a NULL payload
-    # column would otherwise never equal itself and come back a second
-    # time as a spurious unmatched row.
-    matched = pt.join(iv, keys).filter(cond)
-    null_iv = [
-        F.lit(None).cast(intervals.schema[c].dataType).alias(c)
-        for c in intervals.columns
-        if c != on
-    ]
-    if point_key is not None:
-        if point_key not in points.columns:
-            raise ValueError(f"point_key {point_key!r} not a point column")
-        mkeys = matched.select(
-            F.col(point_key).alias("_m_k")
-        ).distinct()
-        anti_cond = F.col(point_key).eqNullSafe(F.col("_m_k"))
-    else:
-        mkeys = matched.select(
-            *[F.col(c).alias(f"_m_{c}") for c in points.columns]
-        ).distinct()
-        anti_cond = None
-        for c in points.columns:
-            eq = F.col(c).eqNullSafe(F.col(f"_m_{c}"))
-            anti_cond = eq if anti_cond is None else (anti_cond & eq)
-    unmatched = pt.join(mkeys, anti_cond, "left_anti").select(
-        *points.columns, F.col("_b"), *null_iv
-    )
-    return matched.unionByName(
-        unmatched.select(*matched.columns)
-    ).drop("_b")

@@ -13,31 +13,26 @@ with ``localCheckpoint()`` per iteration to cut the lineage chain
 (otherwise the plan doubles every round), and convergence detected by a
 changed-row count.
 
-Three variants:
-
-  * ``variant='doubling'``: each round ALSO pointer-jumps
-    ``label(v) <- label(label(v))`` — the shortcutting step of
-    large-star/small-star-family CC algorithms (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond"; hash-to-min of
-    Rastogi et al.).  Labels are monotone non-increasing and every
-    label value is itself a node, so the jump is one self-join; the
-    distance to the component minimum shrinks multiplicatively and the
-    fixpoint lands in O(log diameter) rounds.  On a chain-shaped
-    synonym graph (the worst case at 100x scale) this is the
-    difference between ~log2(n) rounds and n rounds.
-  * ``variant='propagation'``: plain min-label propagation,
-    <= diameter rounds — one fewer join per round, fine for the
-    shallow alias graph.
-  * ``variant='adaptive'`` (default): propagation for the first
-    ``jump_after`` rounds, jumps from then on — a shallow graph (the
-    alias dictionary converges in <= 3 rounds) never pays the extra
-    join, a deep chain still finishes in jump_after + O(log n) rounds.
+The first ``_JUMP_AFTER`` rounds are plain propagation; from then on
+each round ALSO pointer-jumps ``label(v) <- label(label(v))`` — the
+shortcutting step of large-star/small-star-family CC algorithms
+(Kiveris et al., "Connected Components in MapReduce and Beyond";
+hash-to-min of Rastogi et al.).  Labels are monotone non-increasing and
+every label value is itself a node, so the jump is one self-join; the
+distance to the component minimum shrinks multiplicatively and the
+fixpoint lands in O(log diameter) rounds.  A shallow graph (the alias
+dictionary converges in <= 3 rounds) never pays the extra join; a deep
+chain — the worst case at 100x scale — still finishes in
+``_JUMP_AFTER`` + O(log n) rounds instead of n.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_JUMP_AFTER = 3  # propagation-only rounds before pointer jumping starts
+_MAX_ROUNDS = 50
 
 
 def _entity_key(col):
@@ -94,10 +89,7 @@ def _local_components(spark, edge_rows, py_key, src_type):
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 50,
-    variant: str = "adaptive",
     stats: dict = None,
-    jump_after: int = 3,
     key_fn=None,
     local_threshold: int = 100_000,
     local_key=None,
@@ -107,10 +99,10 @@ def connected_components(
     canonical_id = the member with the smallest ``key_fn`` value —
     default ``_entity_key`` (the numeric part of 'Q<n>' entity ids);
     pass ``key_fn=lambda c: c`` for naturally ordered ids (e.g. the
-    near-dup cluster graph over BIGINT doc_ids).  See the module
-    docstring for the two variants; pass a dict as ``stats`` to
-    receive {'rounds': <iterations until fixpoint>} back (the
-    long-chain test pins the doubling variant to O(log n) rounds).
+    near-dup cluster graph over BIGINT doc_ids).  The module docstring
+    describes the rounds; pass a dict as ``stats`` to receive
+    {'rounds': <iterations until fixpoint>} back (the long-chain test
+    pins the pointer jumps to O(log n) rounds).
 
     SCALE-ADAPTIVE local path (guide §1.2: fix the distributed
     algorithm first): when the edge list is at most ``local_threshold``
@@ -135,16 +127,13 @@ def connected_components(
     and aggregates run at the session's shuffle width, whose tiny
     partitions AQE coalesces.  The session conf is never changed.
     """
-    if variant not in ("doubling", "propagation", "adaptive"):
-        raise ValueError(f"unknown CC variant {variant!r}")
     key = key_fn if key_fn is not None else _entity_key
     spark = edges.sparkSession
     py_key = local_key if local_key is not None else _local_key_twin(key_fn)
     if py_key is not None and local_threshold > 0:
-        # ONE bounded job decides the gate AND delivers the edges (the
-        # link_mentions probe pattern): more than local_threshold rows
-        # came back -> fall through to the distributed loop, whose
-        # count below is then the only full pass
+        # ONE bounded job decides the gate AND delivers the edges: more
+        # than local_threshold rows came back -> fall through to the
+        # distributed loop, whose count below is then the only full pass
         head = edges.select("src", "dst").take(local_threshold + 1)
         if len(head) <= local_threshold:
             if stats is not None:
@@ -173,7 +162,7 @@ def connected_components(
     )
 
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(_MAX_ROUNDS):
         rounds += 1
         # min label among each node's neighbours
         neighbour_min = (
@@ -195,10 +184,7 @@ def connected_components(
                  ).alias("changed"),
             )
         )
-        jump = variant == "doubling" or (
-            variant == "adaptive" and rounds > jump_after
-        )
-        if jump:
+        if rounds > _JUMP_AFTER:
             # pointer jump: label(v) <- label(label(v)).  Labels are
             # monotone non-increasing and every label value IS a
             # node, so the inner self-join matches exactly once and
@@ -245,44 +231,36 @@ _CANONICAL_CACHE_MAX_ROWS = 1_000_000  # size guard: never memoize a map
 # result as a table instead of relying on the memo)
 
 
-def canonical_map(spark, edges: DataFrame = None) -> DataFrame:
-    """entity_id -> canonical_id for ALL entities (singletons map to
-    themselves).  Small by construction — safe to broadcast.
+def canonical_map(spark) -> DataFrame:
+    """entity_id -> canonical_id for ALL entities of the alias
+    dictionary (singletons map to themselves).  Small by construction —
+    safe to broadcast.
 
-    The default (static alias-dictionary) map is memoized per session:
-    the CC fixpoint loop runs once and later calls rebuild the tiny
-    result as a local DataFrame — repeated queries must not re-pay the
-    iterative loop for an input that cannot have changed.  The memo is
-    keyed by the session's applicationId (stable; never aliases a
-    recycled Python object the way id(spark) could) and holds only the
-    latest session's entry, which evicts prior sessions' rows.
+    The map is memoized per session: the CC fixpoint loop runs once and
+    later calls rebuild the tiny result as a local DataFrame — repeated
+    queries must not re-pay the iterative loop for an input that cannot
+    have changed.  The memo is keyed by the session's applicationId
+    (stable; never aliases a recycled Python object the way id(spark)
+    could) and holds only the latest session's entry, which evicts
+    prior sessions' rows.
     """
     from kgkit.sources.alias_dict import alias_df, edges_df
+    from kgkit.sources.localrel import values_df
 
-    if edges is None:
-        key = spark.sparkContext.applicationId
-        cached = _CANONICAL_CACHE.get(key)
-        if cached is not None:
-            from kgkit.sources.localrel import values_df
-
-            return values_df(
-                spark, cached, "entity_id string, canonical_id string"
+    key = spark.sparkContext.applicationId
+    rows = _CANONICAL_CACHE.get(key)
+    if rows is None:
+        comp = connected_components(edges_df(spark))
+        result = (
+            alias_df(spark).select("entity_id").distinct()
+            .join(comp, "entity_id", "left")
+            .select(
+                "entity_id",
+                F.coalesce("canonical_id", "entity_id").alias("canonical_id"),
             )
-        result = canonical_map(spark, edges_df(spark))
+        )
         rows = [tuple(r) for r in result.collect()]
         if len(rows) <= _CANONICAL_CACHE_MAX_ROWS:
             _CANONICAL_CACHE.clear()  # evict dead sessions' entries
             _CANONICAL_CACHE[key] = rows
-        from kgkit.sources.localrel import values_df
-
-        return values_df(spark, rows, "entity_id string, canonical_id string")
-
-    comp = connected_components(edges)
-    all_entities = alias_df(spark).select("entity_id").distinct()
-    return (
-        all_entities.join(comp, "entity_id", "left")
-        .select(
-            "entity_id",
-            F.coalesce("canonical_id", "entity_id").alias("canonical_id"),
-        )
-    )
+    return values_df(spark, rows, "entity_id string, canonical_id string")

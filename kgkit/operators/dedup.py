@@ -14,8 +14,6 @@ or key-partitioned joins — no UDFs, no driver loops:
                    case buckets over `max_bucket` members are dropped
                    whole (boilerplate class, not pair candidates) with
                    the dropped mass reported via observation metrics.
-  * SimHash      — per-word md5 bits -> weighted bit-majority signature;
-                   near-dups share all but <=hamming_budget bits.
   * n-gram Jaccard (exact) — inverted-index self-join on shingles with a
                    document-frequency cap (stop-shingle pruning) so hot
                    shingles cannot skew the join.
@@ -300,42 +298,6 @@ def dup_clusters(pairs: DataFrame, id_a: str = "doc_a",
     return cc.select(
         F.col("entity_id").alias("doc_id"), "canonical_id"
     )
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """(doc_id, simhash BIGINT): bit j of the signature is the majority
-    vote of bit j of md5(word) over the document's words (+1/-1 sum).
-
-    Bits come from one hex nibble each of the md5 digest — identical
-    arithmetic is expressible in the DuckDB oracle.
-
-    SINGLE hash pass: each word is md5'd exactly once
-    (transform over the split), then ONE aggregate folds every digest
-    into a ``bits``-wide vote vector via zip_with (round 1 ran ``bits``
-    separate aggregates, re-splitting and re-hashing every word 16x —
-    16x the md5 work on the hottest primitive in the query)."""
-    assert bits <= 32, "one hex nibble per bit: at most 32 bits"
-    odd = "('1','3','5','7','9','b','d','f')"  # nibble parity, engine-portable
-    # votes[j] = sum over words of +-1 by parity of digest nibble j;
-    # zip_with (not transform) carries the bit index — F.transform's
-    # 2-arg lambda would receive the array INDEX, see CLAUDE.md
-    votes = (
-        f"aggregate(transform(split(text, ' '), w -> md5(w)), "
-        f"array_repeat(0, {bits}), "
-        f"(acc, d) -> zip_with(acc, sequence(1, {bits}), "
-        f"(a, j) -> a + (CASE WHEN substring(d, j, 1) IN {odd} THEN 1 ELSE -1 END)))"
-    )
-    sig = (
-        f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
-        f"(v, j) -> CASE WHEN v > 0 THEN shiftleft(1L, j) ELSE 0L END), "
-        f"0L, (acc, x) -> acc + x)"
-    )
-    return docs.select("doc_id", F.expr(sig).alias("simhash"))
 
 
 # ---------------------------------------------------------------------------

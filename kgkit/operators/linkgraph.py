@@ -149,33 +149,6 @@ def alias_counts(anchors: DataFrame) -> DataFrame:
     )
 
 
-def aliases_from_anchors(counts: DataFrame, min_refs: int = 1) -> DataFrame:
-    """(dst_url, alias, n_refs) -> the linking stage's alias-dictionary
-    schema (alias, entity_id, entity_num, prior): each linked resource
-    becomes an entity keyed by its URL, and an alias's prior is its
-    reference share among that surface form's targets — the same
-    P(entity | surface) a wikification dictionary carries, mined from
-    the corpus instead of curated.  ``link_mentions(aliases=...)``
-    consumes the result directly (tests pin the composition); the
-    frame is (resource × surface)-sized, broadcastable by
-    construction.  entity_num is a deterministic 31-bit hash of the
-    URL — mined entities carry no embedding row, so it only needs to
-    be stable and collision-sparse for the rerank gate."""
-    from pyspark.sql import Window
-
-    total = F.sum("n_refs").over(Window.partitionBy("alias"))
-    return (
-        counts.filter(F.col("n_refs") >= min_refs)
-        .select(
-            "alias",
-            F.col("dst_url").alias("entity_id"),
-            F.pmod(F.xxhash64("dst_url"), F.lit(1 << 31))
-            .cast("int").alias("entity_num"),
-            F.round(F.col("n_refs") / total, 6).alias("prior"),
-        )
-    )
-
-
 def with_anchor_html(docs: DataFrame) -> DataFrame:
     """docs(doc_id, text) -> + (url, html): a deterministic anchor-rich
     page per doc, built entirely IN Spark expressions — no driver loop,
@@ -384,8 +357,16 @@ def _undirected_simple(edges: DataFrame) -> DataFrame:
 
 
 def _triangles_from_und(und: DataFrame) -> DataFrame:
-    """Per-node triangle counts from a distinct (a, b) a<b edge set.
-    ``ranked`` (the degree-oriented DAG) is consumed THREE times (both
+    """(node, n_triangles) from a distinct (a, b) a<b edge set — the
+    degree-oriented (node-iterator++) formulation, the one that scales:
+    every edge is oriented from its lower-(degree, id) endpoint to the
+    higher, turning the graph into a DAG whose out-degrees are
+    O(sqrt(m)); wedges are then built only at the orientation source,
+    so total wedge work is O(m^1.5) REGARDLESS of hub skew — a celebrity
+    node's million neighbors never meet pairwise at the celebrity,
+    because almost all its edges orient AWAY from it.  Three
+    equi-joins, no window, no cartesian (plan-pinned); nodes in no
+    triangle are absent.  ``ranked`` (the degree-oriented DAG) is consumed THREE times (both
     wedge arms + the closing-edge probe), so it is eagerly
     localCheckpointed — the multi-branch fan-out discipline; it is
     edge-set sized, orders of magnitude below any corpus."""
@@ -424,20 +405,6 @@ def _triangles_from_und(und: DataFrame) -> DataFrame:
     return per_corner.groupBy("node").agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
     )
-
-
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """(node, n_triangles) over the undirected simple graph — the
-    degree-oriented (node-iterator++) formulation, the one that scales:
-    every edge is oriented from its lower-(degree, id) endpoint to the
-    higher, turning the graph into a DAG whose out-degrees are
-    O(sqrt(m)); wedges are then built only at the orientation source,
-    so total wedge work is O(m^1.5) REGARDLESS of hub skew — a celebrity
-    node's million neighbors never meet pairwise at the celebrity,
-    because almost all its edges orient AWAY from it.  Three
-    equi-joins, no window, no cartesian (plan-pinned).  Nodes in no
-    triangle are absent (left-join with 0 at the caller if needed)."""
-    return _triangles_from_und(_undirected_simple(edges))
 
 
 def graph_stats(edges: DataFrame) -> dict:

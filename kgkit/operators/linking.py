@@ -1,46 +1,37 @@
-"""Stage 2 — entity linking: broadcast alias join + embedding rerank.
+"""Stage 2 — entity linking: alias map lookup + embedding rerank.
 
 SURVEY §2.9 J1/J2 (no analog in the reference — the reference stops at
 span extraction; these stages are the KG extension required by the
 north rule).
 
-J1: mentions ⋈ alias_dict on lower(surface) — the default dictionary
-    is a static fixture, looked up in a map literal (no join, no job);
-    a caller-supplied dictionary is tiny (broadcastable by
-    construction), so it is an explicit ``F.broadcast`` hash join.
-    Neither shuffles the mention stream.
+J1: mentions look their lower(surface) up in the alias dictionary
+    (sources/alias_dict.ALIAS_ROWS, a static fixture) held as a SQL map
+    literal — no join, no job, and the mention stream never shuffles.
 J2: ambiguous aliases (>1 candidate entity) are reranked by cosine
     similarity between the page embedding (embeddings.vec_id == doc_id)
     and the candidate entity embedding (vec_id == entity_num), with
     (score, prior, entity_id) as the deterministic sort key.
 
-Scale design — TWO rerank strategies, selected by the size of the
-ambiguous candidate-entity set (one bounded ``limit(k+1).collect()``
-probe over the dictionary-derived relation: at most k+1 ints reach the
-driver no matter how large the KB is):
+Scale design — the dictionary's ambiguous entities are known on the
+driver, so the rerank precomputes their cosines on the EMBEDDINGS
+table: one row per page, one cosine per (page, ambiguous-entity) pair,
+and mentions pick their winner from a per-page score map with a pure
+array-sort expression.  The mention stream never shuffles; cosine is
+never evaluated per mention row (hub-entity mentions take the
+n_cands==1 fast path).  The per-page score table joins to mentions on
+doc_id; the broadcast hint is GATED on an actual row-count probe — a
+page-cardinality relation must become an ordinary hash join at 10^12
+pages, not a pinned driver OOM.  The score frame, its fetched vectors
+and the gate are built once per embeddings table and memoized, so a
+warm call (the next stream micro-batch) plans the rerank with no job.
 
-  * literal path (|ambiguous entities| <= max_literal_amb): rerank
-    cosines are precomputed on the EMBEDDINGS table — one row per page,
-    one cosine per (page, ambiguous-entity) pair — and mentions pick
-    their winner from a per-page score map with a pure array-sort
-    expression.  The mention stream never shuffles; cosine is never
-    evaluated per mention row (hub-entity mentions take the n_cands==1
-    fast path).  The per-page score table joins to mentions on doc_id;
-    the broadcast hint is GATED on an actual row-count probe — a
-    page-cardinality relation must become an ordinary hash join at
-    10^12 pages, not a pinned driver OOM.  The score frame, its
-    fetched vectors and the gate are built once per embeddings table
-    and memoized, so a warm call (the next stream micro-batch) plans
-    the rerank with no job.
-  * join path (large ambiguous sets — a real KB with 10^6..10^8 aliases
-    and thousands of ambiguous entities): candidates explode to rows,
-    join the page embedding on doc_id and the entity embedding on
-    entity_num (plain joins — AQE broadcasts the small side when it
-    is small), and a window takes the top-1 per mention.  Nothing is
-    collected to the driver and no per-entity literals enter the plan,
-    so the plan size is independent of the KB.  Only the AMBIGUOUS
-    mention slice pays the shuffles; unambiguous mentions stay on the
-    broadcast-only fast path in both strategies.
+The entity vectors enter that plan as literals.  When they are wider
+than ``_LITERAL_PLAN_BUDGET`` components, the rerank falls back to the
+join path instead: candidates explode to rows, join the page embedding
+on doc_id and the entity embedding on entity_num (plain joins — AQE
+broadcasts the small side when it is small), and a window takes the
+top-1 per mention, so the plan size is independent of the vector
+width.  Only the AMBIGUOUS mention slice pays its shuffles.
 
 ``link_score`` is NULL for unambiguous mentions (nothing was reranked);
 for ambiguous mentions it is the winning cosine (0.0 when either
@@ -79,8 +70,8 @@ def _float_array_lit(values) -> Column:
 
 
 def _collect_amb_embeddings(embeddings: DataFrame, amb_entity_nums) -> dict:
-    """{entity_num: embedding} for the bounded ambiguous set — the one
-    driver-side fetch of the literal path (<= max_literal_amb rows)."""
+    """{entity_num: embedding} for the dictionary's ambiguous entities —
+    the one driver-side fetch of the rerank."""
     return {
         int(r["vec_id"]): list(r["embedding"])
         for r in embeddings.filter(
@@ -89,16 +80,10 @@ def _collect_amb_embeddings(embeddings: DataFrame, amb_entity_nums) -> dict:
     }
 
 
-def page_entity_scores(embeddings: DataFrame, amb_entity_nums,
-                       ent_rows: dict = None) -> DataFrame:
+def page_entity_scores(embeddings: DataFrame, ent_rows: dict) -> DataFrame:
     """(vec_id, escore: MAP<int,double>) — cosine of each page embedding
-    against each ambiguous candidate entity's embedding.  One pass over
-    the embeddings table; |amb_entity_nums| cosines per page.  Only used
-    on the literal path, where |amb_entity_nums| is already known to be
-    bounded (<= max_literal_amb), so the collect and the plan literals
-    are bounded too."""
-    if ent_rows is None:
-        ent_rows = _collect_amb_embeddings(embeddings, amb_entity_nums)
+    against each fetched ambiguous entity embedding (``ent_rows``).
+    One pass over the embeddings table; |ent_rows| cosines per page."""
     entries = [
         F.struct(
             F.lit(num).alias("k"),
@@ -128,38 +113,36 @@ _LITERAL_PLAN_BUDGET = 64_000  # max |amb entities| x dim literals in a plan
 
 _RERANK_CACHE: dict = {}
 # (applicationId, embeddings.semanticHash(), its sorted inputFiles(),
-#  amb_nums, scores_broadcast_rows, _LITERAL_PLAN_BUDGET) -> the
+#  scores_broadcast_rows, _LITERAL_PLAN_BUDGET) -> the
 # broadcast-gated per-page score frame, or None when the vectors are
 # over the plan budget (join path).  The literal path runs once per
 # link_mentions call — once per stream micro-batch — and building its
 # plan pays a vector-fetch job, the broadcast gate's probe (two jobs)
 # and thousands of Py4J calls for the cosine literals; the frame
-# depends only on the embeddings table and the ambiguous set, so a warm
-# call reuses it.  semanticHash alone is not the table's identity: two
+# depends only on the embeddings table, so a warm call reuses it.
+# semanticHash alone is not the table's identity: two
 # reads of one path hash equal even after the path is overwritten with
 # other vectors, while their input files differ.  Only file-backed
 # tables are memoized (their files name their content, and the memo
 # pins no in-memory data); it holds one application's entries at most.
 
 
-def _rerank_scores(embeddings: DataFrame, amb_nums,
-                   scores_broadcast_rows: int):
+def _rerank_scores(embeddings: DataFrame, scores_broadcast_rows: int):
     """The memoized score frame of the literal path (None: join path)."""
     files = tuple(sorted(embeddings.inputFiles()))
     key = (
         embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         files,
-        tuple(amb_nums),
         scores_broadcast_rows,
         _LITERAL_PLAN_BUDGET,
     )
     if key in _RERANK_CACHE:
         return _RERANK_CACHE[key]
-    ent_rows = _collect_amb_embeddings(embeddings, amb_nums)
+    ent_rows = _collect_amb_embeddings(embeddings, _AMB_NUMS)
     scores = None
     if sum(len(v) for v in ent_rows.values()) <= _LITERAL_PLAN_BUDGET:
-        scores = page_entity_scores(embeddings, amb_nums, ent_rows)
+        scores = page_entity_scores(embeddings, ent_rows)
         if _small_enough(embeddings.select("vec_id"), scores_broadcast_rows):
             scores = F.broadcast(scores)
     if any(k[0] != key[0] for k in _RERANK_CACHE):
@@ -199,17 +182,17 @@ _LITERAL_OUT = [
 
 
 def _literal_rerank(cands: DataFrame, embeddings: DataFrame,
-                    amb_nums, scores_broadcast_rows: int) -> DataFrame:
+                    scores_broadcast_rows: int) -> DataFrame:
     """Map-side rerank: per-page score map + array-sort winner.
 
     Falls back to the distributed join path when the entity-embedding
     literals would bloat the plan (|amb| x dim components over
-    _LITERAL_PLAN_BUDGET — e.g. 64 entities x 4096-dim embeddings):
-    the amb-count gate bounds the entity COUNT but not the embedding
-    WIDTH, and the width is only known once the vectors are fetched —
-    no extra job: the fetch (once per embeddings table, memoized with
-    the score frame) was happening anyway."""
-    scores = _rerank_scores(embeddings, amb_nums, scores_broadcast_rows)
+    _LITERAL_PLAN_BUDGET — e.g. 16 entities x 4096-dim embeddings):
+    the dictionary fixes the entity COUNT but not the embedding WIDTH,
+    and the width is only known once the vectors are fetched — no
+    extra job: the fetch (once per embeddings table, memoized with the
+    score frame) was happening anyway."""
+    scores = _rerank_scores(embeddings, scores_broadcast_rows)
     if scores is None:
         return _join_rerank(cands, embeddings)
     joined = cands.join(scores, F.col("doc_id") == F.col("vec_id"), "left")
@@ -269,8 +252,8 @@ def _join_rerank(cands: DataFrame, embeddings: DataFrame) -> DataFrame:
     return una.unionByName(best)
 
 
-def _default_groups() -> dict:
-    """The default dictionary (alias_dict.ALIAS_ROWS, a static code
+def _alias_groups() -> dict:
+    """The alias dictionary (alias_dict.ALIAS_ROWS, a static code
     fixture) grouped by alias: {alias: candidates in sort_array's
     (entity_id, entity_num, prior) struct order}."""
     groups: dict = {}
@@ -279,74 +262,39 @@ def _default_groups() -> dict:
     return {alias: sorted(cs) for alias, cs in sorted(groups.items())}
 
 
-_DEFAULT_GROUPS = _default_groups()
-# The default dictionary's candidates as a SQL map literal, and its
-# ambiguous entities — constant in the program, so derived here rather
+_ALIAS_GROUPS = _alias_groups()
+# The dictionary's candidates as a SQL map literal, and its ambiguous
+# entities — constant in the program, so derived here rather
 # than grouped and probed on the cluster by every call (guide §1.2).
 # A map lookup, not a broadcast join against a VALUES relation: the
 # lookup launches no broadcast job, and a join with a relation whose
 # alias keys the planner cannot see as unique is estimated as the
 # product of both sides (~600x the mention stream here), which a
 # checkpoint of the linked stream carries into every plan that reads it.
-_DEFAULT_CANDS = "map(" + ", ".join(
+_CANDS = "map(" + ", ".join(
     f"'{alias}', array(" + ", ".join(
         f"named_struct('entity_id', '{e}', 'entity_num', {n}, "
         f"'prior', CAST({p!r} AS DOUBLE))"
         for e, n, p in cs
     ) + ")"
-    for alias, cs in _DEFAULT_GROUPS.items()
+    for alias, cs in _ALIAS_GROUPS.items()
 ) + ")"
-_DEFAULT_AMB_NUMS = sorted(
-    {n for cs in _DEFAULT_GROUPS.values() if len(cs) > 1 for _, n, _ in cs}
+_AMB_NUMS = sorted(
+    {n for cs in _ALIAS_GROUPS.values() if len(cs) > 1 for _, n, _ in cs}
 )
 
 
 def link_mentions(
     mentions: DataFrame,
     embeddings: DataFrame,
-    aliases: DataFrame = None,
-    max_literal_amb: int = 64,
     scores_broadcast_rows: int = 200_000,
 ) -> DataFrame:
     """mentions -> linked mentions with (entity_id, link_score).
 
     Unlinkable mentions (surface not in the dictionary) are dropped —
-    they carry no KG signal downstream.  The rerank strategy is chosen
-    by the number of distinct ambiguous candidate entities.  For the
-    default dictionary both the grouped candidates and that set come
-    from its static rows on the driver.  A caller-supplied ``aliases``
-    frame is grouped on the cluster, and ONE bounded job runs
-    ``limit(max_literal_amb + 1).collect()`` over the
-    (dictionary-cardinality) distinct amb-entity relation — it both
-    decides the gate (more than max_literal_amb rows came back) and
-    delivers the bounded literal list, so the driver never receives
-    more than max_literal_amb + 1 ints.
-    """
-    if aliases is None:
-        cands = cands_of(mentions)
-        amb_nums = _DEFAULT_AMB_NUMS
-    else:
-        # one row per alias with its candidate array (tiny -> broadcast)
-        grouped = aliases.groupBy("alias").agg(
-            F.sort_array(
-                F.collect_list(F.struct("entity_id", "entity_num", "prior"))
-            ).alias("cands"),
-            F.count("*").alias("n_cands"),
-        )
-        amb_num_df = (
-            grouped.filter("n_cands > 1")
-            .select(F.explode(F.col("cands")["entity_num"]).alias("n"))
-            .distinct()
-        )
-        # single probe job: <= max_literal_amb + 1 ints reach the driver
-        amb_rows = amb_num_df.limit(max_literal_amb + 1).collect()
-        amb_nums = sorted(int(r["n"]) for r in amb_rows)
-        cands = cands_of(mentions, grouped)
-
-    if len(amb_nums) <= max_literal_amb:
-        return _literal_rerank(cands, embeddings, amb_nums,
-                               scores_broadcast_rows)
-    return _join_rerank(cands, embeddings)
+    they carry no KG signal downstream."""
+    return _literal_rerank(cands_of(mentions), embeddings,
+                           scores_broadcast_rows)
 
 
 # doc_id keys the page-embedding lookup (embeddings.vec_id): numeric
@@ -356,22 +304,11 @@ def link_mentions(
 _DOC_ID = "try_cast(substring_index(url, '//', -1) AS BIGINT) AS doc_id"
 
 
-def cands_of(mentions: DataFrame, grouped: DataFrame = None) -> DataFrame:
+def cands_of(mentions: DataFrame) -> DataFrame:
     """One output row per linkable mention with its candidate array and
-    doc_id — the shared head of both rerank strategies.  ``grouped``
-    (alias, cands, n_cands) is a caller-supplied dictionary, joined as
-    a broadcast; None looks the default dictionary up in its map
-    literal, with no join."""
-    if grouped is None:
-        return (
-            mentions.selectExpr(
-                "*", f"{_DEFAULT_CANDS}[lower(surface)] AS cands"
-            )
-            .filter("cands IS NOT NULL")
-            .selectExpr("*", "CAST(size(cands) AS BIGINT) AS n_cands", _DOC_ID)
-        )
-    return mentions.join(
-        F.broadcast(grouped),
-        F.lower(mentions.surface) == grouped["alias"],
-        "inner",
-    ).selectExpr("*", _DOC_ID)
+    doc_id, looked up in the dictionary's map literal with no join."""
+    return (
+        mentions.selectExpr("*", f"{_CANDS}[lower(surface)] AS cands")
+        .filter("cands IS NOT NULL")
+        .selectExpr("*", "CAST(size(cands) AS BIGINT) AS n_cands", _DOC_ID)
+    )

@@ -8,28 +8,30 @@ boilerplate, gibberish, or the wrong register (CCNet, Wenzek et al.
 perplexity tertile).  kgkit's twin keeps the same shape with a
 deterministic interpolated bigram model:
 
-  * ``train_bigram_lm`` — add-k-smoothed unigram + bigram log2-probs
-    from a seed corpus (driver-side counts: the MODEL is small; the
-    corpus being scored is the big side);
-  * ``lm_score`` — per-document mean negative log2 probability
+  * ``relational_bigram_lm`` — add-1/2-smoothed unigram + bigram
+    probabilities from a seed-corpus DataFrame, counted by groupBy
+    (the model is vocab-sized; the corpus being scored is the big
+    side), each probability one division of exact integers;
+  * ``lm_score_exact`` — per-document mean negative log2 probability
     (= log2-perplexity) under interpolated backoff
     ``p(w|a) = λ·p_bi(w|a) + (1-λ)·p_uni(w)``, evaluated RELATIONALLY:
     docs explode to (prev, w) pairs, the bigram/unigram tables
-    broadcast-join in (they are vocab-sized), and one groupBy averages —
+    broadcast-join in, and one groupBy averages on a BIGINT grid —
     no python in the scoring path, so 100 TB scores at scan speed;
-  * ``perplexity_buckets`` — the CCNet head/middle/tail split by score
-    quantile, the mixture key ``sampling.mixture_sample`` consumes.
+  * ``ppl_tertiles`` — the CCNet head/middle/tail split by exact score
+    tertile, the mixture key ``sampling.mixture_sample`` consumes.
 
-A pure-python scorer twin backs the differential tests; the Spark path
-must match it to float tolerance on every document.
+``train_bigram_lm`` (driver-side counts, add-k) and ``score_text_py``
+are the pure-python twin the differential tests compare the Spark path
+against, to the grid's tolerance on every document.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 LAMBDA = 0.7          # bigram weight in the interpolation
@@ -63,7 +65,7 @@ def train_bigram_lm(texts: Sequence[str], k: float = 0.5
 
 
 def score_text_py(text: str, lm: Dict[str, Dict]) -> float:
-    """Pure-python twin of the relational scorer (the differential
+    """Pure-python twin of ``lm_score_exact`` (the differential
     oracle): mean -log2 p over positions 1..n-1 (first word has no
     context; empty/1-word docs score the OOV floor)."""
     ws = [w.lower() for w in text.split(" ") if w]
@@ -75,18 +77,6 @@ def score_text_py(text: str, lm: Dict[str, Dict]) -> float:
         p_uni = 2.0 ** lm["uni"][w] if w in lm["uni"] else 2.0 ** OOV_LOG2P
         logs.append(-math.log2(LAMBDA * p_bi + (1 - LAMBDA) * p_uni))
     return sum(logs) / len(logs)
-
-
-def _lm_tables(spark: SparkSession, lm: Dict[str, Dict]
-               ) -> Tuple[DataFrame, DataFrame]:
-    uni = spark.createDataFrame(
-        [(w, p) for w, p in sorted(lm["uni"].items())], "w string, lp_uni double"
-    )
-    bi = spark.createDataFrame(
-        [(a, w, p) for (a, w), p in sorted(lm["bi"].items())],
-        "prev string, w string, lp_bi double",
-    )
-    return uni, bi
 
 
 def _pair_stream(docs: DataFrame) -> DataFrame:
@@ -112,41 +102,6 @@ def _pair_stream(docs: DataFrame) -> DataFrame:
         )
         .select("doc_id", F.explode_outer("ps").alias("p"))
         .select("doc_id", F.col("p.prev").alias("prev"), F.col("p.w").alias("w"))
-    )
-
-
-def lm_score(docs: DataFrame, lm: Dict[str, Dict]) -> DataFrame:
-    """(doc_id, lm_log2ppl) — mean -log2 p(w|prev) per document.
-
-    Plan: one generator expression builds the (prev, w) pair stream,
-    two BROADCAST joins attach the (vocab-sized) probability tables,
-    one groupBy(doc_id) averages — the corpus never shuffles except on
-    doc_id for the final mean, and AQE coalesces that."""
-    spark = docs.sparkSession
-    uni, bi = _lm_tables(spark, lm)
-    pairs = _pair_stream(docs)
-    scored = (
-        pairs.join(F.broadcast(bi), ["prev", "w"], "left")
-        .join(F.broadcast(uni), ["w"], "left")
-        .select(
-            "doc_id",
-            # the explode_outer null row (a doc with < 2 words) must
-            # stay NULL so the avg sees no values and coalesces to the
-            # floor — scoring it would charge the doc an OOV bigram
-            F.when(
-                F.col("w").isNotNull(),
-                -F.log2(
-                    F.lit(LAMBDA)
-                    * F.coalesce(F.pow(F.lit(2.0), F.col("lp_bi")), F.lit(0.0))
-                    + F.lit(1 - LAMBDA)
-                    * F.coalesce(F.pow(F.lit(2.0), F.col("lp_uni")),
-                                 F.pow(F.lit(2.0), F.lit(OOV_LOG2P)))
-                ),
-            ).alias("nl"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.coalesce(F.avg("nl"), F.lit(-OOV_LOG2P)).alias("lm_log2ppl")
     )
 
 
@@ -206,9 +161,11 @@ def lm_score_exact(docs: DataFrame, uni: DataFrame, bi: DataFrame
                    ) -> DataFrame:
     """(doc_id, lm_log2ppl) on the deterministic cross-engine grid.
 
-    Same plan as ``lm_score`` (pair stream + two broadcast joins + one
-    groupBy), but the mean is NOT a float avg (order-dependent across
-    engines — CLAUDE.md gotcha): each pair's -log2 p is rounded to the
+    Plan: one generator expression builds the (prev, w) pair stream,
+    two BROADCAST joins attach the (vocab-sized) probability tables,
+    one groupBy(doc_id) averages — the corpus never shuffles except on
+    doc_id for the final mean.  The mean is NOT a float avg
+    (order-dependent across engines — CLAUDE.md gotcha): each pair's -log2 p is rounded to the
     1e-6 BIGINT grid and SUMmed (exact, commutative), then the mean is
     re-derived from (sum, count).  The interpolation input is an exact
     integer-ratio probability, so the only libm call is one log2 per
@@ -241,9 +198,7 @@ def ppl_tertiles(scores: DataFrame) -> DataFrame:
     """CCNet buckets on EXACT tertiles: ntile(3) ordered by (score,
     doc_id) — deterministic and SQL-twinnable, unlike approxQuantile.
     The global window is a single-partition sort of (doc_id, score)
-    PAIRS only (16 bytes/doc) — the oracle-exact variant next to the
-    production ``perplexity_buckets``, whose approx cutoffs never
-    collect anything."""
+    PAIRS only (16 bytes/doc)."""
     from pyspark.sql import Window
 
     w = Window.orderBy("lm_log2ppl", "doc_id")
@@ -254,17 +209,3 @@ def ppl_tertiles(scores: DataFrame) -> DataFrame:
         .when(F.col("_t") == 2, "middle")
         .otherwise("tail"),
     ).drop("_t")
-
-
-def perplexity_buckets(scores: DataFrame, quantiles=(1 / 3, 2 / 3)
-                       ) -> DataFrame:
-    """CCNet head/middle/tail: bucket by score quantile (lower = more
-    fluent).  Quantile cutoffs come from approxQuantile on the SCORE
-    column (two doubles to the driver — not a collect of data)."""
-    lo, hi = scores.approxQuantile("lm_log2ppl", list(quantiles), 0.001)
-    return scores.withColumn(
-        "ppl_bucket",
-        F.when(F.col("lm_log2ppl") <= lo, "head")
-        .when(F.col("lm_log2ppl") <= hi, "middle")
-        .otherwise("tail"),
-    )

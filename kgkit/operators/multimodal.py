@@ -1,29 +1,18 @@
 """Multimodal column handling: opaque binary media + typed metadata.
 
 A web-scale training-data pipeline carries image/audio/video payloads as
-opaque BINARY columns next to typed metadata, decoding only inside
-Arrow-vectorized UDFs at the point of use (the bytes must never pass
-through Python row-at-a-time).  In the pages table the ``html`` column
-plays that role (input_hint: html BINARY).
-
-Real here: schemas, column pruning, Arrow batch shapes, vectorized
-numpy feature extraction, frame-sampling arithmetic.  Stubbed here
-(this container ships no image/audio codecs): the actual pixel decode —
-``decode_image`` raises NotImplementedError unless PIL is importable,
-exactly as marked.
+opaque BINARY columns next to typed metadata, decoding only at the point
+of use.  In the pages table the ``html`` column plays that role
+(input_hint: html BINARY).  ``media_metadata`` derives the typed
+metadata with native expressions alone — no UDF, no decode — for the
+``media_stats`` registry query.  kgkit depends on no image or audio
+codec, so no operator decodes pixels.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_DIM = 16
 
 
 def media_metadata(pages: DataFrame) -> DataFrame:
@@ -34,105 +23,4 @@ def media_metadata(pages: DataFrame) -> DataFrame:
         F.lit("text/html").alias("media_type"),
         F.length("html").cast("long").alias("n_bytes"),
         F.md5("html").alias("digest"),
-    )
-
-
-def byte_histogram_features(pages: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """(url, bin INT, weight DOUBLE): L1-normalized histogram of byte
-    values bucketed into ``dim`` bins, one row per NON-EMPTY bin — a
-    REAL vectorized feature extractor standing where an image-embedding
-    model would run.  mapInPandas: one numpy pass per Arrow batch, media
-    bytes never leave the batch.  The UDF emits exact integer counts;
-    the normalize + round happens in native column expressions so the
-    arithmetic is bit-identical to the DuckDB oracle (and the output is
-    flat/hashable for the correctness harness — round 1's array<double>
-    shape broke its canonicalizer)."""
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list = []
-            bins: list = []
-            counts: list = []
-            totals: list = []
-            for url, raw in zip(pdf["url"], pdf["html"]):
-                arr = np.frombuffer(raw or b"", dtype=np.uint8)
-                if arr.size == 0:
-                    continue
-                hist = np.bincount(arr // (256 // dim), minlength=dim)
-                nz = np.flatnonzero(hist)
-                urls.extend([url] * len(nz))
-                bins.extend(nz.tolist())
-                counts.extend(hist[nz].tolist())
-                totals.extend([int(arr.size)] * len(nz))
-            yield pd.DataFrame(
-                {"url": urls, "bin": bins, "n": counts, "total": totals}
-            )
-
-    raw = pages.select("url", "html").mapInPandas(
-        extract, schema="url string, bin int, n long, total long"
-    )
-    return raw.select(
-        "url",
-        "bin",
-        F.round(F.col("n") / F.col("total").cast("double"), 6).alias("weight"),
-    )
-
-
-def frame_sample(
-    pages: DataFrame, frame_bytes: int = 64, every: int = 4
-) -> DataFrame:
-    """Video-style frame sampling over an opaque byte stream: treat the
-    binary as fixed-size frames, keep every ``every``-th, emit one row
-    per sampled frame with its digest.  Pure column expressions — the
-    sampling arithmetic (the part that matters for the Spark plan:
-    explode cardinality, pruned scan) is real; the codec is not."""
-    n_frames = F.floor(F.length("html") / frame_bytes).cast("int")
-    idx = F.explode(
-        F.filter(
-            F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0))),
-            lambda i: i % every == 0,
-        )
-    )
-    return (
-        pages.select("url", "html", n_frames.alias("n_frames"))
-        .filter(F.col("n_frames") > 0)
-        .select("url", "html", idx.alias("frame_idx"))
-        .select(
-            "url",
-            F.col("frame_idx").cast("long").alias("frame_idx"),
-            F.md5(
-                F.expr(f"substring(html, frame_idx * {frame_bytes} + 1, {frame_bytes})")
-            ).alias("frame_digest"),
-        )
-    )
-
-
-def decode_image(pages: DataFrame) -> DataFrame:
-    """STUB — pixel decode requires an image codec not present in this
-    container.  The Spark-side contract (schema, batching, pruning) is
-    final; only the body raises."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "decode_image needs PIL; container has no image codecs. "
-            "Schema contract: (url string, width int, height int, mode string)"
-        ) from exc
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:  # pragma: no cover
-        import io
-
-        from PIL import Image
-
-        for pdf in batches:
-            out = {"url": [], "width": [], "height": [], "mode": []}
-            for url, raw in zip(pdf["url"], pdf["html"]):
-                img = Image.open(io.BytesIO(raw))
-                out["url"].append(url)
-                out["width"].append(img.width)
-                out["height"].append(img.height)
-                out["mode"].append(img.mode)
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "html").mapInPandas(
-        decode, schema="url string, width int, height int, mode string"
     )

@@ -2,7 +2,7 @@
 whose GRADIENT DESCENT runs as Spark aggregations.
 
 The rule batteries (`text_quality.gopher_quality`) and the LM scorer
-(`lm_quality.lm_score`) cover the hand-written end of corpus
+(`lm_quality.lm_score_exact`) cover the hand-written end of corpus
 filtering; production LLM pipelines additionally run a TRAINED
 classifier (CCNet / fasttext-style: hashed word n-grams -> linear
 score) whose supervision is "looks like the curated corpus" vs
@@ -42,7 +42,7 @@ accident.  Gradient-wise it is squared-loss-with-saturation — the
 classical "robust linear probit"; on the margins this model sees it
 is within quantization of the logistic.
 
-Inference (`quality_clf_score`) is the lm_score plan shape: one
+Inference (`quality_clf_score`) is the lm_score_exact plan shape: one
 generator projection builds the hashed (doc_id, bucket) stream, one
 broadcast join attaches the D weights, one groupBy(doc_id) sums —
 the only corpus-wide exchange is on doc_id and AQE coalesces it.
@@ -326,7 +326,7 @@ def default_quality_clf() -> QualityClassifier:
 # --------------------------------------------------------------------------
 
 def quality_clf_score(docs: DataFrame, model: QualityClassifier) -> DataFrame:
-    """(doc_id, score_q, logit, keep) — the lm_score plan shape: one
+    """(doc_id, score_q, logit, keep) — the lm_score_exact plan shape: one
     generator projection, one broadcast join, one groupBy(doc_id).
     score_q is exact BIGINT; logit = score_q / Q is one IEEE division
     (the DuckDB oracle replays both)."""

@@ -57,7 +57,7 @@ from __future__ import annotations
 
 from typing import List
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Verb-pattern relation typing — a deterministic classification of the
@@ -334,80 +334,3 @@ def relations_from_counts(rel: DataFrame) -> DataFrame:
         "subj", "pred", "obj", f"{REL_TYPE} AS rel_type",
         "n", "pair_n", f"{_NPMI} AS npmi",
     )
-
-
-def embedding_tuples(
-    rel: DataFrame, n_negatives: int = 4
-) -> DataFrame:
-    """KG-embedding training export (TransE-family convention): one row
-    per (positive edge x negative sample) — (subj, pred, obj, neg_obj,
-    j) — with DETERMINISTIC, FILTERED negative sampling: negative j of
-    an edge is the entity whose dense vocabulary id is
-    md5(subj|pred|obj|j) % |V| (the repo's cross-engine hex-prefix
-    hash, so the export is bit-reproducible and SQL-twinnable), and
-    candidates that happen to be true positives for (subj, pred) are
-    dropped rather than resampled (the published 'filtered' setting —
-    some edges ship fewer than ``n_negatives`` rows; a training loop
-    that needs exact counts oversamples j and truncates).
-
-    Scale shape: everything is ENTITY-GRAPH sized.  The dense
-    vocabulary id is a row_number over the globally-sorted entity set
-    — a single-task sort of a vocab-sized frame (the canonical_map
-    memo caveat class), broadcast back for the negative lookup; the
-    positives anti-join is the only graph shuffle.  Corpus-scale data
-    never enters: the deduped edge set is eagerly materialized
-    (localCheckpoint) because FOUR branches consume it (the entity
-    self-union, the candidate explode, the positives filter, plus the
-    vocab count action) — the fan-out discipline, and it also cuts the
-    caller's UDF lineage when ``rel`` is the live stage-4b stream."""
-    if n_negatives < 1:
-        # F.sequence(0, n-1) would DESCEND for n_negatives=0 (Spark's
-        # default step is -1 when start > stop), silently emitting
-        # j in {0, -1} instead of nothing
-        raise ValueError(f"n_negatives must be >= 1, got {n_negatives}")
-    edges = rel.select("subj", "pred", "obj").distinct().localCheckpoint()
-    ents = (
-        edges.select(F.col("subj").alias("e"))
-        .unionByName(edges.select(F.col("obj").alias("e")))
-        .distinct()
-    )
-    w = Window.orderBy("e")  # vocab-sized single-task sort, documented
-    vocab = ents.withColumn("eid", F.row_number().over(w) - 1)
-    n_ents = vocab.count()
-    cand = (
-        edges.select(
-            "*",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(n_negatives - 1))
-            ).alias("j"),
-        )
-        .withColumn(
-            "neg_eid",
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "\x1f", "subj", "pred", "obj",
-                                F.col("j").cast("string"),
-                            )
-                        ),
-                        1, 15,
-                    ),
-                    16, 10,
-                ).cast("long"),
-                F.lit(n_ents),
-            ),
-        )
-    )
-    with_neg = (
-        cand.join(F.broadcast(vocab), cand.neg_eid == vocab.eid)
-        .select("subj", "pred", "obj", F.col("e").alias("neg_obj"), "j")
-    )
-    # a USING-list join reorders columns (join keys first) — re-project
-    # so the export schema is stable
-    return with_neg.join(
-        edges.select("subj", "pred", F.col("obj").alias("neg_obj")),
-        ["subj", "pred", "neg_obj"],
-        "left_anti",
-    ).select("subj", "pred", "obj", "neg_obj", "j")

@@ -9,17 +9,15 @@ needs reduce to hash-threshold selection: a doc is kept iff
 sampling is a pushed-down filter (no shuffle, no driver RNG, stable
 under repartitioning), and disjoint seeds give independent samples.
 
-  * ``hash_sample``      — Bernoulli(rate) subset, exact reproducibility
-  * ``mixture_sample``   — per-bucket rates (the data-mixing shape);
-    rates > 1 duplicate docs (epoch oversampling) with a replica index
-    so downstream shuffles see distinct rows
-  * ``split_weighted``   — disjoint train/val/test by hash range (the
-    same doc can never land in two phases, regardless of executor count)
+``mixture_sample`` applies per-bucket rates (the data-mixing shape);
+rates > 1 duplicate docs (epoch oversampling) with a replica index so
+downstream shuffles see distinct rows.  A single bucket at rate <= 1 is
+a plain Bernoulli(rate) subset.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Sequence, Tuple
+from typing import Dict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,14 +39,6 @@ def _u(df_col, seed: int, hash_fn: str = "xxhash64"):
             F.conv(F.substring(h, 1, 7), 16, 10).cast("bigint"), F.lit(_M)
         )
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
-def hash_sample(df: DataFrame, rate: float, seed: int = 1,
-                id_col: str = "doc_id", hash_fn: str = "xxhash64") -> DataFrame:
-    """Keep each row with probability ``rate``, deterministically."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0,1], got {rate}")
-    return df.filter(_u(F.col(id_col), seed, hash_fn) < int(rate * _M))
 
 
 def mixture_sample(df: DataFrame, rates: Dict[str, float],
@@ -89,22 +79,3 @@ def mixture_sample(df: DataFrame, rates: Dict[str, float],
         .select("*", F.explode(replicas).alias("replica"))
         .drop("_n")
     )
-
-
-def split_weighted(df: DataFrame, weights: Sequence[float], seed: int = 1,
-                   id_col: str = "doc_id",
-                   hash_fn: str = "xxhash64") -> Tuple[DataFrame, ...]:
-    """Disjoint hash-range splits with the given weights (sum <= 1;
-    any remainder is simply unassigned).  Unlike randomSplit, the
-    assignment is a pure function of (id, seed): stable across reruns,
-    partitionings, and Spark versions."""
-    if any(w < 0 for w in weights) or sum(weights) > 1 + 1e-9:
-        raise ValueError(f"bad weights {weights}")
-    u = _u(F.col(id_col), seed, hash_fn)
-    outs = []
-    lo = 0
-    for w in weights:
-        hi = lo + int(w * _M)
-        outs.append(df.filter((u >= lo) & (u < hi)))
-        lo = hi
-    return tuple(outs)

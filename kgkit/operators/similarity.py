@@ -103,61 +103,6 @@ def lsh_topk(
     )
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 3,
-    n_cells: int = 8,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF-style ANN: coarse quantizer + in-cell exact search.
-
-    Centroids are the ``n_cells`` lowest-id corpus vectors (deterministic
-    seeding; ``ivf_kmeans_topk`` below is the Lloyd-refined variant).  Every corpus vector is assigned to its max-cosine
-    centroid (a broadcast nested-loop over n_cells rows — linear, narrow);
-    each query probes its ``n_probe`` closest cells and scores exactly
-    within them.  Work drops by ~n_cells/n_probe versus brute force; the
-    cell join is an equi-join keyed by cell id."""
-    cents = (
-        corpus.orderBy("neighbor_id").limit(n_cells)
-        .select(
-            F.col("neighbor_id").alias("cell"),
-            F.col("embedding").alias("cell_emb"),
-        )
-    )
-
-    def assign(df: DataFrame, id_col: str, emb_col: str, probes: int) -> DataFrame:
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            id_col, emb_col, "cell",
-            cosine(F.col(emb_col), F.col("cell_emb")).alias("ccos"),
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("ccos"), F.asc("cell"))
-        return (
-            scored.withColumn("crnk", F.row_number().over(w))
-            .filter(F.col("crnk") <= probes)
-            .select(id_col, emb_col, "cell")
-        )
-
-    q = assign(
-        queries.select("query_id", F.col("embedding").alias("qe")),
-        "query_id", "qe", n_probe,
-    )
-    c = assign(
-        corpus.select("neighbor_id", F.col("embedding").alias("ce")),
-        "neighbor_id", "ce", 1,
-    )
-    scored = q.join(c, "cell").select(
-        "query_id", "neighbor_id",
-        F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("cos"),
-    ).groupBy("query_id", "neighbor_id").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.999,
@@ -310,8 +255,8 @@ def ivf_kmeans_topk(
     n_probe: int = 2,
     iters: int = 2,
 ) -> DataFrame:
-    """IVF ANN with Lloyd-refined centroids (vs ivf_topk's seed-only
-    quantizer): corpus assigned to its best cell, queries probe
+    """IVF ANN with Lloyd-refined centroids (``kmeans_centroids``):
+    corpus assigned to its best cell, queries probe
     ``n_probe`` cells, exact cosine on the ORIGINAL float vectors inside
     the probed cells only."""
     cents = kmeans_centroids(corpus, n_cells, iters)

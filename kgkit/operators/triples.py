@@ -132,31 +132,3 @@ def salted_entity_counts(triples: DataFrame, n_salts: int = 16) -> DataFrame:
         .agg(F.sum("c").alias("n_triples"))
         .orderBy(F.desc("n_triples"), F.asc("obj"))
     )
-
-
-def triples_diff(
-    old: DataFrame, new: DataFrame, keys=("subj", "pred", "obj")
-) -> DataFrame:
-    """Snapshot delta — what a recrawl changed in the graph.
-
-    (op, *keys) with op in {'added', 'removed'}: SET semantics over the
-    key columns (a triple asserted by many pages is one fact; its
-    provenance rows collapse before comparing, so a fact only appears
-    here when it enters or leaves the graph, not when its support
-    moves between pages).  Two left-anti joins over the deduped key
-    streams — narrow projections, map-side-combined distincts, the
-    same exchange budget as one join; at a url-bucketed store both
-    sides prune to touched buckets.  Composes with the recrawl
-    stream's latest-version views (tests/test_kg_stream.py): the diff
-    of ``triples()`` across a stream prefix IS the recrawl's semantic
-    delta."""
-    ks = list(keys)
-    o = old.select(*ks).distinct()
-    n = new.select(*ks).distinct()
-    return (
-        n.join(o, ks, "left_anti").withColumn("op", F.lit("added"))
-        .unionByName(
-            o.join(n, ks, "left_anti").withColumn("op", F.lit("removed"))
-        )
-        .select("op", *ks)
-    )

@@ -10,10 +10,9 @@ twin ``canonicalize_url`` is the unit-testable spec.
 
 ``RobotsRules`` parses robots.txt bodies (the subset every crawler
 implements: User-agent groups, Allow/Disallow with longest-match
-precedence, '*' wildcards, '$' anchors) and ``sitemap_locs_col``
-extracts <loc> entries from sitemap XML — both operate on text already
-fetched into a DataFrame column (fetching itself is env-blocked, like
-S5).
+precedence, '*' wildcards, '$' anchors) into the host rule table that
+``robots_apply`` evaluates over a url column; it works on bodies
+already fetched (kgkit fetches nothing, like S5).
 
 These are registry-slot-free by design: the driver's correctness gate
 caps at 50 queries (kgkit/queries.py), so this family is pinned by
@@ -211,10 +210,6 @@ class RobotsRules:
         return best[1]
 
 
-def robots_allowed(body: str, path: str, user_agent: str = "*") -> bool:
-    return RobotsRules(body, user_agent).allowed(path)
-
-
 def robots_rules_df(spark, robots_bodies: Dict[str, str],
                     user_agent: str = "*"):
     """{host: robots.txt body} -> (host, allow, plen, rx) rule table.
@@ -373,17 +368,3 @@ def robots_rules_values_sql(user_agent: str = "*") -> str:
                 f"('{host}', {'TRUE' if allow else 'FALSE'}, {len(pat)}, '{rx}')"
             )
     return "(VALUES " + ", ".join(rows) + ")"
-
-
-# ---------------------------------------------------------------------------
-# sitemap extraction
-# ---------------------------------------------------------------------------
-
-def sitemap_locs_col(xml: Column) -> Column:
-    """array<string> of <loc> URLs in a sitemap body — one JVM regexp
-    pass (sitemaps are machine-generated; full XML parsing is not
-    needed to lift the loc list)."""
-    return F.transform(
-        F.regexp_extract_all(xml, F.lit(r"<loc>\s*([^<]*?)\s*</loc>"), F.lit(1)),
-        lambda s: F.trim(s),
-    )

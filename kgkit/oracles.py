@@ -18,8 +18,9 @@ from kgkit.sources.alias_dict import alias_values_sql, edges_values_sql
 
 def _chunks_sql(src: str) -> str:
     """Strict-IOB2 chunk extraction over a (doc_id, pos, tag) relation —
-    the SQL twin of kgkit.metrics.ner_metrics.extract_chunks: sessionize
-    on broken continuations, keep runs that start with B-."""
+    the SQL twin of the strict chunk runs in
+    kgkit.metrics.ner_metrics.entity_class_counts: sessionize on broken
+    continuations, keep runs that start with B-."""
     return f"""
         SELECT doc_id, cls,
                min(pos) AS start_pos, max(pos) AS end_pos

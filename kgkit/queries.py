@@ -960,11 +960,10 @@ def _q1_q(spark, sf_dir):
 #   quality_score           -> quality_gopher (r5)
 #   doc_fingerprint         -> substring_dup_winnow (r5, full winnowing)
 #   dedup_simhash           -> MinHash/jaccard/winnow family (r5;
-#                              simhash op + tests remain in dedup.py)
+#                              the op is deleted)
 #   media_frame_sample      -> media_byte_histogram (r5)
-#   media_byte_histogram    -> media_stats (r5; histogram/frame-sample/
-#                              simhash ops keep pandas-twin coverage in
-#                              tests/test_multimodal.py)
+#   media_byte_histogram    -> media_stats (r5; the histogram and
+#                              frame-sample ops are deleted)
 #   ann_topk_ivf            -> ann_topk_ivf_kmeans (r5, real quantizer)
 #   asr_abidance            -> asr_corrected_bio (r5; the aggregate is
 #                              a projection of the full stream)

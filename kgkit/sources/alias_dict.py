@@ -2,8 +2,8 @@
 
 Single source of truth for three consumers that must agree exactly:
   * the gazetteer tagger (kgkit/ner_core/tagger.py DEFAULT_GAZETTEER)
-  * the Spark broadcast join in kgkit/operators/linking.py (SURVEY §2.9 J1)
-  * the DuckDB oracle SQL in __spark_entry__.py (exposed as VALUES literals)
+  * the Spark map-literal lookup in kgkit/operators/linking.py (SURVEY §2.9 J1)
+  * the DuckDB oracle SQL in kgkit/oracles.py (exposed as VALUES literals)
 
 Shape per FIXTURES.md §7: (alias, entity_id, prior).  'merge' is
 deliberately ambiguous (two candidate entities) to exercise the
@@ -40,10 +40,10 @@ SYNONYM_EDGES: List[Tuple[str, str]] = [
 
 
 def alias_df(spark):
-    """Alias dictionary as a (small, broadcastable) Spark DataFrame —
-    a JVM VALUES LocalRelation (kgkit.sources.localrel): the dictionary
-    sits on the build side of every linked-family query, and a
-    createDataFrame fixture re-pays a pickled-RDD scan per query."""
+    """Alias dictionary as a Spark DataFrame — a JVM VALUES
+    LocalRelation (kgkit.sources.localrel): canonical_map reads the
+    entity list from it, and a createDataFrame fixture would re-pay a
+    pickled-RDD scan per call."""
     from kgkit.sources.localrel import values_df
 
     return values_df(

@@ -1,14 +1,11 @@
-"""Annotated-corpus formats: pretokenized CSV and standard JSONL, plus
-the prediction-file sink.
+"""The prediction-file sink (SURVEY §2.2 K3): Model.predict_on_file
+(nerblackbox api/model.py:282-307), distributed.
 
-Reference parity (SURVEY §2.1 S1/S2, §2.2 K1/K2):
-  * pretokenized CSV  — headerless ``tags \\t text``
-    (nerblackbox csv_reader.py:105-122, base_formatter.py:215-236)
-  * standard JSONL    — {"text", "tags": [{char_start, char_end, token,
-    tag}]} (data_preprocessor.py:318-345)
-
-The converters are column expressions over nested arrays — ``struct``
-/ ``collect_list`` — no UDFs, so they run at any scale.
+Predictions are written in the reference's standard JSONL shape —
+{"text", "tags": [{char_start, char_end, token, tag}]}
+(data_preprocessor.py:318-345) — built with ``struct`` /
+``collect_list`` column expressions, no UDFs, so the sink runs at any
+scale.
 """
 
 from __future__ import annotations
@@ -23,38 +20,6 @@ TAG_STRUCT = T.StructType([
     T.StructField("token", T.StringType()),
     T.StructField("tag", T.StringType()),
 ])
-
-JSONL_SCHEMA = T.StructType([
-    T.StructField("text", T.StringType()),
-    T.StructField("tags", T.ArrayType(TAG_STRUCT)),
-])
-
-
-# ---------------------------------------------------------------------------
-# S1/K1 — pretokenized CSV (tags \t text, headerless)
-# ---------------------------------------------------------------------------
-
-def read_pretokenized_csv(spark, path: str) -> DataFrame:
-    return (
-        spark.read.csv(path, sep="\t", header=False,
-                       schema="tags string, text string")
-    )
-
-
-def write_pretokenized_csv(df: DataFrame, path: str) -> None:
-    df.select("tags", "text").write.mode("overwrite").csv(path, sep="\t")
-
-
-# ---------------------------------------------------------------------------
-# S2/K2 — standard JSONL
-# ---------------------------------------------------------------------------
-
-def read_standard_jsonl(spark, path: str) -> DataFrame:
-    return spark.read.json(path, schema=JSONL_SCHEMA)
-
-
-def write_standard_jsonl(df: DataFrame, path: str) -> None:
-    df.select("text", "tags").write.mode("overwrite").json(path)
 
 
 def write_predictions_jsonl(pages: DataFrame, mentions: DataFrame, path: str) -> None:

@@ -1,5 +1,5 @@
-"""As-of join: pandas merge_asof differential, plain==bucketed
-equality under a hot key, tolerance, tie handling, and the
+"""As-of join: pandas merge_asof differential (also under a hot key
+with time-bucketed timestamps), tolerance, tie handling, and the
 single-exchange plan pin."""
 
 from __future__ import annotations
@@ -106,40 +106,44 @@ class TestAsofJoin:
 
     @pytest.mark.parametrize("bucket_s", [64, 1 << 13, 1 << 20])
     def test_bucketed_equals_plain_hot_key(self, spark, bucket_s):
-        from kgkit.operators.asof import asof_join, asof_join_bucketed
+        """A hot key with timestamps floored to ``bucket_s``-wide
+        buckets: coarser buckets pile more right rows onto one ts (at
+        2^20 every key is one tie), so the max-payload tie-break carries
+        more of the answer.  Matches pandas merge_asof on the same
+        bucketed streams."""
+        from kgkit.operators.asof import asof_join
 
         left, right = _synth(hot_frac=0.8)
+        left = [(i, k, ts // bucket_s * bucket_s) for i, k, ts in left]
+        right = [(j, k, ts // bucket_s * bucket_s, w)
+                 for j, k, ts, w in right]
         ldf = _mk(spark, left, "lid long, k long, ts long")
         rdf = _mk(spark, right, "rid long, k long, ts long, w double")
-        plain = {(r["lid"], r["r_rid"], r["r_ts"], r["r_w"])
-                 for r in asof_join(ldf, rdf, on="k").collect()}
-        bucketed = {(r["lid"], r["r_rid"], r["r_ts"], r["r_w"])
-                    for r in asof_join_bucketed(
-                        ldf, rdf, on="k", bucket_s=bucket_s).collect()}
-        assert bucketed == plain
+        got = {r["lid"]: r["r_rid"]
+               for r in asof_join(ldf, rdf, on="k").collect()}
+        assert got == _pandas_asof(left, right)
 
     def test_bucketed_tolerance_equals_plain(self, spark):
-        from kgkit.operators.asof import asof_join, asof_join_bucketed
+        """Tolerance under a half-hot key on 1024-wide timestamp
+        buckets, against pandas merge_asof with the same tolerance."""
+        from kgkit.operators.asof import asof_join
 
         left, right = _synth(hot_frac=0.5)
+        left = [(i, k, ts // 1024 * 1024) for i, k, ts in left]
+        right = [(j, k, ts // 1024 * 1024, w) for j, k, ts, w in right]
         ldf = _mk(spark, left, "lid long, k long, ts long")
         rdf = _mk(spark, right, "rid long, k long, ts long, w double")
-        plain = {(r["lid"], r["r_rid"])
-                 for r in asof_join(ldf, rdf, on="k",
-                                    tolerance_s=3000).collect()}
-        bucketed = {(r["lid"], r["r_rid"])
-                    for r in asof_join_bucketed(
-                        ldf, rdf, on="k", bucket_s=1024,
-                        tolerance_s=3000).collect()}
-        assert bucketed == plain
+        got = {r["lid"]: r["r_rid"]
+               for r in asof_join(ldf, rdf, on="k",
+                                  tolerance_s=3000).collect()}
+        assert got == _pandas_asof(left, right, tolerance=3000)
 
     def test_bucketed_subsecond_timestamps_equal_plain(self, spark):
         """Two right rows in the same integer second but different
-        sub-second instants: the carry-in summary must order by the
-        FULL-precision ts, not the bucket epoch (regression — the
-        epoch-ordered summary picked the earlier row by payload
-        tie-break)."""
-        from kgkit.operators.asof import asof_join, asof_join_bucketed
+        sub-second instants: the join must order by the FULL-precision
+        ts, not the epoch second (ordering by the second would leave a
+        tie that the payload tie-break resolves to the earlier row)."""
+        from kgkit.operators.asof import asof_join
 
         ev = spark.createDataFrame(
             [(1, 0, "2024-01-01 00:01:00.500")], "lid long, k long, s string"
@@ -149,22 +153,17 @@ class TestAsofJoin:
              (3, 0, "2024-01-01 00:00:00.800")],
             "rid long, k long, s string",
         ).select("rid", "k", F.col("s").cast("timestamp").alias("ts"))
-        plain = asof_join(ev, st, on="k").collect()[0]["r_rid"]
-        bucketed = asof_join_bucketed(
-            ev, st, on="k", bucket_s=30
-        ).collect()[0]["r_rid"]
-        assert plain == bucketed == 3
+        assert asof_join(ev, st, on="k").collect()[0]["r_rid"] == 3
 
     def test_empty_sides(self, spark):
         """No right rows -> every left row survives unmatched; no left
         rows -> empty output with the full joined schema."""
-        from kgkit.operators.asof import asof_join, asof_join_bucketed
+        from kgkit.operators.asof import asof_join
 
         ldf = _mk(spark, [(1, 0, 100)], "lid long, k long, ts long")
         rdf = _mk(spark, [], "rid long, k long, ts long, w double")
-        for fn in (asof_join, asof_join_bucketed):
-            rows = fn(ldf, rdf, on="k").collect()
-            assert [(r["lid"], r["r_rid"]) for r in rows] == [(1, None)]
+        rows = asof_join(ldf, rdf, on="k").collect()
+        assert [(r["lid"], r["r_rid"]) for r in rows] == [(1, None)]
         l0 = _mk(spark, [], "lid long, k long, ts long")
         r1 = _mk(spark, [(9, 0, 50, 1.0)], "rid long, k long, ts long, w double")
         out = asof_join(l0, r1, on="k")

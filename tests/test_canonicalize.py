@@ -1,6 +1,7 @@
-"""Connected components (J3): the pointer-jumping ('doubling') variant
-must agree with plain propagation and reach the fixpoint in O(log n)
-rounds on a chain — the shape where plain propagation needs n rounds."""
+"""Connected components (J3): the distributed fixpoint must agree with
+the driver-side union-find and, once pointer jumping starts, reach the
+fixpoint in O(log n) rounds on a chain — the shape where plain
+propagation needs n rounds."""
 
 from __future__ import annotations
 
@@ -15,32 +16,43 @@ def _edges(spark, pairs):
 
 class TestVariantsAgree:
     def test_doubling_equals_propagation(self, spark):
+        """Once pointer jumping (doubling) starts, the labels must still
+        be the plain-propagation fixpoint: every node labelled with its
+        component's minimum key, computed here by a python flood fill."""
         from kgkit.operators.canonicalize import connected_components
 
-        # two components + a 2-cycle + an isolated edge, shuffled order
-        pairs = [(5, 3), (3, 9), (12, 14), (14, 12), (7, 20), (20, 21)]
-        want = {
-            r["entity_id"]: r["canonical_id"]
-            for r in connected_components(
-                _edges(spark, pairs), variant="propagation", local_threshold=0
-            ).collect()
-        }
+        # a 30-node chain in scrambled id order (deep enough that the
+        # jump rounds run), two components + a 2-cycle + an isolated
+        # edge, edges in shuffled order
+        chain = [(i * 37) % 31 + 100 for i in range(1, 31)]
+        pairs = list(zip(chain, chain[1:])) + [
+            (5, 3), (3, 9), (12, 14), (14, 12), (7, 20), (20, 21)]
+        pairs = pairs[::2] + pairs[1::2]
+        adj = {}
+        for a, b in pairs:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        want = {}
+        for v in adj:
+            if f"Q{v}" in want:
+                continue
+            comp, todo = {v}, [v]
+            while todo:
+                for w in adj[todo.pop()] - comp:
+                    comp.add(w)
+                    todo.append(w)
+            for w in comp:
+                want[f"Q{w}"] = f"Q{min(comp)}"
+        stats = {}
         got = {
             r["entity_id"]: r["canonical_id"]
             for r in connected_components(
-                _edges(spark, pairs), variant="doubling", local_threshold=0
+                _edges(spark, pairs), stats=stats, local_threshold=0
             ).collect()
         }
         assert got == want
+        assert stats["rounds"] > 3, stats  # the jump rounds did run
         assert got["Q9"] == "Q3" and got["Q14"] == "Q12" and got["Q21"] == "Q7"
-
-    def test_unknown_variant_rejected(self, spark):
-        import pytest
-
-        from kgkit.operators.canonicalize import connected_components
-
-        with pytest.raises(ValueError, match="variant"):
-            connected_components(_edges(spark, [(1, 2)]), variant="magic")
 
 
 class TestChainConvergence:
@@ -51,7 +63,7 @@ class TestChainConvergence:
         stats = {}
         comp = connected_components(
             _edges(spark, [(i, i + 1) for i in range(1, n)]),
-            variant="doubling", stats=stats, local_threshold=0,
+            stats=stats, local_threshold=0,
         )
         sample = {
             r["entity_id"]: r["canonical_id"]
@@ -60,22 +72,23 @@ class TestChainConvergence:
             ).collect()
         }
         assert set(sample.values()) == {"Q1"}, sample
-        # distance to the minimum shrinks multiplicatively per round:
-        # the fixpoint must land within log2(n) + a small constant
-        assert stats["rounds"] <= math.ceil(math.log2(n)) + 6, stats
+        # distance to the minimum shrinks multiplicatively per round
+        # once jumping starts (after 3 propagation rounds): the fixpoint
+        # must land within 3 + log2(n) + a small constant
+        assert stats["rounds"] <= 3 + math.ceil(math.log2(n)) + 6, stats
 
 
 class TestAdaptiveVariant:
     def test_adaptive_matches_and_converges_fast_on_chain(self, spark):
-        """Default variant: a 2k chain still lands in jump_after +
-        O(log n) rounds, and components match propagation."""
+        """A 2k chain still lands in 3 propagation rounds +
+        O(log n) jumping rounds."""
         from kgkit.operators.canonicalize import connected_components
 
         n = 2_000
         stats = {}
         comp = connected_components(
             _edges(spark, [(i, i + 1) for i in range(1, n)]),
-            variant="adaptive", stats=stats, local_threshold=0,
+            stats=stats, local_threshold=0,
         )
         got = {r["entity_id"]: r["canonical_id"]
                for r in comp.filter(f"entity_id in ('Q{n}')").collect()}
@@ -83,18 +96,17 @@ class TestAdaptiveVariant:
         assert stats["rounds"] <= 3 + math.ceil(math.log2(n)) + 6, stats
 
     def test_adaptive_shallow_graph_pays_no_jump(self, spark):
-        """A graph that converges within jump_after rounds runs as plain
-        propagation (same round count)."""
+        """A graph that converges within the 3 propagation rounds never
+        starts jumping, and matches the driver-side union-find."""
         from kgkit.operators.canonicalize import connected_components
 
         pairs = [(5, 3), (3, 9), (12, 14)]
-        sa, sp = {}, {}
-        a = connected_components(_edges(spark, pairs), variant="adaptive",
-                                 stats=sa, local_threshold=0).collect()
-        p = connected_components(_edges(spark, pairs), variant="propagation",
-                                 stats=sp, local_threshold=0).collect()
-        assert {tuple(r) for r in a} == {tuple(r) for r in p}
-        assert sa["rounds"] == sp["rounds"] <= 3
+        sa = {}
+        a = connected_components(_edges(spark, pairs), stats=sa,
+                                 local_threshold=0).collect()
+        local = connected_components(_edges(spark, pairs)).collect()
+        assert {tuple(r) for r in a} == {tuple(r) for r in local}
+        assert sa["rounds"] <= 3
 
 
 class TestLocalPath:

@@ -1,6 +1,7 @@
 """Triangle counting / graph stats: python-twin differential on LCG
 graphs, known closed-form graphs, hub-skew sanity, and the
-no-cartesian plan pin for the degree-oriented formulation."""
+no-cartesian plan pin for the degree-oriented formulation.  Per-node
+counts come from the triangle pass that ``graph_stats`` sums."""
 
 from __future__ import annotations
 
@@ -12,6 +13,13 @@ from pyspark.sql import functions as F
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
+
+
+def _triangle_count(edges):
+    """(node, n_triangles) over the undirected simple graph."""
+    from kgkit.operators.linkgraph import _triangles_from_und, _undirected_simple
+
+    return _triangles_from_und(_undirected_simple(edges))
 
 
 def _py_triangles(pairs):
@@ -48,48 +56,44 @@ def _lcg_graph(n_nodes=40, n_edges=500, seed=3):
 class TestTriangles:
     @pytest.mark.parametrize("seed", [3, 11, 29])
     def test_matches_python_twin(self, spark, seed):
-        from kgkit.operators.linkgraph import triangle_count
-
         pairs = _lcg_graph(seed=seed)
         got = {r["node"]: r["n_triangles"]
-               for r in triangle_count(_edges(spark, pairs)).collect()}
+               for r in _triangle_count(_edges(spark, pairs)).collect()}
         assert got == _py_triangles(pairs)
 
     def test_complete_graph_and_cycle(self, spark):
-        from kgkit.operators.linkgraph import graph_stats, triangle_count
+        from kgkit.operators.linkgraph import graph_stats
 
         k5 = _edges(spark, [(f"v{a}", f"v{b}")
                             for a, b in combinations(range(5), 2)])
         got = {r["node"]: r["n_triangles"]
-               for r in triangle_count(k5).collect()}
+               for r in _triangle_count(k5).collect()}
         assert got == {f"v{i}": 6 for i in range(5)}  # C(4,2) per node
         st = graph_stats(k5)
         assert st == {"nodes": 5, "edges": 10, "triangles": 10,
                       "wedges": 30, "global_clustering": 1.0}
 
         c6 = _edges(spark, [(f"c{i}", f"c{(i + 1) % 6}") for i in range(6)])
-        assert triangle_count(c6).count() == 0
+        assert _triangle_count(c6).count() == 0
         assert graph_stats(c6)["triangles"] == 0
 
     def test_direction_duplicates_selfloops_collapse(self, spark):
-        from kgkit.operators.linkgraph import triangle_count
-
         messy = _edges(spark, [
             ("a", "b"), ("b", "a"), ("a", "b"),      # dup + reversed
             ("b", "c"), ("c", "a"), ("a", "a"),      # self-loop dropped
         ])
         got = {r["node"]: r["n_triangles"]
-               for r in triangle_count(messy).collect()}
+               for r in _triangle_count(messy).collect()}
         assert got == {"a": 1, "b": 1, "c": 1}
 
     def test_hub_star_makes_no_triangles(self, spark):
         """A pure hub (celebrity) has quadratic wedge potential but
         zero triangles — the degree orientation builds wedges at the
         LEAF ends, so nothing quadratic materializes at the hub."""
-        from kgkit.operators.linkgraph import graph_stats, triangle_count
+        from kgkit.operators.linkgraph import graph_stats
 
         star = _edges(spark, [("hub", f"leaf{i}") for i in range(200)])
-        assert triangle_count(star).count() == 0
+        assert _triangle_count(star).count() == 0
         st = graph_stats(star)
         assert st["wedges"] == 200 * 199 // 2 and st["triangles"] == 0
 
@@ -105,10 +109,8 @@ class TestTriangles:
         }
 
     def test_plan_has_no_cartesian_or_window(self, spark):
-        from kgkit.operators.linkgraph import triangle_count
-
         plan = (
-            triangle_count(_edges(spark, _lcg_graph()))
+            _triangle_count(_edges(spark, _lcg_graph()))
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "CartesianProduct" not in plan and "Window" not in plan

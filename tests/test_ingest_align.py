@@ -1,134 +1,12 @@
-"""Round-2 ingestion + alignment operators: S4 HF layouts, T2 label
-alignment, X2 exact Mersenne shuffle, K4 resplit."""
+"""Round-2 ingestion operators: S4 HF layouts."""
 
 from __future__ import annotations
 
-import random
-
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from kgkit.functions.tags import (
-    SEED_SHUFFLE,
-    mersenne_shuffle,
-    resplit_train_val_test,
-    split_off_validation_set,
-)
-from kgkit.ner_core.label_alignment import encode_tags, offset_mappings
-from kgkit.ner_core.wordpiece import WordPieceTokenizer, default_tokenizer
 from kgkit.sources.hf_datasets import (
     ENT_CLASS_LABELS,
     ingest_charspan,
     ingest_pretokenized,
 )
-
-
-class TestEncodeTags:
-    """Golden cases lifted from the reference's own expectations
-    (nerblackbox/tests/test_data_preprocessing.py:434-447, case 1b)."""
-
-    # offsets of [CLS] arbetsförmedl ##ingen ai - center finns i
-    # stockholm [SEP] [PAD] [PAD] under the HF fast tokenizer
-    OFFSETS = [[(0, 0), (0, 13), (13, 18), (0, 2), (2, 3), (3, 9),
-                (0, 5), (0, 1), (0, 9), (0, 0), (0, 0), (0, 0)]]
-    TAG2ID = {"O": 0, "B-ORG": 1, "B-LOC": 2, "I-ORG": 3, "I-LOC": 4}
-    TAGS = ["B-ORG", "I-ORG", "O", "O", "B-LOC"]
-
-    def test_reference_golden_train(self):
-        got = encode_tags(self.TAGS, self.OFFSETS, self.TAG2ID, predict=False)
-        assert got == [[-100, 1, -100, 3, -100, -100, 0, 0, 2, -100, -100, -100]]
-
-    def test_reference_golden_predict(self):
-        got = encode_tags(self.TAGS, self.OFFSETS, self.TAG2ID, predict=True)
-        assert got == [[0, 1, 0, 3, 0, 0, 0, 0, 2, 0, 0, 0]]
-
-    def test_overflow_slices_consume_tags_in_order(self):
-        offsets = [[(0, 0), (0, 3), (0, 3), (0, 0)],
-                   [(0, 0), (0, 3), (3, 5), (0, 0)]]
-        got = encode_tags(["B-ORG", "O", "B-LOC"], offsets,
-                          self.TAG2ID, predict=False)
-        assert got == [[-100, 1, 0, -100], [-100, 2, -100, -100]]
-
-
-class TestOffsetMappings:
-    def test_aligned_with_encode_words(self):
-        tok = default_tokenizer()
-        words = ["spark", "sparkx", "naïve", "customer"]
-        slices = tok.encode_words(words)
-        offs = offset_mappings(tok, words)
-        assert len(offs) == len(slices)
-        assert [len(o) for o in offs] == [len(s) for s in slices]
-
-    def test_first_subtoken_positions(self):
-        tok = WordPieceTokenizer(max_seq_length=12)
-        offs = offset_mappings(tok, ["spark", "sparkx", "naïve"])[0]
-        # [CLS] spark spark ##x [UNK] [SEP] + pads
-        assert offs[:6] == [(0, 0), (0, 5), (0, 5), (5, 6), (0, 5), (0, 0)]
-        assert all(o == (0, 0) for o in offs[6:])
-
-    def test_encode_tags_over_real_tokenizer(self):
-        tok = WordPieceTokenizer(max_seq_length=12)
-        tag2id = {"O": 0, "B-TECH": 1}
-        got = encode_tags(
-            ["B-TECH", "O", "O"],
-            offset_mappings(tok, ["spark", "sparkx", "naïve"]),
-            tag2id,
-        )
-        assert got == [[-100, 1, 0, -100, 0, -100] + [-100] * 6]
-
-
-class TestMersenneShuffle:
-    def test_seeds_match_reference_constants(self):
-        # base_formatter.py:15-19
-        assert SEED_SHUFFLE == {"train": 4, "val": 5, "test": 6}
-
-    @pytest.mark.parametrize("seed", [4, 5, 6])
-    def test_exact_permutation(self, spark, seed):
-        n = 57
-        df = spark.createDataFrame(
-            [(i, f"s{i}") for i in range(n)], "k int, text string"
-        )
-        out = mersenne_shuffle(df, "k", seed)
-        got = [r["k"] for r in out.orderBy("shuffle_pos").collect()]
-        want = list(range(n))
-        random.Random(seed).shuffle(want)  # the reference's exact call
-        assert got == want
-
-    def test_rows_preserved(self, spark):
-        df = spark.createDataFrame([(i, i * i) for i in range(10)], "k int, v int")
-        out = mersenne_shuffle(df, "k", 4)
-        assert sorted((r["k"], r["v"]) for r in out.collect()) == [
-            (i, i * i) for i in range(10)
-        ]
-
-
-class TestResplit:
-    def _df(self, spark, n=10):
-        return spark.createDataFrame([(i, f"t{i}") for i in range(n)],
-                                     "idx int, text string")
-
-    def test_split_matches_reference_iloc(self, spark):
-        """Twin of base_formatter.py:449-467 run via pandas iloc."""
-        n, vf = 10, 0.3
-        pdf = pd.DataFrame({"idx": range(n), "text": [f"t{i}" for i in range(n)]})
-        split_index = int(len(pdf) * (1 - vf))
-        want_rem = pdf.iloc[:split_index]["idx"].tolist()
-        want_val = pdf.iloc[split_index:]["idx"].tolist()
-
-        rem, val = split_off_validation_set(self._df(spark, n), "idx", vf)
-        assert [r["idx"] for r in rem.orderBy("idx").collect()] == want_rem
-        assert [r["idx"] for r in val.orderBy("idx").collect()] == want_val
-
-    def test_resplit_train_val_test(self, spark):
-        """sic_formatter.py:161-167 composition: test suffix first, then
-        val suffix of the remainder, same fraction twice."""
-        phases = resplit_train_val_test(self._df(spark, 20), "idx", 0.25)
-        got = {p: [r["idx"] for r in d.orderBy("idx").collect()]
-               for p, d in phases.items()}
-        assert got["test"] == list(range(15, 20))
-        assert got["val"] == list(range(11, 15))
-        assert got["train"] == list(range(11))
 
 
 class TestHfIngestUnits:

@@ -321,47 +321,6 @@ class TestAnchorAliases:
         assert got == want
 
 
-class TestMinedAliasLinking:
-    def test_mined_dictionary_feeds_link_mentions(self, spark):
-        """The full KG composition: anchors mined from pages become the
-        linking stage's alias dictionary (aliases_from_anchors), and
-        link_mentions resolves a mention of a mined surface form to the
-        web resource the corpus itself labelled with it."""
-        from kgkit.operators.linking import link_mentions
-        from kgkit.operators.linkgraph import (
-            alias_counts,
-            aliases_from_anchors,
-            anchor_texts,
-            with_anchor_html,
-        )
-
-        docs = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text").limit(40)
-        )
-        mined = aliases_from_anchors(
-            alias_counts(anchor_texts(with_anchor_html(docs)))
-        )
-        # pick a surface with exactly one mined candidate: the link must
-        # land on that resource with its full prior
-        row = (
-            mined.groupBy("alias")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.first("entity_id").alias("e"))
-            .filter("n = 1").orderBy("alias").first()
-        )
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        mentions = spark.createDataFrame(
-            [("doc://0", 0, 0, 5, row["alias"], "ORG"),
-             ("doc://0", 1, 10, 15, "never an anchor text", "ORG")],
-            "url string, mention_id long, char_start long, char_end long, "
-            "surface string, tag string",
-        )
-        out = link_mentions(mentions, emb, aliases=mined).collect()
-        assert len(out) == 1  # the unknown surface is dropped
-        assert out[0]["entity_id"] == row["e"]
-
-
 class TestAuthorityWeightedMixing:
     def test_rank_tiers_drive_mixture_sample(self, spark):
         """The 100-TB curation composition, pinned end to end: host

@@ -3,56 +3,60 @@ distributed join path, and the gated scores broadcast.
 
 The two paths must be observationally identical — same winner, same
 link_score, same tie-breaks — because the strategy switch is a pure
-scale decision (|ambiguous entities|), not a semantic one.
+plan-size decision (|ambiguous entities| x embedding width), not a
+semantic one.
 """
 
 from __future__ import annotations
 
-import pytest
+import contextlib
+
 from pyspark.sql import functions as F
 
+import kgkit.operators.linking as L
 from kgkit.operators.linking import link_mentions
 
+PAGE0 = 20  # page vec_ids start past the dictionary's entity nums
 
-def _synthetic_kb(spark, n_amb_entities=100, n_pages=10, dim=4):
-    """A deliberately LARGE ambiguous alias set: one alias ('acme') with
-    n_amb_entities candidates — the shape that must never be collected
-    to the driver or inlined as plan literals."""
-    aliases = spark.createDataFrame(
-        [("acme", f"Q{100 + i}", 100 + i, round(0.5 + (i % 7) * 0.01, 2))
-         for i in range(n_amb_entities)]
-        + [("solo", "Q7", 7, 0.9)],
-        "alias string, entity_id string, entity_num int, prior double",
-    )
-    # embeddings for pages (vec_id = doc_id) and entities (vec_id =
-    # entity_num); a few entities deliberately have NO embedding (score
-    # must fall back to 0.0 and the tie-break decide)
-    rows = []
-    for vid in list(range(n_pages)) + [100 + i for i in range(n_amb_entities)
-                                       if i % 11 != 3]:
-        rows.append((vid, [float((vid * (j + 3)) % 17) - 8.0
-                           for j in range(dim)]))
+
+def _synthetic_kb(spark, n_pages=10, dim=4):
+    """Mentions of the default dictionary's ambiguous alias ('merge',
+    candidates Q9/Q10, also as 'Merge') and of an unambiguous one
+    ('spark' -> Q1), with embeddings for the pages (vec_id = doc_id)
+    and for entity 9 (vec_id = entity_num).  Entity 10 deliberately has
+    NO embedding: its score falls back to 0.0 and the tie-break
+    decides."""
+    rows = [(vid, [float((vid * (j + 3)) % 17) - 8.0 for j in range(dim)])
+            for vid in [PAGE0 + d for d in range(n_pages)] + [9]]
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     mentions = spark.createDataFrame(
-        [(f"doc://{d}", m, 10 * m, 10 * m + 4, s, "ORG")
+        [(f"doc://{PAGE0 + d}", m, 10 * m, 10 * m + 5, s, "ORG")
          for d in range(n_pages)
-         for m, s in enumerate(["acme", "solo", "Acme"])],
+         for m, s in enumerate(["merge", "spark", "Merge"])],
         "url string, mention_id long, char_start long, char_end long, "
         "surface string, tag string",
     )
-    return mentions, emb, aliases
+    return mentions, emb
+
+
+@contextlib.contextmanager
+def _plan_budget(components):
+    """Lower the literal path's plan budget: over it, link_mentions
+    takes the join path."""
+    old = L._LITERAL_PLAN_BUDGET
+    L._LITERAL_PLAN_BUDGET = components
+    try:
+        yield
+    finally:
+        L._LITERAL_PLAN_BUDGET = old
 
 
 class TestRerankPaths:
     def test_join_path_matches_literal_path(self, spark):
-        mentions, emb, aliases = _synthetic_kb(spark)
-        literal = link_mentions(
-            mentions, emb, aliases, max_literal_amb=1000
-        )
-        joined = link_mentions(
-            mentions, emb, aliases, max_literal_amb=8
-        )
-        key = ["url", "mention_id"]
+        mentions, emb = _synthetic_kb(spark)
+        literal = link_mentions(mentions, emb)
+        with _plan_budget(0):
+            joined = link_mentions(mentions, emb)
         lrows = sorted(literal.collect(), key=lambda r: (r["url"], r["mention_id"]))
         jrows = sorted(joined.collect(), key=lambda r: (r["url"], r["mention_id"]))
         assert len(lrows) == len(jrows) > 0
@@ -60,23 +64,25 @@ class TestRerankPaths:
             assert lr.asDict() == jr.asDict(), (lr, jr)
 
     def test_join_path_has_no_plan_literals(self, spark):
-        """The join path's plan size must not grow with the KB: no
+        """The join path's plan size must not grow with the vectors: no
         per-entity embedding literals, no driver collect of candidates."""
-        mentions, emb, aliases = _synthetic_kb(spark)
-        df = link_mentions(mentions, emb, aliases, max_literal_amb=8)
+        mentions, emb = _synthetic_kb(spark)
+        with _plan_budget(0):
+            df = link_mentions(mentions, emb)
         plan = df._jdf.queryExecution().analyzed().toString()
         # the literal path would inline each entity embedding as an
         # F.array(lit, ...) inside a map_from_entries
         assert "map_from_entries" not in plan
 
     def test_ambiguous_winner_uses_cosine_then_prior(self, spark):
-        mentions, emb, aliases = _synthetic_kb(spark, n_amb_entities=20)
-        out = link_mentions(mentions, emb, aliases, max_literal_amb=8)
-        acme = out.filter(F.col("surface") == "acme").collect()
+        mentions, emb = _synthetic_kb(spark)
+        with _plan_budget(0):
+            out = link_mentions(mentions, emb)
+        acme = out.filter(F.lower("surface") == "merge").collect()
         assert acme and all(r["link_score"] is not None for r in acme)
-        solo = out.filter(F.col("surface") == "solo").collect()
+        solo = out.filter(F.col("surface") == "spark").collect()
         assert solo and all(r["link_score"] is None for r in solo)
-        assert all(r["entity_id"] == "Q7" for r in solo)
+        assert all(r["entity_id"] == "Q1" for r in solo)
 
 
 class TestScoresBroadcastGate:
@@ -109,23 +115,15 @@ class TestLiteralPlanBudget:
         """The literal path's plan literals scale with |amb| x dim; over
         the budget it must hand off to the join path (same results, no
         per-component literals) — the round-2 'dim-4096 plan bloat' nit."""
-        import kgkit.operators.linking as L
-
-        mentions, emb, aliases = _synthetic_kb(
-            spark, n_amb_entities=8, n_pages=4, dim=64
-        )
-        # 8 entities x 64 dims = 512 components; budget of 100 forces
-        # the fallback without needing a slow genuinely-wide fixture
-        old = L._LITERAL_PLAN_BUDGET
-        try:
-            L._LITERAL_PLAN_BUDGET = 100
-            capped = link_mentions(mentions, emb, aliases,
-                                   max_literal_amb=1000)
+        mentions, emb = _synthetic_kb(spark, n_pages=4, dim=64)
+        # 1 fetched entity x 64 dims = 64 components; a budget of 32
+        # forces the fallback without needing a slow genuinely-wide
+        # fixture
+        with _plan_budget(32):
+            capped = link_mentions(mentions, emb)
             plan = capped._jdf.queryExecution().executedPlan().toString()
             assert "map_from_entries" not in plan  # literal-path marker
-        finally:
-            L._LITERAL_PLAN_BUDGET = old
-        uncapped = link_mentions(mentions, emb, aliases, max_literal_amb=1000)
+        uncapped = link_mentions(mentions, emb)
         key = ["url", "mention_id"]
         a = {tuple(r[k] for k in key): (r["entity_id"], r["link_score"])
              for r in capped.collect()}
@@ -141,7 +139,8 @@ class TestRerankMemo:
         another table: two reads of the path hash equal (semanticHash),
         but their input files differ, so the gate probes again and the
         vectors are fetched again."""
-        mentions, _, aliases = _synthetic_kb(spark, n_amb_entities=2, n_pages=8)
+        mentions, _ = _synthetic_kb(spark, n_pages=8)
+        pages = [PAGE0 + d for d in range(8)]
 
         def write(vids, salt, path):
             rows = [(v, [float((v * (j + salt)) % 17) - 8.0 for j in range(4)])
@@ -151,7 +150,7 @@ class TestRerankMemo:
             ).write.mode("overwrite").parquet(path)
 
         def link(path):
-            return link_mentions(mentions, spark.read.parquet(path), aliases,
+            return link_mentions(mentions, spark.read.parquet(path),
                                  scores_broadcast_rows=5)
 
         def broadcasts(df):
@@ -167,12 +166,12 @@ class TestRerankMemo:
         old = spark.conf.get(key)
         spark.conf.set(key, "-1")  # only hints broadcast: the gate shows
         try:
-            write([0, 1, 100, 101], 3, path)  # 4 rows <= 5: broadcast
-            assert broadcasts(link(path)) == 2  # dictionary + scores
-            write(list(range(8)) + [100, 101], 5, path)  # 10 rows, new vectors
+            write(pages[:2] + [9, 10], 3, path)  # 4 rows <= 5: broadcast
+            assert broadcasts(link(path)) == 1  # scores
+            write(pages + [9, 10], 5, path)  # 10 rows, new vectors
             again = link(path)
-            assert broadcasts(again) == 1  # dictionary only
-            write(list(range(8)) + [100, 101], 5, fresh)
+            assert broadcasts(again) == 0  # the dictionary is a map lookup
+            write(pages + [9, 10], 5, fresh)
             assert rows(again) == rows(link(fresh))
         finally:
             spark.conf.set(key, old)

@@ -192,14 +192,6 @@ class TestChunksAndAsr:
 
 
 class TestFanoutAndReports:
-    def test_confusion_matrix_pivot(self, spark):
-        from kgkit.metrics.ner_metrics import confusion_matrix
-
-        df = _stream_df(spark, ["A", "A", "O", "B"], ["A", "O", "O", "B"])
-        rows = {r["true"]: r.asDict() for r in confusion_matrix(df).collect()}
-        assert rows["A"]["A"] == 1 and rows["A"]["O"] == 1
-        assert rows["B"]["B"] == 1 and rows["O"]["O"] == 1
-
     def test_metrics_fanout_subsets(self, spark):
         from kgkit.metrics.ner_metrics import metrics_fanout
 
@@ -211,23 +203,6 @@ class TestFanoutAndReports:
         assert fan["token"]["B"]["precision_micro"] == -1.0  # never predicted
         assert fan["entity"]["A"]["recall_micro"] == 1.0
         assert fan["entity"]["B"]["recall_micro"] == 0.0
-
-    def test_classification_report_renders(self, spark):
-        from kgkit.metrics.ner_metrics import classification_report
-
-        df = _stream_df(spark, ["A", "O"], ["A", "O"])
-        rep = classification_report(df, "plain")
-        assert "token level" in rep and "entity level" in rep and "fil" in rep
-
-
-class TestAverageRuns:
-    def test_reference_semantics(self):
-        from kgkit.metrics.ner_metrics import average_runs
-
-        assert average_runs([]) == (-1, None)
-        assert average_runs([0.9]) == (0.9, None)
-        mean, dmean = average_runs([1.0, 2.0])
-        assert mean == 1.5 and dmean == pytest.approx(0.5 / 2 ** 0.5)
 
 
 class TestMetricsFanoutDf:

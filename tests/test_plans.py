@@ -184,13 +184,22 @@ class TestRound4PlanShapes:
     def test_lm_score_joins_are_broadcast_only(self, spark):
         """The probability tables are vocab-sized: both joins must
         broadcast — the only shuffle is the final per-doc mean."""
-        from kgkit.operators.lm_quality import lm_score, train_bigram_lm
+        from kgkit.operators.lm_quality import (
+            lm_score_exact,
+            relational_bigram_lm,
+        )
 
-        lm = train_bigram_lm(["the quick fox", "the lazy dog"])
+        seed = spark.createDataFrame(
+            [(0, "the quick fox"), (1, "the lazy dog")],
+            "doc_id long, text string",
+        )
+        # materialized model tables: the pin is the scoring plan, not
+        # the seed corpus's own groupBy
+        uni, bi = (t.localCheckpoint() for t in relational_bigram_lm(seed))
         docs = spark.createDataFrame(
             [(1, "the quick dog")], "doc_id long, text string"
         )
-        plan = _executed_plan(lm_score(docs, lm))
+        plan = _executed_plan(lm_score_exact(docs, uni, bi))
         shuffles = [l for l in plan.splitlines()
                     if "Exchange" in l and "BroadcastExchange" not in l]
         # at most the doc_id aggregation exchange (AQE may elide it)
@@ -198,15 +207,14 @@ class TestRound4PlanShapes:
         assert plan.count("BroadcastExchange") >= 2 or "BroadcastNestedLoop" not in plan
 
     def test_sampling_is_shuffle_free(self, spark):
-        """hash_sample and mixture_sample are pure narrow plans — a
-        pushed-down predicate and a generator, zero exchanges."""
-        from kgkit.operators.sampling import hash_sample, mixture_sample
+        """mixture_sample is a pure narrow plan — a generator over a
+        hash-threshold predicate, zero exchanges."""
+        from kgkit.operators.sampling import mixture_sample
 
         df = spark.range(100).selectExpr("id as doc_id", "'A' as tier",
                                          "'x' as text")
-        for out in (hash_sample(df, 0.5),
-                    mixture_sample(df, {"A": 1.5}, "tier")):
-            assert "Exchange" not in _executed_plan(out)
+        out = mixture_sample(df, {"A": 1.5}, "tier")
+        assert "Exchange" not in _executed_plan(out)
 
 
 class TestRound5PlanShapes:

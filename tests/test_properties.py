@@ -126,9 +126,9 @@ class TestRobotsProperties:
     @settings(max_examples=300, deadline=None)
     @given(st.text(max_size=300), st.text(max_size=60))
     def test_parser_and_decision_are_total(self, body, path):
-        from kgkit.operators.urls import robots_allowed
+        from kgkit.operators.urls import RobotsRules
 
-        assert robots_allowed(body, path) in (True, False)
+        assert RobotsRules(body).allowed(path) in (True, False)
 
 
 class TestWarcProperties:

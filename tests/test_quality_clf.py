@@ -1,7 +1,7 @@
 """Trained quality classifier: the distributed BIGINT-grid GD must be
 bit-identical to the numpy twin and invariant to partitioning; the
 Spark scorer must equal the python scorer exactly; the plan must be
-the lm_score shape (broadcast-only above the token stream)."""
+the lm_score_exact shape (broadcast-only above the token stream)."""
 
 import numpy as np
 import pytest
@@ -116,7 +116,7 @@ class TestInference:
         assert np.array_equal(re.w_q, model.w_q) and re.b_q == model.b_q
 
     def test_plan_is_broadcast_only_above_the_stream(self, spark, model):
-        # lm_score's pinned discipline: the corpus-wide exchanges are
+        # lm_score_exact's pinned discipline: the corpus-wide exchanges are
         # the final groupBy on doc_id only; the weight join broadcasts
         df = spark.createDataFrame(
             [(1, "the quick fox crosses near a river")],

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 
 def _docs(spark, n=4000):
@@ -11,33 +12,36 @@ def _docs(spark, n=4000):
         "doc_id", "case tier_num when 0 then 'A' when 1 then 'B' else 'C' end as tier")
 
 
+def _sample(df, rate, **kw):
+    """A single-bucket mixture at ``rate`` <= 1: a Bernoulli(rate)
+    subset drawn by the shared hash threshold alone."""
+    from kgkit.operators.sampling import mixture_sample
+
+    return mixture_sample(df.withColumn("bucket", F.lit("all")),
+                          {"all": rate}, "bucket", **kw)
+
+
 class TestHashSample:
     def test_rate_and_reproducibility(self, spark):
-        from kgkit.operators.sampling import hash_sample
-
         df = _docs(spark)
-        a = {r["doc_id"] for r in hash_sample(df, 0.3, seed=7).collect()}
-        b = {r["doc_id"] for r in hash_sample(df, 0.3, seed=7).collect()}
+        a = {r["doc_id"] for r in _sample(df, 0.3, seed=7).collect()}
+        b = {r["doc_id"] for r in _sample(df, 0.3, seed=7).collect()}
         assert a == b                       # bit-reproducible
         assert 0.25 < len(a) / 4000 < 0.35  # ~rate
-        c = {r["doc_id"] for r in hash_sample(df, 0.3, seed=8).collect()}
+        c = {r["doc_id"] for r in _sample(df, 0.3, seed=8).collect()}
         assert a != c                       # seeds are independent
 
     def test_monotone_in_rate(self, spark):
         """A doc kept at rate r is kept at every rate >= r (hash
         thresholding, not re-randomization)."""
-        from kgkit.operators.sampling import hash_sample
-
         df = _docs(spark, 1000)
-        small = {r["doc_id"] for r in hash_sample(df, 0.2).collect()}
-        big = {r["doc_id"] for r in hash_sample(df, 0.6).collect()}
+        small = {r["doc_id"] for r in _sample(df, 0.2).collect()}
+        big = {r["doc_id"] for r in _sample(df, 0.6).collect()}
         assert small <= big
 
     def test_bad_rate_rejected(self, spark):
-        from kgkit.operators.sampling import hash_sample
-
-        with pytest.raises(ValueError):
-            hash_sample(_docs(spark, 10), 1.5)
+        with pytest.raises(ValueError, match="negative rate"):
+            _sample(_docs(spark, 10), -0.5)
 
 
 class TestMixtureSample:
@@ -76,35 +80,17 @@ class TestMixtureSample:
         assert out == []                    # sequence(1,0) guard
 
 
-class TestSplitWeighted:
-    def test_disjoint_exhaustive_and_stable(self, spark):
-        from kgkit.operators.sampling import split_weighted
-
-        df = _docs(spark)
-        tr, va, te = split_weighted(df, [0.8, 0.1, 0.1], seed=3)
-        s = [{r["doc_id"] for r in x.collect()} for x in (tr, va, te)]
-        assert not (s[0] & s[1]) and not (s[0] & s[2]) and not (s[1] & s[2])
-        assert len(s[0] | s[1] | s[2]) == 4000
-        assert 0.75 < len(s[0]) / 4000 < 0.85
-        tr2 = {r["doc_id"] for r in
-               split_weighted(df.repartition(17), [0.8, 0.1, 0.1], seed=3)[0]
-               .collect()}
-        assert tr2 == s[0]                  # partitioning-independent
-
-
 class TestMd5HashMode:
     """hash_fn='md5': the cross-engine-auditable draw (DuckDB has no
     xxhash64) — same API contract, still a pushed-down predicate."""
 
     def test_reproducible_and_rate_accurate(self, spark):
-        from kgkit.operators.sampling import hash_sample
-
         df = _docs(spark)
-        a = {r["doc_id"] for r in hash_sample(df, 0.3, seed=7,
-                                              hash_fn="md5").collect()}
+        a = {r["doc_id"] for r in _sample(df, 0.3, seed=7,
+                                          hash_fn="md5").collect()}
         b = {r["doc_id"] for r in
-             hash_sample(df.repartition(13), 0.3, seed=7,
-                         hash_fn="md5").collect()}
+             _sample(df.repartition(13), 0.3, seed=7,
+                     hash_fn="md5").collect()}
         assert a == b
         assert 0.25 < len(a) / 4000 < 0.35
 
@@ -113,11 +99,9 @@ class TestMd5HashMode:
         md5-prefix of 'doc_id:seed' mod 1e6 under the rate threshold."""
         import hashlib
 
-        from kgkit.operators.sampling import hash_sample
-
         df = _docs(spark, n=500)
-        got = {r["doc_id"] for r in hash_sample(df, 0.3, seed=7,
-                                                hash_fn="md5").collect()}
+        got = {r["doc_id"] for r in _sample(df, 0.3, seed=7,
+                                            hash_fn="md5").collect()}
         want = {
             i for i in range(500)
             if int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:7], 16)
@@ -139,18 +123,14 @@ class TestMd5HashMode:
         assert 0.4 < by["B"] / (4000 // 3) < 0.6
 
     def test_unknown_hash_fn_rejected(self, spark):
-        from kgkit.operators.sampling import hash_sample
-
         with pytest.raises(ValueError):
-            hash_sample(_docs(spark), 0.5, hash_fn="sha9000")
+            _sample(_docs(spark), 0.5, hash_fn="sha9000")
 
     def test_still_a_pushed_down_filter(self, spark):
         """No Exchange in the md5 plan either — sampling stays a scan
         predicate in both hash modes."""
-        from kgkit.operators.sampling import hash_sample
-
         plan = (
-            hash_sample(_docs(spark), 0.3, hash_fn="md5")
+            _sample(_docs(spark), 0.3, hash_fn="md5")
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "Exchange" not in plan, plan

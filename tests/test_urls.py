@@ -1,4 +1,4 @@
-"""URL canonicalization / robots / sitemap (kgkit/operators/urls.py).
+"""URL canonicalization / robots (kgkit/operators/urls.py).
 
 The pure-python canonicalizer is the spec; the JVM column expression is
 differential-tested against it (registry-slot-free family — the driver
@@ -97,26 +97,26 @@ Disallow: /kg-only/
 
 class TestRobots:
     def test_longest_match_and_allow_tiebreak(self):
-        from kgkit.operators.urls import robots_allowed
+        from kgkit.operators.urls import RobotsRules
 
-        assert robots_allowed(ROBOTS, "/public/x")
-        assert not robots_allowed(ROBOTS, "/private/secret.html")
-        assert robots_allowed(ROBOTS, "/private/ok.html")
-        assert not robots_allowed(ROBOTS, "/docs/file.pdf")
-        assert robots_allowed(ROBOTS, "/docs/file.pdf.html")  # $ anchor
+        assert RobotsRules(ROBOTS).allowed("/public/x")
+        assert not RobotsRules(ROBOTS).allowed("/private/secret.html")
+        assert RobotsRules(ROBOTS).allowed("/private/ok.html")
+        assert not RobotsRules(ROBOTS).allowed("/docs/file.pdf")
+        assert RobotsRules(ROBOTS).allowed("/docs/file.pdf.html")  # $ anchor
 
     def test_specific_agent_group_wins(self):
-        from kgkit.operators.urls import robots_allowed
+        from kgkit.operators.urls import RobotsRules
 
-        assert not robots_allowed(ROBOTS, "/kg-only/x", user_agent="kgbot/1.0")
+        assert not RobotsRules(ROBOTS, "kgbot/1.0").allowed("/kg-only/x")
         # the kgbot group replaces (not extends) the * group
-        assert robots_allowed(ROBOTS, "/private/secret.html", user_agent="kgbot/1.0")
-        assert robots_allowed(ROBOTS, "/kg-only/x", user_agent="otherbot")
+        assert RobotsRules(ROBOTS, "kgbot/1.0").allowed("/private/secret.html")
+        assert RobotsRules(ROBOTS, "otherbot").allowed("/kg-only/x")
 
     def test_empty_disallow_allows_all(self):
-        from kgkit.operators.urls import robots_allowed
+        from kgkit.operators.urls import RobotsRules
 
-        assert robots_allowed("User-agent: *\nDisallow:\n", "/anything")
+        assert RobotsRules("User-agent: *\nDisallow:\n").allowed("/anything")
 
 
 class TestRobotsDistributed:
@@ -219,16 +219,3 @@ class TestMessyUrlFixture:
                 assert canonicalize_url(v) == r["canonical_url"]
         sizes = sorted({r["n_variants"] for r in rows})
         assert sizes == [1, 2]  # junk-url rows orphan some resources
-
-
-class TestSitemap:
-    def test_loc_extraction(self, spark):
-        from pyspark.sql import functions as F
-
-        from kgkit.operators.urls import sitemap_locs_col
-
-        xml = ("<urlset><url><loc> https://e.com/a </loc></url>"
-               "<url><loc>https://e.com/b?x=1</loc></url></urlset>")
-        df = spark.createDataFrame([(xml,)], "body string")
-        [row] = df.select(sitemap_locs_col(F.col("body")).alias("locs")).collect()
-        assert row["locs"] == ["https://e.com/a", "https://e.com/b?x=1"]
