@@ -269,18 +269,19 @@ def dup_clusters(pairs: DataFrame, id_a: str = "doc_a",
     clusters.  Pair similarity is NOT an equivalence relation until
     closed — a chain A~B, B~C must collapse to ONE survivor even though
     (A, C) never appeared as a pair, otherwise a greedy pairwise drop
-    keeps both ends of every chain.  Reuses the KG canonicalization
-    stage's connected-components machinery (adaptive pointer-jumping,
-    graph-sized shuffle width, per-round localCheckpoint), with natural
-    ordering on the BIGINT doc_ids; canonical = smallest member.  Only
+    keeps both ends of every chain.  Runs
+    ``canonicalize.connected_components`` (small-graph union-find, else
+    pointer-jumping rounds with a graph-sized shuffle width and a
+    per-round localCheckpoint) over the BIGINT doc_ids in natural
+    order; canonical = smallest member.  Only
     docs appearing in >= 1 pair come back — singletons are their own
     canonical by definition, so the caller's keep-filter is
     ``doc_id == canonical_id OR doc_id not in clusters``.
 
     Scale: the pair graph is sparse by construction (every generator in
     this module caps degenerate buckets), so the CC loop iterates on a
-    frame orders of magnitude below corpus size — the identical cost
-    profile as the entity-synonym CC, pinned O(log n) on chains."""
+    frame orders of magnitude below corpus size; a path in id order
+    converges in O(log n) rounds (pinned in tests/test_canonicalize.py)."""
     from kgkit.operators.canonicalize import connected_components
 
     # materialize the pair frame ONCE: connected_components consumes
@@ -291,10 +292,7 @@ def dup_clusters(pairs: DataFrame, id_a: str = "doc_a",
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).localCheckpoint()
-    # natural ordering on BIGINT doc_ids; local_key is the driver-side
-    # twin that enables the small-graph union-find fast path
-    cc = connected_components(edges, key_fn=lambda c: c,
-                              local_key=lambda v: v)
+    cc = connected_components(edges)
     return cc.select(
         F.col("entity_id").alias("doc_id"), "canonical_id"
     )

@@ -13,25 +13,20 @@ J2: ambiguous aliases (>1 candidate entity) are reranked by cosine
     (score, prior, entity_id) as the deterministic sort key.
 
 Scale design — the dictionary's ambiguous entities are known on the
-driver, so the rerank precomputes their cosines on the EMBEDDINGS
-table: one row per page, one cosine per (page, ambiguous-entity) pair,
-and mentions pick their winner from a per-page score map with a pure
-array-sort expression.  The mention stream never shuffles; cosine is
-never evaluated per mention row (hub-entity mentions take the
-n_cands==1 fast path).  The per-page score table joins to mentions on
-doc_id; the broadcast hint is GATED on an actual row-count probe — a
+driver (``alias_dict.AMBIGUOUS_NUMS``), so the rerank precomputes their
+cosines on the EMBEDDINGS table: one row per page, one cosine per
+(page, ambiguous-entity) pair, and mentions pick their winner from a
+per-page score map with a pure array-sort expression.  The mention
+stream never shuffles; cosine is never evaluated per mention row
+(hub-entity mentions take the n_cands==1 fast path).  The entity
+vectors enter that plan as literals: |ambiguous entities| x dim of
+them, 2 x 64 = 128 at the generated data's width and 8,192 even at
+4,096-d.  The per-page score table joins to mentions on doc_id; the
+broadcast hint is GATED on an actual row-count probe — a
 page-cardinality relation must become an ordinary hash join at 10^12
 pages, not a pinned driver OOM.  The score frame, its fetched vectors
 and the gate are built once per embeddings table and memoized, so a
 warm call (the next stream micro-batch) plans the rerank with no job.
-
-The entity vectors enter that plan as literals.  When they are wider
-than ``_LITERAL_PLAN_BUDGET`` components, the rerank falls back to the
-join path instead: candidates explode to rows, join the page embedding
-on doc_id and the entity embedding on entity_num (plain joins — AQE
-broadcasts the small side when it is small), and a window takes the
-top-1 per mention, so the plan size is independent of the vector
-width.  Only the AMBIGUOUS mention slice pays its shuffles.
 
 ``link_score`` is NULL for unambiguous mentions (nothing was reranked);
 for ambiguous mentions it is the winning cosine (0.0 when either
@@ -40,10 +35,10 @@ embedding is missing — same ordering the DuckDB oracle uses).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgkit.sources.alias_dict import ALIAS_ROWS
+from kgkit.sources.alias_dict import AMBIGUOUS_NUMS, CANDIDATES
 
 
 def cosine(a, b):
@@ -69,13 +64,13 @@ def _float_array_lit(values) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
-def _collect_amb_embeddings(embeddings: DataFrame, amb_entity_nums) -> dict:
+def _amb_embeddings(embeddings: DataFrame) -> dict:
     """{entity_num: embedding} for the dictionary's ambiguous entities —
     the one driver-side fetch of the rerank."""
     return {
         int(r["vec_id"]): list(r["embedding"])
         for r in embeddings.filter(
-            F.col("vec_id").isin([int(n) for n in amb_entity_nums])
+            F.col("vec_id").isin(AMBIGUOUS_NUMS)
         ).collect()
     }
 
@@ -109,42 +104,38 @@ def _small_enough(df: DataFrame, max_rows: int) -> bool:
     return df.limit(max_rows + 1).count() <= max_rows
 
 
-_LITERAL_PLAN_BUDGET = 64_000  # max |amb entities| x dim literals in a plan
+_SCORES_BROADCAST_ROWS = 200_000  # broadcast the score frame up to
+# this many embedding rows
 
 _RERANK_CACHE: dict = {}
 # (applicationId, embeddings.semanticHash(), its sorted inputFiles(),
-#  scores_broadcast_rows, _LITERAL_PLAN_BUDGET) -> the
-# broadcast-gated per-page score frame, or None when the vectors are
-# over the plan budget (join path).  The literal path runs once per
-# link_mentions call — once per stream micro-batch — and building its
-# plan pays a vector-fetch job, the broadcast gate's probe (two jobs)
-# and thousands of Py4J calls for the cosine literals; the frame
-# depends only on the embeddings table, so a warm call reuses it.
-# semanticHash alone is not the table's identity: two
-# reads of one path hash equal even after the path is overwritten with
-# other vectors, while their input files differ.  Only file-backed
-# tables are memoized (their files name their content, and the memo
-# pins no in-memory data); it holds one application's entries at most.
+#  _SCORES_BROADCAST_ROWS) -> the broadcast-gated per-page score frame.
+# The rerank runs once per link_mentions call — once per stream
+# micro-batch — and building its plan pays a vector-fetch job, the
+# broadcast gate's probe (two jobs) and hundreds of Py4J calls for the
+# cosine literals; the frame depends only on the embeddings table, so
+# a warm call reuses it.  semanticHash alone is not the table's
+# identity: two reads of one path hash equal even after the path is
+# overwritten with other vectors, while their input files differ.
+# Only file-backed tables are memoized (their files name their
+# content, and the memo pins no in-memory data); it holds one
+# application's entries at most.
 
 
-def _rerank_scores(embeddings: DataFrame, scores_broadcast_rows: int):
-    """The memoized score frame of the literal path (None: join path)."""
+def _rerank_scores(embeddings: DataFrame) -> DataFrame:
+    """The memoized, broadcast-gated per-page score frame."""
     files = tuple(sorted(embeddings.inputFiles()))
     key = (
         embeddings.sparkSession.sparkContext.applicationId,
         embeddings.semanticHash(),
         files,
-        scores_broadcast_rows,
-        _LITERAL_PLAN_BUDGET,
+        _SCORES_BROADCAST_ROWS,
     )
     if key in _RERANK_CACHE:
         return _RERANK_CACHE[key]
-    ent_rows = _collect_amb_embeddings(embeddings, _AMB_NUMS)
-    scores = None
-    if sum(len(v) for v in ent_rows.values()) <= _LITERAL_PLAN_BUDGET:
-        scores = page_entity_scores(embeddings, ent_rows)
-        if _small_enough(embeddings.select("vec_id"), scores_broadcast_rows):
-            scores = F.broadcast(scores)
+    scores = page_entity_scores(embeddings, _amb_embeddings(embeddings))
+    if _small_enough(embeddings.select("vec_id"), _SCORES_BROADCAST_ROWS):
+        scores = F.broadcast(scores)
     if any(k[0] != key[0] for k in _RERANK_CACHE):
         _RERANK_CACHE.clear()  # a new application: the old frames are dead
     if files and len(_RERANK_CACHE) < 64:
@@ -167,7 +158,7 @@ _BEST = (
     "WHEN l.entity_id < r.entity_id THEN -1 "
     "WHEN l.entity_id > r.entity_id THEN 1 ELSE 0 END), 1)"
 )
-_LITERAL_OUT = [
+_LINKED_OUT = [
     "url", "mention_id", "char_start", "char_end", "surface", "tag",
     *(
         f"CASE WHEN n_cands = 1 THEN {one} ELSE {_BEST}.{field} END AS {out}"
@@ -181,126 +172,40 @@ _LITERAL_OUT = [
 ]
 
 
-def _literal_rerank(cands: DataFrame, embeddings: DataFrame,
-                    scores_broadcast_rows: int) -> DataFrame:
-    """Map-side rerank: per-page score map + array-sort winner.
-
-    Falls back to the distributed join path when the entity-embedding
-    literals would bloat the plan (|amb| x dim components over
-    _LITERAL_PLAN_BUDGET — e.g. 16 entities x 4096-dim embeddings):
-    the dictionary fixes the entity COUNT but not the embedding WIDTH,
-    and the width is only known once the vectors are fetched — no
-    extra job: the fetch (once per embeddings table, memoized with the
-    score frame) was happening anyway."""
-    scores = _rerank_scores(embeddings, scores_broadcast_rows)
-    if scores is None:
-        return _join_rerank(cands, embeddings)
-    joined = cands.join(scores, F.col("doc_id") == F.col("vec_id"), "left")
-    return joined.selectExpr(*_LITERAL_OUT)
-
-
-def _join_rerank(cands: DataFrame, embeddings: DataFrame) -> DataFrame:
-    """Distributed rerank: explode candidates, join both embeddings,
-    window top-1 per mention.  No driver collect, no plan literals —
-    plan size and driver memory are independent of the KB size."""
-    base_cols = ["url", "mention_id", "char_start", "char_end",
-                 "surface", "tag", "doc_id"]
-    una = cands.filter(F.col("n_cands") == 1).select(
-        *base_cols[:-1],
-        F.col("cands")[0]["entity_id"].alias("entity_id"),
-        F.col("cands")[0]["entity_num"].alias("entity_num"),
-        F.col("cands")[0]["prior"].alias("prior"),
-        F.lit(None).cast("double").alias("link_score"),
-    )
-
-    ex = cands.filter(F.col("n_cands") > 1).select(
-        *base_cols, F.explode("cands").alias("c")
-    ).select(
-        *base_cols,
-        F.col("c")["entity_id"].alias("entity_id"),
-        F.col("c")["entity_num"].alias("entity_num"),
-        F.col("c")["prior"].alias("prior"),
-    )
-    page_emb = embeddings.select(
-        F.col("vec_id").alias("pe_id"), F.col("embedding").alias("pe")
-    )
-    ent_emb = embeddings.select(
-        F.col("vec_id").alias("ee_id"), F.col("embedding").alias("ee")
-    )
-    scored = (
-        ex.join(page_emb, ex["doc_id"] == F.col("pe_id"), "left")
-        .join(ent_emb, F.col("entity_num") == F.col("ee_id"), "left")
-        .withColumn(
-            "link_score",
-            F.when(
-                F.col("pe").isNotNull() & F.col("ee").isNotNull(),
-                F.round(cosine(F.col("pe"), F.col("ee")), 6),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    w = Window.partitionBy("url", "mention_id").orderBy(
-        F.desc("link_score"), F.desc("prior"), F.asc("entity_id")
-    )
-    best = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select(
-            *base_cols[:-1],
-            "entity_id", "entity_num", "prior", "link_score",
-        )
-    )
-    return una.unionByName(best)
-
-
-def _alias_groups() -> dict:
-    """The alias dictionary (alias_dict.ALIAS_ROWS, a static code
-    fixture) grouped by alias: {alias: candidates in sort_array's
-    (entity_id, entity_num, prior) struct order}."""
-    groups: dict = {}
-    for alias, entity_id, num, prior in ALIAS_ROWS:
-        groups.setdefault(alias, []).append((entity_id, int(num), float(prior)))
-    return {alias: sorted(cs) for alias, cs in sorted(groups.items())}
-
-
-_ALIAS_GROUPS = _alias_groups()
-# The dictionary's candidates as a SQL map literal, and its ambiguous
-# entities — constant in the program, so derived here rather
-# than grouped and probed on the cluster by every call (guide §1.2).
-# A map lookup, not a broadcast join against a VALUES relation: the
-# lookup launches no broadcast job, and a join with a relation whose
-# alias keys the planner cannot see as unique is estimated as the
-# product of both sides (~600x the mention stream here), which a
-# checkpoint of the linked stream carries into every plan that reads it.
+# The dictionary's candidates (alias_dict.CANDIDATES) as a SQL map
+# literal.  A map lookup, not a broadcast join against a VALUES
+# relation: the lookup launches no broadcast job, and a join with a
+# relation whose alias keys the planner cannot see as unique is
+# estimated as the product of both sides (~600x the mention stream
+# here), which a checkpoint of the linked stream carries into every
+# plan that reads it.
 _CANDS = "map(" + ", ".join(
     f"'{alias}', array(" + ", ".join(
         f"named_struct('entity_id', '{e}', 'entity_num', {n}, "
         f"'prior', CAST({p!r} AS DOUBLE))"
         for e, n, p in cs
     ) + ")"
-    for alias, cs in _ALIAS_GROUPS.items()
+    for alias, cs in CANDIDATES.items()
 ) + ")"
-_AMB_NUMS = sorted(
-    {n for cs in _ALIAS_GROUPS.values() if len(cs) > 1 for _, n, _ in cs}
-)
 
 
-def link_mentions(
-    mentions: DataFrame,
-    embeddings: DataFrame,
-    scores_broadcast_rows: int = 200_000,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, embeddings: DataFrame) -> DataFrame:
     """mentions -> linked mentions with (entity_id, link_score).
 
     Unlinkable mentions (surface not in the dictionary) are dropped —
     they carry no KG signal downstream."""
-    return _literal_rerank(cands_of(mentions), embeddings,
-                           scores_broadcast_rows)
+    scores = _rerank_scores(embeddings)
+    return (
+        cands_of(mentions)
+        .join(scores, F.col("doc_id") == F.col("vec_id"), "left")
+        .selectExpr(*_LINKED_OUT)
+    )
 
 
 # doc_id keys the page-embedding lookup (embeddings.vec_id): numeric
 # for the doc://<n> corpus, NULL (try_cast — ANSI cast would abort the
-# job) for real crawl urls, where both rerank paths fall back to
-# prior-ordered linking (left joins, score coalesced to 0).
+# job) for real crawl urls, where the rerank falls back to
+# prior-ordered linking (left join, score coalesced to 0).
 _DOC_ID = "try_cast(substring_index(url, '//', -1) AS BIGINT) AS doc_id"
 
 

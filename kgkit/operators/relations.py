@@ -7,8 +7,8 @@ SQL-expressible rules over the linked, canonicalized mention stream
 turn adjacent mentions into typed edges:
 
 * **predicate surface** — for consecutive mentions within a page whose
-  gap text is 1..``max_pred_words`` lowercase words (and at most
-  ``max_gap_chars`` characters), the whitespace-normalized gap IS the
+  gap text is 1..``MAX_PRED_WORDS`` lowercase words (and at most
+  ``MAX_GAP_CHARS`` characters), the whitespace-normalized gap IS the
   relation surface::
 
       "spark executes the scan"  ->  (Q_spark, 'executes the', Q_scan)
@@ -80,6 +80,9 @@ COPULA_WORDS = ("is", "are", "was", "were", "be", "been")
 DETERMINERS = ("a", "an", "the")
 POSSESSION_WORDS = ("has", "have", "had")
 ACTION_PATTERN = r"^[a-z]{3,}(s|ed|ing)$"
+# the predicate-surface caps (module docstring), shared with the oracle
+MAX_GAP_CHARS = 64
+MAX_PRED_WORDS = 4
 
 
 def _quoted(words) -> str:
@@ -100,11 +103,9 @@ REL_TYPE = (
 )
 
 
-def relation_pairs(
-    linked: DataFrame, canon: DataFrame, max_gap_chars: int = 64
-) -> DataFrame:
+def relation_pairs(linked: DataFrame, canon: DataFrame) -> DataFrame:
     """Consecutive canonical-entity mention pairs within a page whose
-    gap can possibly carry a predicate surface: 2..``max_gap_chars``
+    gap can possibly carry a predicate surface: 2..``MAX_GAP_CHARS``
     characters between the first mention's end and the next's start.
 
     One url exchange (the window); the canonical map is a broadcast.
@@ -122,18 +123,14 @@ def relation_pairs(
             f"lead(char_start) {by_url} AS next_start",
         )
         .filter(
-            f"obj IS NOT NULL AND {gap} >= 2 AND {gap} <= {int(max_gap_chars)}"
+            f"obj IS NOT NULL AND {gap} >= 2 AND {gap} <= {MAX_GAP_CHARS}"
         )
         .select("subj", "obj", "url", "char_end", "next_start")
     )
 
 
 def relation_stream(
-    pages: DataFrame,
-    linked: DataFrame,
-    canon: DataFrame,
-    max_gap_chars: int = 64,
-    max_pred_words: int = 4,
+    pages: DataFrame, linked: DataFrame, canon: DataFrame
 ) -> DataFrame:
     """One (url, subj, pred, obj) row per relation OCCURRENCE —
     entirely per-page (window within the page, gap substring from the
@@ -141,10 +138,10 @@ def relation_stream(
     incremental KG stream contribute per-batch partial counts whose
     sum equals the batch aggregation exactly (and retract a superseded
     page's occurrences by url)."""
-    pairs = relation_pairs(linked, canon, max_gap_chars)
-    # 1..max_pred_words lowercase single-spaced words — anything else
+    pairs = relation_pairs(linked, canon)
+    # 1..MAX_PRED_WORDS lowercase single-spaced words — anything else
     # (punctuation, digits, non-ASCII, runs of space) is not a surface
-    pat = r"^[a-z]+( [a-z]+){0,%d}$" % (int(max_pred_words) - 1)
+    pat = r"^[a-z]+( [a-z]+){0,%d}$" % (MAX_PRED_WORDS - 1)
     return (
         pairs.join(pages.select("url", "text"), "url")
         .selectExpr(
@@ -157,12 +154,7 @@ def relation_stream(
 
 
 def extract_relations(
-    pages: DataFrame,
-    linked: DataFrame,
-    canon: DataFrame,
-    *,
-    max_gap_chars: int = 64,
-    max_pred_words: int = 4,
+    pages: DataFrame, linked: DataFrame, canon: DataFrame
 ) -> DataFrame:
     """Relation edges with NPMI association strength.
 
@@ -175,10 +167,9 @@ def extract_relations(
                        the pair is the whole stream), rounded to the
                        6-decimal cross-engine grid
     """
-    stream = relation_stream(
-        pages, linked, canon, max_gap_chars, max_pred_words
-    )
-    rel = stream.groupBy("subj", "pred", "obj").agg(F.count("*").alias("n"))
+    rel = relation_stream(pages, linked, canon).groupBy(
+        "subj", "pred", "obj"
+    ).agg(F.count("*").alias("n"))
     # eager and lineage-cut: the annotation reads the aggregated
     # relation twice (its windows and the total), and its lineage — the
     # mention UDF, the url window and the pages join — is the deepest

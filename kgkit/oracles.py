@@ -516,10 +516,10 @@ triples AS (
 """
 
 
-def _relations_sql(max_gap_chars: int = 64, max_pred_words: int = 4) -> str:
+def _relations_sql() -> str:
     """Stage 4b twin (kgkit/operators/relations.py::extract_relations):
     adjacent canonical mention pairs -> gap-substring predicate surface
-    (1..max_pred_words lowercase words) -> verb-pattern rel_type ->
+    (1..MAX_PRED_WORDS lowercase words) -> verb-pattern rel_type ->
     NPMI from exact BIGINT marginals.  The pair window is the cooccur
     window; gap text comes from ner_docs WIDENED with the
     relation-planted verb pages (planted.relation_values_sql — the
@@ -531,7 +531,8 @@ def _relations_sql(max_gap_chars: int = 64, max_pred_words: int = 4) -> str:
     CASE mirrors relations.REL_TYPE verbatim.  Change operator and
     oracle together or neither."""
     from kgkit.operators.relations import (
-        ACTION_PATTERN, COPULA_WORDS, DETERMINERS, POSSESSION_WORDS,
+        ACTION_PATTERN, COPULA_WORDS, DETERMINERS, MAX_GAP_CHARS,
+        MAX_PRED_WORDS, POSSESSION_WORDS,
     )
     from kgkit.sources.planted import relation_values_sql
 
@@ -563,7 +564,7 @@ rpairs AS (
     FROM lm
     WINDOW w AS (PARTITION BY url ORDER BY char_start, mention_id)
     QUALIFY obj IS NOT NULL
-        AND next_start - char_end BETWEEN 2 AND {max_gap_chars}
+        AND next_start - char_end BETWEEN 2 AND {MAX_GAP_CHARS}
 ),
 rstream AS (
     SELECT subj, obj,
@@ -574,7 +575,7 @@ rstream AS (
 rel AS (
     SELECT subj, pred, obj, CAST(count(*) AS BIGINT) AS n
     FROM rstream
-    WHERE regexp_full_match(pred, '[a-z]+( [a-z]+){{0,{max_pred_words - 1}}}')
+    WHERE regexp_full_match(pred, '[a-z]+( [a-z]+){{0,{MAX_PRED_WORDS - 1}}}')
     GROUP BY subj, pred, obj
 ),
 marg AS (

@@ -1,8 +1,10 @@
 """Entity-linking alias dictionary + canonicalization synonym edges.
 
-Single source of truth for three consumers that must agree exactly:
+Single source of truth for four consumers that must agree exactly:
   * the gazetteer tagger (kgkit/ner_core/tagger.py DEFAULT_GAZETTEER)
-  * the Spark map-literal lookup in kgkit/operators/linking.py (SURVEY §2.9 J1)
+  * the Spark map-literal lookup and the rerank's ambiguous entities in
+    kgkit/operators/linking.py (SURVEY §2.9 J1/J2)
+  * the canonical map in kgkit/operators/canonicalize.py (J3)
   * the DuckDB oracle SQL in kgkit/oracles.py (exposed as VALUES literals)
 
 Shape per FIXTURES.md §7: (alias, entity_id, prior).  'merge' is
@@ -10,11 +12,16 @@ deliberately ambiguous (two candidate entities) to exercise the
 embedding-similarity rerank (J2); 'join' is the Zipf-head hub entity
 (~960 occurrences per 500 docs) to exercise skew salting (J4).
 Entity numbers double as embedding vec_ids for the rerank.
+
+The dictionary is a code constant, so everything it implies — the
+candidates per alias, the ambiguous entities and the synonym graph's
+edges — is derived here once, at import, on the driver; no consumer
+groups or probes it on the cluster.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import Dict, List, Tuple
 
 # (alias, entity_id, entity_num, prior)
 ALIAS_ROWS: List[Tuple[str, str, int, float]] = [
@@ -39,17 +46,28 @@ SYNONYM_EDGES: List[Tuple[str, str]] = [
 ]
 
 
-def alias_df(spark):
-    """Alias dictionary as a Spark DataFrame — a JVM VALUES
-    LocalRelation (kgkit.sources.localrel): canonical_map reads the
-    entity list from it, and a createDataFrame fixture would re-pay a
-    pickled-RDD scan per call."""
-    from kgkit.sources.localrel import values_df
+def _candidates() -> Dict[str, List[Tuple[str, int, float]]]:
+    groups: dict = {}
+    for alias, entity_id, num, prior in ALIAS_ROWS:
+        groups.setdefault(alias, []).append((entity_id, int(num), float(prior)))
+    return {alias: sorted(cs) for alias, cs in sorted(groups.items())}
 
-    return values_df(
-        spark, ALIAS_ROWS,
-        "alias string, entity_id string, entity_num int, prior double",
-    )
+
+# {alias: candidates in sort_array's (entity_id, entity_num, prior)
+# struct order}
+CANDIDATES = _candidates()
+# entity_nums of the candidates of an ambiguous alias (the rerank's)
+AMBIGUOUS_NUMS: List[int] = sorted(
+    {n for cs in CANDIDATES.values() if len(cs) > 1 for _, n, _ in cs}
+)
+# undirected canonicalization edges: synonyms + entities sharing an alias
+EDGES: List[Tuple[str, str]] = sorted(
+    set(SYNONYM_EDGES) | {
+        (a[0], b[0])
+        for cs in CANDIDATES.values()
+        for i, a in enumerate(cs) for b in cs[i + 1:]
+    }
+)
 
 
 def alias_values_sql() -> str:
@@ -60,30 +78,7 @@ def alias_values_sql() -> str:
     return f"(VALUES {rows}) AS alias_dict(alias, entity_id, entity_num, prior)"
 
 
-def edges_df(spark):
-    """Undirected canonicalization edges: shared-alias pairs + synonyms
-    — a JVM VALUES LocalRelation (see alias_df)."""
-    from kgkit.sources.localrel import values_df
-
-    shared = {}
-    for a, e, _, _ in ALIAS_ROWS:
-        shared.setdefault(a, []).append(e)
-    pairs = set(SYNONYM_EDGES)
-    for ents in shared.values():
-        for i in range(len(ents)):
-            for j in range(i + 1, len(ents)):
-                pairs.add((ents[i], ents[j]))
-    return values_df(spark, sorted(pairs), "src string, dst string")
-
-
 def edges_values_sql() -> str:
-    shared = {}
-    for a, e, _, _ in ALIAS_ROWS:
-        shared.setdefault(a, []).append(e)
-    pairs = set(SYNONYM_EDGES)
-    for ents in shared.values():
-        for i in range(len(ents)):
-            for j in range(i + 1, len(ents)):
-                pairs.add((ents[i], ents[j]))
-    rows = ", ".join(f"('{s}', '{d}')" for s, d in sorted(pairs))
+    """``EDGES`` as a VALUES list for the DuckDB canonicalization oracle."""
+    rows = ", ".join(f"('{s}', '{d}')" for s, d in EDGES)
     return f"(VALUES {rows}) AS edges(src, dst)"

@@ -127,20 +127,20 @@ class TestExtractRelations:
                        for (s, p, o) in got)
 
     def test_gap_and_word_caps(self, spark):
-        pages = [("u://1", "a x y b"), ("u://2", "a " + "w " * 3 + "b")]
+        pages = [("u://1", "a x y b"), ("u://2", "a " + "w " * 4 + "b"),
+                 ("u://3", "a " + "v " * 5 + "b")]
         mentions = [
             ("u://1", 0, "QA", 0, 1), ("u://1", 1, "QB", 6, 7),
-            ("u://2", 0, "QA", 0, 1), ("u://2", 1, "QB", 8, 9),
+            ("u://2", 0, "QA", 0, 1), ("u://2", 1, "QB", 10, 11),
+            ("u://3", 0, "QA", 0, 1), ("u://3", 1, "QB", 12, 13),
         ]
         p, l, c = _mk(spark, pages, mentions)
         got = {(r["subj"], r["pred"], r["obj"])
                for r in extract_relations(p, l, c).collect()}
         assert ("QA", "x y", "QB") in got
-        assert ("QA", "w w w", "QB") in got
-        # tighten the word cap: the 3-word surface drops, 2-word stays
-        got2 = {(r["subj"], r["pred"], r["obj"])
-                for r in extract_relations(p, l, c, max_pred_words=2).collect()}
-        assert ("QA", "x y", "QB") in got2 and len(got2) == 1
+        assert ("QA", "w w w w", "QB") in got
+        # over the 4-word cap: the 5-word gap carries no surface
+        assert got == {("QA", "x y", "QB"), ("QA", "w w w w", "QB")}
 
     def test_non_surface_gaps_dropped(self, spark):
         pages = [
