@@ -30,9 +30,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def build_spark(cpus: int, app: str = "kgkit-bench"):
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
+
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -36,8 +36,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
+
     builder = SparkSession.builder.appName("kgkit-kg-pipeline")
-    spark = builder.getOrCreate()
+    spark = builder.config(map=SESSION_CONF).getOrCreate()
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     spark.sparkContext.setLogLevel("WARN")

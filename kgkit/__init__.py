@@ -18,3 +18,19 @@ Design stance (SURVEY.md §7.0):
 """
 
 __version__ = "0.1.0"
+
+# Settings that every session the program builds applies; operators set
+# no conf.  Spark keeps generated classes in one JVM cache, 100 by
+# default.  A warm stream micro-batch runs about 60 distinct generated
+# classes and each read 8 more, so the default evicts them between
+# batches and every batch recompiled 80-100 of them; 1,000 keeps the
+# stream's and a build's working set for the session.  The cache size is
+# a static conf, read once at session start: only a session builder can
+# set it.  The cache is keyed by source, and a whole-stage class is
+# named after its codegen stage id, which adaptive execution assigns in
+# the order it creates stages, so the same plan can number a stage 3 in
+# one run and 4 in the next; unnumbered names let both hit one entry.
+SESSION_CONF = {
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.sql.codegen.useIdInClassName": "false",
+}

@@ -28,8 +28,11 @@ from typing import List, Optional
 def _spark(shuffle_partitions: int = 32):
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
+
     spark = (
         SparkSession.builder.appName("kgkit-cli")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .getOrCreate()
     )

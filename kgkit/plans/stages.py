@@ -8,8 +8,10 @@ appends per-partition lineage rows (stage, partition_id, rows, wall_ms)
 to a ``_lineage`` table next to the run.
 
 A stage boundary costs the stage's own jobs and its one parquet write,
-nothing more.  The output is read back with the schema of the frame
-just written (no schema-inference job), and the lineage rows come from
+nothing more, and a skipped stage costs no job.  The output is read
+back with the schema of the frame just written, a skipped stage's with
+the Spark schema its writer recorded in a part footer (so no read runs
+a schema-inference job), and the lineage rows come from
 the written files on the driver: the partition id is a part file's
 ``part-NNNNN`` task number, its row count the parquet footer's
 ``num_rows`` (summed when one task wrote several files).  They are
@@ -19,6 +21,7 @@ write gives them (string, int, bigint, double).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import time
@@ -28,8 +31,18 @@ from typing import Callable, Dict, List
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _PART = re.compile(r"part-(\d+)")
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _written_schema(out: str) -> StructType:
+    """The Spark schema recorded in the footer of a part file of the
+    parquet dir ``out`` (a 0-row stage still has its schema-only part)."""
+    name = min(n for n in os.listdir(out) if _PART.match(n))
+    meta = pq.read_metadata(os.path.join(out, name)).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))
 
 
 class StageRunner:
@@ -79,7 +92,7 @@ class StageRunner:
         out = self._out_path(stage)
         if self._done(stage):
             self.skipped.append(stage)
-            return self.spark.read.parquet(out)
+            return self.spark.read.schema(_written_schema(out)).parquet(out)
         t0 = time.monotonic()
         df = build()
         df.write.mode("overwrite").parquet(out)

@@ -28,14 +28,24 @@ read serves a materialized frame.
 
 A live crawl REVISITS urls: a url re-delivered by a later batch
 supersedes its earlier version, whose contribution is retracted from
-every live aggregate.  The durable ``keys=<id>`` (delivered urls),
-``batch=<id>`` (triples) and ``relbatch=<id>`` (per-url relation
-counts) parts, the committed-batch rule, supersession, the
-retractions, the replay guard, the views and ``resume`` are the
-part-store protocol of ``kgkit.streaming.store``.  After any prefix of
-the stream, every read accessor equals the one-shot batch pipeline over
-each url's LATEST version, where "latest" is the highest batch id
-(tests/test_kg_stream.py).
+every live aggregate.  The durable ``keys/_batch=<id>`` (delivered
+urls), ``triples/_batch=<id>`` and ``relation_counts/_batch=<id>``
+(per-url relation counts) parts, the committed-batch rule,
+supersession, the retractions, the replay guard, the views and
+``resume`` are the part-store protocol of ``kgkit.streaming.store``.
+After any prefix of the stream, every read accessor equals the one-shot
+batch pipeline over each url's LATEST version, where "latest" is the
+highest batch id (tests/test_kg_stream.py).
+
+A micro-batch runs the same plans whatever its id: the batch id lives
+in the part paths and never enters a plan, so every batch runs the
+same generated classes.  A session that keeps them (the codegen cache
+of ``kgkit.SESSION_CONF``, which every session kgkit builds applies)
+compiles no class for a warm batch or read.  The cache size is a
+static conf, which the stream cannot set: a caller who attaches the
+stream to a session of their own must build it with the same settings,
+``SparkSession.builder.config(map=kgkit.SESSION_CONF)``, or each warm
+batch recompiles some 80-100 classes.
 
 foreachBatch (not a stateful operator) is the right tool: the
 per-batch work is a composition of whole DataFrame stages against
@@ -83,11 +93,11 @@ class IncrementalKGStream:
         self.triples_dir = triples_dir
         self.store = store.PartStore(
             triples_dir,
-            {"batch=": TRIPLES, "relbatch=": RELATION_COUNTS},
+            {"triples": TRIPLES, "relation_counts": RELATION_COUNTS},
             {
-                "entity_counts": store.Aggregate("batch=", ("obj",)),
+                "entity_counts": store.Aggregate("triples", ("obj",)),
                 "relations": store.Aggregate(
-                    "relbatch=", ("subj", "pred", "obj"), "n"
+                    "relation_counts", ("subj", "pred", "obj"), "n"
                 ),
             },
         )
@@ -147,7 +157,7 @@ class IncrementalKGStream:
             .localCheckpoint()
         )
         if self.store.commit(
-            batch_id, pages, {"batch=": triples, "relbatch=": relations}
+            batch_id, pages, {"triples": triples, "relation_counts": relations}
         ):
             self._annotate()
         return triples
@@ -177,7 +187,7 @@ class IncrementalKGStream:
 
     def triples(self, spark: SparkSession) -> DataFrame:
         """The committed triples of each url's latest version."""
-        triples = self.store.latest(spark, "batch=")
+        triples = self.store.latest(spark, "triples")
         if triples is None:
             return spark.createDataFrame([], TRIPLES)
         return triples

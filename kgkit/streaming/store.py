@@ -2,16 +2,26 @@
 protocol behind ``IncrementalKGStream``.
 
 Layout.  Each micro-batch is written as one parquet part per part
-family, ``<base_dir>/<prefix><id>``, in overwrite mode, with the batch
-id as a ``_batch`` column.  The ``keys=<id>`` family holds the urls the
-batch delivered; the other families hold its rows.  Every family's
-schema is declared once, and parts are written and read with it: a
-batch whose rows do not fit the declaration fails before its write, a
-stored part whose column types differ fails its read, and no read runs
-a schema-inference job.  foreachBatch is at-least-once, and a replayed
-batch rewrites the same dirs with the same rows (the streamed pipelines
-are deterministic), so the store is idempotent under replay.  Spark's
-``_SUCCESS`` marker says a part is complete.
+family, ``<base_dir>/<family>/_batch=<id>/``, in overwrite mode.  The
+``keys`` family holds the urls the batch delivered; the other families
+hold its rows.  Every family's schema is declared once, and parts are
+written and read with it: a batch whose rows do not fit the declaration
+fails before its write, a stored part whose column types differ fails
+its read, and no read runs a schema-inference job.  foreachBatch is
+at-least-once, and a replayed batch rewrites the same dirs with the
+same rows (the streamed pipelines are deterministic), so the store is
+idempotent under replay.  Spark's ``_SUCCESS`` marker says a part is
+complete.
+
+The batch id never enters a plan.  A part's rows do not store it: a
+read names the committed part dirs explicitly and gets ``_batch`` back
+as their partition value, typed by the declaration (parsed from the
+paths on the driver, no job).  Every choice of batches by id, the
+retraction's included, is a choice of part dirs made on the driver from
+``committed()``, never a filter on a literal.  So every batch runs the
+same generated classes whatever its id, and a session that keeps them
+(the codegen cache of ``kgkit.SESSION_CONF``) compiles none for a warm
+batch.
 
 Committed batches.  A batch counts only once EVERY one of its parts is
 complete.  Reads, the retraction, the replay guard and ``resume`` see
@@ -57,7 +67,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-KEYS = "keys="  # the part family of each batch's delivered urls
+KEYS = "keys"  # the part family of each batch's delivered urls
+BATCH = "_batch"  # the partition key of a part dir: its batch id
 TAG = "_aggregate"  # the merged frame's aggregate-name column
 
 
@@ -96,9 +107,12 @@ class PartStore:
         aggregates: Dict[str, Aggregate],
     ):
         self.base_dir = base_dir
-        self.schemas = {  # parsed once: each commit writes every family
-            f: StructType.fromDDL(f"{ddl}, _batch long")
-            for f, ddl in {KEYS: "url string", **families}.items()
+        ddls = {KEYS: "url string", **families}
+        # parsed once: each commit writes every family's rows, and each
+        # read returns them with their part's batch id
+        self.schemas = {f: StructType.fromDDL(d) for f, d in ddls.items()}
+        self.read_schemas = {
+            f: StructType.fromDDL(f"{d}, {BATCH} long") for f, d in ddls.items()
         }
         self.aggregates = aggregates
         self.merged: Optional[DataFrame] = None  # every view's checkpoint
@@ -106,30 +120,35 @@ class PartStore:
         self.counted: set = set()  # replay guard: committed, counted ids
 
     def _path(self, family: str, batch_id: int) -> str:
-        return os.path.join(self.base_dir, f"{family}{batch_id}")
+        return os.path.join(self.base_dir, family, f"{BATCH}={batch_id}")
 
     def committed(self) -> List[int]:
         """Ids of the batches whose every part is complete, ascending."""
-        if not os.path.isdir(self.base_dir):
+        keys = os.path.join(self.base_dir, KEYS)
+        if not os.path.isdir(keys):
             return []
+        prefix = f"{BATCH}="
         ids = {
-            int(d[len(KEYS):])
-            for d in os.listdir(self.base_dir)
-            if d.startswith(KEYS)
+            int(d[len(prefix):]) for d in os.listdir(keys) if d.startswith(prefix)
         }
         return sorted(
             i for i in ids
             if all(complete(self._path(f, i)) for f in self.schemas)
         )
 
-    def read(self, spark: SparkSession, family: str) -> Optional[DataFrame]:
-        """The family's rows of every committed batch, with ``_batch``,
-        in the declared schema; None when nothing is committed."""
-        ids = self.committed()
+    def read(
+        self, spark: SparkSession, family: str, ids: Optional[List[int]] = None
+    ) -> Optional[DataFrame]:
+        """The family's rows of the committed batches ``ids`` (all of
+        them when None), with ``_batch``, in the declared schema; None
+        when there are none."""
+        ids = self.committed() if ids is None else ids
         if not ids:
             return None
-        return spark.read.schema(self.schemas[family]).parquet(
-            *[self._path(family, i) for i in ids]
+        return (
+            spark.read.schema(self.read_schemas[family])
+            .option("basePath", os.path.join(self.base_dir, family))
+            .parquet(*[self._path(family, i) for i in ids])
         )
 
     def latest(self, spark: SparkSession, family: str) -> Optional[DataFrame]:
@@ -140,14 +159,12 @@ class PartStore:
         if rows is None:
             return None
         later = self.read(spark, KEYS).select(
-            F.col("url").alias("_url"), F.col("_batch").alias("_later")
+            F.col("url").alias("_url"), F.col(BATCH).alias("_later")
         )
         superseded = (F.col("url") == F.col("_url")) & (
-            F.col("_later") > F.col("_batch")
+            F.col("_later") > F.col(BATCH)
         )
-        return rows.join(F.broadcast(later), superseded, "left_anti").drop(
-            "_batch"
-        )
+        return rows.join(F.broadcast(later), superseded, "left_anti").drop(BATCH)
 
     def live(self, name: str) -> Optional[DataFrame]:
         """The materialized view of aggregate ``name``; None before the
@@ -189,41 +206,41 @@ class PartStore:
         spark = keys.sparkSession
         rows = {KEYS: keys.select("url"), **rows}
         parts = {  # every part fits its declaration before any is written
-            family: rows[family]
-            .selectExpr("*", f"CAST({int(batch_id)} AS BIGINT) AS _batch")
-            .to(schema)
+            family: rows[family].to(schema)
             for family, schema in self.schemas.items()
         }
         for family, part in parts.items():
             part.write.mode("overwrite").parquet(self._path(family, batch_id))
         if batch_id in self.counted:
             return False
+        earlier = [i for i in self.committed() if i < batch_id]
         replaced = None
-        if min(self.committed()) < batch_id:  # else nothing to supersede
-            replaced = self._replaced(spark, batch_id)
+        if earlier:  # else nothing to supersede
+            replaced = self._replaced(spark, batch_id, earlier)
         terms = {}
         for name, agg in self.aggregates.items():
             terms[name] = [agg.terms(rows[agg.family])]
             if replaced is not None:
-                stale = self.read(spark, agg.family).join(
-                    F.broadcast(replaced), ["url", "_batch"]
+                stale = self.read(spark, agg.family, earlier).join(
+                    F.broadcast(replaced), ["url", BATCH]
                 )
                 terms[name].append(agg.terms(stale, -1))
         self._merge(terms)
         self.counted.add(batch_id)
         return True
 
-    def _replaced(self, spark: SparkSession, batch_id: int) -> DataFrame:
+    def _replaced(
+        self, spark: SparkSession, batch_id: int, earlier: List[int]
+    ) -> DataFrame:
         """The stored versions that the batch's urls supersede: each url
-        at its latest EARLIER committed batch.  Not materialized: the one
-        merge broadcasts it into every aggregate's retraction, and the
-        identical broadcasts run once (a reused exchange)."""
-        stored = self.read(spark, KEYS)
+        at its latest committed batch of ``earlier``.  Not materialized:
+        the one merge broadcasts it into every aggregate's retraction,
+        and the identical broadcasts run once (a reused exchange)."""
         return (
-            stored.filter(F.col("_batch") < batch_id)
+            self.read(spark, KEYS, earlier)
             .groupBy("url")
-            .agg(F.max("_batch").alias("_batch"))
-            .join(stored.filter(F.col("_batch") == batch_id), "url", "left_semi")
+            .agg(F.max(BATCH).alias(BATCH))
+            .join(self.read(spark, KEYS, [batch_id]), "url", "left_semi")
         )
 
     def resume(self, spark: SparkSession) -> None:

@@ -14,9 +14,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
+
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("kgkit-tests")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", "4")
         # composed-pipeline logical plans can be large; bound the
         # explain/AQE plan-string rendering so plan LOGGING can never

@@ -198,7 +198,7 @@ class TestCanonicalMap:
         the DuckDB oracle's transitive closure, and building and
         collecting the map launches no Spark job."""
         import duckdb
-        from test_job_budget import _jobs
+        from test_job_budget import _cost
 
         from kgkit.oracles import CANON_CTE
         from kgkit.operators.canonicalize import canonical_map
@@ -207,7 +207,9 @@ class TestCanonicalMap:
             f"WITH RECURSIVE {CANON_CTE} SELECT * FROM canon"
         ).fetchall())
         rows = []
-        jobs = _jobs(spark, lambda: rows.extend(canonical_map(spark).collect()))
+        jobs = _cost(
+            spark, lambda: rows.extend(canonical_map(spark).collect())
+        ).jobs
         got = {tuple(r) for r in rows}
         assert got == want
         assert ("Q10", "Q8") in got and ("Q6", "Q5") in got

@@ -1,15 +1,18 @@
-"""Spark job budget of the incremental KG stream and the batch build.
+"""Spark job and compile budget of the incremental KG stream and the
+batch build.
 
 At this scale a call's wall follows the number of Spark jobs it
-launches, not its rows, so the job counts are pinned exactly, each call
-counted under its own job group with ``statusTracker``:
+launches and of the classes it compiles, not its rows, so the job
+counts are pinned exactly, each call counted under its own job group
+with ``statusTracker``:
 
-* the stream on a 2-batch sf0.001 recrawl (batch 1 re-delivers a third
-  of batch 0's urls with new text);
+* the stream on a 2-batch sf0.001 recrawl (its second batch re-delivers
+  a third of the first's urls with new text);
 * each of ``run_kg_pipeline``'s five ``StageRunner`` stages on sf0.001
   (the build's own jobs and its one parquet write: the read-back and
-  the lineage rows launch none), and a stage whose build launches no
-  job;
+  the lineage rows launch none), a stage whose build launches no job,
+  and a skipped stage (its read-back takes the schema from a part
+  footer: no job);
 * ``link_mentions`` on a fresh embeddings table, cold and warm: the
   cold call fetches the ambiguous-entity vectors and probes the scores
   broadcast gate, a warm call on the same table reuses both.
@@ -20,19 +23,34 @@ and say why.
 Live reads serve the views that ``commit`` materialized: a count or
 relation read is one job (the scan of a checkpoint), a triples read two
 (the broadcast of the key parts, then the anti-joined scan).  The
-session's memoized dimension tables are warmed by a throwaway batch and
-a throwaway build first, so the counts do not depend on which tests ran
-before.
+session's memoized dimension tables are warmed by a throwaway stream
+and a throwaway build first, so the counts do not depend on which tests
+ran before.
+
+Compiles are counted as the delta of Spark's codegen compilation
+metric (in local mode the driver and the tasks share one JVM, so one
+class cache and one counter).  After the throwaway stream, a batch
+compiles nothing even though its id is new to the session (the id
+never enters a plan), nor does a read; after the throwaway build, no
+stage does.  The throwaway stream's first batch is the session's first
+stream batch when this module runs before the other stream tests (as
+in the suite's order): it must compile classes, or the counter counts
+nothing.
 """
 
 from __future__ import annotations
 
 import itertools
+from typing import NamedTuple
 
 import pytest
 from test_kg_stream import SF_DIR  # the stream tests' sf0.001 data
 
-BUDGET = {  # exact job counts per call
+# the measured stream's batch ids: no test commits them before this
+# module, so each is an id that the session has never committed
+UNSEEN_IDS = (1000, 1001)
+
+BUDGET = {  # exact job counts per call ("process_batch i": the i-th batch)
     # batch 0's relation count also runs a runtime bloom filter over
     # its pages (2 jobs): the linked checkpoint's size estimate is a
     # product of its joins' inputs and crosses the filter's 10 GiB
@@ -54,7 +72,9 @@ STAGE_BUDGET = {  # run_kg_pipeline on sf0.001, exact jobs per stage
     "stage4_triples": 4,
     "stage4b_relations": 10,
     "job-free build": 1,  # StageRunner's own cost: the write alone
+    "skipped stage": 0,
 }
+WARM_STAGES = [s for s in STAGE_BUDGET if s.startswith("stage")]
 
 LINK_BUDGET = {  # link_mentions(...).localCheckpoint() on a fresh table
     "cold": 5,
@@ -67,17 +87,26 @@ LINK_BUDGET = {  # link_mentions(...).localCheckpoint() on a fresh table
 _groups = itertools.count()
 
 
-def _jobs(spark, fn) -> int:
-    """Jobs that ``fn()`` launched, counted under a fresh job group."""
+class Cost(NamedTuple):
+    jobs: int
+    compiles: int
+
+
+def _cost(spark, fn) -> Cost:
+    """Jobs that ``fn()`` launched, counted under a fresh job group, and
+    the classes that Spark's code generator compiled meanwhile."""
     sc = spark.sparkContext
+    metrics = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
     group = f"job-budget-{next(_groups)}"
     sc.setJobGroup(group, "job budget")
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount() - compiled
+    return Cost(len(sc.statusTracker().getJobIdsForGroup(group)), compiled)
 
 
 @pytest.fixture(scope="module")
@@ -95,33 +124,50 @@ def counted(spark, tmp_path_factory):
         "text", F.concat(F.lit("fresh spark stream content "), F.col("text"))
     )
     base = tmp_path_factory.mktemp("job_budget")
-    IncrementalKGStream(embeddings, triples_dir=str(base / "warm")).process_batch(
-        a.filter("pmod(xxhash64(url), 16) = 0"), batch_id=0
-    )
+    batches = [a, b.unionByName(a2)]
+
+    def read(got, prefix, stm):
+        got[prefix + "entity_counts"] = _cost(
+            spark, lambda: stm.entity_counts().collect()
+        )
+        got[prefix + "relations"] = _cost(
+            spark, lambda: stm.relations().collect()
+        )
+        got[prefix + "triples"] = _cost(
+            spark, lambda: stm.triples(spark).collect()
+        )
+
+    # the throwaway stream: the same batches and reads, other batch ids
+    warm = IncrementalKGStream(embeddings, triples_dir=str(base / "warm"))
+    got = {"cold process_batch": _cost(
+        spark, lambda: warm.process_batch(batches[0], batch_id=0)
+    )}
+    warm.process_batch(batches[1], batch_id=1)
+    read({}, "", warm)
 
     store = str(base / "store")
     stm = IncrementalKGStream(embeddings, triples_dir=store)
-    got = {
-        "process_batch 0": _jobs(spark, lambda: stm.process_batch(a, 0)),
-        "process_batch 1": _jobs(
-            spark, lambda: stm.process_batch(b.unionByName(a2), 1)
-        ),
-    }
-    resumed = IncrementalKGStream.resume(spark, embeddings, store)
-    for prefix, s in (("", stm), ("resumed ", resumed)):
-        got[prefix + "entity_counts"] = _jobs(
-            spark, lambda: s.entity_counts().collect()
+    for i, batch_id in enumerate(UNSEEN_IDS):
+        got[f"process_batch {i}"] = _cost(
+            spark, lambda: stm.process_batch(batches[i], batch_id)
         )
-        got[prefix + "relations"] = _jobs(spark, lambda: s.relations().collect())
-        got[prefix + "triples"] = _jobs(
-            spark, lambda: s.triples(spark).collect()
-        )
+    read(got, "", stm)
+    read(got, "resumed ", IncrementalKGStream.resume(spark, embeddings, store))
     return got
 
 
 @pytest.mark.parametrize("call", list(BUDGET))
 def test_jobs_per_call(counted, call):
-    assert counted[call] == BUDGET[call]
+    assert counted[call].jobs == BUDGET[call]
+
+
+@pytest.mark.parametrize("call", list(BUDGET))
+def test_warm_call_compiles_nothing(counted, call):
+    assert counted[call].compiles == 0
+
+
+def test_cold_batch_compiles(counted):
+    assert counted["cold process_batch"].compiles > 0
 
 
 @pytest.fixture(scope="module")
@@ -135,7 +181,7 @@ def stage_jobs(spark, tmp_path_factory):
 
     def counted_run(self, stage, build):
         out = []
-        got[stage] = _jobs(spark, lambda: out.append(real(self, stage, build)))
+        got[stage] = _cost(spark, lambda: out.append(real(self, stage, build)))
         return out[0]
 
     stages.StageRunner.run = counted_run
@@ -144,15 +190,25 @@ def stage_jobs(spark, tmp_path_factory):
     finally:
         stages.StageRunner.run = real
     runner = stages.StageRunner(spark, str(base / "job-free"))
-    got["job-free build"] = _jobs(
+    got["job-free build"] = _cost(
         spark, lambda: runner.run("job-free build", lambda: spark.range(8))
     )
+    resumed = stages.StageRunner(spark, str(base / "run"))
+    got["skipped stage"] = _cost(
+        spark, lambda: resumed.run("stage4_triples", lambda: 1 / 0)
+    )
+    assert resumed.skipped == ["stage4_triples"]
     return got
 
 
 @pytest.mark.parametrize("stage", list(STAGE_BUDGET))
 def test_jobs_per_stage(stage_jobs, stage):
-    assert stage_jobs[stage] == STAGE_BUDGET[stage]
+    assert stage_jobs[stage].jobs == STAGE_BUDGET[stage]
+
+
+@pytest.mark.parametrize("stage", WARM_STAGES)
+def test_warm_stage_compiles_nothing(stage_jobs, stage):
+    assert stage_jobs[stage].compiles == 0
 
 
 @pytest.fixture(scope="module")
@@ -172,9 +228,9 @@ def link_jobs(spark, tmp_path_factory):
         return link_mentions(mentions, embeddings)
 
     return {
-        "cold": _jobs(spark, lambda: link().localCheckpoint()),
-        "warm": _jobs(spark, lambda: link().localCheckpoint()),
-        "warm build": _jobs(spark, link),
+        "cold": _cost(spark, lambda: link().localCheckpoint()).jobs,
+        "warm": _cost(spark, lambda: link().localCheckpoint()).jobs,
+        "warm build": _cost(spark, link).jobs,
     }
 
 

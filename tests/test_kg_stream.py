@@ -313,7 +313,7 @@ class TestRecrawl:
         stm.process_batch(b.unionByName(a2), batch_id=1)  # recrawl half of a
         # the crash: batch 1's triples part is complete, its relation
         # part is not
-        os.remove(os.path.join(store, "relbatch=1", "_SUCCESS"))
+        os.remove(os.path.join(store, "relation_counts", "_batch=1", "_SUCCESS"))
 
         stm2 = IncrementalKGStream.resume(
             spark, embeddings, store, recrawl=True
@@ -564,7 +564,7 @@ class TestDeclaredSchemas:
         store = str(tmp_path / "store")
         stm = IncrementalKGStream(embeddings, triples_dir=store)
         stm.process_batch(pages, batch_id=0)
-        part = str(tmp_path / "store" / "relbatch=0")
+        part = str(tmp_path / "store" / "relation_counts" / "_batch=0")
         bad = spark.read.parquet(part).withColumn("n", F.col("n").cast("string"))
         bad.localCheckpoint().write.mode("overwrite").parquet(part)
         with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):

@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from kgkit import SESSION_CONF  # noqa: E402
+
 N_SALTS = 16
 TOPK = 3
 
@@ -97,6 +99,7 @@ def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000_000
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        .config(map=SESSION_CONF)
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.shuffle.partitions", "64")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))

@@ -49,8 +49,11 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
+
     spark = (
         SparkSession.builder.master("local[8]")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

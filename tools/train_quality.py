@@ -25,6 +25,7 @@ import numpy as np  # noqa: E402
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from kgkit import SESSION_CONF
     from kgkit.operators.quality_clf import (
         DEFAULT_CKPT,
         QualityClassifier,
@@ -38,6 +39,7 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master("local[8]")
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", "16")
         .appName("train-quality")
         .getOrCreate()
